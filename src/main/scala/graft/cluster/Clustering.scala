@@ -1,8 +1,11 @@
 package graft.cluster
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{LongType, StructField, StructType}
+
+import scala.collection.mutable.ArrayBuilder
 
 import graft.state.Materializer
 
@@ -125,23 +128,71 @@ object Clustering {
     else (row.getLong(0), row.getLong(1)) // positional: (n, x) in observe order
   }
 
-  /** Distributed union-find: alternating large-star/small-star contraction
-    * (Kiveris et al. 2014) over an edge list, iterated to fixpoint with one
-    * eager checkpoint per TWO contraction rounds that both cuts lineage
-    * (north_rule; SURVEY.md §4 custom-work item 3) and carries the fixpoint
-    * stats as observe metrics — halving the blocking driver actions on deep
-    * topologies. Converges in O(log n) rounds on ANY
-    * topology — including the chain-shaped components (successive
-    * truncations/edits) that defeat O(diameter) label propagation — because
-    * each round at least halves the height of every non-star component.
-    * At fixpoint the edge set is a disjoint union of stars rooted at each
-    * component's minimum id.
+  /** Driver heap bytes one canonical edge may cost in the local finish: the
+    * collected (u, v) pair (16), its two endpoints in the sorted node array
+    * (16), their parent slots (8) and at most one (child, root) forest pair
+    * (16), rounded up for the per-partition array headers.
+    */
+  private val LocalFinishBytesPerEdge = 64L
+
+  /** Largest canonical edge set [[unionFind]] finishes on the driver: an
+    * eighth of the driver heap at [[LocalFinishBytesPerEdge]] per edge
+    * (~6M edges on a 3 GB heap), and at most half of
+    * `spark.driver.maxResultSize` at 16 collected bytes per edge (a larger
+    * collect would abort the job), clamped so the endpoint array stays
+    * Int-indexable.
+    */
+  private[graft] def localFinishCap(spark: SparkSession): Long = {
+    val resultBytes = spark.sparkContext.getConf
+      .getSizeAsBytes("spark.driver.maxResultSize", "1g") // 0 = unlimited
+    Seq(Runtime.getRuntime.maxMemory / 8 / LocalFinishBytesPerEdge,
+      if (resultBytes > 0) resultBytes / 2 / 16 else Long.MaxValue,
+      Int.MaxValue / 2 - 8L).min
+  }
+
+  /** Star-forest (child, root) pairs per slice of the local finish's
+    * RDD-backed frame: ~1 MB of longs per task.
+    */
+  private val ForestSlicePairs = 1 << 16
+
+  /** Distributed union-find with a local finish. The canonical edge set
+    * (u > v, self-loops dropped, distinct) is materialized once and its
+    * size read off the `uf_round_0` observation; then:
+    *
+    *  - at most `localFinishCap` edges (an eighth of the driver heap
+    *    (`Runtime.maxMemory`) at 64 bytes per edge: ~6M edges on a 3 GB
+    *    heap; also bounded by `spark.driver.maxResultSize`): the edges are
+    *    collected as packed `Long` arrays — one per partition, no `Row`s —
+    *    and resolved by an in-memory min-root DSU, in one job. The
+    *    collected count must equal the observed one.
+    *  - above the cap: alternating large-star/small-star contraction
+    *    (Kiveris et al. 2014) iterated to fixpoint from the checkpointed
+    *    edge set, with one eager checkpoint per TWO contraction rounds
+    *    that both cuts lineage (north_rule; SURVEY.md §4 custom-work item
+    *    3) and carries the fixpoint stats as observe metrics (`uf_round_k`)
+    *    — halving the blocking driver actions on deep topologies. Converges
+    *    in O(log n) rounds on ANY topology — including the chain-shaped
+    *    components (successive truncations/edits) that defeat O(diameter)
+    *    label propagation — because each round at least halves the height
+    *    of every non-star component.
+    *
+    * Both paths end in the same star forest (child → component-min root),
+    * which one labelling tail turns into the output, so the rows do not
+    * depend on the path taken.
     *
     * @param edges  (a, b) pairs, any orientation, strings or longs
     * @return (id, cluster_id) — cluster_id = min id of the component
     */
   def unionFind(spark: SparkSession, edges: DataFrame, maxIters: Int = 25,
-                mat: Materializer = Materializer.local): DataFrame = {
+                mat: Materializer = Materializer.local): DataFrame =
+    unionFindCapped(spark, edges, maxIters, mat, localFinishCap(spark))
+
+  /** [[unionFind]] with the local-finish cap given: 0 sends every
+    * non-empty edge set through the contraction loop.
+    */
+  private[graft] def unionFindCapped(spark: SparkSession, edges: DataFrame,
+                                     maxIters: Int, mat: Materializer,
+                                     localCap: Long): DataFrame = {
     // Fast path: already-numeric ids (the pipeline dictionary-encodes urls
     // to dense longs at entry) iterate directly. String ids are encoded to
     // dense longs here first: every propagation round shuffles and compares
@@ -152,7 +203,7 @@ object Clustering {
     // output is identical to the string-keyed algorithm — and deterministic
     // across parallelism levels, since codes never escape this function.
     val alreadyNumeric =
-      edges.schema("a").dataType == org.apache.spark.sql.types.LongType
+      edges.schema("a").dataType == LongType
     val ids =
       if (alreadyNumeric) null
       else mat(edges.select(col("a").as("sid")).union(edges.select(col("b").as("sid")))
@@ -174,9 +225,9 @@ object Clustering {
     // LAZY checkpoint on the encoded edge set: BOTH the oriented edges and
     // the self-loop-only labeling tail derive from `enc`, so without this
     // the id-dictionary encode joins (and any un-materialized upstream edge
-    // DAG) would replay once more after the contraction loop. The initial
-    // eager checkpoint of `e` below materializes the whole chain (enc,
-    // then e) in one pass.
+    // DAG) would replay once more in the labelling tail. The eager
+    // checkpoint of `e0` below materializes the whole chain (enc, then e0)
+    // in one pass.
     val enc = mat(
       if (alreadyNumeric) edges.select(col("a").as("src"), col("b").as("dst"))
       else edges
@@ -184,69 +235,26 @@ object Clustering {
         .join(ids.select(col("sid").as("b"), col("code").as("cb")), "b")
         .select(col("ca").as("src"), col("cb").as("dst")),
       eager = false)
-    // canonical oriented edge set (u > v), self-loops dropped; the initial
-    // distinct bounds the first round and makes the stats a set invariant.
-    // Each round's stats ride its eager checkpoint via observe — one
-    // materializing job per round, no separate fixpoint-agg action.
-    val (e0, obs0) = observeStats(
+    // canonical oriented edge set (u > v), self-loops dropped; the distinct
+    // makes the stats a set invariant. Its count picks the path.
+    val (e0Obs, obs0) = observeStats(
       enc.filter(col("src") =!= col("dst"))
         .select(greatest(col("src"), col("dst")).as("u"),
           least(col("src"), col("dst")).as("v"))
         .distinct(),
       "uf_round_0")
-    // round-0 is NOT materialized on its own: the first round-pair's
-    // checkpoint job computes through it (one distinct + 4 star joins in a
-    // single adaptive execution), its CollectMetrics node rides that same
-    // job, and any lazy upstream checkpoints (enc, the verify edge set)
-    // materialize with it — one blocking action fewer per run
-    var e = e0
-    var stats: (Long, Long) = null // round-0 stats resolve after that job
+    val e0 = mat(e0Obs)
+    val stats0 = statsOf(obs0)
+    val e =
+      if (stats0._1 <= localCap) localStarForest(spark, e0, stats0._1)
+      else contractToStars(e0, stats0, maxIters, mat)
 
-    // TWO contraction rounds ride each materialization: a blocking driver
-    // action per round was the remaining per-iteration floor cost, and both
-    // large-star/small-star pairs fuse into one job DAG (4 joins between
-    // checkpoints instead of 2 — still bounded lineage). At fixpoint the
-    // extra pair is idempotent, so the final star forest is byte-identical
-    // to the one-round-per-action schedule (chain/tree/clique fixtures and
-    // the recursive-CTE oracle gate this); convergence detection is
-    // unchanged — stats equal across consecutive materializations — at
-    // worst one extra (cheap, already-converged) materialization.
-    // Convergence is detected at BOTH the mid-pair and end-pair positions:
-    // two CollectMetrics nodes ride the one materializing job, so the
-    // per-round granularity of the old schedule is kept (stats equal
-    // between ANY two consecutive rounds ⇒ fixpoint) at half the blocking
-    // actions — and no trailing confirm pair is ever paid, since a
-    // fixpoint reached at an odd round shows up as mid == end inside the
-    // same pair.
-    var iter = 0
-    var converged = false
-    while (!converged && iter < maxIters) {
-      val t0 = System.nanoTime()
-      val (midDf, midObs) = observeStats(
-        smallStar(largeStar(e)), s"uf_round_${2 * iter + 1}")
-      val (nextDf, endObs) = observeStats(
-        smallStar(largeStar(midDf)), s"uf_round_${2 * iter + 2}")
-      val next = mat(nextDf)
-      if (stats == null) stats = statsOf(obs0) // completed with the job above
-      val midStats = statsOf(midObs)
-      val endStats = statsOf(endObs)
-      converged = midStats == stats || endStats == midStats
-      stats = endStats
-      e = next
-      iter += 1
-      System.err.println(
-        f"[union-find] round-pair $iter edges=${stats._1} " +
-          f"${(System.nanoTime() - t0) / 1e9}%.2f s converged=$converged")
-    }
-    require(converged, s"union-find did not converge within $maxIters round-pairs")
-
-    // fixpoint edge set is a star forest (child u → component-min root v):
-    // read the labels straight off it — every non-root appears exactly once
-    // as u, roots appear only as v and label themselves. Nodes whose every
-    // edge was a self-loop vanish from `e`, so they re-enter from `enc`;
-    // min(label) per id reconciles a self-loop row (id→id) with a real star
-    // label (id→root ≤ id) without an anti-join. This replaces the old
-    // O(|E|) union-distinct node-universe rebuild with an O(|V|) agg.
+    // the star forest (child u → component-min root v): read the labels
+    // straight off it — every non-root appears exactly once as u, roots
+    // appear only as v and label themselves. Nodes whose every edge was a
+    // self-loop are not in `e`, so they re-enter from `enc`; min(label) per
+    // id reconciles a self-loop row (id→id) with a real star label
+    // (id→root ≤ id) without an anti-join.
     val labels = e.select(col("u").as("id"), col("v").as("label"))
       .union(e.select(col("v").as("id"), col("v").as("label")))
       .union(enc.filter(col("src") === col("dst"))
@@ -258,6 +266,112 @@ object Clustering {
       .join(ids.select(col("code").as("id"), col("sid").as("id_s")), "id")
       .join(ids.select(col("code").as("label"), col("sid").as("cluster_s")), "label")
       .select(col("id_s").as("id"), col("cluster_s").as("cluster_id"))
+  }
+
+  /** Local finish: collect the `n` canonical edges of the materialized
+    * `e0` as packed (u, v) `Long` arrays, one per partition, and resolve
+    * them with a min-root DSU over the sorted node array — a node's index
+    * orders like its id, so every root is its component's minimum. The
+    * forest is returned as an RDD-backed (u, v) frame in ~1 MB slices, so
+    * the plan does not grow with the edge count.
+    */
+  private def localStarForest(spark: SparkSession, e0: DataFrame, n: Long): DataFrame = {
+    val packed =
+      if (n == 0) Array.empty[Array[Long]]
+      else e0.rdd.mapPartitions { rows =>
+        val b = new ArrayBuilder.ofLong
+        rows.foreach { r => b += r.getLong(0); b += r.getLong(1) }
+        Iterator.single(b.result())
+      }.collect()
+    val got = packed.map(_.length.toLong).sum / 2
+    require(got == n,
+      s"union-find local finish collected $got edges, uf_round_0 observed $n")
+
+    // sorted distinct endpoints: node index i ↔ id nodes(i)
+    val nodes = new Array[Long](2 * n.toInt)
+    var k = 0
+    packed.foreach { p => System.arraycopy(p, 0, nodes, k, p.length); k += p.length }
+    java.util.Arrays.sort(nodes)
+    val m = nodes.indices.foldLeft(0) { (w, i) => // dedup in place
+      if (w > 0 && nodes(w - 1) == nodes(i)) w else { nodes(w) = nodes(i); w + 1 }
+    }
+
+    val parent = Array.range(0, m)
+    def find(x0: Int): Int = { // path halving, iterative: chains are deep
+      var x = x0
+      while (parent(x) != x) { parent(x) = parent(parent(x)); x = parent(x) }
+      x
+    }
+    def index(id: Long): Int = java.util.Arrays.binarySearch(nodes, 0, m, id)
+    packed.foreach { p =>
+      var i = 0
+      while (i < p.length) {
+        val a = find(index(p(i)))
+        val b = find(index(p(i + 1)))
+        if (a != b) parent(math.max(a, b)) = math.min(a, b)
+        i += 2
+      }
+    }
+
+    val slices = Array.newBuilder[Array[Long]]
+    var slice = new ArrayBuilder.ofLong
+    for (i <- 0 until m) {
+      val r = find(i)
+      if (r != i) {
+        slice += nodes(i); slice += nodes(r)
+        if (slice.length == 2 * ForestSlicePairs) {
+          slices += slice.result()
+          slice = new ArrayBuilder.ofLong
+        }
+      }
+    }
+    slices += slice.result()
+    val forest = slices.result()
+    // nullable like the contraction loop's (min-aggregated) columns, so the
+    // output schema does not depend on the path either
+    spark.createDataFrame(
+      spark.sparkContext.parallelize(forest.toSeq, forest.length)
+        .flatMap(s => Iterator.range(0, s.length, 2).map(j => Row(s(j), s(j + 1)))),
+      StructType(Seq(StructField("u", LongType), StructField("v", LongType))))
+  }
+
+  /** The contraction loop from the checkpointed canonical edge set `e0`
+    * (stats `stats0`) to its fixpoint star forest.
+    *
+    * TWO contraction rounds ride each materialization: a blocking driver
+    * action per round was the remaining per-iteration floor cost, and both
+    * large-star/small-star pairs fuse into one job DAG (4 joins between
+    * checkpoints instead of 2 — still bounded lineage). At fixpoint the
+    * extra pair is idempotent, so the final star forest is byte-identical
+    * to the one-round-per-action schedule (chain/tree/clique fixtures and
+    * the recursive-CTE oracle gate this). Convergence is detected at BOTH
+    * the mid-pair and end-pair positions: two CollectMetrics nodes ride the
+    * one materializing job, so the per-round granularity is kept (stats
+    * equal between ANY two consecutive rounds ⇒ fixpoint) at half the
+    * blocking actions — and no trailing confirm pair is ever paid, since a
+    * fixpoint reached at an odd round shows up as mid == end inside the
+    * same pair.
+    */
+  private def contractToStars(e0: DataFrame, stats0: (Long, Long), maxIters: Int,
+                              mat: Materializer): DataFrame = {
+    var e = e0
+    var stats = stats0
+    var iter = 0
+    var converged = false
+    while (!converged && iter < maxIters) {
+      val (midDf, midObs) = observeStats(
+        smallStar(largeStar(e)), s"uf_round_${2 * iter + 1}")
+      val (nextDf, endObs) = observeStats(
+        smallStar(largeStar(midDf)), s"uf_round_${2 * iter + 2}")
+      e = mat(nextDf)
+      val midStats = statsOf(midObs)
+      val endStats = statsOf(endObs)
+      converged = midStats == stats || endStats == midStats
+      stats = endStats
+      iter += 1
+    }
+    require(converged, s"union-find did not converge within $maxIters round-pairs")
+    e
   }
 
   /** Full cluster table over a universe of ids: every id gets exactly one

@@ -85,11 +85,24 @@ class PipelineSpec extends SparkTestBase {
   }
 
   test("union-find: chain a-b, b-c, c-d collapses to one cluster") {
-    val edges = Seq(("a", "b"), ("b", "c"), ("c", "d"), ("x", "y")).toDF("a", "b")
-    val uf = Clustering.unionFind(spark, edges)
-    val m = uf.collect().map(r => r.getString(0) -> r.getString(1)).toMap
+    // z's only edge is a self-loop: it labels itself
+    val edges = Seq(("a", "b"), ("b", "c"), ("c", "d"), ("x", "y"), ("z", "z")).toDF("a", "b")
+    val m = unionFindBothPaths(edges)._1.map(r => r.getString(0) -> r.getString(1)).toMap
     assert(Set("a", "b", "c", "d").map(m) == Set("a"))
     assert(Set("x", "y").map(m) == Set("x"))
+    assert(m("z") == "z" && m.size == 7)
+  }
+
+  test("union-find: an empty edge set yields no rows and runs no contraction round") {
+    for (edges <- Seq(Seq.empty[(String, String)].toDF("a", "b"),
+                      Seq.empty[(Long, Long)].toDF("a", "b"))) {
+      val (rows, Seq(local, loop)) = unionFindBothPaths(edges)
+      assert(rows.isEmpty)
+      // cap 0 finishes an empty edge set locally too: no round-pair's
+      // checkpoint runs, and no round past uf_round_0 is observed
+      assert(loop.actions == local.actions)
+      assert(!(local.observations ++ loop.observations).contains("uf_round_1"))
+    }
   }
 
   test("union-find: 100-link chain (worst-case diameter) converges in O(log n) rounds") {
@@ -98,21 +111,21 @@ class PipelineSpec extends SparkTestBase {
     // log2(101) ≈ 6.7 — star contraction must finish within ~2x that.
     val n = 100
     val edges = (0 until n).map(i => (f"v$i%03d", f"v${i + 1}%03d")).toDF("a", "b")
-    val uf = Clustering.unionFind(spark, edges, maxIters = 14)
-    assert(uf.count() == n + 1)
-    assert(uf.select("cluster_id").distinct().count() == 1)
-    assert(uf.filter($"cluster_id" =!= "v000").count() == 0)
+    val uf = unionFindBothPaths(edges, maxIters = 14)._1
+    assert(uf.length == n + 1)
+    assert(uf.forall(_.getString(1) == "v000"))
   }
 
   test("union-find: binary-tree and dense-clique components resolve to their min") {
     // tree: children 2i+1, 2i+2 of i for i<15 (31 nodes); clique on 5 nodes
     val tree = (0 until 15).flatMap(i => Seq((i.toLong, 2L * i + 1), (i.toLong, 2L * i + 2)))
     val clique = for (i <- 100 to 104; j <- (i + 1) to 104) yield (i.toLong, j.toLong)
-    val edges = (tree ++ clique).toDF("a", "b")
-    val uf = Clustering.unionFind(spark, edges)
-    val m = uf.collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+    // 200's only edge is a self-loop: it labels itself
+    val edges = (tree ++ clique :+ ((200L, 200L))).toDF("a", "b")
+    val m = unionFindBothPaths(edges)._1.map(r => r.getLong(0) -> r.getLong(1)).toMap
     assert((0L until 31L).forall(m(_) == 0L))
     assert((100L to 104L).forall(m(_) == 100L))
+    assert(m(200L) == 200L && m.size == 37)
   }
 
   test("duplicate-free corpus: every doc is its own unique singleton cluster") {

@@ -4,7 +4,6 @@ import org.apache.spark.sql.functions._
 import org.scalacheck.Gen
 import org.scalacheck.rng.Seed
 
-import graft.cluster.Clustering
 import graft.fingerprint.{Fingerprints => FP, HashKernels}
 
 /** Property-style tests (SURVEY.md §5) over seeded ScalaCheck generators:
@@ -48,15 +47,18 @@ class PropertySpec extends SparkTestBase {
   test("union-find yields a partition: connected vertices share a root label") {
     val edgeGen = Gen.listOfN(25,
       Gen.zip(Gen.choose(0, 15), Gen.choose(0, 15)).suchThat { case (a, b) => a != b })
-    for (es <- samples(edgeGen, 4, 3000L) if es.nonEmpty) {
+    // extra inputs: the empty edge set, and a node (99) whose only edge is
+    // a self-loop
+    for (es <- samples(edgeGen, 4, 3000L).filter(_.nonEmpty).map(_ :+ ((99, 99))) :+ Nil) {
       val edges = es.map { case (a, b) => (s"v$a", s"v$b") }.toDF("a", "b")
-      val uf = Clustering.unionFind(spark, edges).collect()
+      val uf = unionFindBothPaths(edges)._1
         .map(r => r.getString(0) -> r.getString(1)).toMap
+      assert(uf.keySet == es.flatMap { case (a, b) => Seq(s"v$a", s"v$b") }.toSet)
       es.foreach { case (a, b) =>
-        assert(uf.contains(s"v$a") && uf.contains(s"v$b"))
         assert(uf(s"v$a") == uf(s"v$b"), s"edge ($a,$b) endpoints in different clusters")
       }
       uf.values.toSet.foreach { c: String => assert(uf(c) == c, s"label $c is not a root") }
+      if (es.nonEmpty) assert(uf("v99") == "v99")
     }
   }
 
@@ -76,11 +78,14 @@ class PropertySpec extends SparkTestBase {
     }
     val edgeGen = Gen.listOfN(40,
       Gen.zip(Gen.choose(0, 23), Gen.choose(0, 23)).suchThat { case (a, b) => a != b })
-    for (es <- samples(edgeGen, 5, 4000L) if es.nonEmpty) {
-      val expected = dsuComponents(24, es)
+    // extra inputs: the empty edge set, and a node (24) whose only edge is
+    // a self-loop
+    for (es <- samples(edgeGen, 5, 4000L).filter(_.nonEmpty).map(_ :+ ((24, 24))) :+ Nil) {
+      val expected = dsuComponents(25, es)
       val edges = es.map { case (a, b) => (a.toLong, b.toLong) }.toDF("a", "b")
-      val got = Clustering.unionFind(spark, edges).collect()
+      val got = unionFindBothPaths(edges)._1
         .map(r => r.getLong(0).toInt -> r.getLong(1).toInt).toMap
+      assert(got.keySet == es.flatMap { case (a, b) => Seq(a, b) }.toSet)
       got.foreach { case (id, label) =>
         assert(label == expected(id),
           s"node $id: spark label $label != reference ${expected(id)} (edges $es)")
