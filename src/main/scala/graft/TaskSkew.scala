@@ -18,11 +18,6 @@ final class TaskSkewListener extends SparkListener {
   // CPU is the memory-stall regime)
   val totalTaskCpuNs = new AtomicLong(0)
   val totalGcMs = new AtomicLong(0)
-  // exchange-volume ledger (ResumeBench): how many bytes the run actually
-  // shuffled — the direct evidence when a layout/plan change claims to
-  // remove an exchange side
-  val totalShuffleWriteBytes = new AtomicLong(0)
-  val totalShuffleReadBytes = new AtomicLong(0)
 
   override def onTaskEnd(te: SparkListenerTaskEnd): Unit = {
     val m = te.taskMetrics
@@ -37,8 +32,6 @@ final class TaskSkewListener extends SparkListener {
       maxTaskMillis.getAndAccumulate(m.executorRunTime, math.max)
       totalTaskCpuNs.addAndGet(m.executorCpuTime)
       totalGcMs.addAndGet(m.jvmGCTime)
-      totalShuffleWriteBytes.addAndGet(m.shuffleWriteMetrics.bytesWritten)
-      totalShuffleReadBytes.addAndGet(m.shuffleReadMetrics.totalBytesRead)
     }
   }
 }

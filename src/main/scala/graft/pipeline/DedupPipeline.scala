@@ -28,15 +28,6 @@ case class DedupConfig(
     simhashMaxHamming: Int = 28,
     simhashAcceptHamming: Int = 12,
     jaccardThreshold: Double = 0.5,
-    // gate into the suffix-array slice — the engine's most expensive
-    // per-pair kernel. A TRUE containment dup's shingle-set containment is
-    // ≈1.0 (subset ± k-gram boundary effects; still ≥0.85 with a few
-    // percent edits), while a shared-boilerplate-prefix pair tops out
-    // around |prefix|/min(|doc|) ≈ 0.4–0.6 — so 0.75 separates them
-    // cleanly. Measured on the skew corpus (10% shared-prefix family,
-    // 44k pages): gate 0.5 spent ~200 s building suffix arrays for pairs
-    // the SA then rejected; 0.75 cuts that to ~7 s at identical output.
-    containmentGate: Double = 0.75,
     // tier-1.5 toggle: reject (hamming-unaccepted) pairs from the 42-slot
     // minhash estimate + set sizes before paying the wide shingle fetch.
     // 3σ gates on BOTH estimated Jaccard and estimated containment — zero
@@ -83,13 +74,12 @@ case class DedupConfig(
     // dial a 100 TB operator reaches for first. Banding is fastPathBands
     // equal slices of the 64-bit SimHash; by pigeonhole, any pair within
     // Hamming fastPathBands-1 is GUARANTEED to collide in some band, so
-    // fastPathMaxHamming = fastPathBands-1 makes the fast tier exact w.r.t.
+    // accepting at exactly fastPathBands-1 makes the fast tier exact w.r.t.
     // its own (narrower) similarity predicate. Catches exact copies,
     // whitespace/case noise and tiny edits; misses paraphrase-level and
     // containment dups by design.
     fastPath: Boolean = false,
     fastPathBands: Int = 4,
-    fastPathMaxHamming: Int = 3,
     // the reference's thumbnail surface (`generate_thumbnails`/size,
     // config.rs:54,106), re-imagined for text: when > 0, clusterEpoch also
     // writes a `previews` table with the first N normalized chars of each
@@ -148,8 +138,6 @@ case class DedupConfig(
     s"bands*rowsPerBand must fit in numPerms ($bands*$rowsPerBand > $numPerms)")
   require(fastPathBands > 0, "fastPathBands must be > 0")
   require(64 % fastPathBands == 0, "fastPathBands must divide 64")
-  require(fastPathMaxHamming < fastPathBands,
-    "fastPathMaxHamming >= fastPathBands loses the pigeonhole collision guarantee")
   /** The materialization strategy this config asks for. Reliable mode
     * requires `checkpointDir` (an HDFS/S3A/file URI) — `Checkpoints.
     * clusterEpoch` defaults it to a dir beside the state tables.
@@ -167,6 +155,17 @@ case class DedupConfig(
   * union-find → clusters → representative window.
   */
 object DedupPipeline {
+
+  /** Gate into the suffix-array slice — the engine's most expensive
+    * per-pair kernel. A TRUE containment dup's shingle-set containment is
+    * ≈1.0 (subset ± k-gram boundary effects; still ≥0.85 with a few
+    * percent edits), while a shared-boilerplate-prefix pair tops out
+    * around |prefix|/min(|doc|) ≈ 0.4–0.6 — so 0.75 separates them
+    * cleanly. Measured on the skew corpus (10% shared-prefix family,
+    * 44k pages): gate 0.5 spent ~200 s building suffix arrays for pairs
+    * the SA then rejected; 0.75 cuts that to ~7 s at identical output.
+    */
+  private val ContainmentGate = 0.75
 
   /** Per-row fingerprint stage (no shuffle; pure projection).
     * Input must have (id, text [, warc_ts]). Output:
@@ -416,9 +415,9 @@ object DedupPipeline {
     // bound promises) with the delta-method 3-sigma term taking over for
     // small numPerms, where 0.2 alone would under-cover the estimator
     // spread -- the gate is never tighter than either bound
-    val estCGate = math.max(0.0, cfg.containmentGate - math.max(0.2,
+    val estCGate = math.max(0.0, ContainmentGate - math.max(0.2,
       3 * math.sqrt(
-        cfg.containmentGate * (1 - cfg.containmentGate) / cfg.numPerms)))
+        ContainmentGate * (1 - ContainmentGate) / cfg.numPerms)))
     // set size derived from the array (not the optional n_shingles column:
     // the resume path's state projection doesn't carry it)
     val mhDf = banded.select(col("id"), col("minhash"),
@@ -463,7 +462,7 @@ object DedupPipeline {
     // normalized text, fetched ONLY for this ambiguous slice so text bytes
     // never travel through the band explode / self-join / tier-1 verify.
     val ambiguous = scored
-      .filter(!cheapAccept && col("containment") >= cfg.containmentGate)
+      .filter(!cheapAccept && col("containment") >= ContainmentGate)
       .select("id_a", "id_b", "containment")
     val saAccepted = texts match {
       case Some(t) =>
@@ -511,7 +510,7 @@ object DedupPipeline {
   /** Fast-path candidate pairs → edges: band the 64-bit SimHash into
     * `fastPathBands` equal slices (pigeonhole: Hamming ≤ bands-1 ⇒ some
     * band matches exactly), pair within buckets via the same salted/capped
-    * machinery as the full path, accept at `fastPathMaxHamming`. No
+    * machinery as the full path, accept at Hamming ≤ bands-1. No
     * shingles, no Jaccard, no suffix array — one banding shuffle + one
     * pair distinct.
     */
@@ -530,7 +529,7 @@ object DedupPipeline {
       mat = mat,
       prune = df => df
         .filter(Fingerprints.hamming(col("simhash_a"), col("simhash_b"))
-          <= cfg.fastPathMaxHamming)
+          <= cfg.fastPathBands - 1)
         .select("id_a", "id_b"))
       .select(col("id_a").as("a"), col("id_b").as("b"))
   }
@@ -568,11 +567,11 @@ object DedupPipeline {
     // clusters table is materialized.
     idDictionaryPlan(ids).persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
 
-  /** The encode plan before materialization — split out so PlanAudit can
-    * verify the single-exchange claim (`Exchange rangepartitioning` once;
-    * the dedup aggregate must NOT add a hashpartitioning exchange).
+  /** The encode plan before materialization — split out so PipelineSpec can
+    * pin the single-exchange claim (one range-partitioning exchange; the
+    * dedup aggregate must NOT add a hashpartitioning exchange).
     */
-  def idDictionaryPlan(ids: DataFrame): DataFrame =
+  private[graft] def idDictionaryPlan(ids: DataFrame): DataFrame =
     ids.toDF("sid")
       .repartitionByRange(col("sid"))
       // no exchange here: RangePartitioning(sid) already satisfies the
@@ -640,12 +639,10 @@ object DedupPipeline {
     // truncates every consumer's plan to a checkpoint scan (guide §3.3:
     // materializing an intermediate truncates the plan), with honest row
     // stats for the join planning downstream.
-    val slim = tick("slim mat (extract+hash)") {
-      mat(keyed.select(
-        col("id"),
-        length(col("__text")).as("order_len"),
-        Fingerprints.contentHash(col("__text")).as("content_hash")))
-    }
+    val slim = mat(keyed.select(
+      col("id"),
+      length(col("__text")).as("order_len"),
+      Fingerprints.contentHash(col("__text")).as("content_hash")))
 
     // ONE aggregation serves both downstream needs: the representative
     // (min id ≡ exactEdges root) per content_hash that enters the near-dup
@@ -662,14 +659,13 @@ object DedupPipeline {
     // suffix-array verify slice never re-extracts the corpus — the second
     // extraction pass this job pays is the exact-first design's minimum
     // (reps are unknowable before the hash pass).
-    val sigsAll = tick("signatures mat") {
+    val sigsAll =
       if (cfg.fastPath) mat(signatures(nearPages, "id", "__text", cfg))
       else mat(signatures(
         nearPages.select(col("id"), col("__text"),
           substring(Fingerprints.normalized(col("__text")), 1, cfg.saMaxChars)
             .as("norm_text")),
         "id", "__text", cfg, carry = Seq("norm_text")))
-    }
     val repSigs = if (cfg.fastPath) sigsAll else sigsAll.drop("norm_text")
 
     val coded = clusterFromParts(spark, slim, hashGroups, repSigs,
@@ -693,15 +689,6 @@ object DedupPipeline {
     slim.groupBy("content_hash")
       .agg(min(col("id")).as("id"), count(lit(1)).as("hash_n"))
       .cache()
-
-  /** GRAFT_TIMING-gated stage timer (stderr; off in production). */
-  private def tick[T](name: String)(f: => T): T =
-    if (sys.env.contains("GRAFT_TIMING")) {
-      val t0 = System.nanoTime()
-      val r = f
-      System.err.println(f"[run] $name%-24s ${(System.nanoTime() - t0) / 1e9}%7.2f s")
-      r
-    } else f
 
   /** The shared resume-path prologue — dictionary-code the signature table
     * and derive the (dict, slim, hashGroups, repSigs) quartet every
@@ -853,7 +840,7 @@ object DedupPipeline {
     // before these two materializations
     val hasFastRows =
       slim.filter(col("n_shingles") === 0).limit(1).count() > 0
-    val frontier = tick("delta frontier (mates)") {
+    val frontier = {
       val includeFast = hasFastRows || cfg.fastPath
       val mates = bandIndex match {
         case Some(ix) =>
@@ -882,18 +869,14 @@ object DedupPipeline {
           bucketMates(repSigs, focusReps, cfg,
             includeFastChannel = hasFastRows)
       }
-      val f = mates.union(focusReps).distinct().cache()
-      // force the cache only when attributing time; production defers it
-      // into the subset materialization below
-      if (sys.env.contains("GRAFT_TIMING")) f.count()
-      f
+      // lazy cache: filled by the subset materialization below
+      mates.union(focusReps).distinct().cache()
     }
     // MATERIALIZE the subset (not just cache): a live semi-join plan
     // carries a near-zero size estimate into nearEdges' internal joins and
     // flips them to pathological broadcasts; the checkpointed frame gets
     // honest stats, same as the full path's materialization points
-    val subsetReps = tick("delta subset mat") {
-      mat(repSigs.join(frontier, Seq("id"), "left_semi")) }
+    val subsetReps = mat(repSigs.join(frontier, Seq("id"), "left_semi"))
     val codedAssign = assignEdges.toDF("sid_a", "sid_b")
       .join(dict.select(col("sid").as("sid_a"), col("id").as("a")), "sid_a")
       .join(dict.select(col("sid").as("sid_b"), col("id").as("b")), "sid_b")
@@ -906,7 +889,7 @@ object DedupPipeline {
     // authoritative pages table; this join is the ONLY thing that touches
     // it, as a scan + broadcast hash join — never an O(corpus) shuffle of
     // text bytes (the unpruned dict join sort-merged the whole text column
-    // every delta epoch, measured in the ResumeBench shuffle ledger).
+    // every delta epoch).
     val codedTexts = texts.map { t =>
       val frontierDict = mat(dict.join(frontier, Seq("id"), "left_semi"))
       t.toDF("sid", "norm_text").join(frontierDict, "sid")
@@ -964,7 +947,7 @@ object DedupPipeline {
         col("hash_n")),
       "id", "content_hash")
     val bandSigs = bandSigsOverride.getOrElse(repSigs)
-    val near = tick("near edges (LSH+verify)") {
+    val near = {
       val edges =
         if (cfg.fastPath) nearEdgesFast(bandSigs, cfg, mat)
         else {
@@ -985,9 +968,8 @@ object DedupPipeline {
     }
     val edges = extraEdges.foldLeft(exact.union(near))(_ union _)
 
-    val clustered = tick("union-find") {
+    val clustered =
       Clustering.clusters(spark, slim, "id", edges, cfg.maxUnionFindIters, mat)
-    }
 
     // kind: exact if the row shares a content_hash with ≥2 rows; near if in a
     // multi-row cluster otherwise; unique for singletons. hash_n comes from
@@ -1005,9 +987,7 @@ object DedupPipeline {
           .when(col("cluster_n") > 1, lit("near"))
           .otherwise(lit("unique")))
 
-    val withRep = Clustering.withRepresentatives(out, orderCols)
-    tick("kind+representative") {
-      withRep.select("id", "cluster_id", "is_representative", "kind")
-    }
+    Clustering.withRepresentatives(out, orderCols)
+      .select("id", "cluster_id", "is_representative", "kind")
   }
 }

@@ -411,6 +411,17 @@ case class GopherKeepExpr(child: Expression, topNs: Seq[Int], dupNs: Seq[Int],
     dupLineCharFrac: Double = 0.20, dupParaCharFrac: Double = 0.20)
     extends UnaryExpression {
 
+  // a bound on an n the struct does not carry would otherwise surface as a
+  // NoSuchElementException at the first row's eval, inside a task
+  locally {
+    val missing = (topBounds.keys.toSeq.sorted.flatMap(n =>
+        Seq(s"top${n}_count", s"top${n}_chars")) ++
+      dupBounds.keys.toSeq.sorted.map(n => s"dup${n}_chars"))
+      .filterNot(Repetition.signalNames(topNs, dupNs).toSet)
+    require(missing.isEmpty,
+      s"gopher bounds name signals absent from the struct: ${missing.mkString(", ")}")
+  }
+
   override def dataType: DataType = org.apache.spark.sql.types.BooleanType
 
   // field ordinals of the signals struct — the ONE signalNames order

@@ -1,5 +1,7 @@
 package graft
 
+import org.apache.spark.sql.catalyst.plans.physical.RangePartitioning
+import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
 import org.apache.spark.sql.functions._
 
 import graft.cluster.Clustering
@@ -235,6 +237,22 @@ class PipelineSpec extends SparkTestBase {
     assert(reparts.exists(cols => cols == Set("id_a", "id_b")),
       s"no fixed-width (id_a, id_b) repartition in the optimized plan: $reparts")
   }
+  test("id dictionary encode plan: one exchange, range-partitioned (plan shape)") {
+    // RangePartitioning(sid) already satisfies the dedup aggregate's
+    // distribution, so the encode must not add a hashpartitioning exchange.
+    // AQE off so the compile-time plan is the one inspected.
+    val prevAqe = spark.conf.get("spark.sql.adaptive.enabled")
+    try {
+      spark.conf.set("spark.sql.adaptive.enabled", "false")
+      val ids = spark.range(100).select(($"id" % 37).cast("string"))
+      val plan = DedupPipeline.idDictionaryPlan(ids).queryExecution.executedPlan
+      val exchanges = plan.collect { case e: ShuffleExchangeExec => e }
+      assert(exchanges.length == 1, s"expected ONE exchange, got ${exchanges.length}:\n$plan")
+      assert(exchanges.head.outputPartitioning.isInstanceOf[RangePartitioning],
+        s"the exchange must range-partition the ids:\n$plan")
+    } finally spark.conf.set("spark.sql.adaptive.enabled", prevAqe)
+  }
+
   test("withRepresentatives: the salted two-phase election equals the single-window top-1") {
     // clusters of very different sizes incl. one far above the salt count,
     // plus ties on the first order column so the id tiebreak matters

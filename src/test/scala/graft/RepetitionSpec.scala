@@ -2,7 +2,7 @@ package graft
 
 import org.apache.spark.sql.functions._
 
-import graft.text.Repetition
+import graft.text.{GopherKeepExpr, GopherSignalsExpr, Repetition}
 
 class RepetitionSpec extends SparkTestBase {
   import spark.implicits._
@@ -156,5 +156,18 @@ class RepetitionSpec extends SparkTestBase {
       s"kernel duplicated in the filter condition:\n$plan")
     assert(plan.contains("gopher_keep"), s"fused keep predicate missing:\n$plan")
     assert(!plan.contains("Exchange"), s"unexpected shuffle in:\n$plan")
+  }
+
+  test("GopherKeepExpr rejects a bounds key with no signal field at construction") {
+    val sig = GopherSignalsExpr(
+      org.apache.spark.sql.catalyst.expressions.Literal("a b"), Seq(2), Seq(5))
+    val top = intercept[IllegalArgumentException](
+      GopherKeepExpr(sig, Seq(2), Seq(5), topBounds = Map(3 -> 0.2), dupBounds = Map.empty))
+    assert(top.getMessage.contains("top3_count, top3_chars"), top.getMessage)
+    val dup = intercept[IllegalArgumentException](
+      GopherKeepExpr(sig, Seq(2), Seq(5), topBounds = Map.empty, dupBounds = Map(6 -> 0.1)))
+    assert(dup.getMessage.contains("dup6_chars"), dup.getMessage)
+    // matching keys construct fine
+    GopherKeepExpr(sig, Seq(2), Seq(5), topBounds = Map(2 -> 0.2), dupBounds = Map(5 -> 0.1))
   }
 }
