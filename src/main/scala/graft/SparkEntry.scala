@@ -6,6 +6,7 @@ import org.apache.spark.sql.functions._
 
 import graft.actions.Actions
 import graft.ann.Ann
+import graft.cluster.PairScoring
 import graft.fingerprint.{Fingerprints => FP}
 import graft.lsh.LSH
 import graft.multimodal.Multimodal
@@ -141,6 +142,9 @@ object SparkEntry {
     *    apart), as are members beyond the operator's inverted-list cap
     *    (they pair with no one by spec; the checker replicates the
     *    deterministic cap rank via `maxListSize`).
+    * The pair attach below is hand-written, not [[graft.cluster.PairScoring]]:
+    * `semDeDup` scores through that operator, and a checker must not share
+    * the code it checks.
     */
   private[graft] def semDedupInvariants(s: SparkSession, vecs: DataFrame,
                             op: DataFrame => DataFrame, tau: Double,
@@ -186,12 +190,8 @@ object SparkEntry {
       .select(col("cell"), col("vec_id").as("a"))
       .join(cellMembers.select(col("cell"), col("vec_id").as("b")), Seq("cell"))
       .filter(col("a") < col("b"))
-      // pinned-count exchange on the pair key BEFORE the arrays attach:
-      // the pair join is keyed by `cell` (few distinct values) and the
-      // attach joins broadcast, so without it the whole per-pair
-      // zip_with/aggregate dot pass — this verifier's dominant CPU — runs
-      // in ≤ |cells| tasks. Pure re-distribution: values unchanged, the
-      // cross-implementation property intact.
+      // pinned-count exchange on the pair key before the arrays attach
+      // (PairScoring's scaladoc gives the reason); values unchanged
       .repartition(s.sessionState.conf.numShufflePartitions,
         col("a"), col("b"))
       .join(qarr.select(col("vec_id").as("a"), col("qv").as("qa")), "a")
@@ -284,6 +284,25 @@ object SparkEntry {
     s"CAST(('0x' || substr(sha256($idExpr || '$salt'), 1, 15)) AS UBIGINT)"
   private def mixU60Sql(salt: String): String =
     mixU60SqlOn("CAST(doc_id AS VARCHAR)", salt)
+
+  /** Word-set Jaccard ≥ 0.5 pairs (id_a < id_b) within each `source`:
+    * `q_ngram_jaccard`'s rows and `q_union_find`'s edge set.
+    */
+  private def wordJaccardPairs(s: SparkSession, dir: String): DataFrame = {
+    val d = t(s, dir, "documents")
+    val pairs = d.select(col("doc_id").as("id_a"), col("source"))
+      .join(d.select(col("doc_id").as("id_b"), col("source")), Seq("source"))
+      .filter(col("id_a") < col("id_b"))
+      .select("id_a", "id_b")
+    val words = d.select(col("doc_id").as("id"),
+      array_distinct(split(lower(trim(regexp_replace(col("text"), "\\s+", " "))), " "))
+        .as("words"))
+    PairScoring.withSides(pairs, words)
+      .withColumn("inter", size(array_intersect(col("words_a"), col("words_b"))).cast("long"))
+      .withColumn("jaccard", col("inter") / (size(col("words_a")) + size(col("words_b")) - col("inter")))
+      .filter(col("jaccard") >= 0.5)
+      .select("id_a", "id_b", "jaccard")
+  }
 
   def queries: Map[String, (SparkSession, String) => DataFrame] = Map(
 
@@ -557,28 +576,14 @@ object SparkEntry {
     // an exact oracle; in the pipeline the kernel runs only on the
     // containment-gated ambiguous slice of LSH candidates.
     "q_substring_containment" -> ((s, dir) => {
-      // pair generation runs SLIM (id, source — the text never enters the
-      // source-keyed self-join), then an explicit pinned-count exchange on
-      // the pair key spreads the per-pair saLcs kernel — the engine's most
-      // expensive per-pair kernel, and this query's entire cost — across
-      // every core: the self-join is keyed by `source` (20 distinct values
-      // < cores) and the attach joins below broadcast, so without it the
-      // whole all-pairs SA pass ran in ≤ 20 tasks (measured at sf0.1:
-      // 121 s warm → 8.4 s). Same pairs, same saLcs filter — a pure
-      // re-distribution, hash-verified against the DuckDB oracle.
-      val d = t(s, dir, "documents").select(col("doc_id"), col("source"),
-        FP.normalized(col("text")).as("nt"))
-      val slim = d.select(col("doc_id"), col("source"))
-      val a = slim.select(col("doc_id").as("id_a"), col("source"))
-      val b = slim.select(col("doc_id").as("id_b"), col("source"))
-      a.join(b, Seq("source"))
-        .repartition(s.sessionState.conf.numShufflePartitions,
-          col("id_a"), col("id_b"))
-        .join(broadcast(d.select(col("doc_id").as("id_a"),
-          substring(col("nt"), 1, 120).as("pa"))), "id_a")
-        .join(broadcast(d.select(col("doc_id").as("id_b"), col("nt").as("nb"))),
-          "id_b")
-        .filter(FP.saLcs(col("pa"), col("nb")) === length(col("pa")))
+      val d = t(s, dir, "documents")
+      val pairs = d.select(col("doc_id").as("id_a"), col("source"))
+        .join(d.select(col("doc_id").as("id_b"), col("source")), Seq("source"))
+        .select("id_a", "id_b")
+      PairScoring.withSides(pairs,
+          d.select(col("doc_id").as("id"), FP.normalized(col("text")).as("nt")))
+        .withColumn("pa", substring(col("nt_a"), 1, 120))
+        .filter(FP.saLcs(col("pa"), col("nt_b")) === length(col("pa")))
         .select("id_a", "id_b")
     }),
 
@@ -934,29 +939,8 @@ object SparkEntry {
     // channel is probabilistic; the cluster-resolution engine itself is
     // fully oracled here).
     "q_union_find" -> ((s, dir) => {
-      // same slim-pairs + pinned-exchange + broadcast-attach shape as
-      // q_ngram_jaccard below (whose edge set this reuses): keyed by
-      // `source` alone the per-pair array_intersect pass ran in ≤ 20
-      // tasks. Same edges, same jaccard expression — hash-verified.
-      val d = t(s, dir, "documents")
-      val w = d.select(col("doc_id"), col("source"),
-        array_distinct(split(lower(trim(regexp_replace(col("text"), "\\s+", " "))), " "))
-          .as("words"))
-      val slim = w.select(col("doc_id"), col("source"))
-      val a = slim.select(col("doc_id").as("id_a"), col("source"))
-      val b = slim.select(col("doc_id").as("id_b"), col("source"))
-      val edges = a.join(b, Seq("source")).filter(col("id_a") < col("id_b"))
-        .repartition(s.sessionState.conf.numShufflePartitions,
-          col("id_a"), col("id_b"))
-        .join(broadcast(w.select(col("doc_id").as("id_a"), col("words").as("wa"))),
-          "id_a")
-        .join(broadcast(w.select(col("doc_id").as("id_b"), col("words").as("wb"))),
-          "id_b")
-        .withColumn("inter", size(array_intersect(col("wa"), col("wb"))).cast("long"))
-        .filter(col("inter").cast("double") /
-          (size(col("wa")) + size(col("wb")) - col("inter")).cast("double") >= 0.5)
-        .select(col("id_a").as("a"), col("id_b").as("b"))
-      graft.cluster.Clustering.clusters(s, d, "doc_id", edges)
+      val edges = wordJaccardPairs(s, dir).select(col("id_a").as("a"), col("id_b").as("b"))
+      graft.cluster.Clustering.clusters(s, t(s, dir, "documents"), "doc_id", edges)
     }),
 
     // n-gram (word-set) Jaccard similarity pairs within a source partition.
@@ -964,35 +948,7 @@ object SparkEntry {
     // which is its whole job — the scale path for pair discovery is the
     // banded LSH pipeline (q_dedup_clusters); group sizes here are bounded
     // by the fixture's per-source fan-out.
-    "q_ngram_jaccard" -> ((s, dir) => {
-      val d = t(s, dir, "documents")
-        .select(col("doc_id"), col("source"),
-          array_distinct(split(lower(trim(regexp_replace(col("text"), "\\s+", " "))), " "))
-            .as("words"))
-      // pair generation runs SLIM (id, source — the word arrays never enter
-      // the source-keyed join), then an explicit pinned-count exchange on
-      // the pair key spreads the per-pair array_intersect — this query's
-      // dominant CPU — across every core: the self-join is keyed by
-      // `source` (20 distinct values < cores) and the attach joins below
-      // broadcast, so without it the whole intersect pass ran in ≤ 20
-      // tasks. Same rows, same jaccard — a pure re-distribution.
-      val slim = d.select(col("doc_id"), col("source"))
-      val a = slim.select(col("doc_id").as("id_a"), col("source"))
-      val b = slim.select(col("doc_id").as("id_b"), col("source"))
-      a.join(b, Seq("source")).filter(col("id_a") < col("id_b"))
-        .repartition(s.sessionState.conf.numShufflePartitions,
-          col("id_a"), col("id_b"))
-        .join(broadcast(d.select(col("doc_id").as("id_a"), col("words").as("wa"))),
-          "id_a")
-        .join(broadcast(d.select(col("doc_id").as("id_b"), col("words").as("wb"))),
-          "id_b")
-        .withColumn("inter", size(array_intersect(col("wa"), col("wb"))).cast("long"))
-        .withColumn("jaccard",
-          col("inter").cast("double") /
-            (size(col("wa")) + size(col("wb")) - col("inter")).cast("double"))
-        .filter(col("jaccard") >= 0.5)
-        .select("id_a", "id_b", "jaccard")
-    }),
+    "q_ngram_jaccard" -> ((s, dir) => wordJaccardPairs(s, dir)),
 
     // ── similarity search (embeddings) ──────────────────────────────────
 

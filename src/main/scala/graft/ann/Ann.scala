@@ -61,14 +61,9 @@ object Ann {
     // broadcast: it is the q-side of a kNN (bounded by construction), and
     // without the hint a planner statistics miss could flip the build
     // side and re-key the output by nbr_id, putting the big exchange back.
-    // PINNED-count repartition (not bare repartition(col)): the pre-join
-    // exchange carries n byte-light rows, and AQE's byte-based coalescing
-    // folds it to one or two partitions — putting the ENTIRE n²-pair
-    // dot+window pass (the operator's only compute, invisible to AQE's
-    // byte heuristics) into one task. The explicit count opts this
-    // exchange out of coalescing, same as the pipeline's suffix-array and
-    // pair-scoring repartitions (measured at sf0.1: the one real job fell
-    // 4.5 s → sub-second once the scoring spread across cores).
+    // PINNED count, as in PairScoring: AQE would coalesce these n
+    // byte-light rows into the one or two tasks running the whole n²-pair
+    // dot+window pass (at sf0.1 the job fell 4.5 s → sub-second spread).
     val l = left.select(col(idCol).as("id"), quantize(col(vecCol)).as("qv"))
       .withColumn("nl", qnorm(col("qv")))
       .repartition(left.sparkSession.sessionState.conf.numShufflePartitions,
@@ -440,28 +435,13 @@ object Ann {
     // within-cell unordered candidate pairs on SLIM ids; quantized vectors
     // re-join (from the already-built lists) only to score survivors
     val members = idx.lists.select(col("cell"), col("nbr_id"))
-    // EXPLICIT pinned-count exchange on the pair key between pair
-    // generation and scoring: the self-join is keyed by `cell` (k = √n
-    // distinct values — far fewer than cores at bench scale, and the
-    // scoring joins below broadcast their vector sides), so without it the
-    // entire Θ(n²/k)-pair qdot pass runs in ≤ k tasks. Hashing the
-    // (id_a, id_b) pair spreads scoring across every core, and the pinned
-    // count opts the byte-light compute-dense exchange out of AQE's
-    // byte-based coalescing (same pattern as the pipeline's suffix-array
-    // pass). The exchange carries 16 B/row — noise next to the per-pair
-    // dot it parallelizes.
     val pairs = members.select(col("cell"), col("nbr_id").as("id_a"))
       .join(members.select(col("cell"), col("nbr_id").as("id_b")), "cell")
       .filter(col("id_a") < col("id_b"))
       .select("id_a", "id_b")
-      .repartition(vecs.sparkSession.sessionState.conf.numShufflePartitions,
-        col("id_a"), col("id_b"))
-    val qa = idx.lists.select(col("nbr_id").as("id_a"),
-      col("qw").as("qva"), col("nr").as("na"))
-    val qb = idx.lists.select(col("nbr_id").as("id_b"),
-      col("qw").as("qvb"), col("nr").as("nb"))
-    val edges = pairs.join(qa, "id_a").join(qb, "id_b")
-      .withColumn("cos", pairCos(col("na"), col("nb"), qdot(col("qva"), col("qvb"))))
+    val edges = graft.cluster.PairScoring
+      .withSides(pairs, idx.lists.select(col("nbr_id").as("id"), col("qw"), col("nr")))
+      .withColumn("cos", pairCos(col("nr_a"), col("nr_b"), qdot(col("qw_a"), col("qw_b"))))
       .filter(col("cos") >= tau)
       .select(col("id_a").as("a"), col("id_b").as("b"))
     val comp = graft.cluster.Clustering.clusters(

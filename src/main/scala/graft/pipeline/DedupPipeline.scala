@@ -3,7 +3,7 @@ package graft.pipeline
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-import graft.cluster.Clustering
+import graft.cluster.{Clustering, PairScoring}
 import graft.fingerprint.Fingerprints
 import graft.lsh.LSH
 import graft.state.Materializer
@@ -472,29 +472,14 @@ object DedupPipeline {
         // it falls back to the shingle-containment decision (the same rule
         // as the texts=None path), so resumed clustering converges to the
         // single-shot result instead of silently losing containment edges.
-        ambiguous
-          .join(t.select(col("id").as("id_a"), col("norm_text").as("nt_a")), Seq("id_a"), "left")
-          .join(t.select(col("id").as("id_b"), col("norm_text").as("nt_b")), Seq("id_b"), "left")
-          // EXPLICIT fixed-width exchange on the (unique) pair key before the
-          // SA kernel. The suffix-array build is the pipeline's only CPU-DENSE
-          // byte-light stage (~0.5 ms vs ~2 KB per row): left partitioned by
-          // the preceding join key, AQE coalesces the slice by BYTES into one
-          // or two tasks and the whole pass serializes into a stage-tail
-          // straggler (measured at 220k pages: a 49.5k-record / 25 MB task
-          // burning 21.7 s while 82 sibling tasks finish in ~5 s; wall 47 s →
-          // 33 s with the pass spread). Hashing the pair key distributes rows
-          // ~uniformly, and the explicit numPartitions opts this exchange out
-          // of byte-based coalescing — compute density is invisible to AQE.
-          .repartition(spark.sessionState.conf.numShufflePartitions,
-            col("id_a"), col("id_b"))
+        PairScoring.withSides(ambiguous, t.select("id", "norm_text"), how = "left")
           // decision form, not the LCS value: the filter only thresholds the
           // score, and the O(n+m) window scan is ~15× cheaper per pair than
           // the generalized-SA build (decision-equivalence property-gated in
-          // SuffixArraySpec). A missing side still falls back to the
-          // shingle-containment decision, as documented above.
+          // SuffixArraySpec).
           .filter(
-            when(col("nt_a").isNotNull && col("nt_b").isNotNull,
-              Fingerprints.saContainmentAtLeast(col("nt_a"), col("nt_b"),
+            when(col("norm_text_a").isNotNull && col("norm_text_b").isNotNull,
+              Fingerprints.saContainmentAtLeast(col("norm_text_a"), col("norm_text_b"),
                 cfg.containmentThreshold))
             .otherwise(col("containment") >= cfg.containmentThreshold))
           .select("id_a", "id_b")
