@@ -244,12 +244,14 @@ object Bench {
     }
 
   /** Recursive local-FS directory copy (bench state dirs are local). */
-  def copyDir(src: java.nio.file.Path, dst: java.nio.file.Path): Unit =
-    java.nio.file.Files.walk(src).forEach { p =>
+  def copyDir(src: java.nio.file.Path, dst: java.nio.file.Path): Unit = {
+    val paths = java.nio.file.Files.walk(src)
+    try paths.forEach { p =>
       val t = dst.resolve(src.relativize(p))
       if (java.nio.file.Files.isDirectory(p)) java.nio.file.Files.createDirectories(t)
-      else java.nio.file.Files.copy(p, t)
-    }
+      else java.nio.file.Files.copy(p, t, java.nio.file.StandardCopyOption.REPLACE_EXISTING)
+    } finally paths.close()
+  }
 
   /** Deepest-first recursive delete; a bench tier leaves multi-GB corpora
     * and per-rep state copies behind, and repeated sessions fill the disk

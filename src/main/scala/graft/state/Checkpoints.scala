@@ -12,17 +12,33 @@ import graft.pipeline.{DedupConfig, DedupPipeline}
   * reference's persistence layer (image-deduper `src/persistence/db.rs`):
   *
   *  - the RocksDB twin-key store (`db.rs:79-84`) becomes a `signatures`
-  *    Parquet/Iceberg table (one row per url — both hashes are columns, so
-  *    the `diagnose_database` half-row scan `db.rs:213-278` is impossible
-  *    by construction);
+  *    Parquet table (one row per url — both hashes are columns, so the
+  *    `diagnose_database` half-row scan `db.rs:213-278` is impossible by
+  *    construction);
   *  - `find_new_images` chunked point-lookups (`db.rs:132-164`) become one
   *    distributed LEFT ANTI join — the resume primitive;
   *  - the problematic-file skip list
   *    (`processing/utils/hash_computation_with_timeout.rs:19-42`) becomes a
   *    persistent `quarantine` table, anti-joined before processing;
-  *  - flush/compact cadence (`lib.rs:178-223`) becomes an epoch manifest:
-  *    each run appends one epoch (≙ Iceberg snapshot commit) recorded in
-  *    `_manifest.jsonl`, giving resumable, inspectable commits in-sandbox.
+  *  - the one write batch per item (`db.rs:64-92`) becomes ONE commit rule
+  *    for the whole state dir, the Iceberg snapshot model: every table write
+  *    lands in `<state>/<table>/gen=<n>/`, and a generation is visible only
+  *    once the `_manifest.jsonl` line naming it is published by
+  *    [[appendManifest]]'s double rename. Each line names the current
+  *    generation of every table plus the layout facts readers need
+  *    (`signature_buckets`, the band index's `knobs` and `through_epoch`);
+  *    [[snapshot]] resolves them and every reader goes through it.
+  *
+  * A call that replaces a table (clusterEpoch's clusters, actions and
+  * previews, compaction, a rescan) writes generation n — n is the index of
+  * the line that will publish it — and publishes all of them in that one
+  * line. Appends (epoch signature rows, quarantine, executed, band-index
+  * deltas, lineage metrics) go into the published generation and stay
+  * idempotent through the anti-joins they already have. A writer deletes
+  * superseded generations only after its line is durable, and every lease
+  * holder first deletes every generation the manifest does not name, so a
+  * call killed at any write leaves state the next run completes or rolls
+  * back, and a committed call leaves one `gen=` dir per table.
   */
 object Checkpoints {
 
@@ -34,16 +50,13 @@ object Checkpoints {
   def actionsPath(stateDir: String) = s"$stateDir/actions"
   def executedPath(stateDir: String) = s"$stateDir/executed"
   def bandsPath(stateDir: String) = s"$stateDir/bands"
-  def bandsMarkerPath(stateDir: String) = s"$stateDir/_bands.json"
   def manifestPath(stateDir: String) = s"$stateDir/_manifest.jsonl"
   def lockPath(stateDir: String) = s"$stateDir/_lock"
-  def layoutPath(stateDir: String) = s"$stateDir/_layout.json"
 
-  /** All state IO goes through the Hadoop FileSystem API so `stateDir` may
-    * be any supported URI (file://, hdfs://, s3a://, …) — java.nio would
-    * silently bind the manifest to the DRIVER'S local disk on a real
-    * cluster while the parquet tables land on the distributed store.
-    */
+  /** Every table a manifest line can name, by directory name. */
+  private val tables =
+    Seq("signatures", "quarantine", "metrics", "clusters", "previews", "actions", "executed", "bands")
+
   /** Read one long out of an observe metric after its carrying action ran —
     * the single-pass epoch-accounting primitive (counts ride the write
     * jobs; empty-relation-pruned metric nodes read as 0).
@@ -54,6 +67,11 @@ object Checkpoints {
     if (row.length == 0) 0L else row.getLong(idx)
   }
 
+  /** All state IO goes through the Hadoop FileSystem API so `stateDir` may
+    * be any supported URI (file://, hdfs://, s3a://, …) — java.nio would
+    * silently bind the manifest to the DRIVER'S local disk on a real
+    * cluster while the parquet tables land on the distributed store.
+    */
   private def fsFor(spark: SparkSession, path: String): (FileSystem, Path) = {
     val p = new Path(path)
     (p.getFileSystem(spark.sparkContext.hadoopConfiguration), p)
@@ -64,51 +82,160 @@ object Checkpoints {
     fs.exists(p)
   }
 
-  def readIfExists(spark: SparkSession, path: String): Option[DataFrame] =
-    if (exists(spark, path)) Some(spark.read.parquet(path)) else None
+  // ------------------------------------------------------------------
+  // Generations: what one manifest line publishes.
+  // ------------------------------------------------------------------
+
+  /** The tables one manifest line names: each one's current generation,
+    * plus what readers need to interpret them. A writer extends its
+    * snapshot with the generations it writes and publishes the result with
+    * [[commit]]; readers resolve the published one with [[snapshot]].
+    *
+    * @param next    generation number of a write made now: the index of the
+    *                manifest line that will publish it
+    * @param buckets bucket count of the id-keyed tables (signatures and
+    *                executed); 0 = plain parquet. A property of the STATE
+    *                DIR, not of the caller's config: every later reader and
+    *                writer — fresh sessions and other drivers included —
+    *                follows it
+    * @param knobs   channel knobs the band index was built with
+    * @param through last signature epoch the band index covers
+    */
+  private[state] final case class Snapshot(stateDir: String, gens: Map[String, Long],
+                                           next: Long, buckets: Int = 0,
+                                           knobs: String = "", through: Long = -1L) {
+    def path(table: String): Option[String] =
+      gens.get(table).map(g => s"$stateDir/$table/gen=$g")
+
+    /** A new generation of each table, unpublished until this snapshot is. */
+    def fresh(ts: String*): Snapshot = copy(gens = gens ++ ts.map(_ -> next))
+
+    def orFresh(table: String): Snapshot = if (gens.contains(table)) this else fresh(table)
+
+    def json: String =
+      gens.toSeq.sorted.map { case (t, g) => s""""$t":$g""" }.mkString("\"gens\":{", ",", "}") +
+        s""","signature_buckets":$buckets""" +
+        (if (gens.contains("bands")) s""","knobs":$knobs,"through_epoch":$through""" else "")
+  }
+
+  /** The published snapshot: the last manifest line's generations. A state
+    * dir whose manifest names none predates generation commits; it has no
+    * reader here and is rebuilt into a fresh state dir.
+    */
+  private[state] def snapshot(spark: SparkSession, stateDir: String): Snapshot = {
+    val lines = readManifest(spark, stateDir)
+    val empty = Snapshot(stateDir, Map.empty, lines.length)
+    lines.reverseIterator.find(_.contains("\"gens\":")) match {
+      case None =>
+        require(lines.isEmpty,
+          s"$stateDir predates generation commits: rebuild it into a fresh state dir")
+        empty
+      case Some(line) =>
+        def field(key: String, value: String): Option[String] =
+          s""""$key":($value)""".r.findFirstMatchIn(line).map(_.group(1))
+        empty.copy(
+          gens = """"(\w+)":(\d+)""".r.findAllMatchIn(field("gens", """\{[^}]*\}""").get)
+            .map(m => m.group(1) -> m.group(2).toLong).toMap,
+          buckets = field("signature_buckets", """\d+""").fold(0)(_.toInt),
+          knobs = field("knobs", """\{[^}]*\}""").getOrElse(""),
+          through = field("through_epoch", """-?\d+""").fold(-1L)(_.toLong))
+    }
+  }
+
+  /** Path of `table`'s published generation; None if the manifest names
+    * none. Each table dir holds only this generation after a committed call,
+    * so `spark.read.parquet(<table dir>)` reads the same rows plus an int
+    * `gen` partition column.
+    */
+  def generationPath(spark: SparkSession, stateDir: String, table: String): Option[String] =
+    snapshot(spark, stateDir).path(table)
+
+  /** Generation dirs on disk that `snap` does not name: a crashed writer's
+    * unpublished ones, or ones a durable line superseded before its writer
+    * could delete them.
+    */
+  private def unnamed(spark: SparkSession, snap: Snapshot): Seq[(FileSystem, Path)] =
+    tables.flatMap { t =>
+      val (fs, dir) = fsFor(spark, s"${snap.stateDir}/$t")
+      val keep = snap.gens.get(t).map(g => s"gen=$g")
+      if (!fs.exists(dir)) Nil
+      else fs.listStatus(dir).toSeq.map(_.getPath)
+        .filter(p => p.getName.startsWith("gen=") && !keep.contains(p.getName))
+        .map(fs -> _)
+    }
+
+  /** Delete what `snap` does not name: unnamed generations, and the dirs of
+    * tables it does not name at all.
+    */
+  private def sweep(spark: SparkSession, snap: Snapshot): Unit = {
+    unnamed(spark, snap).foreach { case (fs, p) => fs.delete(p, true) }
+    tables.filterNot(snap.gens.contains).foreach { t =>
+      val (fs, dir) = fsFor(spark, s"${snap.stateDir}/$t")
+      if (fs.exists(dir)) fs.delete(dir, true)
+    }
+  }
+
+  /** Publish `snap` with one manifest line carrying `fields`; once the line
+    * is durable, delete the generations it supersedes.
+    */
+  private def commit(spark: SparkSession, snap: Snapshot, fields: String): Unit = {
+    appendManifest(spark, snap.stateDir,
+      Seq(fields, snap.json).filter(_.nonEmpty).mkString("{", ",", "}"))
+    commitTestHook("published")
+    sweep(spark, snap)
+  }
+
+  /** Test seam: called with the table's name after every table write,
+    * with "manifest" between the manifest's two renames and with
+    * "published" once a line is durable, so a spec can kill a call at each
+    * of its write and publish points.
+    */
+  private[graft] var commitTestHook: String => Unit = _ => ()
+
+  /** Append `df` to `table`'s generation in `snap`: bucketed on id when
+    * `buckets` > 0, else plain parquet.
+    */
+  private def write(spark: SparkSession, snap: Snapshot, table: String, df: DataFrame,
+                    buckets: Int = 0): Unit = {
+    val p = snap.path(table).get
+    if (buckets > 0) {
+      val tbl = catalogName(table, p)
+      // a fresh generation's path may carry a catalog entry from a crashed
+      // attempt whose files the sweep removed, possibly with another layout
+      if (!exists(spark, p)) spark.sql(s"DROP TABLE IF EXISTS $tbl")
+      // one writer task per bucket: without the repartition every task
+      // writes up to `buckets` files (tasks × buckets small files)
+      df.repartition(buckets, col("id"))
+        .write.mode("append").format("parquet")
+        .bucketBy(buckets, "id").sortBy("id")
+        .option("path", p)
+        .saveAsTable(tbl)
+    } else df.write.mode("append").parquet(p)
+    commitTestHook(table)
+  }
 
   // ------------------------------------------------------------------
-  // Signatures physical layout (plain parquet vs bucketed table).
-  //
-  // The layout is a property of the STATE DIR, not of the caller's config:
-  // it is recorded in `_layout.json` at first write, and every later
-  // reader and writer — including fresh sessions and other drivers —
-  // discovers it from the marker, so all parties agree on the physical
-  // layout without coordinating configs. Spark's bucket metadata lives in
-  // the session catalog (in-memory, per-session), so each session
-  // re-registers the same deterministic table name over the same files on
-  // first touch; the files themselves carry the bucket ids in their names.
+  // Bucketed id-keyed tables. Spark's bucket metadata lives in the session
+  // catalog (in-memory, per-session), so each session registers a
+  // deterministic table name over each generation's files on first touch;
+  // the files themselves carry the bucket ids in their names.
   // ------------------------------------------------------------------
+
+  /** Deterministic per-generation catalog name (every session derives the
+    * same name for the same files).
+    */
+  private def catalogName(table: String, path: String): String =
+    SubDocState.tableName(s"graft_${table}_", new Path(path))
 
   /** Buckets the persisted signatures were written with; 0 = plain parquet. */
-  private[graft] def signatureBuckets(spark: SparkSession, stateDir: String): Int = {
-    val (fs, p) = fsFor(spark, layoutPath(stateDir))
-    SubDocState.markerInt(fs, p, "signature_buckets").getOrElse(0)
-  }
+  private[graft] def signatureBuckets(spark: SparkSession, stateDir: String): Int =
+    snapshot(spark, stateDir).buckets
 
-  private def writeLayout(spark: SparkSession, stateDir: String, buckets: Int): Unit = {
-    val (fs, p) = fsFor(spark, layoutPath(stateDir))
-    val out = fs.create(p, true)
-    try out.write(s"""{"signature_buckets":$buckets}""".getBytes(UTF_8))
-    finally out.close()
-  }
+  private[graft] def sigTableName(spark: SparkSession, stateDir: String): String =
+    catalogName("signatures", generationPath(spark, stateDir, "signatures").get)
 
-  /** Deterministic per-state-dir catalog name (the in-memory catalog is
-    * per-session; every session derives the same name for the same dir).
-    */
-  private[graft] def sigTableName(spark: SparkSession, stateDir: String): String = {
-    val (_, root) = fsFor(spark, signaturesPath(stateDir))
-    SubDocState.tableName("graft_sigs_", root)
-  }
-
-  /** Companion table name for the executed-actions table (same naming
-    * scheme as [[sigTableName]]; both id-keyed tables share the store's
-    * one recorded bucket layout).
-    */
-  private[graft] def execTableName(spark: SparkSession, stateDir: String): String = {
-    val (_, root) = fsFor(spark, executedPath(stateDir))
-    SubDocState.tableName("graft_exec_", root)
-  }
+  private[graft] def execTableName(spark: SparkSession, stateDir: String): String =
+    catalogName("executed", generationPath(spark, stateDir, "executed").get)
 
   /** Register (if absent) a bucketed table over existing state files and
     * return its name. Schema comes from the parquet footers so
@@ -118,11 +245,10 @@ object Checkpoints {
                                   buckets: Int): String = {
     if (!spark.catalog.tableExists(tbl)) {
       val schema = spark.read.parquet(path).schema
-      val (_, root) = fsFor(spark, path)
       spark.sql(
         s"""CREATE TABLE $tbl (${schema.toDDL}) USING PARQUET
            |CLUSTERED BY (id) SORTED BY (id) INTO $buckets BUCKETS
-           |LOCATION '${root.toString}'""".stripMargin)
+           |LOCATION '${new Path(path)}'""".stripMargin)
     }
     // another driver may have appended an epoch since this session cached
     // the file listing; the lease serializes writers, not readers
@@ -130,9 +256,13 @@ object Checkpoints {
     tbl
   }
 
-  private def ensureSigTable(spark: SparkSession, stateDir: String, buckets: Int): String =
-    ensureBucketedTable(spark, sigTableName(spark, stateDir),
-      signaturesPath(stateDir), buckets)
+  /** Layout-aware read of an id-keyed table's generation in `snap`. */
+  private def readIdKeyed(spark: SparkSession, snap: Snapshot, table: String): Option[DataFrame] =
+    snap.path(table).map { p =>
+      if (snap.buckets > 0)
+        spark.table(ensureBucketedTable(spark, catalogName(table, p), p, snap.buckets))
+      else spark.read.parquet(p)
+    }
 
   /** Layout-aware read of the executed-actions table; None if no action
     * ever executed. The executed table shares the store's bucket layout:
@@ -140,16 +270,8 @@ object Checkpoints {
     * `id` — with BOTH scans carrying HashPartitioning(id, N), the live
     * view is computed with zero exchange (pinned by BucketedStateSpec).
     */
-  def readExecuted(spark: SparkSession, stateDir: String): Option[DataFrame] = {
-    if (!exists(spark, executedPath(stateDir))) None
-    else {
-      val b = signatureBuckets(spark, stateDir)
-      if (b > 0)
-        Some(spark.table(ensureBucketedTable(spark,
-          execTableName(spark, stateDir), executedPath(stateDir), b)))
-      else readIfExists(spark, executedPath(stateDir))
-    }
-  }
+  def readExecuted(spark: SparkSession, stateDir: String): Option[DataFrame] =
+    readIdKeyed(spark, snapshot(spark, stateDir), "executed")
 
   /** Point lookup over the signature store — the reference's
     * `find_new_images` chunked RocksDB point-lookups (db.rs:132-164)
@@ -170,26 +292,13 @@ object Checkpoints {
     * as-of anti-joins on `id` need no exchange on the state side — the
     * side that grows with corpus age (see DedupConfig.stateBuckets).
     */
-  def readSignatures(spark: SparkSession, stateDir: String): DataFrame = {
-    val b = signatureBuckets(spark, stateDir)
-    if (b > 0) spark.table(ensureSigTable(spark, stateDir, b))
-    else spark.read.parquet(signaturesPath(stateDir))
-  }
+  def readSignatures(spark: SparkSession, stateDir: String): DataFrame =
+    readSignatures(spark, snapshot(spark, stateDir))
 
-  /** Single-writer lease over a state dir. The reference's single-process
-    * RocksDB handle made concurrent writers impossible (`db.rs` opens the
-    * store exclusively); on a cluster two drivers pointed at one stateDir
-    * would interleave the manifest's double-rename and parquet appends, so
-    * every mutating epoch runs inside this lease.
-    *
-    * `FileSystem.create(path, overwrite = false)` is atomic on HDFS-like
-    * stores (and good enough on local FS for tests); the loser gets a clean
-    * IllegalStateException instead of a corrupted store. A lease older than
-    * `staleMs` is treated as abandoned by a crashed holder and broken —
-    * epochs are minutes-long, so the default 30 min bound never fences out
-    * a live writer. (On S3, creation is not atomic; front a real lock
-    * service or DynamoDB-style conditional put there.)
-    */
+  private def readSignatures(spark: SparkSession, snap: Snapshot): DataFrame =
+    readIdKeyed(spark, snap, "signatures").getOrElse(
+      throw new IllegalStateException(s"no committed signatures in ${snap.stateDir}"))
+
   /** Thrown when the state lease is held by another writer. Subclasses
     * IllegalStateException so existing catch sites keep working; a distinct
     * type so retry loops (streaming ingest under a batch clusterEpoch) can
@@ -204,6 +313,21 @@ object Checkpoints {
     */
   private[graft] var lockTakeoverTestHook: () => Unit = () => ()
 
+  /** Single-writer lease over a state dir. The reference's single-process
+    * RocksDB handle made concurrent writers impossible (`db.rs` opens the
+    * store exclusively); on a cluster two drivers pointed at one stateDir
+    * would interleave the manifest's double-rename and parquet appends, so
+    * every mutating epoch runs inside this lease. The holder first deletes
+    * every generation the manifest does not name (see [[sweep]]).
+    *
+    * `FileSystem.create(path, overwrite = false)` is atomic on HDFS-like
+    * stores (and good enough on local FS for tests); the loser gets a clean
+    * IllegalStateException instead of a corrupted store. A lease older than
+    * `staleMs` is treated as abandoned by a crashed holder and broken —
+    * epochs are minutes-long, so the default 30 min bound never fences out
+    * a live writer. (On S3, creation is not atomic; front a real lock
+    * service or DynamoDB-style conditional put there.)
+    */
   def withStateLock[T](spark: SparkSession, stateDir: String,
                        staleMs: Long = 30L * 60 * 1000)(f: => T): T = {
     val (fs, root) = fsFor(spark, stateDir)
@@ -254,8 +378,10 @@ object Checkpoints {
       (s"""{"holder":"$holderToken",""" +
         s""""acquired_ms":${System.currentTimeMillis()}}""").getBytes(UTF_8))
     finally out.close()
-    try f
-    finally {
+    try {
+      sweep(spark, snapshot(spark, stateDir))
+      f
+    } finally {
       // a token MISMATCH is the only positive takeover signal. A missing
       // file means the lease is gone (nothing to release); any other read
       // failure on a healthy lease is retried once, then defaults to
@@ -295,25 +421,28 @@ object Checkpoints {
   def runEpoch(spark: SparkSession, pages: DataFrame, idCol: String, textCol: String,
                stateDir: String, cfg: DedupConfig = DedupConfig()): (Long, Long) =
     withStateLock(spark, stateDir) {
-      runEpochUnlocked(spark, pages, idCol, textCol, stateDir, cfg)
+      val in = ingest(spark, pages, idCol, textCol, snapshot(spark, stateDir), cfg)
+      commit(spark, in.snap, in.line)
+      (in.nNew, in.nQuarantined)
     }
 
-  private def runEpochUnlocked(spark: SparkSession, pages: DataFrame, idCol: String,
-                               textCol: String, stateDir: String,
-                               cfg: DedupConfig): (Long, Long) = {
+  /** What an ingest leaves for its caller to publish: the snapshot naming
+    * the generations it wrote, and the fields of the epoch's manifest line.
+    */
+  private final case class Ingest(snap: Snapshot, epoch: Long, nNew: Long,
+                                  nQuarantined: Long, line: String)
+
+  private def ingest(spark: SparkSession, pages: DataFrame, idCol: String,
+                     textCol: String, published: Snapshot, cfg: DedupConfig): Ingest = {
     val epochT0 = System.nanoTime()
-    val (stateFs, stateRoot) = fsFor(spark, stateDir)
-    stateFs.mkdirs(stateRoot)
-    val sigPath = signaturesPath(stateDir)
-    val qPath = quarantinePath(stateDir)
 
     // resume primitive (J1): anti-join against persisted state + skip list.
     // force_rescan (reference config.rs:81 / reinitialise semantics) bypasses
-    // both filters and OVERWRITES state instead of appending duplicates.
-    val seen =
-      if (cfg.forceRescan || !exists(spark, sigPath)) None
-      else Some(readSignatures(spark, stateDir))
-    val quarantined = if (cfg.forceRescan) None else readIfExists(spark, qPath)
+    // both filters and starts a new store instead of appending duplicates.
+    val fresh = cfg.forceRescan || !published.gens.contains("signatures")
+    val seen = if (fresh) None else Some(readSignatures(spark, published))
+    val quarantined =
+      if (cfg.forceRescan) None else published.path("quarantine").map(spark.read.parquet(_))
     // slice-keyed prune (cfg.stateBloomFpp): the state side of the
     // resume anti-join is the corpus-aged one; a Bloom sketch of the
     // incoming slice's ids (one slim aggregation over the pruned id
@@ -365,86 +494,58 @@ object Checkpoints {
     // per-partition lineage (north_rule): which partition produced how many
     // signature rows in which epoch — epoch is stamped on every row, so the
     // state table itself carries its commit history (≙ Iceberg snapshot id)
-    val epoch = nextEpoch(spark, stateDir)
+    val epoch = nextEpoch(spark, published.stateDir)
     val withPart = sigs
       .withColumn("part_id", spark_partition_id())
       .withColumn("epoch", lit(epoch))
-    // Layout is sticky: once a state dir exists, later epochs follow its
+    // Layout is sticky: once a store exists, later epochs follow its
     // recorded layout regardless of the caller's config (mixing layouts in
     // one table would corrupt the bucket invariant); forceRescan (which
-    // overwrites) is the documented way to re-layout.
-    val hadState = exists(spark, sigPath)
-    val buckets =
-      if (!cfg.forceRescan && hadState) signatureBuckets(spark, stateDir)
-      else cfg.stateBuckets
+    // starts a new store) is the documented way to re-layout.
+    val buckets = if (fresh) cfg.stateBuckets else published.buckets
     if (buckets != cfg.stateBuckets && cfg.stateBuckets > 0)
       System.err.println(s"[state] stateBuckets=${cfg.stateBuckets} requested but " +
         s"existing layout has $buckets bucket(s); keeping the existing layout " +
         "(use forceRescan to re-layout)")
-    val writeMode = if (cfg.forceRescan) "overwrite" else "append"
-    if (cfg.forceRescan) {
-      // a rescan restarts the STORE, so every table DERIVED from the old
-      // signatures is stale the moment the overwrite lands: a later delta
-      // clusterEpoch would read the pre-rescan clusters as trusted
-      // connectivity (splicing edges for docs whose text changed, silently
-      // splitting survivors whose cluster_id vanished), and the band index
-      // would keep pre-rescan rows forever (compaction prunes only
-      // tombstoned ids — vanished-by-overwrite ids are never tombstoned).
-      // Dropping them forces the full path + an index rebuild next epoch.
-      // The executed table goes too: it is keyed by — and physically
-      // bucketed like — the OLD store, so keeping it would (a) apply
-      // pre-rescan tombstones to ids the rescan re-mints and (b) leave
-      // old-layout files under the re-written _layout.json, making a later
-      // ensureBucketedTable register the WRONG bucket count over them —
-      // the tombstone anti-join would then elide an exchange it needs and
-      // silently resurrect removed docs. Same for the quarantine skip
-      // list: a restarted store re-evaluates every doc from scratch.
-      Seq(clustersPath(stateDir), actionsPath(stateDir), previewsPath(stateDir),
-        bandsPath(stateDir), bandsMarkerPath(stateDir),
-        executedPath(stateDir), qPath).foreach { p =>
-        val (dfs, dp) = fsFor(spark, p)
-        if (dfs.exists(dp)) dfs.delete(dp, true)
-      }
-      spark.sql(s"DROP TABLE IF EXISTS ${execTableName(spark, stateDir)}")
-    }
-    if (buckets > 0) {
+    // A rescan publishes its new signatures generation with none of the
+    // tables that describe the old store: a later delta clusterEpoch would
+    // read the old clusters as trusted connectivity and the band index
+    // would keep their rows forever; the executed table is keyed by — and
+    // bucketed like — the old store, so its tombstones would suppress ids
+    // the rescan re-mints; and a restarted store re-evaluates every
+    // quarantined doc.
+    val kept =
       if (cfg.forceRescan)
-        spark.sql(s"DROP TABLE IF EXISTS ${sigTableName(spark, stateDir)}")
-      // one writer task per bucket: without the repartition every task
-      // writes up to `buckets` files (tasks × buckets small files)
-      withPart.repartition(buckets, col("id"))
-        .write.mode(writeMode).format("parquet")
-        .bucketBy(buckets, "id").sortBy("id")
-        .option("path", sigPath)
-        .saveAsTable(sigTableName(spark, stateDir))
-    } else {
-      withPart.write.mode(writeMode).parquet(sigPath)
-    }
-    if (!hadState || cfg.forceRescan) writeLayout(spark, stateDir, buckets)
+        published.gens -- Seq("clusters", "actions", "previews", "bands", "executed", "quarantine")
+      else published.gens
+    val snap =
+      (if (fresh) published.copy(gens = kept, buckets = buckets).fresh("signatures")
+       else published).orFresh("quarantine").orFresh("metrics")
+    write(spark, snap, "signatures", withPart, buckets)
 
     // quarantine count rides the write as an observe metric — one action,
     // no cache/count/write triple (an empty append just writes a footer)
     val qObs = org.apache.spark.sql.Observation()
-    bad.observe(qObs, count(lit(1)).as("n")).write.mode("append").parquet(qPath)
+    write(spark, snap, "quarantine", bad.observe(qObs, count(lit(1)).as("n")))
     val nQuarantined = observedLong(qObs, 0)
 
     // both consumers of the pruned anti-join (signature + quarantine
-    // writes) have committed; release the sketch's executor blocks now.
+    // writes) have run; release the sketch's executor blocks now.
     // unpersist (not destroy) keeps the driver copy, so a recompute after
     // executor loss just re-fetches — correctness is unaffected.
     sliceSketch.foreach(_.unpersist())
 
-    // one read-back pass over the committed epoch serves the lineage table
+    // one read-back pass over the written epoch serves the lineage table
     // AND the row count: the total rides the lineage write as an observe
     // metric (sum over the already-grouped per-partition counts)
     val lObs = org.apache.spark.sql.Observation()
-    val lineage = readSignatures(spark, stateDir).filter(col("epoch") === epoch)
+    val lineage = readSignatures(spark, snap).filter(col("epoch") === epoch)
       .groupBy("part_id")
       .agg(count(lit(1)).as("n_rows"))
       .withColumn("epoch", lit(epoch))
       .withColumn("table", lit("signatures"))
       .observe(lObs, coalesce(sum("n_rows"), lit(0L)).as("n"))
-    lineage.write.mode("append").parquet(metricsPath(stateDir))
+    write(spark, snap, "metrics", lineage)
 
     // X13 rate metrics (reference progress.rs ETA math): each commit line
     // records its own throughput, so an operator can project the remaining
@@ -454,17 +555,18 @@ object Checkpoints {
     val rate = if (elapsed > 0) nNew / elapsed else 0.0
     // explicit ROOT locale: the manifest is machine-parsed JSON and this is
     // library code — a comma-decimal host locale must not leak into it
-    appendManifest(spark, stateDir,
-      s"""{"epoch":$epoch,"new_signatures":$nNew,"quarantined":$nQuarantined,""" +
+    Ingest(snap, epoch, nNew, nQuarantined,
+      s""""epoch":$epoch,"new_signatures":$nNew,"quarantined":$nQuarantined,""" +
         s""""elapsed_sec":${"%.2f".formatLocal(java.util.Locale.ROOT, elapsed)},""" +
-        s""""docs_per_sec":${"%.1f".formatLocal(java.util.Locale.ROOT, rate)}}""")
-    (nNew, nQuarantined)
+        s""""docs_per_sec":${"%.1f".formatLocal(java.util.Locale.ROOT, rate)}""")
   }
 
-  /** Full incremental epoch: fingerprint new pages ([[runEpoch]]), then
+  /** Full incremental epoch: fingerprint new pages (as [[runEpoch]]), then
     * re-cluster from the PERSISTED signature state (fingerprints are never
     * recomputed — clustering alone is re-derived, which is the cheap part)
-    * and overwrite the clusters + actions tables. The suffix-array verify
+    * and write new clusters, actions and previews generations. One manifest
+    * line publishes the epoch and all three, so [[executeEpoch]] only ever
+    * sees the plan of the committed clusters. The suffix-array verify
     * pass fetches normalized text for its ambiguous slice from `textsOf`
     * when given, else from `pages`.
     *
@@ -496,28 +598,36 @@ object Checkpoints {
       if (cfg.reliableCheckpoints && cfg.checkpointDir.isEmpty)
         cfg.copy(checkpointDir = s"$stateDir/_spark_checkpoints")
       else cfg
-    val (nNew, _) = runEpochUnlocked(spark, pages, idCol, textCol, stateDir, cfg0)
+    val in = ingest(spark, pages, idCol, textCol, snapshot(spark, stateDir), cfg0)
 
     // cluster the LIVE state: rows vacated by executed delete/move actions
     // must not re-enter clusters (or worse, win representative selection
     // and direct new duplicates at originals that no longer exist)
-    val stateSigs = liveSignatures(spark, stateDir)
+    val stateSigs = liveSignatures(spark, in.snap)
     val texts =
       DedupPipeline.normTexts(textsOf.getOrElse(pages), idCol, textCol, cfg0)
+    // keep the band index warm on full/first epochs too (when the flag is
+    // set): the NEXT delta epoch then starts from a delta-sized append
+    // instead of a corpus-wide bootstrap pass
+    val (bandIndex, snap) =
+      if (cfg0.deltaCluster) {
+        val (index, s) = ensureBandIndex(spark, in.snap, cfg0, in.epoch)
+        (Some(index), s)
+      } else (None, in.snap)
     // delta-incremental clustering (cfg.deltaCluster): re-derive near
     // edges only for the re-verify frontier — this epoch's new docs plus
     // members of clusters invalidated by executed removals (a removal can
     // sever the only path connecting surviving members, so those clusters
     // cannot trust their old assignment edges) — and splice the stable
     // clusters' connectivity in as assignment edges. Falls back to the
-    // full re-cluster on the first epoch or under forceRescan.
-    val clusters =
-      if (cfg0.deltaCluster && !cfg0.forceRescan &&
-          exists(spark, clustersPath(stateDir))) {
-        val prior = spark.read.parquet(clustersPath(stateDir))
+    // full re-cluster on the first epoch or after a rescan (neither
+    // publishes prior clusters).
+    val clusters = (bandIndex, in.snap.path("clusters")) match {
+      case (Some(index), Some(priorPath)) =>
+        val prior = spark.read.parquet(priorPath)
         // "new" = every live doc the prior clusters table has never seen —
-        // NOT just the epoch runEpoch committed above: signature epochs
-        // accrue WITHOUT clustering under the streaming-ingest cadence and
+        // NOT just the epoch ingested above: signature epochs accrue
+        // WITHOUT clustering under the streaming-ingest cadence and
         // under repeated runEpoch calls, and an epoch filter would silently
         // skip those docs' near-pair discovery (they are absent from the
         // assignment edges too, so nothing else re-derives them; pinned by
@@ -525,7 +635,7 @@ object Checkpoints {
         // anti-join per epoch — corpus-sized but 2 columns wide.
         val newSids = stateSigs.select(col("id").as("sid"))
           .join(prior.select(col("id").as("sid")), Seq("sid"), "left_anti")
-        val tombs = tombstones(spark, stateDir).select("id")
+        val tombs = tombstones(spark, in.snap).select("id")
         val affected = prior.join(tombs, Seq("id"), "left_semi")
           .select("cluster_id").distinct()
         val liveMembers = prior.join(tombs, Seq("id"), "left_anti")
@@ -537,35 +647,27 @@ object Checkpoints {
         val assigns = stable.filter(col("id") =!= col("cluster_id"))
           .select(col("id").as("sid_a"), col("cluster_id").as("sid_b"))
         DedupPipeline.clusterSignaturesDelta(
-          spark, stateSigs, focus, assigns, Some(texts), cfg0,
-          bandIndex = Some(ensureBandIndex(spark, stateDir, cfg0)))
-      } else {
-        // keep the index warm on full/first epochs too (when the flag is
-        // set): the NEXT delta epoch then starts from a delta-sized append
-        // instead of a corpus-wide bootstrap pass
-        if (cfg0.deltaCluster && !cfg0.forceRescan)
-          ensureBandIndex(spark, stateDir, cfg0)
+          spark, stateSigs, focus, assigns, Some(texts), cfg0, bandIndex = Some(index))
+      case _ =>
         DedupPipeline.clusterSignatures(spark, stateSigs, Some(texts), cfg0)
-      }
+    }
 
-    clusters.write.mode("overwrite").parquet(clustersPath(stateDir))
-    graft.actions.Actions.plan(clusters, action, dryRun = true)
-      .write.mode("overwrite").parquet(actionsPath(stateDir))
+    // previews are per-epoch and opt-in: a run without them publishes none,
+    // so a table left by a prior opt-in run is superseded, never served
+    // with another epoch's cluster_ids
+    val out =
+      if (cfg0.previewChars > 0) snap.fresh("clusters", "actions", "previews")
+      else snap.copy(gens = snap.gens - "previews").fresh("clusters", "actions")
+    write(spark, out, "clusters", clusters)
+    write(spark, out, "actions",
+      graft.actions.Actions.plan(clusters, action, dryRun = true))
 
     // preview surface (reference generate_thumbnails, config.rs:54,106):
     // one snippet row per cluster, from its representative's normalized
     // text — clusters is eagerly checkpointed, so this join reads
     // materialized rows, and the texts side is the already-built normTexts
     // projection (capped at saMaxChars upstream)
-    if (cfg0.previewChars <= 0) {
-      // previews are per-epoch: a table left by a prior opt-in run would
-      // reference cluster_ids from an older epoch while clusters/ is fresh —
-      // remove it rather than serve a stale-but-current-looking surface
-      // (<= 0, not == 0: a library caller's negative value must not skip
-      // BOTH the write and this cleanup)
-      val (fs, pv) = fsFor(spark, previewsPath(stateDir))
-      if (fs.exists(pv)) fs.delete(pv, true)
-    } else {
+    if (cfg0.previewChars > 0)
       // LEFT join: under the slice-fed posture without textsOf, `texts`
       // covers only this epoch's slice — an inner join would silently
       // shrink the table to the few clusters whose representative is new,
@@ -573,41 +675,41 @@ object Checkpoints {
       // representative's text was not among this epoch's inputs). The
       // substring projects BEFORE the join so the exchange ships
       // previewChars per row, not the full saMaxChars norm_text.
-      clusters.filter(col("is_representative"))
-        .select(col("cluster_id"), col("id"))
-        .join(texts.select(col("id"),
-          substring(col("norm_text"), 1, cfg0.previewChars).as("preview")),
-          Seq("id"), "left")
-        .select(col("cluster_id"), col("id").as("representative_id"),
-          col("preview"))
-        .write.mode("overwrite").parquet(previewsPath(stateDir))
-    }
+      write(spark, out, "previews",
+        clusters.filter(col("is_representative"))
+          .select(col("cluster_id"), col("id"))
+          .join(texts.select(col("id"),
+            substring(col("norm_text"), 1, cfg0.previewChars).as("preview")),
+            Seq("id"), "left")
+          .select(col("cluster_id"), col("id").as("representative_id"),
+            col("preview")))
 
-    val epoch = nextEpoch(spark, stateDir) - 1 // runEpoch already appended this epoch
-    val persisted = spark.read.parquet(clustersPath(stateDir))
     // cluster count rides the lineage write as an observe metric: every
     // cluster has exactly one representative (pipeline invariant, oracled
     // per-row by q_dedup_invariants), so sum(is_representative) ≡
     // count(distinct cluster_id) without a second scan + distinct exchange
     val cObs = org.apache.spark.sql.Observation()
-    val lineage = persisted
+    val lineage = spark.read.parquet(out.path("clusters").get)
       .observe(cObs, coalesce(sum(col("is_representative").cast("long")), lit(0L))
         .as("n_clusters"))
       .withColumn("part_id", spark_partition_id())
       .groupBy("part_id").agg(count(lit(1)).as("n_rows"))
-      .withColumn("epoch", lit(epoch))
+      .withColumn("epoch", lit(in.epoch))
       .withColumn("table", lit("clusters"))
-    lineage.write.mode("append").parquet(metricsPath(stateDir))
+    write(spark, out, "metrics", lineage)
 
     val nClusters = observedLong(cObs, 0)
-    appendManifest(spark, stateDir, s"""{"epoch":$epoch,"clusters":$nClusters}""")
-    (nNew, nClusters)
+    commit(spark, out, in.line + s""","clusters":$nClusters""")
+    (in.nNew, nClusters)
   }
 
-  /** Execute the planned actions table against the live signature state —
+  /** Execute the committed actions plan against the live signature state —
     * the reference's final pipeline stage, which it specifies but stubs
     * (`action.rs:1`, CLI contract `cli.rs:27-37`, README.md:26-42):
     *
+    *  - the plan read is the one the published manifest line names, which
+    *    is always the plan of the committed clusters (one line publishes
+    *    both), never an unpublished or older generation;
     *  - idempotent with bounded retries: a plan row is attempted at most
     *    once per PLAN IDENTITY (id, original_id, action) — the anti-join on
     *    the persisted `executed` table skips rows already SETTLED: succeeded,
@@ -625,11 +727,10 @@ object Checkpoints {
     *    rows a successful delete/move will vacate are appended to
     *    `backupDir` BEFORE the commit (a crash in between re-appends the
     *    backup on retry — duplicate safety copies, never missing ones);
-    *  - ATOMIC commit: the `executed` append is the SINGLE commit point.
+    *  - ATOMIC commit: the `executed` append is the only table write.
     *    Tombstones are DERIVED from it on read ([[tombstones]] /
     *    [[liveSignatures]]), so there is no second table whose partial
-    *    write could desynchronize the store (the reference analog is one
-    *    RocksDB write batch, `db.rs:64-92`).
+    *    write could desynchronize the store.
     *
     * @return (nExecuted, nFailed) for this run (0, 0) when nothing pending
     */
@@ -641,8 +742,10 @@ object Checkpoints {
       if (cfg.reliableCheckpoints && cfg.checkpointDir.isEmpty)
         cfg.copy(checkpointDir = s"$stateDir/_spark_checkpoints")
       else cfg
-    val plan = spark.read.parquet(actionsPath(stateDir))
-    val pending = readExecuted(spark, stateDir) match {
+    val snap = snapshot(spark, stateDir)
+    val plan = spark.read.parquet(snap.path("actions").getOrElse(throw new IllegalStateException(
+      s"no committed actions plan in $stateDir: run clusterEpoch first")))
+    val pending = readIdKeyed(spark, snap, "executed") match {
       case Some(prior) =>
         val settled = prior.filter(col("success") ||
           col("error").isin("missing_id", "missing_original"))
@@ -666,7 +769,7 @@ object Checkpoints {
     // original) — left lazy, the whole live-state derivation (parquet scan
     // + tombstone anti-join + distinct) would evaluate per branch
     val universe = cfg0.materializer(spark)(
-      liveSignatures(spark, stateDir).select("id").distinct())
+      liveSignatures(spark, snap).select("id").distinct())
     // small table (one row per planned duplicate): materialize once, every
     // consumer below (backup, commit, counts) reads the checkpoint — via the
     // CONFIGURED materializer, so `--reliable` covers the executor stage too
@@ -678,7 +781,7 @@ object Checkpoints {
         .withColumn("epoch", lit(math.max(0L, nextEpoch(spark, stateDir) - 1))))
 
     backupDir.foreach { bd =>
-      readSignatures(spark, stateDir)
+      readSignatures(spark, snap)
         .join(graft.actions.Actions.tombstones(executed).select("id"), Seq("id"), "left_semi")
         .write.mode("append").parquet(bd)
     }
@@ -688,20 +791,15 @@ object Checkpoints {
       count(lit(1))).first()
     val nExecuted = r.getLong(0)
     val nFailed = r.getLong(1) - nExecuted
-    if (nExecuted + nFailed > 0) {
-      val b = signatureBuckets(spark, stateDir)
-      if (b > 0)
-        // the executed table follows the store's bucket layout (see
-        // [[readExecuted]]); one writer task per bucket, same as signatures
-        executed.repartition(b, col("id"))
-          .write.mode("append").format("parquet")
-          .bucketBy(b, "id").sortBy("id")
-          .option("path", executedPath(stateDir))
-          .saveAsTable(execTableName(spark, stateDir))
-      else executed.write.mode("append").parquet(executedPath(stateDir))
-    }
-    appendManifest(spark, stateDir,
-      s"""{"executed":$nExecuted,"failed":$nFailed}""")
+    val out =
+      if (nExecuted + nFailed == 0) snap
+      else {
+        // the executed table follows the store's bucket layout (see [[readExecuted]])
+        val s = snap.orFresh("executed")
+        write(spark, s, "executed", executed, s.buckets)
+        s
+      }
+    commit(spark, out, s""""executed":$nExecuted,"failed":$nFailed""")
     (nExecuted, nFailed)
   }
 
@@ -709,22 +807,31 @@ object Checkpoints {
     * delete/move actions vacate their row). Derivation — not a second
     * persisted table — is what makes [[executeEpoch]]'s commit atomic.
     */
-  def tombstones(spark: SparkSession, stateDir: String): DataFrame = {
+  def tombstones(spark: SparkSession, stateDir: String): DataFrame =
+    tombstones(spark, snapshot(spark, stateDir))
+
+  private def tombstones(spark: SparkSession, snap: Snapshot): DataFrame = {
     import spark.implicits._
-    readExecuted(spark, stateDir)
+    readIdKeyed(spark, snap, "executed")
       .map(graft.actions.Actions.tombstones)
       .getOrElse(Seq.empty[(String, String, String)].toDF("id", "original_id", "action"))
   }
 
   /** The live signature state: persisted signatures minus tombstoned rows. */
-  def liveSignatures(spark: SparkSession, stateDir: String): DataFrame = {
-    val sigs = readSignatures(spark, stateDir)
-    readExecuted(spark, stateDir) match {
+  def liveSignatures(spark: SparkSession, stateDir: String): DataFrame =
+    liveSignatures(spark, snapshot(spark, stateDir))
+
+  private def liveSignatures(spark: SparkSession, snap: Snapshot): DataFrame =
+    withoutTombstones(spark, snap, readSignatures(spark, snap), identity)
+
+  /** `df` minus the ids tombstoned by the executed rows `scope` keeps. */
+  private def withoutTombstones(spark: SparkSession, snap: Snapshot, df: DataFrame,
+                                scope: DataFrame => DataFrame): DataFrame =
+    readIdKeyed(spark, snap, "executed") match {
       case Some(ex) =>
-        sigs.join(graft.actions.Actions.tombstones(ex).select("id"), Seq("id"), "left_anti")
-      case None => sigs
+        df.join(graft.actions.Actions.tombstones(scope(ex)).select("id"), Seq("id"), "left_anti")
+      case None => df
     }
-  }
 
   /** The dedup verdict as an id set — what a training export keeps: cluster
     * representatives (every clustered doc is in exactly one cluster with
@@ -733,15 +840,13 @@ object Checkpoints {
     * rows. None when the state has no clusters table yet (no epoch has
     * run); callers then export the corpus unfiltered.
     */
-  def keepIds(spark: SparkSession, stateDir: String): Option[DataFrame] =
-    readIfExists(spark, clustersPath(stateDir)).map { c =>
-      val reps = c.filter(col("is_representative")).select("id")
-      readExecuted(spark, stateDir) match {
-        case Some(ex) => reps.join(
-          graft.actions.Actions.tombstones(ex).select("id"), Seq("id"), "left_anti")
-        case None => reps
-      }
+  def keepIds(spark: SparkSession, stateDir: String): Option[DataFrame] = {
+    val snap = snapshot(spark, stateDir)
+    snap.path("clusters").map { c =>
+      withoutTombstones(spark, snap,
+        spark.read.parquet(c).filter(col("is_representative")).select("id"), identity)
     }
+  }
 
   // ------------------------------------------------------------------
   // Persisted band index — the delta-cluster frontier's slim lookup table.
@@ -771,57 +876,51 @@ object Checkpoints {
       s""""fast_path_bands":${cfg.fastPathBands}}"""
 
   /** Band index covering every committed epoch, building or repairing as
-    * needed; returns the index frame (id, band, band_hash).
+    * needed under the state lease; returns the index frame (id, band,
+    * band_hash).
+    */
+  def ensureBandIndex(spark: SparkSession, stateDir: String,
+                      cfg: DedupConfig): DataFrame =
+    withStateLock(spark, stateDir) {
+      val snap = snapshot(spark, stateDir)
+      val (index, out) = ensureBandIndex(spark, snap, cfg, nextEpoch(spark, stateDir) - 1)
+      if (out != snap) commit(spark, out, "")
+      index
+    }
+
+  /** The band index of `snap` brought up to signature epoch `through`:
     *
-    *  - no marker / knob mismatch → full rebuild from the signatures table
-    *    (bootstrap, or the documented post-knob-change full pass);
-    *  - marker behind the epoch counter (an interleaved non-delta epoch, or
-    *    a crash between the signature commit and the index append) → append
-    *    just the missing epochs' rows. The repair is idempotent: a replayed
-    *    append only duplicates rows, and every consumer is a semi-join.
+    *  - none published / knob mismatch → a new generation rebuilt from the
+    *    signatures table (bootstrap, or the documented post-knob-change
+    *    full pass);
+    *  - published `through_epoch` behind (an interleaved non-delta epoch, or
+    *    a crash between the signature append and the line that publishes
+    *    the index) → append just the missing epochs' rows. The repair is
+    *    idempotent: a replayed append only duplicates rows, and every
+    *    consumer is a semi-join.
     *
     * Tombstoned docs keep their index rows (they only widen the frontier;
     * live-state semi-joins drop them downstream) — [[compactSignatures]]
-    * prunes them during maintenance. The marker is written AFTER the data,
-    * so a crash can only leave the index behind, never ahead.
+    * prunes them during maintenance. The returned snapshot carries the
+    * index's knobs and `through_epoch` for the caller's line to publish.
     */
-  def ensureBandIndex(spark: SparkSession, stateDir: String,
-                      cfg: DedupConfig): DataFrame = {
-    val lastEpoch = nextEpoch(spark, stateDir) - 1
+  private def ensureBandIndex(spark: SparkSession, snap: Snapshot, cfg: DedupConfig,
+                              through: Long): (DataFrame, Snapshot) = {
     val knobs = channelKnobsJson(cfg)
-    val (fs, mp) = fsFor(spark, bandsMarkerPath(stateDir))
-    val marker: Option[(String, Long)] =
-      if (!fs.exists(mp)) None
-      else {
-        val in = fs.open(mp)
-        val txt =
-          try scala.io.Source.fromInputStream(in, "UTF-8").mkString
-          finally in.close()
-        for {
-          k <- """"knobs":(\{[^}]*\})""".r.findFirstMatchIn(txt).map(_.group(1))
-          e <- """"through_epoch":(-?\d+)""".r.findFirstMatchIn(txt).map(_.group(1).toLong)
-        } yield (k, e)
-      }
     def rows(sigs: DataFrame) =
       DedupPipeline.allChannelBandRows(sigs, cfg, includeFast = true)
-    def writeMarker(): Unit = {
-      val out = fs.create(mp, true)
-      try out.write(
-        s"""{"knobs":$knobs,"through_epoch":$lastEpoch}""".getBytes(UTF_8))
-      finally out.close()
-    }
-    marker match {
-      case Some((k, through)) if k == knobs && through >= lastEpoch => ()
-      case Some((k, through)) if k == knobs =>
-        rows(readSignatures(spark, stateDir).filter(col("epoch") > through))
-          .write.mode("append").parquet(bandsPath(stateDir))
-        writeMarker()
-      case _ =>
-        rows(readSignatures(spark, stateDir))
-          .write.mode("overwrite").parquet(bandsPath(stateDir))
-        writeMarker()
-    }
-    spark.read.parquet(bandsPath(stateDir))
+    val out =
+      if (snap.gens.contains("bands") && snap.knobs == knobs) {
+        if (snap.through < through)
+          write(spark, snap, "bands",
+            rows(readSignatures(spark, snap).filter(col("epoch") > snap.through)))
+        snap.copy(through = math.max(through, snap.through))
+      } else {
+        val s = snap.fresh("bands").copy(knobs = knobs, through = through)
+        write(spark, s, "bands", rows(readSignatures(spark, snap)))
+        s
+      }
+    (spark.read.parquet(out.path("bands").get), out)
   }
 
   /** SNAPSHOT read — the signature state exactly as of `epoch`, inclusive
@@ -833,28 +932,10 @@ object Checkpoints {
     * [[liveSignatures]].
     */
   def signaturesAsOf(spark: SparkSession, stateDir: String, epoch: Long): DataFrame = {
-    val sigs = readSignatures(spark, stateDir)
-      .filter(col("epoch") <= epoch)
-    if (exists(spark, executedPath(stateDir))) {
-      // mergeSchema (plain layout): a store whose executed table mixes
-      // pre-time-travel files (no epoch column) with epoch-stamped appends
-      // must see the union schema deterministically — and un-stamped rows
-      // must count as epoch 0 (all-history), not NULL (filtered out, which
-      // would silently resurrect their tombstoned rows in every snapshot).
-      // Bucketed stores postdate time travel (every executed row is
-      // epoch-stamped), so the catalog read suffices there.
-      val ex =
-        if (signatureBuckets(spark, stateDir) > 0)
-          readExecuted(spark, stateDir).get
-        else spark.read.option("mergeSchema", "true")
-          .parquet(executedPath(stateDir))
-      val inScope =
-        if (ex.columns.contains("epoch"))
-          ex.filter(coalesce(col("epoch"), lit(0L)) <= epoch)
-        else ex // pre-time-travel executed table: all tombstones apply
-      sigs.join(graft.actions.Actions.tombstones(inScope).select("id"),
-        Seq("id"), "left_anti")
-    } else sigs
+    val snap = snapshot(spark, stateDir)
+    withoutTombstones(spark, snap,
+      readSignatures(spark, snap).filter(col("epoch") <= epoch),
+      _.filter(col("epoch") <= epoch))
   }
 
   /** State consistency diagnosis — the runnable analog of the reference's
@@ -869,22 +950,20 @@ object Checkpoints {
     * AT ALL (tombstoned ids still exist in the raw table). Output:
     * (category, n) — both drift categories are zero on a healthy store at
     * any point in the runEpoch/clusterEpoch/executeEpoch cycle.
+    * `uncommitted_generations` counts the `gen=` dirs the manifest does not
+    * name: zero on a healthy store, more after a crash until the next
+    * writer sweeps them — a torn epoch is visible from the state dir alone.
     */
   def diagnose(spark: SparkSession, stateDir: String): DataFrame = {
     import spark.implicits._
+    val snap = snapshot(spark, stateDir)
     val empty = spark.emptyDataset[String].toDF("id")
-    val sigs =
-      if (exists(spark, signaturesPath(stateDir)))
-        readSignatures(spark, stateDir).select("id")
-      else empty
-    val live =
-      if (exists(spark, signaturesPath(stateDir)))
-        liveSignatures(spark, stateDir).select("id")
-      else empty
-    val clusters = readIfExists(spark, clustersPath(stateDir))
-      .map(_.select("id")).getOrElse(empty)
-    val quarantined = readIfExists(spark, quarantinePath(stateDir))
-      .map(_.select("id")).getOrElse(empty)
+    val hasSigs = snap.gens.contains("signatures")
+    val sigs = if (hasSigs) readSignatures(spark, snap).select("id") else empty
+    val live = if (hasSigs) liveSignatures(spark, snap).select("id") else empty
+    def ids(table: String) =
+      snap.path(table).map(spark.read.parquet(_).select("id")).getOrElse(empty)
+    val clusters = ids("clusters")
     // ONE pass: union every per-table id stream (including the two
     // anti-join drift streams) under a category label and aggregate — the
     // same observe-fusion discipline as the epoch paths, instead of seven
@@ -894,8 +973,8 @@ object Checkpoints {
     val counted = tag(sigs, "signatures")
       .unionAll(tag(live, "live_signatures"))
       .unionAll(tag(clusters, "clusters"))
-      .unionAll(tag(quarantined, "quarantined"))
-      .unionAll(tag(tombstones(spark, stateDir), "tombstoned"))
+      .unionAll(tag(ids("quarantine"), "quarantined"))
+      .unionAll(tag(tombstones(spark, snap), "tombstoned"))
       .unionAll(tag(live.join(clusters, Seq("id"), "left_anti"),
         "signature_without_cluster"))
       .unionAll(tag(clusters.join(sigs, Seq("id"), "left_anti"),
@@ -906,53 +985,35 @@ object Checkpoints {
       .toDF("category")
       .join(counted, Seq("category"), "left")
       .select(col("category"), coalesce(col("n"), lit(0L)).as("n"))
+      .unionAll(Seq(("uncommitted_generations", unnamed(spark, snap).length.toLong))
+        .toDF("category", "n"))
   }
 
   /** Compact the id-keyed state tables (signatures + executed, when
-    * present) back to their minimal file count — the maintenance half of
-    * an append-only store's lifecycle (≙ Iceberg rewrite_data_files;
-    * reference flush/compact cadence, lib.rs:178-223). A nightly-epoch
-    * store accrues one file per bucket (bucketed layout) or per task
-    * (plain) PER EPOCH AND TABLE; after a year the per-bucket file
+    * present) and the band index back to their minimal file count — the
+    * maintenance half of an append-only store's lifecycle (≙ Iceberg
+    * rewrite_data_files; reference flush/compact cadence, lib.rs:178-223).
+    * A nightly-epoch store accrues one file per bucket (bucketed layout) or
+    * per task (plain) PER EPOCH AND TABLE; after a year the per-bucket file
     * count — open() round-trips and footer reads, not data volume —
     * dominates scan planning on an object store. The rewrite preserves
     * every row including the `epoch` column, so [[signaturesAsOf]] time
     * travel is unaffected, and keeps the recorded layout (bucketed stays
-    * bucketed on the same N).
-    *
-    * Crash-safe swap: the rewrite lands in a sibling temp dir, the live
-    * dir renames to `.old`, the temp renames into place, then `.old` is
-    * deleted — a crash leaves either the old or the new table readable at
-    * the live path (plus at most a stale temp/`.old` that the next
-    * compact removes). Runs under the writer lease.
+    * bucketed on the same N). Each table is rewritten into a new
+    * generation and one manifest line publishes them all.
     *
     * @return (filesBefore, filesAfter)
     */
   def compactSignatures(spark: SparkSession, stateDir: String): (Long, Long) =
     withStateLock(spark, stateDir) {
-      require(exists(spark, signaturesPath(stateDir)),
+      val snap = snapshot(spark, stateDir)
+      require(snap.gens.contains("signatures"),
         s"no signatures table at ${signaturesPath(stateDir)}")
-      val buckets = signatureBuckets(spark, stateDir)
+      val compacted = Seq("signatures", "executed", "bands").filter(snap.gens.contains)
+      val out = snap.fresh(compacted: _*)
 
-      def compactOne(path: String, read: => DataFrame, tmpTbl: String,
-                     refresh: => Unit, tableBuckets: Int): (Long, Long) = {
-        val (fs, live) = fsFor(spark, path)
-        val tmp = new Path(path + ".compact.tmp")
-        val old = new Path(path + ".compact.old")
-        // leftovers from a crashed prior compact: the live path is
-        // authoritative, both siblings are safe to drop
-        if (fs.exists(tmp)) fs.delete(tmp, true)
-        if (fs.exists(old)) fs.delete(old, true)
-
-        def countFiles(p: Path): Long = {
-          val it = fs.listFiles(p, true)
-          var n = 0L
-          while (it.hasNext) { if (it.next().getPath.getName.endsWith(".parquet")) n += 1 }
-          n
-        }
-        val before = countFiles(live)
-
-        if (tableBuckets > 0) {
+      def rewrite(table: String, read: DataFrame, buckets: Int): Unit =
+        if (buckets > 0) {
           // SHUFFLE-FREE rewrite: force the bucketed scan on (the
           // DisableUnnecessaryBucketedScan planner rule only credits joins/
           // aggregates, not V1 writes — left to its default it re-reads the
@@ -960,74 +1021,49 @@ object Checkpoints {
           // then emits one file per bucket present: measured 19 files for 8
           // buckets instead of 8). With the bucketed scan pinned, each task
           // reads exactly one bucket's files and rewrites them as one file —
-          // zero exchange; the repartition below is elided as redundant and
-          // stands only as the correctness net if the scan loses its
-          // partitioning.
+          // zero exchange; the repartition in [[write]] is elided as
+          // redundant and stands only as the correctness net if the scan
+          // loses its partitioning.
           val autoBucketedKey = "spark.sql.sources.bucketing.autoBucketedScan.enabled"
           val prevAuto = spark.conf.get(autoBucketedKey)
-          spark.sql(s"DROP TABLE IF EXISTS $tmpTbl")
           try {
             spark.conf.set(autoBucketedKey, "false")
-            read
-              .repartition(tableBuckets, col("id"))
-              .write.mode("overwrite").format("parquet")
-              .bucketBy(tableBuckets, "id").sortBy("id")
-              .option("path", tmp.toString)
-              .saveAsTable(tmpTbl)
+            write(spark, out, table, read, buckets)
           } finally spark.conf.set(autoBucketedKey, prevAuto)
-          spark.sql(s"DROP TABLE IF EXISTS $tmpTbl")
         } else {
           // plain layout: pack to ~128 MB files (object-store-friendly)
-          val bytes = fs.getContentSummary(live).getLength
-          val parts = math.max(1L, bytes / (128L << 20)).toInt
-          read.repartition(parts)
-            .write.mode("overwrite").parquet(tmp.toString)
+          val (fs, live) = fsFor(spark, snap.path(table).get)
+          val parts = math.max(1L, fs.getContentSummary(live).getLength / (128L << 20)).toInt
+          write(spark, out, table, read.repartition(parts))
         }
 
-        if (!fs.rename(live, old))
-          throw new java.io.IOException(s"compact swap failed: rename $live -> $old")
-        if (!fs.rename(tmp, live)) {
-          fs.rename(old, live) // roll back; the rewrite is abandoned
-          throw new java.io.IOException(s"compact swap failed: rename $tmp -> $live")
-        }
-        fs.delete(old, true)
-        val after = countFiles(live)
-        if (tableBuckets > 0) refresh
-        (before, after)
-      }
-
-      val (sb, sa) = compactOne(signaturesPath(stateDir),
-        readSignatures(spark, stateDir),
-        sigTableName(spark, stateDir) + "_compact",
-        ensureSigTable(spark, stateDir, buckets), buckets)
+      rewrite("signatures", readSignatures(spark, snap), snap.buckets)
       // the executed table accrues files the same way (one per bucket per
       // executed epoch) and is read by every liveSignatures call
-      val (eb, ea) =
-        if (exists(spark, executedPath(stateDir)))
-          compactOne(executedPath(stateDir),
-            readExecuted(spark, stateDir).get,
-            execTableName(spark, stateDir) + "_compact",
-            ensureBucketedTable(spark, execTableName(spark, stateDir),
-              executedPath(stateDir), buckets), buckets)
-        else (0L, 0L)
+      readIdKeyed(spark, snap, "executed").foreach(rewrite("executed", _, snap.buckets))
       // the band index accrues files per epoch too, and keeps rows for
       // tombstoned docs (they only widen the delta frontier): maintenance
       // prunes both. Plain-parquet rewrite — the index is a semi-join-only
       // surface, so no layout to preserve.
-      val (ib, ia) =
-        if (exists(spark, bandsPath(stateDir)))
-          compactOne(bandsPath(stateDir),
-            spark.read.parquet(bandsPath(stateDir)).join(
-              tombstones(spark, stateDir).select("id"), Seq("id"), "left_anti"),
-            "unused_bands_compact", (), 0)
-        else (0L, 0L)
+      snap.path("bands").foreach { p =>
+        rewrite("bands", spark.read.parquet(p).join(
+          tombstones(spark, snap).select("id"), Seq("id"), "left_anti"), 0)
+      }
 
+      def files(s: Snapshot): Long = compacted.map { t =>
+        val (fs, p) = fsFor(spark, s.path(t).get)
+        val it = fs.listFiles(p, true)
+        var n = 0L
+        while (it.hasNext) { if (it.next().getPath.getName.endsWith(".parquet")) n += 1 }
+        n
+      }.sum
+      val (before, after) = (files(snap), files(out))
       // no "new_signatures" key: compaction must not advance the epoch
       // counter (nextEpoch counts signature-commit lines only)
-      appendManifest(spark, stateDir,
-        s"""{"compacted":"signatures+executed+bands","files_before":${sb + eb + ib},""" +
-          s""""files_after":${sa + ea + ia}}""")
-      (sb + eb + ib, sa + ea + ia)
+      commit(spark, out,
+        s""""compacted":"signatures+executed+bands","files_before":$before,""" +
+          s""""files_after":$after""")
+      (before, after)
     }
 
   /** Manifest lines, oldest first; empty if no manifest yet. Falls back to
@@ -1049,13 +1085,13 @@ object Checkpoints {
   }
 
   private[state] def nextEpoch(spark: SparkSession, stateDir: String): Long =
-    // only signature-commit lines advance the epoch counter (clusterEpoch
-    // appends an additional clusters line per epoch)
+    // only signature-commit lines advance the epoch counter
     readManifest(spark, stateDir).count(_.contains("\"new_signatures\"")).toLong
 
   /** Append one manifest line via read + tmp-write + double rename — works
     * on stores with no append support (S3, local checksum FS alike); the
     * manifest is tiny (one line per commit), so the rewrite is O(commits).
+    * This is the state dir's only commit point.
     *
     * Crash safety: the previous manifest is RENAMED to `.bak` (not
     * deleted) before the new file renames into place, and [[readManifest]]
@@ -1076,6 +1112,7 @@ object Checkpoints {
       if (!fs.rename(p, bak))
         throw new java.io.IOException(s"manifest commit failed: rename $p -> $bak")
     }
+    commitTestHook("manifest")
     if (!fs.rename(tmp, p))
       throw new java.io.IOException(s"manifest commit failed: rename $tmp -> $p")
   }

@@ -24,8 +24,8 @@ import org.apache.spark.sql.functions._
   *    manifest will commit) — so hashes written by an epoch that later
   *    crashed are invisible and simply overwritten on re-run: the append
   *    is idempotent without its own commit protocol;
-  *  - when the state dir records a bucket layout (`_layout.json`, round-5c
-  *    machinery), the hash tables are written CLUSTERED BY (hash) into the
+  *  - when the state dir records a bucket layout (`_subdoc_layout.json`),
+  *    the hash tables are written CLUSTERED BY (hash) into the
   *    same bucket count — the seen side of the anti-join, the side that
   *    grows with corpus age, then scans with HashPartitioning and never
   *    re-shuffles; only the incoming batch exchanges (SubDocStateSpec pins
@@ -43,8 +43,8 @@ object SubDocState {
 
   /** Sticky bucket layout for the hash tables. The sub-document passes run
     * BEFORE the epoch's signature commit (the cleaned text is the commit's
-    * input), so on a fresh state dir the signature store's `_layout.json`
-    * does not exist yet — the hash tables record their own marker at first
+    * input), so on a fresh state dir no manifest line has published the
+    * signature store's layout yet — the hash tables record their own marker at first
     * append and every later epoch follows it, whatever the caller asks
     * (mixing bucketed and plain files under one table would silently
     * mis-bucket the seen scan). 0 = plain parquet.
@@ -90,11 +90,9 @@ object SubDocState {
   }
 
   /** First integer recorded for `key` in a small JSON marker file, if the
-    * file exists — the one shared layout-marker reader (Checkpoints'
-    * `_layout.json` and the sub-document `_subdoc_layout.json` both use
-    * it, so a fix to the parse can never diverge between the two stores).
+    * file exists.
     */
-  private[state] def markerInt(fs: org.apache.hadoop.fs.FileSystem, p: Path,
+  private def markerInt(fs: org.apache.hadoop.fs.FileSystem, p: Path,
                                key: String): Option[Int] =
     if (!fs.exists(p)) None
     else {

@@ -17,8 +17,8 @@ import graft.state.Checkpoints
   * state side is the one that grows with corpus age; bucketed-on-id state
   * carries HashPartitioning(id, N) out of the scan, so only the incoming
   * batch exchanges. These specs pin (1) behavioral equivalence with the
-  * plain layout, (2) cross-session re-registration from the _layout.json
-  * marker alone, (3) the single-exchange plan shape, (4) layout
+  * plain layout, (2) cross-session re-registration from the layout the
+  * manifest records, (3) the single-exchange plan shape, (4) layout
   * stickiness.
   */
 class BucketedStateSpec extends SparkTestBase {
@@ -28,6 +28,11 @@ class BucketedStateSpec extends SparkTestBase {
     Files.createTempDirectory("graft-bucketed").toString
 
   private val bucketed = DedupConfig(stateBuckets = 8)
+
+  /** Files of a table's published generation. */
+  private def genFiles(dir: String, table: String): Array[String] =
+    new java.io.File(Checkpoints.generationPath(spark, dir, table).get)
+      .listFiles().map(_.getName)
 
   test("bucketed epochs behave exactly like plain ones (resume + content)") {
     val plainDir = tempDir()
@@ -49,11 +54,10 @@ class BucketedStateSpec extends SparkTestBase {
     assert(content(bucketDir) == content(plainDir),
       "bucketed layout changed the persisted signature content")
 
-    // layout marker recorded; the physical files carry real bucket suffixes
+    // layout recorded; the physical files carry real bucket suffixes
     assert(Checkpoints.signatureBuckets(spark, bucketDir) == 8)
     assert(Checkpoints.signatureBuckets(spark, plainDir) == 0)
-    val files = new java.io.File(Checkpoints.signaturesPath(bucketDir))
-      .listFiles().map(_.getName).filter(_.endsWith(".parquet"))
+    val files = genFiles(bucketDir, "signatures").filter(_.endsWith(".parquet"))
     assert(files.nonEmpty && files.forall(_.matches("part-\\d+-.+_\\d{5}\\.c.*")),
       s"expected bucket-suffixed file names, got ${files.take(3).mkString(", ")}")
   }
@@ -63,7 +67,7 @@ class BucketedStateSpec extends SparkTestBase {
     val pages = PagesGen.pages(spark, 5L, seed = 32L, tokensPerDoc = 60).toDF()
     Checkpoints.runEpoch(spark, pages, "url", "text", dir, bucketed)
     // simulate a fresh driver: the in-memory catalog of a new session has
-    // no table entry — only _layout.json and the parquet footers exist
+    // no table entry — only the manifest and the parquet footers exist
     spark.sql(s"DROP TABLE IF EXISTS ${Checkpoints.sigTableName(spark, dir)}")
     val n = Checkpoints.liveSignatures(spark, dir).count()
     assert(n == 5L * PagesGen.variantKinds.length)
@@ -150,8 +154,7 @@ class BucketedStateSpec extends SparkTestBase {
     // count (the multi-epoch reduction property is pinned by the dedicated
     // compaction tests above)
     assert(na <= nb, s"compact grew the file count ($nb -> $na)")
-    val execFiles = new java.io.File(Checkpoints.executedPath(dir))
-      .listFiles().map(_.getName).count(_.endsWith(".parquet"))
+    val execFiles = genFiles(dir, "executed").count(_.endsWith(".parquet"))
     assert(execFiles <= 8, s"executed table not compacted: $execFiles files")
     val liveAfter = Checkpoints.liveSignatures(spark, dir)
       .select("id").as[String].collect().toSet
@@ -164,8 +167,7 @@ class BucketedStateSpec extends SparkTestBase {
       PagesGen.pages(spark, n, seed = 35L, tokensPerDoc = 60).toDF()
     }
     epochs.foreach(p => Checkpoints.runEpoch(spark, p, "url", "text", dir, bucketed))
-    def files() = new java.io.File(Checkpoints.signaturesPath(dir))
-      .listFiles().map(_.getName).count(_.endsWith(".parquet"))
+    def files() = genFiles(dir, "signatures").count(_.endsWith(".parquet"))
     // one file per NON-EMPTY bucket per epoch (small epochs can leave a
     // bucket empty, so the pre-compact count is bounded, not exact)
     assert(files() > 8 && files() <= 3 * 8,
@@ -181,8 +183,7 @@ class BucketedStateSpec extends SparkTestBase {
     assert(files() == na)
     // exactly one file per non-empty bucket — the shuffle-free per-bucket
     // rewrite (a repeated bucket suffix means tasks mixed buckets again)
-    val bucketIds = new java.io.File(Checkpoints.signaturesPath(dir))
-      .listFiles().map(_.getName).filter(_.endsWith(".parquet"))
+    val bucketIds = genFiles(dir, "signatures").filter(_.endsWith(".parquet"))
       .map(_.replaceAll(".*_(\\d{5})\\..*", "$1"))
     assert(bucketIds.distinct.length == bucketIds.length,
       s"multiple files for one bucket after compact: ${bucketIds.sorted.mkString(",")}")
@@ -206,8 +207,9 @@ class BucketedStateSpec extends SparkTestBase {
     Checkpoints.runEpoch(spark,
       PagesGen.pages(spark, 9L, seed = 36L, tokensPerDoc = 60).toDF(),
       "url", "text", dir)
-    // a stale temp dir from a crashed compact must not break the next one
-    val staleTmp = new java.io.File(Checkpoints.signaturesPath(dir) + ".compact.tmp")
+    // a crashed compact leaves an unpublished generation beside the
+    // published one: it must not break the next compact, which sweeps it
+    val staleTmp = new java.io.File(Checkpoints.signaturesPath(dir) + "/gen=99")
     staleTmp.mkdirs()
     val before = Checkpoints.readSignatures(spark, dir)
       .select("id", "epoch").as[(String, Long)].collect().toSet

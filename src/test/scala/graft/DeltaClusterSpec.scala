@@ -31,8 +31,12 @@ class DeltaClusterSpec extends SparkTestBase {
     }
   }
 
+  /** A table's published generation. */
+  private def table(dir: String, name: String) =
+    spark.read.parquet(Checkpoints.generationPath(spark, dir, name).get)
+
   private def clustersOf(dir: String): Set[(String, String, Boolean, String)] =
-    spark.read.parquet(Checkpoints.clustersPath(dir))
+    table(dir, "clusters")
       .select("id", "cluster_id", "is_representative", "kind")
       .as[(String, String, Boolean, String)].collect().toSet
 
@@ -185,7 +189,7 @@ class DeltaClusterSpec extends SparkTestBase {
     // first delta epoch bootstraps the index over ALL committed epochs
     Checkpoints.clusterEpoch(spark, p2, "url", "text", dir, cfg)
     def indexRows(): Set[(String, Int, Long)] =
-      spark.read.parquet(Checkpoints.bandsPath(dir))
+      table(dir, "bands")
         .as[(String, Int, Long)].collect().toSet
     def freshRows(c: DedupConfig): Set[(String, Int, Long)] =
       DedupPipeline.allChannelBandRows(
@@ -221,11 +225,11 @@ class DeltaClusterSpec extends SparkTestBase {
     assert(nExec > 0)
     val tombIds = Checkpoints.tombstones(spark, dir).select("id")
       .as[String].collect().toSet
-    val before = spark.read.parquet(Checkpoints.bandsPath(dir))
+    val before = table(dir, "bands")
       .select("id").as[String].collect().toSet
     assert(tombIds.subsetOf(before), "setup: tombstoned ids were indexed")
     Checkpoints.compactSignatures(spark, dir)
-    val after = spark.read.parquet(Checkpoints.bandsPath(dir))
+    val after = table(dir, "bands")
       .select("id").as[String].collect().toSet
     assert(after.intersect(tombIds).isEmpty, "tombstoned ids must be pruned")
     assert(after == before.diff(tombIds), "live ids must survive compaction")

@@ -214,8 +214,8 @@ class EntrySpec extends SparkTestBase {
     val nSlice = spark.read.parquet(s"$tmp/slice").count()
     assert(out.exists(_.contains("\"new_signatures\":" + nSlice)))
     // every corpus row is clustered even though the epoch only FED the slice
-    val clustered = spark.read
-      .parquet(graft.state.Checkpoints.clustersPath(s"$tmp/state")).count()
+    val clustered = spark.read.parquet(graft.state.Checkpoints
+      .generationPath(spark, s"$tmp/state", "clusters").get).count()
     assert(clustered == all.count())
   }
 

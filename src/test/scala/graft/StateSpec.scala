@@ -18,6 +18,10 @@ class StateSpec extends SparkTestBase {
   private def tempDir(): String =
     Files.createTempDirectory("graft-state").toString
 
+  /** A table's published generation. */
+  private def table(dir: String, name: String) =
+    spark.read.parquet(Checkpoints.generationPath(spark, dir, name).get)
+
   test("resume idempotence: second epoch over same pages appends nothing") {
     val dir = tempDir()
     val pages = PagesGen.pages(spark, 10L, seed = 1L, tokensPerDoc = 80).toDF()
@@ -75,18 +79,18 @@ class StateSpec extends SparkTestBase {
     val (nNew2, _) = Checkpoints.clusterEpoch(spark, all, "url", "text", dir)
     assert(nNew2 < all.count(), "second epoch must fingerprint only the delta")
 
-    val incr = spark.read.parquet(Checkpoints.clustersPath(dir))
+    val incr = table(dir, "clusters")
       .select("id", "cluster_id").as[(String, String)].collect().toMap
     val oneShot = DedupPipeline.run(spark, all, "url", "text", DedupConfig())
       .select("id", "cluster_id").as[(String, String)].collect().toMap
     assert(incr == oneShot, "resumed clustering must equal single-shot clustering")
 
     // actions table: every duplicate points at a representative in ITS cluster
-    val actions = spark.read.parquet(Checkpoints.actionsPath(dir))
+    val actions = table(dir, "actions")
     val bad = actions.join(
-        spark.read.parquet(Checkpoints.clustersPath(dir))
+        table(dir, "clusters")
           .select($"id", $"cluster_id".as("c_dup")), "id")
-      .join(spark.read.parquet(Checkpoints.clustersPath(dir))
+      .join(table(dir, "clusters")
           .select($"id".as("original_id"), $"cluster_id".as("c_orig")), "original_id")
       .filter($"c_dup" =!= $"c_orig").count()
     assert(bad == 0)
@@ -105,7 +109,7 @@ class StateSpec extends SparkTestBase {
     Checkpoints.clusterEpoch(spark, half, "url", "text", dir)
     Checkpoints.clusterEpoch(spark, delta, "url", "text", dir)
 
-    val incr = spark.read.parquet(Checkpoints.clustersPath(dir))
+    val incr = table(dir, "clusters")
       .select("id", "cluster_id").as[(String, String)].collect().toMap
     val oneShot = DedupPipeline.run(spark, all, "url", "text", DedupConfig())
       .select("id", "cluster_id").as[(String, String)].collect().toMap
@@ -131,7 +135,7 @@ class StateSpec extends SparkTestBase {
     val pages = PagesGen.pages(spark, 6L, seed = 7L, tokensPerDoc = 100).toDF()
     Checkpoints.clusterEpoch(spark, pages, "url", "text", dir, action = "delete")
 
-    val nPlanned = spark.read.parquet(Checkpoints.actionsPath(dir)).count()
+    val nPlanned = table(dir, "actions").count()
     val (nExec, nFail) = Checkpoints.executeEpoch(spark, dir, Some(backup))
     assert(nExec == nPlanned && nFail == 0, s"all $nPlanned planned should execute")
 
@@ -153,7 +157,7 @@ class StateSpec extends SparkTestBase {
     assert(backedUp.count() == nExec)
 
     // every representative survives (an executor must never delete originals)
-    val reps = spark.read.parquet(Checkpoints.clustersPath(dir))
+    val reps = table(dir, "clusters")
       .filter($"is_representative").select("id")
     assert(reps.join(tombs.select("id"), Seq("id"), "left_semi").count() == 0)
   }
@@ -163,12 +167,13 @@ class StateSpec extends SparkTestBase {
     val pages = PagesGen.pages(spark, 4L, seed = 8L, tokensPerDoc = 80).toDF()
     Checkpoints.clusterEpoch(spark, pages, "url", "text", dir, action = "move")
     // simulate state loss: rewrite signatures without one planned duplicate
-    val victim = spark.read.parquet(Checkpoints.actionsPath(dir))
+    val victim = table(dir, "actions")
       .select("id").orderBy("id").limit(1).as[String].collect().head
     val pruned = spark.read.parquet(Checkpoints.signaturesPath(dir))
       .filter($"id" =!= victim).cache()
     pruned.count()
-    pruned.write.mode("overwrite").parquet(Checkpoints.signaturesPath(dir))
+    pruned.write.mode("overwrite")
+      .parquet(Checkpoints.generationPath(spark, dir, "signatures").get)
     val (nExec, nFail) = Checkpoints.executeEpoch(spark, dir, None)
     assert(nFail == 1 && nExec > 0)
     val failed = spark.read.parquet(Checkpoints.executedPath(dir)).filter(!$"success")
@@ -280,17 +285,19 @@ class StateSpec extends SparkTestBase {
     val dir = tempDir()
     val pages = PagesGen.pages(spark, 3L, seed = 37L, tokensPerDoc = 80).toDF()
     Checkpoints.clusterEpoch(spark, pages, "url", "text", dir, action = "delete")
-    val plan = spark.read.parquet(Checkpoints.actionsPath(dir))
+    val plan = table(dir, "actions")
     val two = plan.select("id", "original_id", "action").limit(2).collect()
-    // simulate a prior run: row 0 failed TRANSIENTLY (an FS hiccup from a
-    // side-effecting executor), row 1 failed PERMANENTLY (validation)
+    // a first run publishes the executed table; then simulate its outcome
+    // instead: row 0 failed TRANSIENTLY (an FS hiccup from a side-effecting
+    // executor), row 1 failed PERMANENTLY (validation)
+    Checkpoints.executeEpoch(spark, dir, None)
     Seq(
       (two(0).getString(0), two(0).getString(1), two(0).getString(2),
         false, false, "io_error_transient", 0L),
       (two(1).getString(0), two(1).getString(1), two(1).getString(2),
         false, false, "missing_id", 0L))
       .toDF("id", "original_id", "action", "dry_run", "success", "error", "epoch")
-      .write.mode("overwrite").parquet(Checkpoints.executedPath(dir))
+      .write.mode("overwrite").parquet(Checkpoints.generationPath(spark, dir, "executed").get)
     Checkpoints.executeEpoch(spark, dir, None)
     val ex = spark.read.parquet(Checkpoints.executedPath(dir))
     // the transient row was re-attempted (ids are live, so it now succeeds)…
@@ -301,25 +308,23 @@ class StateSpec extends SparkTestBase {
       "permanent validation failure was retried")
   }
 
-  test("signaturesAsOf applies tombstones from pre-epoch executed files at every snapshot") {
+  test("signaturesAsOf applies an epoch-0 tombstone at every later snapshot") {
     val dir = tempDir()
     val pages = PagesGen.pages(spark, 3L, seed = 41L, tokensPerDoc = 80).toDF()
-    Checkpoints.runEpoch(spark, pages, "url", "text", dir)
+    Checkpoints.clusterEpoch(spark, pages, "url", "text", dir, action = "delete")
+    Checkpoints.executeEpoch(spark, dir)
     val someId = spark.read.parquet(Checkpoints.signaturesPath(dir))
       .select("id").orderBy("id").limit(1).collect()(0).getString(0)
-    // a PRE-time-travel executed file: no epoch column at all…
-    Seq((someId, "orig-x", "delete", false, true, null.asInstanceOf[String]))
-      .toDF("id", "original_id", "action", "dry_run", "success", "error")
-      .write.mode("overwrite").parquet(Checkpoints.executedPath(dir))
-    // …mixed with a NEW epoch-stamped append in the same table
-    Seq(("no-such-id", "orig-y", "delete", false, false, "missing_id", 0L))
+    // the published executed table holds an epoch-0 tombstone for someId
+    // next to a failed row
+    Seq((someId, "orig-x", "delete", false, true, null.asInstanceOf[String], 0L),
+        ("no-such-id", "orig-y", "delete", false, false, "missing_id", 0L))
       .toDF("id", "original_id", "action", "dry_run", "success", "error", "epoch")
-      .write.mode("append").parquet(Checkpoints.executedPath(dir))
-    // the un-stamped tombstone must count as epoch 0 (all history), never be
-    // NULL-filtered out of a snapshot — deleted rows must not resurrect
+      .write.mode("overwrite").parquet(Checkpoints.generationPath(spark, dir, "executed").get)
+    // deleted rows must not resurrect in any snapshot at or after the epoch
     val asOf0 = Checkpoints.signaturesAsOf(spark, dir, 0L)
     assert(asOf0.filter(col("id") === someId).count() == 0,
-      "pre-epoch tombstone resurrected in the epoch-0 snapshot")
+      "epoch-0 tombstone resurrected in the epoch-0 snapshot")
     assert(Checkpoints.signaturesAsOf(spark, dir, 99L)
       .filter(col("id") === someId).count() == 0)
   }
@@ -329,12 +334,12 @@ class StateSpec extends SparkTestBase {
     val pages = PagesGen.pages(spark, 3L, seed = 43L, tokensPerDoc = 80).toDF()
     val (_, nClusters) = Checkpoints.clusterEpoch(spark, pages, "url", "text", dir,
       DedupConfig(previewChars = 40))
-    val previews = spark.read.parquet(Checkpoints.previewsPath(dir))
+    val previews = table(dir, "previews")
     assert(previews.count() == nClusters, "one preview row per cluster")
     assert(previews.select("cluster_id").distinct().count() == nClusters)
     // snippet respects the cap and comes from the representative's text
     assert(previews.filter(length(col("preview")) > 40).count() == 0)
-    val reps = spark.read.parquet(Checkpoints.clustersPath(dir))
+    val reps = table(dir, "clusters")
       .filter(col("is_representative")).select("id")
     assert(previews.select(col("representative_id").as("id"))
       .except(reps).count() == 0)
@@ -349,7 +354,7 @@ class StateSpec extends SparkTestBase {
     val slice = PagesGen.pages(spark, 2L, seed = 97L, tokensPerDoc = 80).toDF()
     val (_, n2) = Checkpoints.clusterEpoch(spark, slice, "url", "text", dir,
       DedupConfig(previewChars = 40))
-    val p2 = spark.read.parquet(Checkpoints.previewsPath(dir))
+    val p2 = table(dir, "previews")
     assert(p2.count() == n2, "one preview row per cluster, slice-fed too")
     assert(p2.filter(col("preview").isNull).count() > 0,
       "old representatives (text not in the slice) must keep a null-preview row")
@@ -383,7 +388,7 @@ class StateSpec extends SparkTestBase {
     // band empty arrays, and must still link fast rows via simhash)
     Checkpoints.clusterEpoch(spark, half, "url", "text", dir, DedupConfig(fastPath = true))
     Checkpoints.clusterEpoch(spark, rest, "url", "text", dir)
-    val assign = spark.read.parquet(Checkpoints.clustersPath(dir))
+    val assign = table(dir, "clusters")
       .select($"id", $"cluster_id").cache()
     val truth = PagesGen.truthPairs(spark, 6L, seed = 17L).toDF()
     def joined(t: org.apache.spark.sql.DataFrame) = t
@@ -411,13 +416,14 @@ class StateSpec extends SparkTestBase {
     assert(d("signature_without_cluster") == 0L)
     assert(d("cluster_without_signature") == 0L)
     assert(d("tombstoned") > 0L && d("quarantined") == 0L)
+    assert(d("uncommitted_generations") == 0L)
   }
 
   test("metrics table records per-partition lineage per epoch") {
     val dir = tempDir()
     val pages = PagesGen.pages(spark, 6L, seed = 4L, tokensPerDoc = 80).toDF()
     Checkpoints.runEpoch(spark, pages, "url", "text", dir)
-    val metrics = spark.read.parquet(Checkpoints.metricsPath(dir))
+    val metrics = table(dir, "metrics")
     assert(metrics.columns.toSet == Set("part_id", "n_rows", "epoch", "table"))
     val expected = 6L * PagesGen.variantKinds.length
     assert(metrics.agg(sum("n_rows")).first().getLong(0) == expected)
@@ -479,7 +485,7 @@ class StateSpec extends SparkTestBase {
   test("executeEpoch settles a null-original plan row after one run") {
     val dir = tempDir()
     val pages = PagesGen.pages(spark, 2L, seed = 7L, tokensPerDoc = 60).toDF()
-    Checkpoints.runEpoch(spark, pages, "url", "text", dir)
+    Checkpoints.clusterEpoch(spark, pages, "url", "text", dir)
     val someId = spark.read.parquet(Checkpoints.signaturesPath(dir))
       .select("id").orderBy("id").first().getString(0)
     // a plan row for a representative-less cluster: original_id is null
@@ -488,7 +494,7 @@ class StateSpec extends SparkTestBase {
     Seq((someId, Option.empty[String], "delete", false, false,
         Option.empty[String]))
       .toDF("id", "original_id", "action", "dry_run", "success", "error")
-      .write.mode("overwrite").parquet(Checkpoints.actionsPath(dir))
+      .write.mode("overwrite").parquet(Checkpoints.generationPath(spark, dir, "actions").get)
     val (ok1, fail1) = Checkpoints.executeEpoch(spark, dir)
     assert(ok1 == 0L && fail1 == 1L, s"first run must fail it once: $ok1/$fail1")
     val (ok2, fail2) = Checkpoints.executeEpoch(spark, dir)

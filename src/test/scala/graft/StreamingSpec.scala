@@ -266,7 +266,7 @@ class StreamingSpec extends SparkTestBase {
       "cadence clusterEpoch re-fingerprinted rows the stream already committed")
     assert(nClusters > 0)
 
-    val assign = spark.read.parquet(Checkpoints.clustersPath(stateDir))
+    val assign = spark.read.parquet(Checkpoints.generationPath(spark, stateDir, "clusters").get)
       .select(col("id"), col("cluster_id"))
     val truth = PagesGen.truthPairs(spark, 6L, seed = 59L).toDF()
       .filter(col("expect_dup") &&
