@@ -43,7 +43,6 @@ object Main {
       checkpointDir: Option[String] = None,
       pagesFormat: String = "auto",
       containmentCap: Option[Int] = None,
-      noEstimateTier: Boolean = false,
       previewChars: Option[Int] = None,
       stateBuckets: Option[Int] = None,
       stateBloomFpp: Option[Double] = None,
@@ -153,7 +152,6 @@ object Main {
       case "--containment-cap" :: v :: t =>
         v.toIntOption.toRight(s"--containment-cap: not an int: $v")
           .flatMap(c => loop(t, acc.copy(containmentCap = Some(c))))
-      case "--no-estimate-tier" :: t  => loop(t, acc.copy(noEstimateTier = true))
       case "--preview-chars" :: v :: t =>
         v.toIntOption.toRight(s"--preview-chars: not an int: $v")
           .flatMap(p => loop(t, acc.copy(previewChars = Some(p))))
@@ -390,8 +388,7 @@ object Main {
     val withB = a.stateBuckets.fold(withP)(b => withP.copy(stateBuckets = b))
     val withBf = a.stateBloomFpp.fold(withB)(f => withB.copy(stateBloomFpp = f))
     val withBe = a.stateBloomExpected.fold(withBf)(n => withBf.copy(stateBloomExpected = n))
-    val withD = if (a.deltaCluster) withBe.copy(deltaCluster = true) else withBe
-    if (a.noEstimateTier) withD.copy(estimateTier = false) else withD
+    if (a.deltaCluster) withBe.copy(deltaCluster = true) else withBe
   }
 
   def main(args: Array[String]): Unit = parse(args.toIndexedSeq) match {
@@ -453,8 +450,8 @@ object Main {
       return Checkpoints.diagnose(spark, a.state).collect().toSeq.map(r =>
         s"""{"category":${Verify.jsonQuote(r.getString(0))},"n":${r.getLong(1)}}""")
     if (a.compact) {
-      val (before, after) = Checkpoints.compactSignatures(spark, a.state)
-      return Seq(s"""{"compacted":"signatures","files_before":$before,""" +
+      val (tables, before, after) = Checkpoints.compactSignatures(spark, a.state)
+      return Seq(s"""{"compacted":"${tables.mkString("+")}","files_before":$before,""" +
         s""""files_after":$after,"state":${Verify.jsonQuote(a.state)}}""")
     }
     val cfg = toConfig(a)
@@ -466,14 +463,6 @@ object Main {
         .filter(l => l.nonEmpty && !l.startsWith("#")).toList
       finally src.close()
     }.getOrElse(Nil)
-    // a rescan rebuilds the state from scratch: prior epochs' sub-document
-    // hash state must not leak into any LATER epoch's elections, even when
-    // the rescan itself runs without the sub-document flags — stale winner
-    // hashes whose text was re-elected or discarded would silently drop
-    // paragraphs with no surviving first occurrence (signatures are
-    // overwritten for the same reason inside runEpoch)
-    if (a.forceRescan)
-      graft.state.SubDocState.wipeAll(spark, a.state)
     // S12 seam: derive the text column from a binary payload column with
     // the selected extractor strategy before the pipeline sees it.
     // `stateful` marks the EPOCH BATCH (the --pages load): its sub-document
@@ -566,8 +555,7 @@ object Main {
           if (a.paraDedup)
             (if (stateful)
                graft.state.SubDocState.dedupParagraphsIncremental(
-                 spark, a.state, preSub, a.idCol, a.textCol, cfg.stateBuckets,
-                 cfg.stateBloomFpp, cfg.stateBloomExpected)
+                 spark, a.state, preSub, a.idCol, a.textCol, cfg)
              else graft.text.ParagraphDedup.dedupParagraphs(preSub, a.idCol, a.textCol))
               .select(col(a.idCol), col(a.textCol))
           else preSub
@@ -577,8 +565,7 @@ object Main {
           if (a.spanDedup)
             (if (stateful)
                graft.state.SubDocState.dedupSpansIncremental(
-                 spark, a.state, preSpan, a.idCol, a.textCol, cfg.stateBuckets,
-                 cfg.stateBloomFpp, cfg.stateBloomExpected)
+                 spark, a.state, preSpan, a.idCol, a.textCol, cfg)
              else graft.text.SpanDedup.dedupSpans(preSpan, a.idCol, a.textCol))
               .select(col(a.idCol), col(a.textCol))
           else preSpan

@@ -85,10 +85,6 @@ object Fingerprints {
   def minhash(text: Column, k: Int = 3, numPerms: Int = NumPerms): Column =
     shim.toColumn(MinHashSignature(shim.toExpression(shingleHashes(text, k)), numPerms, HashSeed))
 
-  /** MinHash over an existing array<long> of shingle hashes. */
-  def minhashOfHashes(shingles: Column, numPerms: Int = NumPerms): Column =
-    shim.toColumn(MinHashSignature(shim.toExpression(shingles), numPerms, HashSeed))
-
   /** Fused single-pass fingerprint struct (simhash, shingles, minhash) —
     * byte-compatible with the individual combinators above but one codegen
     * kernel per row (see [[DocSignature]]). The production signature path.
@@ -100,10 +96,6 @@ object Fingerprints {
   /** 64-bit SimHash column over the token multiset. */
   def simhash(text: Column): Column =
     shim.toColumn(SimHash64(shim.toExpression(tokenHashes(text))))
-
-  /** SimHash over an existing array<long> of token hashes. */
-  def simhashOfHashes(tokenHashes: Column): Column =
-    shim.toColumn(SimHash64(shim.toExpression(tokenHashes)))
 
   /** Hamming distance between two 64-bit fingerprints —
     * `bit_count(a ^ b)`, the reference's `PHash::distance`

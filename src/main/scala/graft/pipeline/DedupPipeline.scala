@@ -28,12 +28,6 @@ case class DedupConfig(
     simhashMaxHamming: Int = 28,
     simhashAcceptHamming: Int = 12,
     jaccardThreshold: Double = 0.5,
-    // tier-1.5 toggle: reject (hamming-unaccepted) pairs from the 42-slot
-    // minhash estimate + set sizes before paying the wide shingle fetch.
-    // 3σ gates on BOTH estimated Jaccard and estimated containment — zero
-    // recall change measured on every gate; biggest effect on corpora with
-    // large low-Jaccard pair populations (boilerplate families).
-    estimateTier: Boolean = true,
     containmentThreshold: Double = 0.9,
     saMaxChars: Int = 20000,
     hotBucketThreshold: Int = 200,
@@ -96,8 +90,9 @@ case class DedupConfig(
     // the whole corpus-to-date each night); the bucketed layout carries
     // HashPartitioning(id, N) out of the scan, so only the incoming batch
     // exchanges. Pinned by BucketedStateSpec's plan-shape test. The layout
-    // is a sticky property of the state dir (recorded in _layout.json at
-    // first write); changing it later requires forceRescan. 0 (default)
+    // is a sticky property of the state dir (recorded on the manifest line
+    // of the first write; the sub-document tables follow it too); changing
+    // it later requires forceRescan. 0 (default)
     // keeps plain parquet — right for small states where a broadcast
     // anti-join wins anyway. Size N so one bucket ≈ 100-300 MB at the
     // target corpus (e.g. 4096 buckets per PB-scale signature table).
@@ -207,9 +202,9 @@ object DedupPipeline {
   /** All discovery-channel band rows for SHINGLED signatures — minhash
     * bands [0, bands), the prefix band (= bands) and anchor bands
     * (= bands+1): (id, simhash, band, band_hash). One shared definition so
-    * pair generation ([[nearEdges]]) and the delta-cluster frontier
-    * selection ([[bucketMates]]) always agree on the bucket space — a
-    * channel added here is automatically part of both.
+    * pair generation ([[nearEdges]]) and the persisted band index the
+    * delta-cluster frontier reads ([[allChannelBandRows]]) always agree on
+    * the bucket space — a channel added here is automatically part of both.
     */
   private[graft] def fullBandRows(banded: DataFrame, cfg: DedupConfig): DataFrame = {
     // resume-path config guard: persisted minhash arrays must carry at
@@ -267,11 +262,10 @@ object DedupPipeline {
   /** All-channel band rows of a signatures frame: full channels for
     * shingled rows, plus — when `includeFast` — the fast-tier SimHash
     * slices for EVERY row, offset past every full channel (band >= 1000)
-    * so the bucket spaces stay disjoint. One shared definition serves live
-    * frontier selection ([[bucketMates]]) and the persisted band index
-    * ([[graft.state.Checkpoints.ensureBandIndex]]); band hashes are pure
-    * functions of the signature columns, never of the id, so rows computed
-    * in string-id space and dictionary-code space agree.
+    * so the bucket spaces stay disjoint. The persisted band index
+    * ([[graft.state.Checkpoints.ensureBandIndex]]) is built from it; band
+    * hashes are pure functions of the signature columns, never of the id,
+    * so rows computed in string-id space and dictionary-code space agree.
     */
   private[graft] def allChannelBandRows(df: DataFrame, cfg: DedupConfig,
                                         includeFast: Boolean): DataFrame = {
@@ -287,35 +281,6 @@ object DedupPipeline {
         .select("id", "band", "band_hash")
       full.unionByName(fast)
     }
-  }
-
-  /** Ids sharing ANY discovery bucket — every full channel plus the
-    * fast-tier SimHash slices — with the focus set: the delta-cluster
-    * re-verify frontier. Both semi-joins broadcast (focus and the hot
-    * bucket keys are delta-sized), so selecting the frontier never
-    * shuffles the corpus-wide banding projection — the whole point of the
-    * delta mode at the 10^12-doc posture.
-    */
-  def bucketMates(sigs: DataFrame, focusIds: DataFrame,
-                  cfg: DedupConfig, includeFastChannel: Boolean = false): DataFrame = {
-    // the fast channel joins in ONLY when the store mixes in fast-path
-    // rows (or the run itself is fast-path), mirroring the pairing tiers
-    // exactly. It must stay out of pure-full stores: a 16-bit slice holds
-    // ~n/65536 docs, so at 726k docs unconditional inclusion pulled ~44
-    // mates per focus slice and the frontier engulfed the corpus
-    // (measured: delta near-edges 42 s ≈ full's 45 s, win erased).
-    def channels(df: DataFrame): DataFrame =
-      allChannelBandRows(df, cfg, includeFastChannel || cfg.fastPath)
-    val focus = focusIds.toDF("id")
-    // hot buckets from the FOCUS subset only — banding hashes (anchor
-    // winnowing in particular scans each doc's whole shingle array) are
-    // the dominant cost of this function, so the store-wide pass must
-    // happen exactly once, below, not twice (measured: the unrestricted
-    // two-pass variant cost as much as the pair generation it replaced)
-    val hot = channels(sigs.join(focus, Seq("id"), "left_semi"))
-      .select("band", "band_hash").distinct()
-    channels(sigs).join(hot, Seq("band", "band_hash"), "left_semi")
-      .select("id").distinct()
   }
 
   /** Candidate pairs → verified near-dup edges.
@@ -423,20 +388,18 @@ object DedupPipeline {
     val mhDf = banded.select(col("id"), col("minhash"),
       size(col("shingles")).as("n_shingles"))
     val est = Fingerprints.minhashJaccardEst(col("mh_a"), col("mh_b"))
-    val needShingles =
-      if (!cfg.estimateTier) needCheck.select("id_a", "id_b")
-      else needCheck
-        .join(mhDf.select(col("id").as("id_a"), col("minhash").as("mh_a"),
-          col("n_shingles").as("n_a")), "id_a")
-        .join(mhDf.select(col("id").as("id_b"), col("minhash").as("mh_b"),
-          col("n_shingles").as("n_b")), "id_b")
-        .withColumn("est", est)
-        .withColumn("est_c",
-          col("est") * (col("n_a") + col("n_b")) /
-            ((col("est") + 1.0) * least(col("n_a"), col("n_b"))))
-        .filter(col("cont_chan") ||
-          col("est") >= lit(estJGate) || col("est_c") >= lit(estCGate))
-        .select("id_a", "id_b")
+    val needShingles = needCheck
+      .join(mhDf.select(col("id").as("id_a"), col("minhash").as("mh_a"),
+        col("n_shingles").as("n_a")), "id_a")
+      .join(mhDf.select(col("id").as("id_b"), col("minhash").as("mh_b"),
+        col("n_shingles").as("n_b")), "id_b")
+      .withColumn("est", est)
+      .withColumn("est_c",
+        col("est") * (col("n_a") + col("n_b")) /
+          ((col("est") + 1.0) * least(col("n_a"), col("n_b"))))
+      .filter(col("cont_chan") ||
+        col("est") >= lit(estJGate) || col("est_c") >= lit(estCGate))
+      .select("id_a", "id_b")
 
     val shinglesDf = banded.select(col("id"), col("shingles"))
     // LAZY checkpoint: scored feeds BOTH the cheap-accept branch and the
@@ -774,9 +737,9 @@ object DedupPipeline {
     *    frontier: `focusSids` (docs new this epoch plus members of
     *    clusters invalidated by executed removals), lifted to their
     *    content-hash representatives, plus every doc sharing ANY
-    *    discovery bucket with one of them ([[bucketMates]] — all LSH
-    *    channels, fast tier included, so a channel added later is
-    *    automatically covered).
+    *    discovery bucket with one of them, read from the persisted band
+    *    index `bandIndex` (all LSH channels, fast tier included, so a
+    *    channel added later is automatically covered).
     *  - The prior epoch's connectivity enters union-find as `assignEdges`
     *    (member ↔ cluster_id pairs in string-id space; cluster labels are
     *    themselves min-ids of live docs, so the dictionary covers them).
@@ -797,16 +760,15 @@ object DedupPipeline {
   def clusterSignaturesDelta(spark: SparkSession, stateSigs: DataFrame,
                              focusSids: DataFrame, assignEdges: DataFrame,
                              texts: Option[DataFrame],
-                             cfg: DedupConfig = DedupConfig(),
-                             orderCols: Seq[org.apache.spark.sql.Column] =
-                               Seq(col("order_len").desc, col("id").asc),
                              // persisted (sid, band, band_hash) rows
                              // (Checkpoints.ensureBandIndex): mates come
                              // from a slim index semi-join instead of
                              // re-banding the corpus — the frontier pass
-                             // stops re-winnowing every doc's shingle
-                             // array every epoch
-                             bandIndex: Option[DataFrame] = None): DataFrame = {
+                             // never re-winnows every doc's shingle array
+                             bandIndex: DataFrame,
+                             cfg: DedupConfig = DedupConfig(),
+                             orderCols: Seq[org.apache.spark.sql.Column] =
+                               Seq(col("order_len").desc, col("id").asc)): DataFrame = {
     val mat = cfg.materializer(spark)
     val (dict, slim, hashGroups, repSigs) = codedParts(stateSigs, mat)
     // focus → coded → content-hash representatives: a focus doc that is
@@ -826,34 +788,33 @@ object DedupPipeline {
     val hasFastRows =
       slim.filter(col("n_shingles") === 0).limit(1).count() > 0
     val frontier = {
-      val includeFast = hasFastRows || cfg.fastPath
-      val mates = bandIndex match {
-        case Some(ix) =>
-          // the frontier never touches a wide column OR a hash kernel: the
-          // focus docs' hot bucket keys are READ from the index (their rows
-          // are, by the index invariant, exactly allChannelBandRows of
-          // their signatures — and a non-rep focus doc has identical text,
-          // hence identical rows, to its hash-group rep), and mates are the
-          // index rows sharing those keys. Two passes over a ~20 B/row
-          // table replace a corpus-wide shingle-winnowing pass AND a
-          // corpus-wide wide-column cache fill. Index rows of tombstoned
-          // docs and of non-representatives only widen the frontier
-          // (dropped at the subset semi-join below).
-          val ixc = if (includeFast) ix else ix.filter(col("band") < 1000)
-          // NO forced broadcast on the focus side: focus is delta-sized in
-          // steady state but corpus-sized after accrued signature-only
-          // epochs (every never-clustered doc), where a broadcast hint
-          // would hit the 8 GB hard limit / driver OOM — the stats/AQE
-          // choice degrades to a shuffle semi-join instead of crashing
-          val hot = ixc.join(focusSids.toDF("id"), Seq("id"), "left_semi")
-            .select("band", "band_hash").distinct()
-          ixc.join(hot, Seq("band", "band_hash"), "left_semi")
-            .select(col("id").as("sid")).distinct()
-            .join(dict, "sid").select("id")
-        case None =>
-          bucketMates(repSigs, focusReps, cfg,
-            includeFastChannel = hasFastRows)
-      }
+      // the frontier never touches a wide column OR a hash kernel: the
+      // focus docs' hot bucket keys are READ from the index (their rows
+      // are, by the index invariant, exactly allChannelBandRows of their
+      // signatures — and a non-rep focus doc has identical text, hence
+      // identical rows, to its hash-group rep), and mates are the index
+      // rows sharing those keys. Two passes over a ~20 B/row table replace
+      // a corpus-wide shingle-winnowing pass AND a corpus-wide wide-column
+      // cache fill. Index rows of tombstoned docs and of non-representatives
+      // only widen the frontier (dropped at the subset semi-join below).
+      // The fast channel joins in ONLY when the store mixes in fast-path
+      // rows (or the run itself is fast-path), mirroring the pairing tiers
+      // exactly: a 16-bit slice holds ~n/65536 docs, so in a pure-full
+      // store it would pull ~44 mates per focus slice at 726k docs and the
+      // frontier would engulf the corpus.
+      val ixc =
+        if (hasFastRows || cfg.fastPath) bandIndex
+        else bandIndex.filter(col("band") < 1000)
+      // NO forced broadcast on the focus side: focus is delta-sized in
+      // steady state but corpus-sized after accrued signature-only epochs
+      // (every never-clustered doc), where a broadcast hint would hit the
+      // 8 GB hard limit / driver OOM — the stats/AQE choice degrades to a
+      // shuffle semi-join instead of crashing
+      val hot = ixc.join(focusSids.toDF("id"), Seq("id"), "left_semi")
+        .select("band", "band_hash").distinct()
+      val mates = ixc.join(hot, Seq("band", "band_hash"), "left_semi")
+        .select(col("id").as("sid")).distinct()
+        .join(dict, "sid").select("id")
       // lazy cache: filled by the subset materialization below
       mates.union(focusReps).distinct().cache()
     }

@@ -26,8 +26,9 @@ import graft.pipeline.{DedupConfig, DedupPipeline}
   *    once the `_manifest.jsonl` line naming it is published by
   *    [[appendManifest]]'s double rename. Each line names the current
   *    generation of every table plus the layout facts readers need
-  *    (`signature_buckets`, the band index's `knobs` and `through_epoch`);
-  *    [[snapshot]] resolves them and every reader goes through it.
+  *    (`signature_buckets`, the band index's `knobs` and `through_epoch`,
+  *    the sub-document tables' `subdoc_from`); [[snapshot]] resolves them
+  *    and every reader goes through it.
   *
   * A call that replaces a table (clusterEpoch's clusters, actions and
   * previews, compaction, a rescan) writes generation n — n is the index of
@@ -44,7 +45,6 @@ object Checkpoints {
 
   def signaturesPath(stateDir: String) = s"$stateDir/signatures"
   def quarantinePath(stateDir: String) = s"$stateDir/quarantine"
-  def metricsPath(stateDir: String) = s"$stateDir/metrics"
   def clustersPath(stateDir: String) = s"$stateDir/clusters"
   def previewsPath(stateDir: String) = s"$stateDir/previews"
   def actionsPath(stateDir: String) = s"$stateDir/actions"
@@ -100,10 +100,13 @@ object Checkpoints {
     *                follows it
     * @param knobs   channel knobs the band index was built with
     * @param through last signature epoch the band index covers
+    * @param subdocFrom first epoch whose sub-document hashes are visible:
+    *                the epoch of the last rescan ([[SubDocState]])
     */
   private[state] final case class Snapshot(stateDir: String, gens: Map[String, Long],
                                            next: Long, buckets: Int = 0,
-                                           knobs: String = "", through: Long = -1L) {
+                                           knobs: String = "", through: Long = -1L,
+                                           subdocFrom: Long = 0L) {
     def path(table: String): Option[String] =
       gens.get(table).map(g => s"$stateDir/$table/gen=$g")
 
@@ -112,10 +115,20 @@ object Checkpoints {
 
     def orFresh(table: String): Snapshot = if (gens.contains(table)) this else fresh(table)
 
+    /** Whether a write (a rescan or not) starts a new signature store. */
+    def restarts(rescan: Boolean): Boolean = rescan || !gens.contains("signatures")
+
+    /** Layout of a write: sticky once a store exists — mixing layouts in one
+      * table would corrupt the bucket invariant — so only a write that
+      * starts a new store takes the `requested` one.
+      */
+    def layout(rescan: Boolean, requested: Int): Int = if (restarts(rescan)) requested else buckets
+
     def json: String =
       gens.toSeq.sorted.map { case (t, g) => s""""$t":$g""" }.mkString("\"gens\":{", ",", "}") +
         s""","signature_buckets":$buckets""" +
-        (if (gens.contains("bands")) s""","knobs":$knobs,"through_epoch":$through""" else "")
+        (if (gens.contains("bands")) s""","knobs":$knobs,"through_epoch":$through""" else "") +
+        (if (subdocFrom > 0) s""","subdoc_from":$subdocFrom""" else "")
   }
 
   /** The published snapshot: the last manifest line's generations. A state
@@ -138,7 +151,8 @@ object Checkpoints {
             .map(m => m.group(1) -> m.group(2).toLong).toMap,
           buckets = field("signature_buckets", """\d+""").fold(0)(_.toInt),
           knobs = field("knobs", """\{[^}]*\}""").getOrElse(""),
-          through = field("through_epoch", """-?\d+""").fold(-1L)(_.toLong))
+          through = field("through_epoch", """-?\d+""").fold(-1L)(_.toLong),
+          subdocFrom = field("subdoc_from", """\d+""").fold(0L)(_.toLong))
     }
   }
 
@@ -164,8 +178,9 @@ object Checkpoints {
         .map(fs -> _)
     }
 
-  /** Delete what `snap` does not name: unnamed generations, and the dirs of
-    * tables it does not name at all.
+  /** Delete what `snap` does not name: unnamed generations, the dirs of
+    * tables it does not name at all, and the sub-document partitions below
+    * its `subdoc_from`.
     */
   private def sweep(spark: SparkSession, snap: Snapshot): Unit = {
     unnamed(spark, snap).foreach { case (fs, p) => fs.delete(p, true) }
@@ -173,6 +188,7 @@ object Checkpoints {
       val (fs, dir) = fsFor(spark, s"${snap.stateDir}/$t")
       if (fs.exists(dir)) fs.delete(dir, true)
     }
+    SubDocState.sweep(spark, snap.stateDir, snap.subdocFrom)
   }
 
   /** Publish `snap` with one manifest line carrying `fields`; once the line
@@ -439,7 +455,7 @@ object Checkpoints {
     // resume primitive (J1): anti-join against persisted state + skip list.
     // force_rescan (reference config.rs:81 / reinitialise semantics) bypasses
     // both filters and starts a new store instead of appending duplicates.
-    val fresh = cfg.forceRescan || !published.gens.contains("signatures")
+    val fresh = published.restarts(cfg.forceRescan)
     val seen = if (fresh) None else Some(readSignatures(spark, published))
     val quarantined =
       if (cfg.forceRescan) None else published.path("quarantine").map(spark.read.parquet(_))
@@ -498,11 +514,9 @@ object Checkpoints {
     val withPart = sigs
       .withColumn("part_id", spark_partition_id())
       .withColumn("epoch", lit(epoch))
-    // Layout is sticky: once a store exists, later epochs follow its
-    // recorded layout regardless of the caller's config (mixing layouts in
-    // one table would corrupt the bucket invariant); forceRescan (which
-    // starts a new store) is the documented way to re-layout.
-    val buckets = if (fresh) cfg.stateBuckets else published.buckets
+    // forceRescan (which starts a new store) is the documented way to
+    // re-layout
+    val buckets = published.layout(cfg.forceRescan, cfg.stateBuckets)
     if (buckets != cfg.stateBuckets && cfg.stateBuckets > 0)
       System.err.println(s"[state] stateBuckets=${cfg.stateBuckets} requested but " +
         s"existing layout has $buckets bucket(s); keeping the existing layout " +
@@ -512,14 +526,17 @@ object Checkpoints {
     // read the old clusters as trusted connectivity and the band index
     // would keep their rows forever; the executed table is keyed by — and
     // bucketed like — the old store, so its tombstones would suppress ids
-    // the rescan re-mints; and a restarted store re-evaluates every
-    // quarantined doc.
-    val kept =
+    // the rescan re-mints; a restarted store re-evaluates every
+    // quarantined doc; and its sub-document elections start from its own
+    // epoch (`subdoc_from`), hiding every earlier winner hash.
+    val (kept, subdocFrom) =
       if (cfg.forceRescan)
-        published.gens -- Seq("clusters", "actions", "previews", "bands", "executed", "quarantine")
-      else published.gens
+        (published.gens -- Seq("clusters", "actions", "previews", "bands", "executed", "quarantine"),
+          epoch)
+      else (published.gens, published.subdocFrom)
     val snap =
-      (if (fresh) published.copy(gens = kept, buckets = buckets).fresh("signatures")
+      (if (fresh) published.copy(gens = kept, buckets = buckets, subdocFrom = subdocFrom)
+         .fresh("signatures")
        else published).orFresh("quarantine").orFresh("metrics")
     write(spark, snap, "signatures", withPart, buckets)
 
@@ -647,7 +664,7 @@ object Checkpoints {
         val assigns = stable.filter(col("id") =!= col("cluster_id"))
           .select(col("id").as("sid_a"), col("cluster_id").as("sid_b"))
         DedupPipeline.clusterSignaturesDelta(
-          spark, stateSigs, focus, assigns, Some(texts), cfg0, bandIndex = Some(index))
+          spark, stateSigs, focus, assigns, Some(texts), index, cfg0)
       case _ =>
         DedupPipeline.clusterSignatures(spark, stateSigs, Some(texts), cfg0)
     }
@@ -1002,9 +1019,9 @@ object Checkpoints {
     * bucketed on the same N). Each table is rewritten into a new
     * generation and one manifest line publishes them all.
     *
-    * @return (filesBefore, filesAfter)
+    * @return (tables rewritten, filesBefore, filesAfter)
     */
-  def compactSignatures(spark: SparkSession, stateDir: String): (Long, Long) =
+  def compactSignatures(spark: SparkSession, stateDir: String): (Seq[String], Long, Long) =
     withStateLock(spark, stateDir) {
       val snap = snapshot(spark, stateDir)
       require(snap.gens.contains("signatures"),
@@ -1061,9 +1078,9 @@ object Checkpoints {
       // no "new_signatures" key: compaction must not advance the epoch
       // counter (nextEpoch counts signature-commit lines only)
       commit(spark, out,
-        s""""compacted":"signatures+executed+bands","files_before":$before,""" +
+        s""""compacted":"${compacted.mkString("+")}","files_before":$before,""" +
           s""""files_after":$after""")
-      (before, after)
+      (compacted, before, after)
     }
 
   /** Manifest lines, oldest first; empty if no manifest yet. Falls back to

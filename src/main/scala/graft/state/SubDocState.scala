@@ -2,9 +2,11 @@ package graft.state
 
 import java.nio.charset.StandardCharsets.UTF_8
 
-import org.apache.hadoop.fs.Path
+import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+
+import graft.pipeline.DedupConfig
 
 /** Cross-epoch state for the sub-document dedup passes (`--para-dedup`,
   * `--span-dedup`): the set of paragraph / 3-sentence-span hashes whose
@@ -16,20 +18,27 @@ import org.apache.spark.sql.functions._
   * it. With it, each epoch's election anti-joins the seen set first, and
   * appends the hashes it newly elected.
   *
-  * Layout (mirrors the signature store's crash-safety story):
+  * Layout and visibility both come from the manifest, the state dir's one
+  * commit point ([[Checkpoints]]):
   *  - hashes live under `stateDir/paras` and `stateDir/spans`, partitioned
   *    by the epoch that elected them (`epoch=E/` dirs);
-  *  - a batch's append OVERWRITES its own epoch partition, and readers
-  *    only trust partitions with `epoch < nextEpoch` (the next epoch the
-  *    manifest will commit) — so hashes written by an epoch that later
-  *    crashed are invisible and simply overwritten on re-run: the append
-  *    is idempotent without its own commit protocol;
-  *  - when the state dir records a bucket layout (`_subdoc_layout.json`),
-  *    the hash tables are written CLUSTERED BY (hash) into the
-  *    same bucket count — the seen side of the anti-join, the side that
-  *    grows with corpus age, then scans with HashPartitioning and never
-  *    re-shuffles; only the incoming batch exchanges (SubDocStateSpec pins
-  *    the plan). Plain layout falls back to plain parquet.
+  *  - the bucket layout is the published line's `signature_buckets`: the
+  *    hash tables are written CLUSTERED BY (hash) into the same bucket
+  *    count as the signature store, so the seen side of the anti-join, the
+  *    side that grows with corpus age, scans with HashPartitioning and
+  *    never re-shuffles; only the incoming batch exchanges (SubDocStateSpec
+  *    pins the plan). 0 = plain parquet. Before a line publishes signatures,
+  *    and in a rescan (whose line publishes a new layout), the pass writes
+  *    with the caller's `stateBuckets` — the rule the signature store's own
+  *    ingest follows, so the line then publishes the layout already written;
+  *  - a batch's append OVERWRITES its own epoch partition, and readers only
+  *    trust partitions with `subdoc_from <= epoch < nextEpoch`. Hashes
+  *    written by an epoch whose line never became durable are invisible and
+  *    simply overwritten on re-run: the append is idempotent without its
+  *    own commit protocol. A `forceRescan` line records its epoch as
+  *    `subdoc_from`, so every pre-rescan partition turns invisible with the
+  *    line that publishes the rescan; deleting them is garbage collection,
+  *    done by the next sweep under the lease ([[sweep]]).
   *
   * Reference analog: none — the reference dedups whole files in one
   * process; epoch-spanning sub-document state is what the webtext +
@@ -39,40 +48,6 @@ object SubDocState {
 
   def parasPath(stateDir: String) = s"$stateDir/paras"
   def spansPath(stateDir: String) = s"$stateDir/spans"
-  def layoutPath(stateDir: String) = s"$stateDir/_subdoc_layout.json"
-
-  /** Sticky bucket layout for the hash tables. The sub-document passes run
-    * BEFORE the epoch's signature commit (the cleaned text is the commit's
-    * input), so on a fresh state dir no manifest line has published the
-    * signature store's layout yet — the hash tables record their own marker at first
-    * append and every later epoch follows it, whatever the caller asks
-    * (mixing bucketed and plain files under one table would silently
-    * mis-bucket the seen scan). 0 = plain parquet.
-    */
-  private def buckets(spark: SparkSession, stateDir: String,
-                      desiredIfFresh: Int): Int = {
-    val root = resolved(spark, layoutPath(stateDir))
-    val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (fs.exists(root)) {
-      markerInt(fs, root, "subdoc_buckets").getOrElse(0)
-    } else {
-      val out = fs.create(root, true)
-      try out.write(s"""{"subdoc_buckets":$desiredIfFresh}""".getBytes(UTF_8))
-      finally out.close()
-      desiredIfFresh
-    }
-  }
-
-  /** Layout already recorded, else 0 — the read-side resolution (readers
-    * never create the marker: a reader racing the first writer must see
-    * plain-or-nothing, not invent a layout).
-    */
-  private def recordedBuckets(spark: SparkSession, stateDir: String): Int = {
-    val root = resolved(spark, layoutPath(stateDir))
-    val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (!fs.exists(root)) 0
-    else buckets(spark, stateDir, 0)
-  }
 
   /** The epoch tag appends will carry: the epoch the NEXT signature commit
     * gets. Reading strictly below it hides any crashed epoch's orphans.
@@ -89,36 +64,28 @@ object SubDocState {
     prefix + digest.take(6).map(b => f"$b%02x").mkString
   }
 
-  /** First integer recorded for `key` in a small JSON marker file, if the
-    * file exists.
-    */
-  private def markerInt(fs: org.apache.hadoop.fs.FileSystem, p: Path,
-                               key: String): Option[Int] =
-    if (!fs.exists(p)) None
-    else {
-      val in = fs.open(p)
-      val txt =
-        try scala.io.Source.fromInputStream(in, "UTF-8").mkString
-        finally in.close()
-      ("\"" + key + "\"\\s*:\\s*(\\d+)").r
-        .findFirstMatchIn(txt).map(_.group(1).toInt)
-    }
-
   private def resolved(spark: SparkSession, path: String): Path = {
     val p = new Path(path)
     val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
     fs.makeQualified(p)
   }
 
+  private def partitions(fs: FileSystem, root: Path): Seq[Path] =
+    fs.listStatus(root).toSeq
+      .filter(st => st.isDirectory && st.getPath.getName.startsWith("epoch="))
+      .map(_.getPath)
+
   /** Register (if absent) the epoch-partitioned, hash-bucketed table over
     * `path` and return its name. Unlike the signature table, the schema is
     * fixed, so registration needs no existing files (first append creates
     * the table's first partition).
     */
-  private def ensureTable(spark: SparkSession, prefix: String, path: String,
-                          hashCol: String, buckets: Int): String = {
+  private def ensureTable(spark: SparkSession, path: String, hashCol: String,
+                          buckets: Int): String = {
     val root = resolved(spark, path)
-    val tbl = tableName(prefix, root)
+    // keyed by the bucket count too: after a rescan re-layouts the table,
+    // an entry declaring the old count must never be reused
+    val tbl = tableName(s"graft_${hashCol}_${buckets}_", root)
     // CREATE TABLE does not create its LOCATION, and MSCK throws on a
     // missing dir — the first append needs both to exist
     val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
@@ -140,9 +107,7 @@ object SubDocState {
       // read — never a repeated MSCK, whose recursive every-file walk
       // grows with corpus age (thousands of epochs × object-store listing
       // per seen()/append() call was an O(corpus-age) fixed cost per epoch)
-      val onDisk = fs.listStatus(root)
-        .filter(st => st.isDirectory && st.getPath.getName.startsWith("epoch="))
-        .map(_.getPath.getName).toSet
+      val onDisk = partitions(fs, root).map(_.getName).toSet
       val inCatalog = spark.sql(s"SHOW PARTITIONS $tbl").collect()
         .map(_.getString(0)).toSet
       val missing = (onDisk -- inCatalog).toSeq.sorted
@@ -153,32 +118,31 @@ object SubDocState {
     tbl
   }
 
-  /** Hashes elected by committed epochs (strictly below `below`): the
-    * `seen` input for this epoch's election. None when nothing committed —
-    * callers then skip the anti-join entirely (epoch-1 plan unchanged).
+  /** Hashes elected by committed epochs since the last rescan (from the
+    * published `subdoc_from` to strictly below `below`): the `seen` input
+    * for this epoch's election. None when nothing committed — callers then
+    * skip the anti-join entirely (epoch-1 plan unchanged).
     */
   def seen(spark: SparkSession, stateDir: String, path: String,
            hashCol: String, below: Long): Option[DataFrame] = {
     val root = resolved(spark, path)
     val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (!fs.exists(root)) return None
     // a crash during the very FIRST append leaves only _temporary files
     // under the root — schema inference over nothing-but-hidden-files
     // throws, where the idempotent-re-run contract demands None (exactly
     // what a pre-crash run saw). Committed data always means at least one
     // epoch= partition directory.
-    if (!fs.listStatus(root).exists(st =>
-        st.isDirectory && st.getPath.getName.startsWith("epoch=")))
-      return None
-    val b = recordedBuckets(spark, stateDir)
+    if (!fs.exists(root) || partitions(fs, root).isEmpty) return None
+    val snap = Checkpoints.snapshot(spark, stateDir)
     val df =
-      if (b > 0)
-        spark.table(ensureTable(spark, s"graft_${hashCol}_", path, hashCol, b))
+      if (snap.buckets > 0)
+        spark.table(ensureTable(spark, path, hashCol, snap.buckets))
       else
         spark.read.option("basePath", root.toString).parquet(root.toString)
     // epoch is a partition column both ways: the filter prunes directories,
-    // it never scans orphan (crashed-epoch) files
-    val committed = df.filter(col("epoch") < below).select(col(hashCol))
+    // it never scans orphan (crashed-epoch) or pre-rescan files
+    val committed = df.filter(col("epoch") >= snap.subdocFrom && col("epoch") < below)
+      .select(col(hashCol))
     // a crashed epoch-1 leaves files but zero committed partitions; the
     // cheap emptiness probe keeps the epoch-1 re-run plan join-free
     if (committed.limit(1).isEmpty) None else Some(committed)
@@ -188,14 +152,20 @@ object SubDocState {
     * elected winners: the epoch's own partition is OVERWRITTEN, no other
     * partition is touched. Safe to re-run after a crash; call under the
     * state lease (writers are serialized by the caller, as with every
-    * other state mutation).
+    * other state mutation). The layout is the published one;
+    * `bucketsIfFresh` applies only before a line publishes signatures, and
+    * must then match the layout that line will publish.
     */
   def append(spark: SparkSession, stateDir: String, path: String,
              hashCol: String, hashes: DataFrame, epoch: Long,
-             bucketsIfFresh: Int = 0): Unit = {
-    val b = buckets(spark, stateDir, bucketsIfFresh)
-    if (b > 0) {
-      val tbl = ensureTable(spark, s"graft_${hashCol}_", path, hashCol, b)
+             bucketsIfFresh: Int = 0): Unit =
+    write(spark, path, hashCol, hashes, epoch,
+      Checkpoints.snapshot(spark, stateDir).layout(rescan = false, bucketsIfFresh))
+
+  private def write(spark: SparkSession, path: String, hashCol: String,
+                    hashes: DataFrame, epoch: Long, buckets: Int): Unit =
+    if (buckets > 0) {
+      val tbl = ensureTable(spark, path, hashCol, buckets)
       // the winners frame READS the seen table (the anti-join), so a
       // direct INSERT OVERWRITE into the same table is (rightly) rejected
       // as a self-overwrite; staging the winners to a scratch dir cuts the
@@ -209,7 +179,7 @@ object SubDocState {
       // bucketed by the table's layout — one writer task per bucket
       spark.sql(
         s"""INSERT OVERWRITE TABLE $tbl PARTITION (epoch=$epoch)
-           |SELECT /*+ REPARTITION($b, $hashCol) */ $hashCol
+           |SELECT /*+ REPARTITION($buckets, $hashCol) */ $hashCol
            |FROM ${tbl}_in""".stripMargin)
       spark.catalog.dropTempView(s"${tbl}_in")
       fs.delete(staging, true)
@@ -218,72 +188,38 @@ object SubDocState {
         .write.mode("overwrite")
         .parquet(s"${resolved(spark, path)}/epoch=$epoch")
     }
-  }
 
-  /** Remove a hash table (the `--force-rescan` path: signatures are
-    * overwritten, so prior epochs' sub-document winners must not leak into
-    * the rescan's elections) — files and the session's catalog entry both.
+  /** Garbage-collect what the published `subdoc_from` hides: every
+    * partition below it, then a table root left without partitions. Called
+    * by [[Checkpoints]]' sweep, under the lease.
     */
-  def wipe(spark: SparkSession, path: String, hashCol: String): Unit = {
-    val root = resolved(spark, path)
-    val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (fs.exists(root)) fs.delete(root, true)
-    spark.sql(s"DROP TABLE IF EXISTS ${tableName(s"graft_${hashCol}_", root)}")
-  }
-
-  /** Both hash tables plus the layout marker — the `--force-rescan` reset
-    * (a rescan may re-layout, exactly like the signature store).
-    */
-  def wipeAll(spark: SparkSession, stateDir: String): Unit = {
-    wipe(spark, parasPath(stateDir), "para_hash")
-    wipe(spark, spansPath(stateDir), "h")
-    val marker = resolved(spark, layoutPath(stateDir))
-    val fs = marker.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (fs.exists(marker)) fs.delete(marker, false)
-  }
+  private[state] def sweep(spark: SparkSession, stateDir: String, from: Long): Unit =
+    Seq(parasPath(stateDir), spansPath(stateDir)).map(resolved(spark, _)).foreach { root =>
+      val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
+      if (fs.exists(root)) {
+        val (hidden, kept) = partitions(fs, root)
+          .partition(_.getName.stripPrefix("epoch=").toLong < from)
+        hidden.foreach(fs.delete(_, true))
+        if (kept.isEmpty) fs.delete(root, true)
+      }
+    }
 
   /** The incremental `--para-dedup` pass: clean `df` against the seen set,
     * record the batch's newly-elected paragraph hashes for the next epoch.
     * The append is an eager (small) action — distinct hashes only, never
     * text; the returned frame is lazy as usual. Re-running after a crash
     * overwrites the same epoch partition and reads the same seen set, so
-    * the cleaned text is reproduced bit-identically.
+    * the cleaned text is reproduced bit-identically. `cfg` is the epoch's
+    * config: its layout, its seen-side prune and whether it rescans.
     */
   def dedupParagraphsIncremental(spark: SparkSession, stateDir: String,
                                  df: DataFrame, idCol: String, textCol: String,
-                                 stateBuckets: Int = 0,
-                                 bloomFpp: Double = 0.0,
-                                 bloomExpected: Long = 4000000L): DataFrame = {
-    // epoch + seen snapshot are read UNDER the same lease as the append:
-    // read-then-lock would let two drivers both observe epoch e, serialize
-    // on the lock, and have the second INSERT OVERWRITE the first's
-    // committed epoch-e winners partition — paragraphs that shipped in the
-    // first driver's cleaned text would vanish from the seen set and
-    // re-elect in every later epoch. The seen frame is epoch-scoped
-    // (epoch < e), so returning it for the lazy cleaned output stays
-    // snapshot-correct after release.
-    val s = Checkpoints.withStateLock(spark, stateDir) {
-      val e = nextEpoch(spark, stateDir)
-      // slice-keyed prune (state/SlicePrune): the seen table is the
-      // CORPUS-aged side here too — and at tens of paragraphs per doc it is
-      // the largest state table of all. Sketch the batch's para hashes once
-      // (one slim aggregation; the sketch frame never carries text) and
-      // filter the seen scan — both consumers (winners' anti-join and the
-      // election's join) read the pruned frame; exact at any fpp.
-      val s0 = seen(spark, stateDir, parasPath(stateDir), "para_hash", e)
-      val pruned =
-        if (bloomFpp > 0)
-          s0.map(t => SlicePrune.pruneByKeys(t, "para_hash",
-            graft.text.ParagraphDedup.explodeParagraphs(df, idCol, textCol)
-              .select("para_hash"),
-            "para_hash", bloomExpected, bloomFpp))
-        else s0
-      append(spark, stateDir, parasPath(stateDir), "para_hash",
-        graft.text.ParagraphDedup.winners(df, idCol, textCol, seen = pruned), e,
-        bucketsIfFresh = stateBuckets)
-      pruned
-    }
-    graft.text.ParagraphDedup.dedupParagraphs(df, idCol, textCol, seen = s)
+                                 cfg: DedupConfig = DedupConfig()): DataFrame = {
+    import graft.text.ParagraphDedup._
+    incremental(spark, stateDir, cfg, parasPath(stateDir), "para_hash",
+      explodeParagraphs(df, idCol, textCol).select("para_hash"),
+      s => winners(df, idCol, textCol, seen = s),
+      s => dedupParagraphs(df, idCol, textCol, seen = s))
   }
 
   /** The incremental `--span-dedup` pass; see
@@ -291,28 +227,51 @@ object SubDocState {
     */
   def dedupSpansIncremental(spark: SparkSession, stateDir: String,
                             df: DataFrame, idCol: String, textCol: String,
-                            stateBuckets: Int = 0,
-                            bloomFpp: Double = 0.0,
-                            bloomExpected: Long = 4000000L): DataFrame = {
-    // epoch + seen snapshot under the same lease as the append — see
-    // [[dedupParagraphsIncremental]] for the overwrite race this prevents
+                            cfg: DedupConfig = DedupConfig()): DataFrame = {
+    import graft.text.SpanDedup._
+    incremental(spark, stateDir, cfg, spansPath(stateDir), "h",
+      batchHashes(df, idCol, textCol),
+      s => winners(df, idCol, textCol, seen = s),
+      s => dedupSpans(df, idCol, textCol, seen = s))
+  }
+
+  /** One incremental pass over the table at `path`: elect `batchHashes`'
+    * winners against the seen set, append them, and clean with the same
+    * seen set.
+    */
+  private def incremental(spark: SparkSession, stateDir: String, cfg: DedupConfig,
+                          path: String, hashCol: String, batchHashes: DataFrame,
+                          winners: Option[DataFrame] => DataFrame,
+                          clean: Option[DataFrame] => DataFrame): DataFrame = {
+    // epoch + seen snapshot are read UNDER the same lease as the append:
+    // read-then-lock would let two drivers both observe epoch e, serialize
+    // on the lock, and have the second INSERT OVERWRITE the first's
+    // committed epoch-e winners partition — hashes that shipped in the
+    // first driver's cleaned text would vanish from the seen set and
+    // re-elect in every later epoch. The seen frame is epoch-scoped
+    // (epoch < e), so returning it for the lazy cleaned output stays
+    // snapshot-correct after release.
     val s = Checkpoints.withStateLock(spark, stateDir) {
       val e = nextEpoch(spark, stateDir)
-      // same slice-keyed prune as the paragraph pass; exact for the span
-      // election too — its seen join is a LEFT-with-marker, and a pruned-out
-      // seen row could never have matched a batch span hash
-      val s0 = seen(spark, stateDir, spansPath(stateDir), "h", e)
+      // a rescan elects against nothing: its line will hide every earlier
+      // partition
+      val s0 = if (cfg.forceRescan) None else seen(spark, stateDir, path, hashCol, e)
+      // slice-keyed prune (state/SlicePrune): the seen table is the
+      // CORPUS-aged side here too — and at tens of paragraphs per doc it is
+      // the largest state table of all. Sketch the batch's hashes once
+      // (one slim aggregation; the sketch frame never carries text) and
+      // filter the seen scan — both consumers (the winners' anti-join and
+      // the cleaning join) read the pruned frame; exact at any fpp, since a
+      // pruned-out seen row could never have matched a batch hash.
       val pruned =
-        if (bloomFpp > 0)
-          s0.map(t => SlicePrune.pruneByKeys(t, "h",
-            graft.text.SpanDedup.batchHashes(df, idCol, textCol), "h",
-            bloomExpected, bloomFpp))
-          else s0
-      append(spark, stateDir, spansPath(stateDir), "h",
-        graft.text.SpanDedup.winners(df, idCol, textCol, seen = pruned), e,
-        bucketsIfFresh = stateBuckets)
+        if (cfg.stateBloomFpp > 0)
+          s0.map(t => SlicePrune.pruneByKeys(t, hashCol, batchHashes, hashCol,
+            cfg.stateBloomExpected, cfg.stateBloomFpp))
+        else s0
+      write(spark, path, hashCol, winners(pruned), e,
+        Checkpoints.snapshot(spark, stateDir).layout(cfg.forceRescan, cfg.stateBuckets))
       pruned
     }
-    graft.text.SpanDedup.dedupSpans(df, idCol, textCol, seen = s)
+    clean(s)
   }
 }

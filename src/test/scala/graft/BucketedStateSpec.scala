@@ -149,7 +149,7 @@ class BucketedStateSpec extends SparkTestBase {
     // its tombstone join over the compacted store) is unchanged
     val liveBefore = Checkpoints.liveSignatures(spark, dir)
       .select("id").as[String].collect().toSet
-    val (nb, na) = Checkpoints.compactSignatures(spark, dir)
+    val (_, nb, na) = Checkpoints.compactSignatures(spark, dir)
     // single-epoch store: already minimal, so compact must be a no-op in
     // count (the multi-epoch reduction property is pinned by the dedicated
     // compaction tests above)
@@ -178,7 +178,7 @@ class BucketedStateSpec extends SparkTestBase {
     val asOf1Before = Checkpoints.signaturesAsOf(spark, dir, 1L)
       .select("id").as[String].collect().toSet
 
-    val (nb, na) = Checkpoints.compactSignatures(spark, dir)
+    val (_, nb, na) = Checkpoints.compactSignatures(spark, dir)
     assert(na <= 8 && na < nb, s"compact reported ($nb, $na)")
     assert(files() == na)
     // exactly one file per non-empty bucket — the shuffle-free per-bucket
@@ -213,7 +213,7 @@ class BucketedStateSpec extends SparkTestBase {
     staleTmp.mkdirs()
     val before = Checkpoints.readSignatures(spark, dir)
       .select("id", "epoch").as[(String, Long)].collect().toSet
-    val (nb, na) = Checkpoints.compactSignatures(spark, dir)
+    val (_, nb, na) = Checkpoints.compactSignatures(spark, dir)
     assert(na < nb, s"compact did not reduce files ($nb -> $na)")
     assert(!staleTmp.exists(), "stale temp dir survived compaction")
     val after = Checkpoints.readSignatures(spark, dir)

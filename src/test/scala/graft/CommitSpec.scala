@@ -207,4 +207,72 @@ class CommitSpec extends SparkTestBase {
     Checkpoints.clusterEpoch(spark, more, "url", "text", dir, cfg)
     assertOneRowPerLiveId(dir)
   }
+
+  test("a library rescan hides the earlier sub-document winners from later elections") {
+    val dir = tempDir()
+    val para = "Shared paragraph that the first epoch elected."
+    val first = Seq(("http://a.test/1", s"$para\n\nAlpha tail.")).toDF("url", "text")
+    Checkpoints.runEpoch(spark,
+      SubDocState.dedupParagraphsIncremental(spark, dir, first, "url", "text"),
+      "url", "text", dir)
+    assert(new java.io.File(s"${SubDocState.parasPath(dir)}/epoch=0").exists())
+    Checkpoints.runEpoch(spark, first, "url", "text", dir, DedupConfig(forceRescan = true))
+    val later = Seq(("http://b.test/2", s"$para\n\nBeta tail.")).toDF("url", "text")
+    val cleaned = SubDocState.dedupParagraphsIncremental(spark, dir, later, "url", "text")
+      .select("text").as[String].collect().toSeq
+    assert(cleaned == Seq(s"$para\n\nBeta tail."),
+      "a pre-rescan winner must not defeat the paragraph after the rescan")
+    // the rescan's line hid the epoch-0 winners; its sweep deleted them
+    assert(!new java.io.File(s"${SubDocState.parasPath(dir)}/epoch=0").exists())
+  }
+
+  test("a --force-rescan --para-dedup run killed at either publish point resumes cleanly") {
+    def run(dir: String, pages: Seq[(String, String)], flags: String*): Unit = {
+      val p = tempDir()
+      pages.toDF("url", "text").write.mode("overwrite").parquet(p)
+      Main.run(spark, Main.parse(Seq("--pages", p, "--state", dir) ++ flags).toOption.get)
+    }
+    def seenHashes(dir: String): Set[String] =
+      SubDocState.seen(spark, dir, SubDocState.parasPath(dir), "para_hash",
+        SubDocState.nextEpoch(spark, dir)).fold(Set.empty[String])(_.as[String].collect().toSet)
+    def cleanedText(dir: String): Set[(String, String)] =
+      Checkpoints.readSignatures(spark, dir).select("id", "content_hash")
+        .as[(String, String)].collect().toSet
+    val para = "Header paragraph every page repeats."
+    val base = tempDir() + "/s"
+    run(base, Seq(("http://a.test/1", s"$para\n\nAlpha body."),
+      ("http://a.test/2", s"$para\n\nBeta body.")), "--para-dedup")
+    val preRescan = seenHashes(base)
+    val rescan = Seq(("http://a.test/2", s"$para\n\nBeta body."),
+      ("http://a.test/3", s"$para\n\nGamma body."))
+    val flags = Seq("--force-rescan", "--para-dedup")
+    val ref = tempDir() + "/s"
+    copyDir(base, ref)
+    run(ref, rescan, flags: _*)
+    val (expected, expectedSeen) = (cleanedText(ref), seenHashes(ref))
+    assert(expectedSeen.nonEmpty && expectedSeen != preRescan)
+    val epoch0 = (dir: String) => new java.io.File(s"${SubDocState.parasPath(dir)}/epoch=0")
+
+    Seq("manifest", "published").foreach { point =>
+      val dir = tempDir() + "/s"
+      copyDir(base, dir)
+      Checkpoints.commitTestHook = p => if (p == point) throw new Crash(point)
+      try intercept[Crash](run(dir, rescan, flags: _*))
+      finally Checkpoints.commitTestHook = _ => ()
+      if (point == "manifest") {
+        // the rescan line is not durable: elections still see the old winners
+        assert(seenHashes(dir) == preRescan, s"$point: seen before the re-run")
+        run(dir, rescan, flags: _*)
+      } else {
+        // durable: the old winners are hidden while still on disk, and the
+        // next lease holder deletes them
+        assert(seenHashes(dir) == expectedSeen, s"$point: seen after the line")
+        assert(epoch0(dir).exists(), s"$point: swept before a lease holder ran")
+        Checkpoints.withStateLock(spark, dir)(())
+      }
+      assert(!epoch0(dir).exists(), s"$point: pre-rescan partition left behind")
+      assert(cleanedText(dir) == expected, s"$point: cleaned text differs from an uninterrupted run")
+      assert(seenHashes(dir) == expectedSeen, point)
+    }
+  }
 }

@@ -137,48 +137,6 @@ class DeltaClusterSpec extends SparkTestBase {
     all.unpersist()
   }
 
-  test("frontier-selection plan: delta-sized sides broadcast, corpus side never sort-merges") {
-    import graft.pipeline.DedupPipeline
-    val cfg = DedupConfig()
-    val sigs = DedupPipeline.signatures(
-      PagesGen.pages(spark, 8L, seed = 46L, tokensPerDoc = 120).toDF(),
-      "url", "text", cfg)
-    val focus = sigs.select("id").limit(3)
-    val prevAqe = spark.conf.get("spark.sql.adaptive.enabled")
-    try {
-      // compile-time plan must already be the at-scale one: the corpus-wide
-      // banding projection joins the (delta-sized) focus and hot-bucket sets
-      // as BROADCAST semi-joins — a sort-merge join here would shuffle the
-      // full corpus's band rows every delta epoch, erasing the mode's point
-      spark.conf.set("spark.sql.adaptive.enabled", "false")
-      val mates = DedupPipeline.bucketMates(sigs, focus, cfg)
-      val plan = mates.queryExecution.executedPlan
-      val smj = plan.collect {
-        case j: org.apache.spark.sql.execution.joins.SortMergeJoinExec => j
-      }
-      assert(smj.isEmpty, s"corpus-side band rows must never sort-merge:\n$plan")
-      val bhj = plan.collect {
-        case j: org.apache.spark.sql.execution.joins.BroadcastHashJoinExec => j
-      }
-      assert(bhj.length >= 2, s"expected broadcast semi-joins (focus + hot):\n$plan")
-      // only delta-sized rows may exchange on the band keys: every
-      // (band, band_hash)-partitioned shuffle must live INSIDE a broadcast
-      // (hot-side) subtree — a band-keyed shuffle in the main lineage would
-      // be the corpus-wide banding projection repartitioning every epoch.
-      // (Catalyst pushes the semi-join through the channel union, so the
-      // small hot set legitimately re-shuffles once per broadcast branch.)
-      import org.apache.spark.sql.execution.exchange.{BroadcastExchangeExec, ShuffleExchangeExec}
-      val inBroadcast = plan.collect { case b: BroadcastExchangeExec => b }
-        .flatMap(_.collect { case e: ShuffleExchangeExec => e }).toSet
-      val mainLineage = plan.collect { case e: ShuffleExchangeExec => e }
-        .filterNot(inBroadcast)
-      val bandKeyed = mainLineage.filter(
-        _.outputPartitioning.toString.contains("band"))
-      assert(bandKeyed.isEmpty,
-        s"corpus-wide band rows must never repartition in the main lineage:\n$plan")
-    } finally spark.conf.set("spark.sql.adaptive.enabled", prevAqe)
-  }
-
   test("band index: built, gap-repaired across non-delta epochs, rebuilt on knob change") {
     import graft.pipeline.DedupPipeline
     val dir = tempDir()

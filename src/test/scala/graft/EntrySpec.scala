@@ -196,6 +196,28 @@ class EntrySpec extends SparkTestBase {
     assert(diag.exists(_.contains("\"category\":\"signature_without_cluster\",\"n\":0")))
   }
 
+  test("CLI --compact reports exactly the tables it rewrote, as its manifest line does") {
+    import graft.pages.PagesGen
+    import graft.state.Checkpoints
+    val tmp = java.nio.file.Files.createTempDirectory("graft-cli-compact").toString
+    PagesGen.pages(spark, 2L, seed = 23L, tokensPerDoc = 80).toDF()
+      .write.parquet(s"$tmp/pages")
+    def compact(state: String, epochFlags: String*): (String, String) = {
+      Main.run(spark, Main.parse(Seq("--pages", s"$tmp/pages", "--state", state) ++
+        epochFlags).toOption.get)
+      val out = Main.run(spark, Main.parse(Seq("--state", state, "--compact")).toOption.get)
+      (out.mkString, Checkpoints.readManifest(spark, state).last)
+    }
+    // no executed table, no band index: only signatures are rewritten
+    val (plain, plainLine) = compact(s"$tmp/plain")
+    assert(plain.contains("\"compacted\":\"signatures\","), plain)
+    assert(plainLine.contains("\"compacted\":\"signatures\","), plainLine)
+    val (full, fullLine) = compact(s"$tmp/full", "--action", "delete", "--execute",
+      "--delta-cluster")
+    assert(full.contains("\"compacted\":\"signatures+executed+bands\""), full)
+    assert(fullLine.contains("\"compacted\":\"signatures+executed+bands\""), fullLine)
+  }
+
   test("CLI slice-fed epoch: --pages carries the slice, --texts-from the corpus") {
     import graft.pages.PagesGen
     import org.apache.spark.sql.functions.xxhash64
@@ -248,16 +270,18 @@ class EntrySpec extends SparkTestBase {
 
   test("CLI arg parsing: containment cap + estimate-tier flags") {
     val a = Main.parse(Seq("--pages", "p", "--state", "s",
-      "--containment-cap", "750", "--no-estimate-tier")).toOption.get
+      "--containment-cap", "750")).toOption.get
     val cfg = Main.toConfig(a)
-    assert(cfg.containmentMaxBucket == 750 && !cfg.estimateTier)
+    assert(cfg.containmentMaxBucket == 750)
     assert(Main.parse(Seq("--state", "s", "--containment-cap", "x")).isLeft)
     assert(Main.parse(Seq("--pages", "p", "--state", "s",
       "--containment-cap", "-1")).isLeft) // validation runs inside parse
+    // the estimate tier always runs: there is no flag to switch it off
+    assert(Main.parse(Seq("--pages", "p", "--state", "s",
+      "--no-estimate-tier")).isLeft)
     // defaults untouched when flags absent
     val d = Main.toConfig(Main.parse(Seq("--pages", "p", "--state", "s")).toOption.get)
     assert(d.containmentMaxBucket == graft.pipeline.DedupConfig().containmentMaxBucket)
-    assert(d.estimateTier)
   }
 
   test("CLI arg parsing: reliable checkpoints + pages format flags") {

@@ -121,14 +121,12 @@ class SlicePruneSpec extends SparkTestBase {
 
     def run(d: String, fpp: Double) = {
       // saturated tiny sketch again: exactness must be structural
-      val r1 = SubDocState.dedupParagraphsIncremental(spark, d, e1, "id", "text",
-        bloomFpp = fpp, bloomExpected = 2L)
+      val cfg = DedupConfig(stateBloomFpp = fpp, stateBloomExpected = 2L)
+      val r1 = SubDocState.dedupParagraphsIncremental(spark, d, e1, "id", "text", cfg)
         .select("id", "text").as[(String, String)].collect().toSet
-      val r2 = SubDocState.dedupParagraphsIncremental(spark, d, e2, "id", "text",
-        bloomFpp = fpp, bloomExpected = 2L)
+      val r2 = SubDocState.dedupParagraphsIncremental(spark, d, e2, "id", "text", cfg)
         .select("id", "text").as[(String, String)].collect().toSet
-      val s1 = SubDocState.dedupSpansIncremental(spark, d, e1, "id", "text",
-        bloomFpp = fpp, bloomExpected = 2L)
+      val s1 = SubDocState.dedupSpansIncremental(spark, d, e1, "id", "text", cfg)
         .select("id", "text").as[(String, String)].collect().toSet
       (r1, r2, s1)
     }
