@@ -7,7 +7,8 @@ import org.apache.spark.sql.types.{LongType, StructField, StructType}
 
 import scala.collection.mutable.ArrayBuilder
 
-import graft.state.Materializer
+import graft.pipeline.DedupPipeline
+import graft.state.{Materializer, Observed}
 
 /** Duplicate-group resolution: exact groups + transitive closure of verified
   * near-dup edges into clusters, then representative ("original") selection.
@@ -105,27 +106,16 @@ object Clustering {
     * metrics (CollectMetrics accumulators) instead of a separate
     * aggregation action: one driver round-trip per round, not two — the
     * per-round driver-job floor is a measured suppressor of scaling
-    * efficiency at high parallelism.
+    * efficiency at high parallelism. Returns the observed frame and the
+    * stats reader to call once that frame's checkpoint ran.
     */
-  private def observeStats(e: DataFrame, name: String)
-      : (DataFrame, org.apache.spark.sql.Observation) = {
+  private def observeStats(e: DataFrame, name: String): (DataFrame, () => (Long, Long)) = {
     val obs = org.apache.spark.sql.Observation(name)
     // bit_xor, not sum: order-independent AND overflow-free under ANSI mode
     // (the set is distinct, so XOR self-cancellation cannot occur)
     (e.observe(obs, count(lit(1)).as("n"),
-      coalesce(expr("bit_xor(xxhash64(u, v))"), lit(0L)).as("x")), obs)
-  }
-
-  private def statsOf(obs: org.apache.spark.sql.Observation): (Long, Long) = {
-    // the materializing checkpoint action has already run; the metrics row
-    // arrives on the listener bus within ms — the generous bound only
-    // guards against a wedged bus, failing loudly instead of hanging
-    val row = scala.concurrent.Await.result(obs.future,
-      scala.concurrent.duration.Duration(120, "s"))
-    // empty row: AQE's empty-relation propagation pruned the metrics node —
-    // the observed edge set was empty
-    if (row.length == 0) (0L, 0L)
-    else (row.getLong(0), row.getLong(1)) // positional: (n, x) in observe order
+      coalesce(expr("bit_xor(xxhash64(u, v))"), lit(0L)).as("x")),
+      () => (Observed.long(obs, 0), Observed.long(obs, 1)))
   }
 
   /** Driver heap bytes one canonical edge may cost in the local finish: the
@@ -197,30 +187,17 @@ object Clustering {
     // to dense longs at entry) iterate directly. String ids are encoded to
     // dense longs here first: every propagation round shuffles and compares
     // join keys, and 8-byte codes beat ~50-byte url strings several-fold in
-    // shuffle volume. The encoding is ORDER-PRESERVING (global sort, then
-    // monotonically_increasing_id, whose value is monotone in partition
-    // index × in-partition offset), so min(code) ≡ min(id) and the decoded
-    // output is identical to the string-keyed algorithm — and deterministic
-    // across parallelism levels, since codes never escape this function.
+    // shuffle volume. The encoding is the pipeline's ORDER-PRESERVING id
+    // dictionary, so min(code) ≡ min(id) and the decoded output is
+    // identical to the string-keyed algorithm — and deterministic across
+    // parallelism levels, since codes never escape this function.
     val alreadyNumeric =
       edges.schema("a").dataType == LongType
     val ids =
       if (alreadyNumeric) null
-      else mat(edges.select(col("a").as("sid")).union(edges.select(col("b").as("sid")))
-        .distinct().sort("sid")
-        .withColumn("code", monotonically_increasing_id())
-        // same 33-bit record-space guard as DedupPipeline.idDictionaryPlan:
-        // a sort partition holding >= 2^33 ids would spill codes into the
-        // next partition's space and silently break min(code) ≡ min(id) —
-        // fail loudly instead (per-row shift+compare, no extra exchange)
-        .withColumn("code",
-          when(shiftright(col("code"), 33) === spark_partition_id().cast("long"),
-            col("code"))
-            .otherwise(raise_error(lit(
-              "union-find id encode overflow: a sort partition holds >= " +
-                "2^33 ids, codes would collide; raise " +
-                "spark.sql.shuffle.partitions")))))
-        // materialized ONCE: codes must not be re-derived per use
+      // materialized ONCE: codes must not be re-derived per use
+      else mat(DedupPipeline.idDictionaryPlan(
+        edges.select(col("a")).union(edges.select(col("b")))))
 
     // LAZY checkpoint on the encoded edge set: BOTH the oriented edges and
     // the self-loop-only labeling tail derive from `enc`, so without this
@@ -231,8 +208,8 @@ object Clustering {
     val enc = mat(
       if (alreadyNumeric) edges.select(col("a").as("src"), col("b").as("dst"))
       else edges
-        .join(ids.select(col("sid").as("a"), col("code").as("ca")), "a")
-        .join(ids.select(col("sid").as("b"), col("code").as("cb")), "b")
+        .join(ids.select(col("sid").as("a"), col("id").as("ca")), "a")
+        .join(ids.select(col("sid").as("b"), col("id").as("cb")), "b")
         .select(col("ca").as("src"), col("cb").as("dst")),
       eager = false)
     // canonical oriented edge set (u > v), self-loops dropped; the distinct
@@ -244,7 +221,7 @@ object Clustering {
         .distinct(),
       "uf_round_0")
     val e0 = mat(e0Obs)
-    val stats0 = statsOf(obs0)
+    val stats0 = obs0()
     val e =
       if (stats0._1 <= localCap) localStarForest(spark, e0, stats0._1)
       else contractToStars(e0, stats0, maxIters, mat)
@@ -263,8 +240,8 @@ object Clustering {
 
     if (alreadyNumeric) labels.withColumnRenamed("label", "cluster_id")
     else labels
-      .join(ids.select(col("code").as("id"), col("sid").as("id_s")), "id")
-      .join(ids.select(col("code").as("label"), col("sid").as("cluster_s")), "label")
+      .join(ids.select(col("id"), col("sid").as("id_s")), "id")
+      .join(ids.select(col("id").as("label"), col("sid").as("cluster_s")), "label")
       .select(col("id_s").as("id"), col("cluster_s").as("cluster_id"))
   }
 
@@ -364,8 +341,8 @@ object Clustering {
       val (nextDf, endObs) = observeStats(
         smallStar(largeStar(midDf)), s"uf_round_${2 * iter + 2}")
       e = mat(nextDf)
-      val midStats = statsOf(midObs)
-      val endStats = statsOf(endObs)
+      val midStats = midObs()
+      val endStats = endObs()
       converged = midStats == stats || endStats == midStats
       stats = endStats
       iter += 1

@@ -225,23 +225,10 @@ object LSH {
     val result = mat(combine(coldPairs.union(hotPairs)))
 
     // coverage-loss audit: read the observe metrics collected during the
-    // pair job's cache fill (zero extra jobs); if the metric event has not
-    // landed (cache was warm from a prior call, so CollectMetrics never
-    // ran), fall back to one cheap scan of the small cached frame
-    val nDropped =
-      try {
-        // metric delivery is async on the listener bus: give it a beat
-        val row = scala.concurrent.Await.result(dropObs.future,
-          scala.concurrent.duration.Duration(5, "s"))
-        // empty row: AQE's empty-relation propagation pruned the metrics
-        // node (no colliding buckets) — nothing was droppable
-        if (row.length == 0) 0L else row.getLong(0)
-      } catch {
-        case _: java.util.concurrent.TimeoutException =>
-          // cache was warm from a prior call (CollectMetrics never ran):
-          // one cheap scan of the small cached frame instead
-          sizes.filter(col("bucket_n") > cap).count()
-      }
+    // pair job's cache fill (zero extra jobs). The fill always runs: the
+    // observation is this call's own, so no earlier call's cached plan
+    // can match `sizes`
+    val nDropped = graft.state.Observed.long(dropObs)
     if (nDropped > 0) {
       // explicit, logged coverage loss — never silent
       System.err.println(

@@ -4,6 +4,8 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
+import graft.state.Observed
+
 /** Sequence packing — the step between a sharded corpus and a training
   * loader: concatenate each shard's documents (in a deterministic,
   * decorrelated order) into one token stream and cut it into fixed-length
@@ -188,9 +190,6 @@ object SequencePack {
         coalesce(sum(when(col("pos") === 0L, 1L)), lit(0L)).as("examples"),
         count(lit(1)).as("rows"))
       .write.mode("overwrite").parquet(s"$dir/_pack")
-    val row = scala.concurrent.Await.result(obs.future,
-      scala.concurrent.duration.Duration(120, "s"))
-    if (row.length == 0) (0L, 0L)
-    else (row.getAs[Long]("examples"), row.getAs[Long]("rows"))
+    (Observed.long(obs, 0), Observed.long(obs, 1))
   }
 }

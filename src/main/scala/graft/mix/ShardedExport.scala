@@ -3,6 +3,8 @@ package graft.mix
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
+import graft.state.Observed
+
 /** Sharded training export — the sink at the very end of the pipeline:
   * write the assembled corpus as N addressable, deterministic,
   * size-balanced shards plus a manifest, the layout training jobs and
@@ -99,15 +101,6 @@ object ShardedExport {
       .sortWithinPartitions(col("shard") +: order: _*)
   }
 
-  /** Same guard as Checkpoints.observedLong: an empty-relation-pruned
-    * metric node reads as 0 instead of blocking forever.
-    */
-  private def observedLong(obs: org.apache.spark.sql.Observation): Long = {
-    val row = scala.concurrent.Await.result(obs.future,
-      scala.concurrent.duration.Duration(120, "s"))
-    if (row.length == 0) 0L else row.getLong(0)
-  }
-
   /** THE manifest parser (Jackson, shipped with Spark), shared with
     * SequencePack.writePlan — field extraction coupled to the writer's
     * exact spacing (substring or regex matches) would reject a manifest
@@ -177,7 +170,7 @@ object ShardedExport {
     shardedOrdered(df, idCol, textCol, nShards, epochCol, packOrder,
       tokenMetric, dropObs)
       .write.partitionBy("shard").mode("overwrite").parquet(dir)
-    val dropped = observedLong(dropObs)
+    val dropped = Observed.long(dropObs)
     // manifest stats from the WRITTEN data (what a loader will see), with
     // the scan pruned to the two stat columns. An empty corpus (a 0-rate
     // mix, an over-aggressive filter chain) writes no shard directory at
@@ -353,13 +346,8 @@ object ShardedExport {
       .select(col("shard"), to_json(struct(payloadCols: _*)).as("value"))
       .write.partitionBy("shard").mode("overwrite")
       .option("compression", "gzip").text(dir)
-    // same guard as Checkpoints.observedLong: an empty-relation-pruned
-    // metric node reads as (0, 0) instead of blocking forever
-    val row = scala.concurrent.Await.result(obs.future,
-      scala.concurrent.duration.Duration(120, "s"))
-    val (docs, tokens) =
-      if (row.length == 0) (0L, 0L) else (row.getLong(0), row.getLong(1))
-    val dropped = observedLong(dropObs)
+    val (docs, tokens) = (Observed.long(obs, 0), Observed.long(obs, 1))
+    val dropped = Observed.long(dropObs)
     // per-shard bytes from the listing — free, and the quantity a
     // streaming loader actually balances by (listShardData is the shared
     // definition of what counts: no .crc side-files, no stray dirs)

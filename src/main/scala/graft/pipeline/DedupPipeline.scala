@@ -6,7 +6,7 @@ import org.apache.spark.sql.functions._
 import graft.cluster.{Clustering, PairScoring}
 import graft.fingerprint.Fingerprints
 import graft.lsh.LSH
-import graft.state.Materializer
+import graft.state.{Materializer, Observed}
 
 /** Job configuration — the analog of the reference `Config`
   * (image-deduper `src/config.rs:37-126`): `simhashMaxHamming` plays
@@ -620,9 +620,8 @@ object DedupPipeline {
       texts = if (cfg.fastPath) None
               else Some(sigsAll.select("id", "norm_text")),
       cfg, orderCols, mat,
-      // fresh full-path signatures are all-shingled by construction: the
-      // mixed-state probe only applies on the resume path (clusterSignatures)
-      fastRows = Some(cfg.fastPath))
+      // fresh signatures are all fast-path rows or all shingled
+      fastRows = cfg.fastPath)
     val result = decode(coded, dict, mat, rowObs)
     hashGroups.unpersist()
     dict.unpersist()
@@ -640,36 +639,41 @@ object DedupPipeline {
 
   /** The shared resume-path prologue — dictionary-code the signature table
     * and derive the (dict, slim, hashGroups, repSigs) quartet every
-    * clustering variant consumes. ONE definition: [[clusterSignatures]]
-    * and [[clusterSignaturesDelta]] must key, cache and prune identically,
-    * or a fix to one silently diverges the other.
+    * clustering variant consumes, plus whether the state holds fast-path
+    * (shingle-less) rows. ONE definition: [[clusterSignatures]] and
+    * [[clusterSignaturesDelta]] must key, cache and prune identically, or
+    * a fix to one silently diverges the other.
     *
-    * slim is CACHED (n_shingles rides it so the mixed-state probe never
-    * touches the wide shingle column — a size(shingles)==0 probe over a
-    * pure-full store short-circuits NOTHING); repSigs is NOT cached (in
-    * index mode the wide columns are read exactly once, and a corpus-wide
-    * cache fill of KB-scale shingle rows was the delta epoch's single
-    * biggest fixed cost — ~8 s at the 220k tier, measured).
+    * The fast-row answer rides slim's materialization as an observe metric
+    * over the narrow n_shingles column — no probe job, and no scan of the
+    * wide shingle column; repSigs is NOT cached (in index mode the wide
+    * columns are read exactly once, and a corpus-wide cache fill of
+    * KB-scale shingle rows was the delta epoch's single biggest fixed
+    * cost — ~8 s at the 220k tier, measured).
     */
   private def codedParts(stateSigs: DataFrame, mat: Materializer)
-      : (DataFrame, DataFrame, DataFrame, DataFrame) = {
+      : (DataFrame, DataFrame, DataFrame, DataFrame, Boolean) = {
     val dict = idDictionary(stateSigs.select(col("id")))
     val keyed = stateSigs
       .select(col("id").as("sid"), col("order_len"), col("content_hash"),
         col("n_shingles"), col("simhash"), col("minhash"), col("shingles"))
       .join(dict, "sid")
     // MATERIALIZED (not cached) for the same plan-truncation reason as
-    // run()'s slim: every consumer (hash groups, mixed-state probe, kind
-    // join, exact edges) previously dragged the state-scan + dictionary-
-    // join subtree into its stage plan, and the delta path's many
-    // broadcast subqueries raced to fill the lazy cache. One clean slim
-    // pass (4 narrow columns), honest stats downstream.
-    val slim = mat(keyed.select("id", "order_len", "content_hash", "n_shingles"))
-    val hashGroups = hashGroupsOf(slim.select("id", "order_len", "content_hash"))
+    // run()'s slim: every consumer (hash groups, kind join, exact edges)
+    // previously dragged the state-scan + dictionary-join subtree into its
+    // stage plan, and the delta path's many broadcast subqueries raced to
+    // fill the lazy cache. One clean slim pass (3 narrow columns), honest
+    // stats downstream.
+    val fastObs = org.apache.spark.sql.Observation()
+    val slim = mat(keyed.select("id", "order_len", "content_hash", "n_shingles")
+      .observe(fastObs,
+        coalesce(max((col("n_shingles") === 0).cast("long")), lit(0L)).as("fast_rows"))
+      .drop("n_shingles"))
+    val hashGroups = hashGroupsOf(slim)
     val repSigs = keyed
       .select("id", "simhash", "minhash", "shingles")
       .join(hashGroups.select("id"), Seq("id"), "left_semi")
-    (dict, slim, hashGroups, repSigs)
+    (dict, slim, hashGroups, repSigs, Observed.long(fastObs) > 0)
   }
 
   /** Restore original string ids on a coded clusters table. */
@@ -704,12 +708,12 @@ object DedupPipeline {
                         orderCols: Seq[org.apache.spark.sql.Column] =
                           Seq(col("order_len").desc, col("id").asc)): DataFrame = {
     val mat = cfg.materializer(spark)
-    val (dict, slim, hashGroups, repSigs0) = codedParts(stateSigs, mat)
+    val (dict, slim, hashGroups, repSigs0, hasFastRows) = codedParts(stateSigs, mat)
     // MATERIALIZE repSigs on THIS path only: the full resume feeds it
     // straight into nearEdges, which consumes its input in ~10 places
-    // (banding ×2, estimate-tier joins ×2, shingle fetch ×2, mixed-state
-    // probe) — each re-evaluation would replay the state scan + the
-    // dictionary join shuffle over the whole corpus, and a lazy cache
+    // (banding ×2, estimate-tier joins ×2, shingle fetch ×2) — each
+    // re-evaluation would replay the state scan + the dictionary join
+    // shuffle over the whole corpus, and a lazy cache
     // both races its fill across AQE's concurrent subqueries and drags
     // the full lineage into every consumer stage's plan. The delta path
     // deliberately does NOT materialize it (codedParts doc: the corpus-
@@ -718,12 +722,8 @@ object DedupPipeline {
     val repSigs = mat(repSigs0)
     val codedTexts = texts.map(_.toDF("sid", "norm_text").join(dict, "sid")
       .select("id", "norm_text"))
-    // persisted state MAY mix fast-path (shingle-less) and full epochs —
-    // only this resume path pays the mixed-state probe job
-    // None: the probe (one limit-1 job over the CACHED slim) runs inside
-    // clusterFromParts -- persisted state MAY mix fast-path epochs
     val coded = clusterFromParts(spark, slim, hashGroups, repSigs, codedTexts,
-      cfg, orderCols, mat, fastRows = None)
+      cfg, orderCols, mat, fastRows = hasFastRows)
     val result = decode(coded, dict, mat)
     hashGroups.unpersist()
     dict.unpersist()
@@ -770,7 +770,7 @@ object DedupPipeline {
                              orderCols: Seq[org.apache.spark.sql.Column] =
                                Seq(col("order_len").desc, col("id").asc)): DataFrame = {
     val mat = cfg.materializer(spark)
-    val (dict, slim, hashGroups, repSigs) = codedParts(stateSigs, mat)
+    val (dict, slim, hashGroups, repSigs, hasFastRows) = codedParts(stateSigs, mat)
     // focus → coded → content-hash representatives: a focus doc that is
     // not its hash group's rep reaches the rep by an exact edge, and the
     // rep's near neighbourhood is already encoded in the assignments
@@ -785,8 +785,6 @@ object DedupPipeline {
     // pair-gen internals) and each re-evaluation would otherwise re-run
     // the whole mates DAG — measured 10x the full path at bench scale
     // before these two materializations
-    val hasFastRows =
-      slim.filter(col("n_shingles") === 0).limit(1).count() > 0
     val frontier = {
       // the frontier never touches a wide column OR a hash kernel: the
       // focus docs' hot bucket keys are READ from the index (their rows
@@ -841,11 +839,8 @@ object DedupPipeline {
       t.toDF("sid", "norm_text").join(frontierDict, "sid")
         .select("id", "norm_text")
     }
-    // pass the already-computed fast-row answer down: clusterFromParts
-    // then runs ZERO probe jobs on the delta path (its own probe would
-    // replay the uncached corpus-wide repSigs scan just to re-learn this)
     val coded = clusterFromParts(spark, slim, hashGroups, repSigs, codedTexts,
-      cfg, orderCols, mat, fastRows = Some(hasFastRows),
+      cfg, orderCols, mat, fastRows = hasFastRows,
       bandSigsOverride = Some(subsetReps), extraEdges = Some(codedAssign))
     val result = decode(coded, dict, mat)
     frontier.unpersist()
@@ -866,14 +861,10 @@ object DedupPipeline {
                                hashGroups: DataFrame, repSigs: DataFrame,
                                texts: Option[DataFrame], cfg: DedupConfig,
                                orderCols: Seq[org.apache.spark.sql.Column],
-                               mat: Materializer = Materializer.local,
-                               // Some(x): the caller already knows whether
-                               // fast (shingle-less) rows exist -- use it,
-                               // no probe job. None: probe the CACHED slim
-                               // (requires its n_shingles column) -- never
-                               // repSigs, whose delta-path re-evaluation
-                               // replays a corpus-wide scan
-                               fastRows: Option[Boolean] = None,
+                               mat: Materializer,
+                               // whether the universe holds fast-path
+                               // (shingle-less) rows
+                               fastRows: Boolean,
                                // delta mode (clusterSignaturesDelta): band
                                // and verify only this (CACHED) subset of
                                // repSigs — nearEdges consumes its input
@@ -902,12 +893,8 @@ object DedupPipeline {
           // shingles and are excluded from minhash banding (see nearEdges);
           // when any exist, ALL rows additionally go through the simhash
           // pigeonhole tier so old fast rows still pair (with each other
-          // AND with new full rows) at fast-path precision. The probe job
-          // only runs where mixed state is possible (the resume path) —
-          // fresh full-path runs skip it statically (driver-job floor).
-          val hasFastRows = fastRows.getOrElse(
-            slim.filter(col("n_shingles") === 0).limit(1).count() > 0)
-          if (hasFastRows) full.union(nearEdgesFast(bandSigs, cfg, mat))
+          // AND with new full rows) at fast-path precision.
+          if (fastRows) full.union(nearEdgesFast(bandSigs, cfg, mat))
           else full
         }
       mat(edges, eager = false)

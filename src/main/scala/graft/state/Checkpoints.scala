@@ -34,12 +34,14 @@ import graft.pipeline.{DedupConfig, DedupPipeline}
   * previews, compaction, a rescan) writes generation n — n is the index of
   * the line that will publish it — and publishes all of them in that one
   * line. Appends (epoch signature rows, quarantine, executed, band-index
-  * deltas, lineage metrics) go into the published generation and stay
-  * idempotent through the anti-joins they already have. A writer deletes
-  * superseded generations only after its line is durable, and every lease
-  * holder first deletes every generation the manifest does not name, so a
-  * call killed at any write leaves state the next run completes or rolls
-  * back, and a committed call leaves one `gen=` dir per table.
+  * deltas) go into the published generation and stay idempotent through
+  * the anti-joins they already have. Lineage is the `epoch` and `part_id`
+  * columns of every signature row; an epoch's counts and throughput are
+  * fields of its manifest line. A writer deletes superseded generations
+  * only after its line is durable, and every lease holder first deletes
+  * every generation the manifest does not name, so a call killed at any
+  * write leaves state the next run completes or rolls back, and a
+  * committed call leaves one `gen=` dir per table.
   */
 object Checkpoints {
 
@@ -55,17 +57,7 @@ object Checkpoints {
 
   /** Every table a manifest line can name, by directory name. */
   private val tables =
-    Seq("signatures", "quarantine", "metrics", "clusters", "previews", "actions", "executed", "bands")
-
-  /** Read one long out of an observe metric after its carrying action ran —
-    * the single-pass epoch-accounting primitive (counts ride the write
-    * jobs; empty-relation-pruned metric nodes read as 0).
-    */
-  private def observedLong(obs: org.apache.spark.sql.Observation, idx: Int): Long = {
-    val row = scala.concurrent.Await.result(obs.future,
-      scala.concurrent.duration.Duration(120, "s"))
-    if (row.length == 0) 0L else row.getLong(idx)
-  }
+    Seq("signatures", "quarantine", "clusters", "previews", "actions", "executed", "bands")
 
   /** All state IO goes through the Hadoop FileSystem API so `stateDir` may
     * be any supported URI (file://, hdfs://, s3a://, …) — java.nio would
@@ -147,8 +139,10 @@ object Checkpoints {
         def field(key: String, value: String): Option[String] =
           s""""$key":($value)""".r.findFirstMatchIn(line).map(_.group(1))
         empty.copy(
+          // a table this code no longer keeps (an older dir's `metrics`)
+          // drops out of the next line
           gens = """"(\w+)":(\d+)""".r.findAllMatchIn(field("gens", """\{[^}]*\}""").get)
-            .map(m => m.group(1) -> m.group(2).toLong).toMap,
+            .map(m => m.group(1) -> m.group(2).toLong).filter(g => tables.contains(g._1)).toMap,
           buckets = field("signature_buckets", """\d+""").fold(0)(_.toInt),
           knobs = field("knobs", """\{[^}]*\}""").getOrElse(""),
           through = field("through_epoch", """-?\d+""").fold(-1L)(_.toLong),
@@ -537,14 +531,14 @@ object Checkpoints {
     val snap =
       (if (fresh) published.copy(gens = kept, buckets = buckets, subdocFrom = subdocFrom)
          .fresh("signatures")
-       else published).orFresh("quarantine").orFresh("metrics")
+       else published).orFresh("quarantine")
     write(spark, snap, "signatures", withPart, buckets)
 
     // quarantine count rides the write as an observe metric — one action,
     // no cache/count/write triple (an empty append just writes a footer)
     val qObs = org.apache.spark.sql.Observation()
     write(spark, snap, "quarantine", bad.observe(qObs, count(lit(1)).as("n")))
-    val nQuarantined = observedLong(qObs, 0)
+    val nQuarantined = Observed.long(qObs)
 
     // both consumers of the pruned anti-join (signature + quarantine
     // writes) have run; release the sketch's executor blocks now.
@@ -552,22 +546,14 @@ object Checkpoints {
     // executor loss just re-fetches — correctness is unaffected.
     sliceSketch.foreach(_.unpersist())
 
-    // one read-back pass over the written epoch serves the lineage table
-    // AND the row count: the total rides the lineage write as an observe
-    // metric (sum over the already-grouped per-partition counts)
-    val lObs = org.apache.spark.sql.Observation()
-    val lineage = readSignatures(spark, snap).filter(col("epoch") === epoch)
-      .groupBy("part_id")
-      .agg(count(lit(1)).as("n_rows"))
-      .withColumn("epoch", lit(epoch))
-      .withColumn("table", lit("signatures"))
-      .observe(lObs, coalesce(sum("n_rows"), lit(0L)).as("n"))
-    write(spark, snap, "metrics", lineage)
+    // the epoch's rows as written, not the write's own row count: a crashed
+    // attempt's appends are already visible, and the retry's anti-join
+    // skips them, so only this count is the same for a resumed epoch
+    val nNew = readSignatures(spark, snap).filter(col("epoch") === epoch).count()
 
     // X13 rate metrics (reference progress.rs ETA math): each commit line
     // records its own throughput, so an operator can project the remaining
     // corpus (eta = remaining / docs_per_sec) from the manifest alone
-    val nNew = observedLong(lObs, 0)
     val elapsed = (System.nanoTime() - epochT0) / 1e9
     val rate = if (elapsed > 0) nNew / elapsed else 0.0
     // explicit ROOT locale: the manifest is machine-parsed JSON and this is
@@ -675,7 +661,13 @@ object Checkpoints {
     val out =
       if (cfg0.previewChars > 0) snap.fresh("clusters", "actions", "previews")
       else snap.copy(gens = snap.gens - "previews").fresh("clusters", "actions")
-    write(spark, out, "clusters", clusters)
+    // the cluster count rides the clusters write: every cluster has exactly
+    // one representative (pipeline invariant, oracled per-row by
+    // q_dedup_invariants), so sum(is_representative) ≡
+    // count(distinct cluster_id) without a second scan + distinct exchange
+    val cObs = org.apache.spark.sql.Observation()
+    write(spark, out, "clusters", clusters.observe(cObs,
+      coalesce(sum(col("is_representative").cast("long")), lit(0L)).as("n_clusters")))
     write(spark, out, "actions",
       graft.actions.Actions.plan(clusters, action, dryRun = true))
 
@@ -701,21 +693,7 @@ object Checkpoints {
           .select(col("cluster_id"), col("id").as("representative_id"),
             col("preview")))
 
-    // cluster count rides the lineage write as an observe metric: every
-    // cluster has exactly one representative (pipeline invariant, oracled
-    // per-row by q_dedup_invariants), so sum(is_representative) ≡
-    // count(distinct cluster_id) without a second scan + distinct exchange
-    val cObs = org.apache.spark.sql.Observation()
-    val lineage = spark.read.parquet(out.path("clusters").get)
-      .observe(cObs, coalesce(sum(col("is_representative").cast("long")), lit(0L))
-        .as("n_clusters"))
-      .withColumn("part_id", spark_partition_id())
-      .groupBy("part_id").agg(count(lit(1)).as("n_rows"))
-      .withColumn("epoch", lit(in.epoch))
-      .withColumn("table", lit("clusters"))
-    write(spark, out, "metrics", lineage)
-
-    val nClusters = observedLong(cObs, 0)
+    val nClusters = Observed.long(cObs)
     commit(spark, out, in.line + s""","clusters":$nClusters""")
     (in.nNew, nClusters)
   }

@@ -20,7 +20,7 @@ class CommitSpec extends SparkTestBase {
   import spark.implicits._
 
   private val tables =
-    Seq("signatures", "quarantine", "metrics", "clusters", "previews", "actions", "executed", "bands")
+    Seq("signatures", "quarantine", "clusters", "previews", "actions", "executed", "bands")
 
   private val cfg = DedupConfig(deltaCluster = true, previewChars = 40)
 
@@ -61,6 +61,13 @@ class CommitSpec extends SparkTestBase {
       t -> spark.read.parquet(p).drop("quarantined_at").toJSON.collect().toSet)).toMap,
       SubDocState.nextEpoch(spark, dir))
 
+  /** The `new_signatures` and `clusters` counts on the last manifest line. */
+  private def lineCounts(dir: String): Map[String, String] = {
+    val line = Checkpoints.readManifest(spark, dir).last.replaceAll(""""gens":\{[^}]*\}""", "")
+    Seq("new_signatures", "clusters").flatMap(k =>
+      s""""$k":(\\d+)""".r.findFirstMatchIn(line).map(k -> _.group(1))).toMap
+  }
+
   private def uncommitted(dir: String): Long =
     Checkpoints.diagnose(spark, dir).as[(String, Long)].collect().toMap
       .apply("uncommitted_generations")
@@ -100,6 +107,7 @@ class CommitSpec extends SparkTestBase {
     Checkpoints.commitTestHook = p => trace += p
     try call(ref) finally Checkpoints.commitTestHook = _ => ()
     val expected = contents(ref)
+    val expectedCounts = lineCounts(ref)
     assertOneGeneration(ref, s"$name uninterrupted")
     val before = gens(base)
     val after = gens(ref)
@@ -136,6 +144,7 @@ class CommitSpec extends SparkTestBase {
       val differ = tables.filter(t => rows.get(t) != expected._1.get(t))
       assert(differ.isEmpty && epochs == expected._2,
         s"$point: resumed state differs from an uninterrupted run")
+      assert(lineCounts(dir) == expectedCounts, s"$point: the resumed line's counts")
       assertOneGeneration(dir, point)
       assert(uncommitted(dir) == 0L, point)
     }
@@ -150,7 +159,7 @@ class CommitSpec extends SparkTestBase {
     assertOneGeneration(base, "base")
     val more = pagesWithBad(4L)
 
-    val ingest = Seq("signatures", "quarantine", "metrics")
+    val ingest = Seq("signatures", "quarantine")
     crashEveryPoint("runEpoch", base, ingest: _*) { d =>
       Checkpoints.runEpoch(spark, more, "url", "text", d, cfg)
     }
@@ -158,7 +167,7 @@ class CommitSpec extends SparkTestBase {
       Checkpoints.runEpoch(spark, more, "url", "text", d, cfg.copy(forceRescan = true))
     }
     val clustered = crashEveryPoint("clusterEpoch", base,
-        ingest ++ Seq("bands", "clusters", "actions", "previews", "metrics"): _*) { d =>
+        ingest ++ Seq("bands", "clusters", "actions", "previews"): _*) { d =>
       Checkpoints.clusterEpoch(spark, more, "url", "text", d, cfg, action = "delete")
     }
     crashEveryPoint("executeEpoch", clustered, "executed") { d =>

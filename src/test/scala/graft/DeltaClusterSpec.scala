@@ -5,7 +5,7 @@ import java.nio.file.Files
 import org.apache.spark.sql.functions._
 
 import graft.pages.PagesGen
-import graft.pipeline.DedupConfig
+import graft.pipeline.{DedupConfig, DedupPipeline}
 import graft.state.Checkpoints
 
 /** Delta-incremental clustering (DedupConfig.deltaCluster): near-pair
@@ -134,6 +134,28 @@ class DeltaClusterSpec extends SparkTestBase {
       fast.copy(deltaCluster = true))
     assert(clustersOf(deltaDir) == clustersOf(fullDir),
       "fast-path delta clustering diverged from the fast-path full re-cluster")
+    all.unpersist()
+  }
+
+  test("full and delta clustering run no count action, on a pure-full and a mixed state") {
+    val all = PagesGen.pages(spark, 6L, seed = 17L, tokensPerDoc = 100).toDF().cache()
+    val half = all.filter(xxhash64($"url") % 2 === 0)
+    val rest = all.filter(xxhash64($"url") % 2 =!= 0)
+    for (first <- Seq(DedupConfig(), DedupConfig(fastPath = true))) {
+      val dir = tempDir()
+      Checkpoints.runEpoch(spark, half, "url", "text", dir, first)
+      Checkpoints.runEpoch(spark, rest, "url", "text", dir)
+      val sigs = Checkpoints.liveSignatures(spark, dir)
+      assert(sigs.filter($"n_shingles" === 0).isEmpty != first.fastPath)
+      val index = Checkpoints.ensureBandIndex(spark, dir, DedupConfig())
+      val noAssigns = Seq.empty[(String, String)].toDF("sid_a", "sid_b")
+      val (_, log) = withQueryLog {
+        DedupPipeline.clusterSignatures(spark, sigs, None).collect()
+        DedupPipeline.clusterSignaturesDelta(spark, sigs, rest.select("url"), noAssigns,
+          None, index).collect()
+      }
+      assert(!log.actions.contains("count"), s"fastPath=${first.fastPath}: ${log.actions}")
+    }
     all.unpersist()
   }
 

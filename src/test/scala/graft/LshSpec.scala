@@ -37,9 +37,14 @@ class LshSpec extends SparkTestBase {
     val docs = (0 until 20).map(i => (f"d$i%02d", "identical boilerplate page"))
     val sigs = sigsFor(docs)
     val exploded = LSH.explodeBands(sigs, "id", "minhash", 64, 2)
-    val pairs = LSH.candidatePairs(exploded, "id", maxBucketSize = 10)
-      .as[(String, String)].collect()
+    val (pairs, log) = withQueryLog(LSH.candidatePairs(exploded, "id", maxBucketSize = 10)
+      .as[(String, String)].collect())
     assert(pairs.isEmpty, "all buckets exceed the cap, so no pairs should emerge")
+    // the drop count rides the pair job as an observation: one bucket per
+    // band, every one over the cap, and no count action to learn it
+    val bands = exploded.select("band").distinct().count()
+    assert(log.observed("dropped") == Seq(bands), log.observations)
+    assert(!log.actions.contains("count"), log.actions)
   }
 
   test("anchor bands are offset-invariant: shared middle region collides") {

@@ -19,20 +19,30 @@ trait SparkTestBase extends AnyFunSuite {
   def unionFindBothPaths(edges: DataFrame, maxIters: Int = 25)
       : (Array[Row], Seq[SparkTestBase.QueryLog]) = {
     val runs = Seq(Clustering.localFinishCap(spark), 0L).map { cap =>
-      val seen = new SparkTestBase.QueryLog
-      spark.listenerManager.register(seen)
-      try {
+      val ((schema, rows), seen) = withQueryLog {
         val df = Clustering.unionFindCapped(spark, edges, maxIters, Materializer.local, cap)
-        val rows = df.collect().sortBy(_.toString)
-        org.apache.spark.sql.graftshim.shim.drainListenerBus(spark.sparkContext, 30000)
-        (df.schema, rows, seen)
-      } finally spark.listenerManager.unregister(seen)
+        (df.schema, df.collect().sortBy(_.toString))
+      }
+      (schema, rows, seen)
     }
     val Seq((localSchema, local, localObs), (loopSchema, loop, loopObs)) = runs
     assert(localSchema == loopSchema)
     assert(local.sameElements(loop),
       s"local finish ${local.mkString(",")} != contraction loop ${loop.mkString(",")}")
     (local, Seq(localObs, loopObs))
+  }
+
+  /** Run `f` and log the queries it executes; the listener bus is drained
+    * before the log is returned.
+    */
+  def withQueryLog[T](f: => T): (T, SparkTestBase.QueryLog) = {
+    val seen = new SparkTestBase.QueryLog
+    spark.listenerManager.register(seen)
+    try {
+      val out = f
+      org.apache.spark.sql.graftshim.shim.drainListenerBus(spark.sparkContext, 30000)
+      (out, seen)
+    } finally spark.listenerManager.unregister(seen)
   }
 }
 
@@ -50,15 +60,20 @@ object SparkTestBase {
     s
   }
 
-  /** The Dataset actions that finished, in order, and the names of their
+  /** The Dataset actions that finished, in order, and their
     * `Dataset.observe` metrics.
     */
   final class QueryLog extends QueryExecutionListener {
-    private val seen = scala.collection.mutable.ArrayBuffer.empty[(String, Set[String])]
+    private val seen = scala.collection.mutable.ArrayBuffer.empty[(String, Map[String, Row])]
     override def onSuccess(funcName: String, qe: QueryExecution, durationNs: Long): Unit =
-      synchronized { seen += funcName -> qe.observedMetrics.keySet }
+      synchronized { seen += funcName -> qe.observedMetrics }
     override def onFailure(funcName: String, qe: QueryExecution, e: Exception): Unit = ()
     def actions: Seq[String] = synchronized(seen.map(_._1).toSeq)
-    def observations: Set[String] = synchronized(seen.flatMap(_._2).toSet)
+    def observations: Set[String] = synchronized(seen.flatMap(_._2.keys).toSet)
+
+    /** Every observed value of the long metric `field`, in arrival order. */
+    def observed(field: String): Seq[Long] = synchronized(seen.flatMap(_._2.values)
+      .filter(r => r.schema != null && r.schema.fieldNames.contains(field))
+      .map(_.getAs[Long](field)).toSeq)
   }
 }

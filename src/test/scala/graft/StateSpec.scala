@@ -10,7 +10,7 @@ import graft.state.Checkpoints
 
 /** Incremental-state contract (reference persistence layer,
   * image-deduper src/persistence/db.rs): anti-join resume idempotence,
-  * force_rescan, quarantine routing, per-partition lineage metrics.
+  * force_rescan, quarantine routing, per-partition lineage.
   */
 class StateSpec extends SparkTestBase {
   import spark.implicits._
@@ -419,17 +419,24 @@ class StateSpec extends SparkTestBase {
     assert(d("uncommitted_generations") == 0L)
   }
 
-  test("metrics table records per-partition lineage per epoch") {
+  test("per-partition lineage per epoch lives on the signature rows, with no metrics table") {
     val dir = tempDir()
-    val pages = PagesGen.pages(spark, 6L, seed = 4L, tokensPerDoc = 80).toDF()
-    Checkpoints.runEpoch(spark, pages, "url", "text", dir)
-    val metrics = table(dir, "metrics")
-    assert(metrics.columns.toSet == Set("part_id", "n_rows", "epoch", "table"))
-    val expected = 6L * PagesGen.variantKinds.length
-    assert(metrics.agg(sum("n_rows")).first().getLong(0) == expected)
-    val manifest = Files.readAllLines(
-      java.nio.file.Paths.get(Checkpoints.manifestPath(dir)))
-    assert(manifest.size() == 1 && manifest.get(0).contains(s"\"new_signatures\":$expected"))
+    Checkpoints.runEpoch(spark,
+      PagesGen.pages(spark, 6L, seed = 4L, tokensPerDoc = 80).toDF(), "url", "text", dir)
+    Checkpoints.clusterEpoch(spark,
+      PagesGen.pages(spark, 9L, seed = 4L, tokensPerDoc = 80).toDF(), "url", "text", dir)
+    val lineage = table(dir, "signatures")
+      .groupBy("epoch", "part_id").agg(count(lit(1)).as("n_rows"))
+      .groupBy("epoch").agg(sum("n_rows")).as[(Long, Long)].collect().toMap
+    val lines = Checkpoints.readManifest(spark, dir)
+    val NewRows = """"epoch":(\d+),"new_signatures":(\d+)""".r
+    val logged = lines.flatMap(NewRows.findFirstMatchIn(_))
+      .map(m => m.group(1).toLong -> m.group(2).toLong).toMap
+    val nk = PagesGen.variantKinds.length
+    assert(logged == Map(0L -> 6L * nk, 1L -> 3L * nk))
+    assert(lineage == logged)
+    assert(!new java.io.File(s"$dir/metrics").exists())
+    assert(!lines.exists(_.contains("\"metrics\"")), lines.mkString("\n"))
   }
 
   test("state lock: a finished holder does not release a lease taken over mid-epoch") {
