@@ -373,14 +373,13 @@ object Main {
 
   /** Args → validated engine config (reference `Config` merge, cli.rs:58-83). */
   def toConfig(a: CliArgs): DedupConfig = {
+    // the <state>/_spark_checkpoints default must be resolved HERE, not
+    // only inside clusterEpoch: the battery's Materializer is built from
+    // this config before clusterEpoch runs, and Materializer.reliable
+    // requires a non-empty dir
     val base = DedupConfig(fastPath = a.fastPath, forceRescan = a.forceRescan,
-      reliableCheckpoints = a.reliable,
-      // the <state>/_spark_checkpoints default must be resolved HERE, not
-      // only inside clusterEpoch: the battery's Materializer is built from
-      // this config before clusterEpoch runs, and Materializer.reliable
-      // requires a non-empty dir
-      checkpointDir = a.checkpointDir.getOrElse(
-        if (a.reliable) s"${a.state}/_spark_checkpoints" else ""))
+      reliableCheckpoints = a.reliable, checkpointDir = a.checkpointDir.getOrElse(""))
+      .checkpointsIn(a.state)
     val withJ = a.jaccardThreshold.fold(base)(j => base.copy(jaccardThreshold = j))
     val withH = a.maxHamming.fold(withJ)(h => withJ.copy(simhashAcceptHamming = h))
     val withC = a.containmentCap.fold(withH)(c => withH.copy(containmentMaxBucket = c))

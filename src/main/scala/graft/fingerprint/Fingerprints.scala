@@ -12,10 +12,12 @@ import org.apache.spark.sql.graftshim.shim
   */
 object Fingerprints {
 
-  /** Default MinHash configuration: 128 permutations, banded as 21 bands ×
-    * 2 rows (42 slots) PLUS one prefix-shingle band (see
-    * `LSH.prefixBandHash`). Candidate probability at Jaccard s via the
-    * minhash tier is 1-(1-s²)^21:
+  /** MinHash configuration. The pipeline computes exactly the 42 slots its
+    * banding reads (`DedupConfig.numPerms` = 21 bands × 2 rows) and adds the
+    * prefix-shingle bands (see `LSH.prefixBandHash`); `NumPerms` = 128 is
+    * only the default of the standalone `minhash`/`docSignature` builders.
+    * Candidate probability at Jaccard s via the minhash tier is
+    * 1-(1-s²)^21:
     *   s=0.75 (edit_5pct)  → ~1-3e-8
     *   s=0.57 (edit_10pct) → 0.9997   (the weakest symmetric planted pair)
     *   s=0.50 (threshold)  → 0.9976

@@ -9,30 +9,45 @@ import graft.lsh.LSH
 import graft.state.{Materializer, Observed}
 
 /** Job configuration — the analog of the reference `Config`
-  * (image-deduper `src/config.rs:37-126`): `simhashMaxHamming` plays
+  * (image-deduper `src/config.rs:37-126`): `simhashAcceptHamming` plays
   * `phash_threshold` (`config.rs:51,105`), `forceRescan` plays
-  * `force_rescan` (`config.rs:81`), the LSH/salt knobs play the
-  * batch/memory throttles (`lib.rs:144-223`).
+  * `force_rescan` (`config.rs:81`).
+  *
+  * The constructor takes only the values a caller sets. Like the
+  * reference, whose fingerprint shape is hard-coded (a 64-bit mean-threshold
+  * aHash over an 8×8 downsample, `processing/core.rs:37-104`), the
+  * fingerprint, banding and scaling values are fixed members, each with
+  * the reason for its value:
+  *
+  *  - `shingleK` = 3, `maxShingles` = 8192: the shingle set the verify
+  *    tiers compare exactly;
+  *  - `bands` × `rowsPerBand` = 21 × 2, `numPerms` = 42: exactly the slots
+  *    banding consumes (see [[Fingerprints.DefaultBands]] for the measured
+  *    recall/cost trade-off); verify uses exact shingles, never the
+  *    minhash, so more permutations than the band matrix reads are waste in
+  *    the signature hot stage;
+  *  - `simhashMaxHamming` = 28: the Hamming prefilter on minhash-band
+  *    pairs (unrelated docs sit at 32 ± 4);
+  *  - `containmentThreshold` = 0.9 over at most `saMaxChars` = 20000
+  *    normalized chars: the suffix-array containment accept;
+  *  - `hotBucketThreshold` = 200, `saltFactor` = 16, `maxBucketSize` =
+  *    100000: the salted pair generation's skew guards ([[LSH]]);
+  *  - `maxUnionFindIters` = 25: the union-find round bound;
+  *  - `prefixBandShingles` = 8 and `anchorModulus` = 6: the two
+  *    containment channels. Winnowed anchor bands select ~1/modulus of
+  *    each doc's shingles content-defined and bucket adjacent selected
+  *    pairs — the offset-invariant channel for MIDDLE-of-document quotes
+  *    (prefix banding sees only truncations; minhash banding reaches a 25%
+  *    quote only at its induced Jaccard ≈ 0.25, P ≈ 0.74);
+  *  - `fastPathBands` = 4: the fast tier's 16-bit SimHash slices (see
+  *    `fastPath`).
+  *
+  * The channel-shape values are recorded with the persisted band index
+  * (`Checkpoints`), so an index written under other values is rebuilt.
   */
 case class DedupConfig(
-    shingleK: Int = 3,
-    // exactly the slots banding consumes (21 bands x 2 rows): computing more
-    // permutations than the band matrix reads is pure waste in the signature
-    // hot stage (verify uses exact shingles, never the minhash). Raise this
-    // deliberately if persisted signature state must support denser
-    // re-banding later without re-fingerprinting.
-    numPerms: Int = Fingerprints.DefaultBands * Fingerprints.DefaultRowsPerBand,
-    bands: Int = Fingerprints.DefaultBands,
-    rowsPerBand: Int = Fingerprints.DefaultRowsPerBand,
-    maxShingles: Int = 8192,
-    simhashMaxHamming: Int = 28,
     simhashAcceptHamming: Int = 12,
     jaccardThreshold: Double = 0.5,
-    containmentThreshold: Double = 0.9,
-    saMaxChars: Int = 20000,
-    hotBucketThreshold: Int = 200,
-    saltFactor: Int = 16,
-    maxBucketSize: Int = 100000,
     // tighter cap for the CONTAINMENT channels (prefix + anchor bands):
     // those bands are exempt from the Hamming prefilter by design, so a
     // boilerplate prefix shared by b docs pairs quadratically (b²/2 rows
@@ -45,14 +60,6 @@ case class DedupConfig(
     // (measured: a family parked just under a 5000 cap cost 27× the whole
     // pipeline; at 2000 the same corpus runs at full speed).
     containmentMaxBucket: Int = 2000,
-    maxUnionFindIters: Int = 25,
-    prefixBandShingles: Int = 8,
-    // winnowed anchor bands (LSH.anchorBandHashes): selects ~1/modulus of
-    // each doc's shingles content-defined and buckets adjacent selected
-    // pairs — the offset-invariant discovery channel for MIDDLE-of-document
-    // quotes (prefix banding sees only truncations; minhash banding reaches
-    // a 25% quote only at its induced Jaccard ≈ 0.25, P ≈ 0.74). 0 disables.
-    anchorModulus: Int = 6,
     forceRescan: Boolean = false,
     // fault-tolerant materialization (north_rule resumability; the
     // reference's crash-resumable commits, persistence/db.rs:64-92): route
@@ -73,7 +80,6 @@ case class DedupConfig(
     // whitespace/case noise and tiny edits; misses paraphrase-level and
     // containment dups by design.
     fastPath: Boolean = false,
-    fastPathBands: Int = 4,
     // the reference's thumbnail surface (`generate_thumbnails`/size,
     // config.rs:54,106), re-imagined for text: when > 0, clusterEpoch also
     // writes a `previews` table with the first N normalized chars of each
@@ -105,10 +111,11 @@ case class DedupConfig(
     // with the DELTA, not the corpus: at the 10^12-doc posture a full
     // re-cluster re-bands and re-pairs the whole corpus nightly, which is
     // exactly the cost curve an append-mostly crawl cannot afford.
-    // Component-equivalent to the full re-cluster while thresholds stay
-    // unchanged (DeltaClusterSpec); after changing similarity knobs run
-    // one full epoch (deltaCluster = false) — same cadence discipline as
-    // any compaction. Ignored on the first epoch (nothing to delta from).
+    // Component-equivalent to the full re-cluster (DeltaClusterSpec). An
+    // epoch whose edge-shaping values (jaccardThreshold,
+    // simhashAcceptHamming, containmentMaxBucket, fastPath) differ from the
+    // ones the prior clusters were built with re-clusters fully instead, as
+    // does the first epoch (nothing to delta from).
     deltaCluster: Boolean = false,
     // slice-keyed state prune (state/SlicePrune.scala): when > 0, the
     // resume anti-join filters the persisted-state scan through a Bloom
@@ -129,17 +136,37 @@ case class DedupConfig(
   require(stateBloomFpp >= 0 && stateBloomFpp < 1,
     s"stateBloomFpp must be in [0,1), got $stateBloomFpp")
   require(stateBloomExpected > 0, "stateBloomExpected must be > 0")
-  require(bands * rowsPerBand <= numPerms,
-    s"bands*rowsPerBand must fit in numPerms ($bands*$rowsPerBand > $numPerms)")
-  require(fastPathBands > 0, "fastPathBands must be > 0")
-  require(64 % fastPathBands == 0, "fastPathBands must divide 64")
+  val shingleK = 3
+  val bands = Fingerprints.DefaultBands
+  val rowsPerBand = Fingerprints.DefaultRowsPerBand
+  val numPerms = bands * rowsPerBand
+  val maxShingles = 8192
+  val simhashMaxHamming = 28
+  val containmentThreshold = 0.9
+  val saMaxChars = 20000
+  val hotBucketThreshold = 200
+  val saltFactor = 16
+  val maxBucketSize = 100000
+  val maxUnionFindIters = 25
+  val prefixBandShingles = 8
+  val anchorModulus = 6
+  val fastPathBands = 4
+
   /** The materialization strategy this config asks for. Reliable mode
-    * requires `checkpointDir` (an HDFS/S3A/file URI) — `Checkpoints.
-    * clusterEpoch` defaults it to a dir beside the state tables.
+    * requires `checkpointDir` (an HDFS/S3A/file URI); see [[checkpointsIn]].
     */
   def materializer(spark: SparkSession): graft.state.Materializer =
     if (reliableCheckpoints) graft.state.Materializer.reliable(spark, checkpointDir)
     else graft.state.Materializer.local
+
+  /** This config with reliable mode's unset `checkpointDir` defaulted to
+    * `<stateDir>/_spark_checkpoints`: beside the state tables, on the same
+    * filesystem, one tree to clean up.
+    */
+  def checkpointsIn(stateDir: String): DedupConfig =
+    if (reliableCheckpoints && checkpointDir.isEmpty)
+      copy(checkpointDir = s"$stateDir/_spark_checkpoints")
+    else this
 }
 
 /** End-to-end near-duplicate detection + clustering over a pages-shaped
@@ -161,6 +188,11 @@ object DedupPipeline {
     * the SA then rejected; 0.75 cuts that to ~7 s at identical output.
     */
   private val ContainmentGate = 0.75
+
+  /** Representative selection within a cluster: the longest text, then the
+    * smallest id.
+    */
+  private val RepresentativeOrder = Seq(col("order_len").desc, col("id").asc)
 
   /** Per-row fingerprint stage (no shuffle; pure projection).
     * Input must have (id, text [, warc_ts]). Output:
@@ -207,16 +239,14 @@ object DedupPipeline {
     * the bucket space — a channel added here is automatically part of both.
     */
   private[graft] def fullBandRows(banded: DataFrame, cfg: DedupConfig): DataFrame = {
-    // resume-path config guard: persisted minhash arrays must carry at
-    // least bands*rowsPerBand slots. slice() past a SHORTER stored array
+    // resume-path guard: persisted minhash arrays must carry at least
+    // bands*rowsPerBand slots. slice() past a SHORTER stored array
     // returns [], so every old row would hash IDENTICAL empty-band keys
     // for the high bands — one mega-bucket per band, dropped at the cap
     // (silent recall loss mislogged as boilerplate) or a quadratic pair
-    // storm below it. LONGER arrays are fine (DedupConfig.numPerms >
-    // bands*rowsPerBand is the documented forward-compat path: slice()
-    // reads exactly the first bands*rowsPerBand slots losslessly), so
-    // only a too-short array fails. Fail loudly; the check rides codegen,
-    // zero extra jobs.
+    // storm below it. LONGER arrays are fine (slice() reads exactly the
+    // first bands*rowsPerBand slots losslessly), so only a too-short
+    // array fails. Fail loudly; the check rides codegen, zero extra jobs.
     val expectedSlots = cfg.bands * cfg.rowsPerBand
     val guardedMinhash = when(
       col("minhash").isNull || size(col("minhash")) === 0 ||
@@ -225,7 +255,7 @@ object DedupPipeline {
         lit("state minhash carries "), size(col("minhash")).cast("string"),
         lit(s" slots but bands*rowsPerBand = $expectedSlots — the store " +
           "was written under a different banding config; run forceRescan " +
-          "to re-fingerprint (or restore the original bands/rowsPerBand)"))))
+          "to re-fingerprint"))))
     val slim = banded.select(col("id"), guardedMinhash.as("minhash"), col("simhash"))
     val minhashBands = LSH.explodeBands(slim, "id", "minhash",
       cfg.bands, cfg.rowsPerBand, carry = Seq("simhash"))
@@ -250,37 +280,37 @@ object DedupPipeline {
     // invariant, so middle-of-document quotes collide too. Hashes are
     // computed per ROW pre-explode; the shingle array never enters the
     // banding shuffle.
-    val anchorBands =
-      if (cfg.anchorModulus <= 0) None
-      else Some(banded.select(col("id"), col("simhash"),
-        lit(cfg.bands + 1).as("band"),
-        explode(LSH.anchorBandHashes(col("shingles"), cfg.anchorModulus))
-          .as("band_hash")))
-    anchorBands.foldLeft(minhashBands.unionByName(prefixBand))(_ unionByName _)
+    val anchorBands = banded.select(col("id"), col("simhash"),
+      lit(cfg.bands + 1).as("band"),
+      explode(LSH.anchorBandHashes(col("shingles"), cfg.anchorModulus))
+        .as("band_hash"))
+    minhashBands.unionByName(prefixBand).unionByName(anchorBands)
   }
 
+  /** The fast tier's band rows: `fastPathBands` equal slices of the 64-bit
+    * SimHash, (id, simhash, band, band_hash) with band in [0, fastPathBands).
+    */
+  private def simhashSliceRows(sigs: DataFrame, cfg: DedupConfig): DataFrame =
+    sigs.select(col("id"), col("simhash"))
+      .withColumn("band", explode(sequence(lit(0), lit(cfg.fastPathBands - 1))))
+      .withColumn("band_hash",
+        LSH.slicedBandHash("simhash", "band", 64 / cfg.fastPathBands))
+
   /** All-channel band rows of a signatures frame: full channels for
-    * shingled rows, plus — when `includeFast` — the fast-tier SimHash
-    * slices for EVERY row, offset past every full channel (band >= 1000)
-    * so the bucket spaces stay disjoint. The persisted band index
+    * shingled rows, plus the fast-tier SimHash slices for EVERY row,
+    * offset past every full channel (band >= 1000) so the bucket spaces
+    * stay disjoint. The persisted band index
     * ([[graft.state.Checkpoints.ensureBandIndex]]) is built from it; band
     * hashes are pure functions of the signature columns, never of the id,
     * so rows computed in string-id space and dictionary-code space agree.
     */
-  private[graft] def allChannelBandRows(df: DataFrame, cfg: DedupConfig,
-                                        includeFast: Boolean): DataFrame = {
+  private[graft] def allChannelBandRows(df: DataFrame, cfg: DedupConfig): DataFrame = {
     val full = fullBandRows(df.filter(size(col("shingles")) > 0), cfg)
       .select("id", "band", "band_hash")
-    if (!includeFast) full
-    else {
-      val fast = df.select(col("id"), col("simhash"))
-        .withColumn("band", explode(sequence(lit(0), lit(cfg.fastPathBands - 1))))
-        .withColumn("band_hash",
-          LSH.slicedBandHash("simhash", "band", 64 / cfg.fastPathBands))
-        .withColumn("band", col("band") + lit(1000))
-        .select("id", "band", "band_hash")
-      full.unionByName(fast)
-    }
+    val fast = simhashSliceRows(df, cfg)
+      .withColumn("band", col("band") + lit(1000))
+      .select("id", "band", "band_hash")
+    full.unionByName(fast)
   }
 
   /** Candidate pairs → verified near-dup edges.
@@ -464,12 +494,7 @@ object DedupPipeline {
     */
   def nearEdgesFast(sigs: DataFrame, cfg: DedupConfig,
                     mat: Materializer = Materializer.local): DataFrame = {
-    val exploded = sigs.select(col("id"), col("simhash"))
-      .withColumn("band", explode(sequence(lit(0), lit(cfg.fastPathBands - 1))))
-      .withColumn("band_hash",
-        LSH.slicedBandHash("simhash", "band", 64 / cfg.fastPathBands))
-      .select("id", "simhash", "band", "band_hash")
-    LSH.candidatePairs(exploded, "id",
+    LSH.candidatePairs(simhashSliceRows(sigs, cfg), "id",
       hotThreshold = cfg.hotBucketThreshold,
       saltFactor = cfg.saltFactor,
       maxBucketSize = cfg.maxBucketSize,
@@ -567,8 +592,6 @@ object DedupPipeline {
     */
   def run(spark: SparkSession, pages: DataFrame, idCol: String, textCol: String,
           cfg: DedupConfig = DedupConfig(),
-          orderCols: Seq[org.apache.spark.sql.Column] =
-            Seq(col("order_len").desc, col("id").asc),
           rowObs: Option[org.apache.spark.sql.Observation] = None): DataFrame = {
 
     val mat = cfg.materializer(spark)
@@ -619,7 +642,7 @@ object DedupPipeline {
     val coded = clusterFromParts(spark, slim, hashGroups, repSigs,
       texts = if (cfg.fastPath) None
               else Some(sigsAll.select("id", "norm_text")),
-      cfg, orderCols, mat,
+      cfg, mat,
       // fresh signatures are all fast-path rows or all shingled
       fastRows = cfg.fastPath)
     val result = decode(coded, dict, mat, rowObs)
@@ -704,9 +727,7 @@ object DedupPipeline {
     * keyed by the ORIGINAL ids (encoding is internal).
     */
   def clusterSignatures(spark: SparkSession, stateSigs: DataFrame,
-                        texts: Option[DataFrame], cfg: DedupConfig = DedupConfig(),
-                        orderCols: Seq[org.apache.spark.sql.Column] =
-                          Seq(col("order_len").desc, col("id").asc)): DataFrame = {
+                        texts: Option[DataFrame], cfg: DedupConfig = DedupConfig()): DataFrame = {
     val mat = cfg.materializer(spark)
     val (dict, slim, hashGroups, repSigs0, hasFastRows) = codedParts(stateSigs, mat)
     // MATERIALIZE repSigs on THIS path only: the full resume feeds it
@@ -723,7 +744,7 @@ object DedupPipeline {
     val codedTexts = texts.map(_.toDF("sid", "norm_text").join(dict, "sid")
       .select("id", "norm_text"))
     val coded = clusterFromParts(spark, slim, hashGroups, repSigs, codedTexts,
-      cfg, orderCols, mat, fastRows = hasFastRows)
+      cfg, mat, fastRows = hasFastRows)
     val result = decode(coded, dict, mat)
     hashGroups.unpersist()
     dict.unpersist()
@@ -751,11 +772,11 @@ object DedupPipeline {
     *    over the full universe — single-exchange aggregates, the cheap
     *    part — so kinds and representatives stay EXACTLY equivalent.
     *
-    * Equivalence holds while similarity thresholds are unchanged since
+    * Equivalence holds while the edge-shaping values are unchanged since
     * the epoch that produced `assignEdges` (induction: every old-old pair
-    * was discoverable then and is folded into its cluster's closure).
-    * After changing knobs, run one full epoch — the same cadence
-    * discipline as compaction. Pinned by DeltaClusterSpec.
+    * was discoverable then and is folded into its cluster's closure);
+    * [[graft.state.Checkpoints.clusterEpoch]] takes the full path when
+    * they differ. Pinned by DeltaClusterSpec.
     */
   def clusterSignaturesDelta(spark: SparkSession, stateSigs: DataFrame,
                              focusSids: DataFrame, assignEdges: DataFrame,
@@ -766,9 +787,7 @@ object DedupPipeline {
                              // re-banding the corpus — the frontier pass
                              // never re-winnows every doc's shingle array
                              bandIndex: DataFrame,
-                             cfg: DedupConfig = DedupConfig(),
-                             orderCols: Seq[org.apache.spark.sql.Column] =
-                               Seq(col("order_len").desc, col("id").asc)): DataFrame = {
+                             cfg: DedupConfig = DedupConfig()): DataFrame = {
     val mat = cfg.materializer(spark)
     val (dict, slim, hashGroups, repSigs, hasFastRows) = codedParts(stateSigs, mat)
     // focus → coded → content-hash representatives: a focus doc that is
@@ -840,7 +859,7 @@ object DedupPipeline {
         .select("id", "norm_text")
     }
     val coded = clusterFromParts(spark, slim, hashGroups, repSigs, codedTexts,
-      cfg, orderCols, mat, fastRows = hasFastRows,
+      cfg, mat, fastRows = hasFastRows,
       bandSigsOverride = Some(subsetReps), extraEdges = Some(codedAssign))
     val result = decode(coded, dict, mat)
     frontier.unpersist()
@@ -860,7 +879,6 @@ object DedupPipeline {
   private def clusterFromParts(spark: SparkSession, slim: DataFrame,
                                hashGroups: DataFrame, repSigs: DataFrame,
                                texts: Option[DataFrame], cfg: DedupConfig,
-                               orderCols: Seq[org.apache.spark.sql.Column],
                                mat: Materializer,
                                // whether the universe holds fast-path
                                // (shingle-less) rows
@@ -920,7 +938,7 @@ object DedupPipeline {
           .when(col("cluster_n") > 1, lit("near"))
           .otherwise(lit("unique")))
 
-    Clustering.withRepresentatives(out, orderCols)
+    Clustering.withRepresentatives(out, RepresentativeOrder)
       .select("id", "cluster_id", "is_representative", "kind")
   }
 }

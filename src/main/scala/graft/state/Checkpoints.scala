@@ -27,8 +27,8 @@ import graft.pipeline.{DedupConfig, DedupPipeline}
   *    [[appendManifest]]'s double rename. Each line names the current
   *    generation of every table plus the layout facts readers need
   *    (`signature_buckets`, the band index's `knobs` and `through_epoch`,
-  *    the sub-document tables' `subdoc_from`); [[snapshot]] resolves them
-  *    and every reader goes through it.
+  *    the clusters' `similarity`, the sub-document tables' `subdoc_from`);
+  *    [[snapshot]] resolves them and every reader goes through it.
   *
   * A call that replaces a table (clusterEpoch's clusters, actions and
   * previews, compaction, a rescan) writes generation n — n is the index of
@@ -92,12 +92,14 @@ object Checkpoints {
     *                follows it
     * @param knobs   channel knobs the band index was built with
     * @param through last signature epoch the band index covers
+    * @param similarity edge-shaping values the clusters were built with
     * @param subdocFrom first epoch whose sub-document hashes are visible:
     *                the epoch of the last rescan ([[SubDocState]])
     */
   private[state] final case class Snapshot(stateDir: String, gens: Map[String, Long],
                                            next: Long, buckets: Int = 0,
                                            knobs: String = "", through: Long = -1L,
+                                           similarity: String = "",
                                            subdocFrom: Long = 0L) {
     def path(table: String): Option[String] =
       gens.get(table).map(g => s"$stateDir/$table/gen=$g")
@@ -120,6 +122,9 @@ object Checkpoints {
       gens.toSeq.sorted.map { case (t, g) => s""""$t":$g""" }.mkString("\"gens\":{", ",", "}") +
         s""","signature_buckets":$buckets""" +
         (if (gens.contains("bands")) s""","knobs":$knobs,"through_epoch":$through""" else "") +
+        // a line written before the values were recorded has none to carry
+        (if (gens.contains("clusters") && similarity.nonEmpty) s""","similarity":$similarity"""
+         else "") +
         (if (subdocFrom > 0) s""","subdoc_from":$subdocFrom""" else "")
   }
 
@@ -146,6 +151,7 @@ object Checkpoints {
           buckets = field("signature_buckets", """\d+""").fold(0)(_.toInt),
           knobs = field("knobs", """\{[^}]*\}""").getOrElse(""),
           through = field("through_epoch", """-?\d+""").fold(-1L)(_.toLong),
+          similarity = field("similarity", """\{[^}]*\}""").getOrElse(""),
           subdocFrom = field("subdoc_from", """\d+""").fold(0L)(_.toLong))
     }
   }
@@ -595,12 +601,7 @@ object Checkpoints {
                    action: String = "symlink",
                    textsOf: Option[DataFrame] = None): (Long, Long) =
       withStateLock(spark, stateDir) {
-    // reliable-checkpoint mode defaults its dir to live beside the state
-    // tables — same filesystem, one tree to clean up
-    val cfg0 =
-      if (cfg.reliableCheckpoints && cfg.checkpointDir.isEmpty)
-        cfg.copy(checkpointDir = s"$stateDir/_spark_checkpoints")
-      else cfg
+    val cfg0 = cfg.checkpointsIn(stateDir)
     val in = ingest(spark, pages, idCol, textCol, snapshot(spark, stateDir), cfg0)
 
     // cluster the LIVE state: rows vacated by executed delete/move actions
@@ -624,9 +625,12 @@ object Checkpoints {
     // cannot trust their old assignment edges) — and splice the stable
     // clusters' connectivity in as assignment edges. Falls back to the
     // full re-cluster on the first epoch or after a rescan (neither
-    // publishes prior clusters).
+    // publishes prior clusters), and when the prior clusters were built
+    // under other edge-shaping values: their merges would otherwise carry
+    // over unverified.
+    val similarity = similarityJson(cfg0)
     val clusters = (bandIndex, in.snap.path("clusters")) match {
-      case (Some(index), Some(priorPath)) =>
+      case (Some(index), Some(priorPath)) if in.snap.similarity == similarity =>
         val prior = spark.read.parquet(priorPath)
         // "new" = every live doc the prior clusters table has never seen —
         // NOT just the epoch ingested above: signature epochs accrue
@@ -659,8 +663,9 @@ object Checkpoints {
     // so a table left by a prior opt-in run is superseded, never served
     // with another epoch's cluster_ids
     val out =
-      if (cfg0.previewChars > 0) snap.fresh("clusters", "actions", "previews")
-      else snap.copy(gens = snap.gens - "previews").fresh("clusters", "actions")
+      (if (cfg0.previewChars > 0) snap.fresh("clusters", "actions", "previews")
+       else snap.copy(gens = snap.gens - "previews").fresh("clusters", "actions"))
+        .copy(similarity = similarity)
     // the cluster count rides the clusters write: every cluster has exactly
     // one representative (pipeline invariant, oracled per-row by
     // q_dedup_invariants), so sum(is_representative) ≡
@@ -733,10 +738,7 @@ object Checkpoints {
                    backupDir: Option[String] = None,
                    cfg: DedupConfig = DedupConfig()): (Long, Long) =
       withStateLock(spark, stateDir) {
-    val cfg0 =
-      if (cfg.reliableCheckpoints && cfg.checkpointDir.isEmpty)
-        cfg.copy(checkpointDir = s"$stateDir/_spark_checkpoints")
-      else cfg
+    val cfg0 = cfg.checkpointsIn(stateDir)
     val snap = snapshot(spark, stateDir)
     val plan = spark.read.parquet(snap.path("actions").getOrElse(throw new IllegalStateException(
       s"no committed actions plan in $stateDir: run clusterEpoch first")))
@@ -853,22 +855,34 @@ object Checkpoints {
   // 42 s delta epoch at the 220k tier, erasing the mode's win; with it,
   // frontier selection is a slim scan + broadcast semi-join. The index is
   // maintained append-only per epoch and is a pure function of the
-  // signatures table + the channel knobs, so it can always be rebuilt.
+  // signatures table + the channel shapes, so it can always be rebuilt.
   // ------------------------------------------------------------------
 
-  /** The channel-shape knobs the index rows depend on; a mismatch with a
-    * later run's config invalidates the index (it is rebuilt, same cadence
-    * discipline as delta clustering itself after knob changes).
+  /** The band-index format: the channel shapes its rows depend on, from
+    * DedupConfig's fixed banding values. An index published under another
+    * format (written by other code) is rebuilt.
     */
-  private def channelKnobsJson(cfg: DedupConfig): String =
-    s"""{"bands":${cfg.bands},"rows_per_band":${cfg.rowsPerBand},""" +
-      s""""prefix_band_shingles":${cfg.prefixBandShingles},""" +
+  private val BandIndexFormat: String = {
+    val c = DedupConfig()
+    s"""{"bands":${c.bands},"rows_per_band":${c.rowsPerBand},""" +
+      s""""prefix_band_shingles":${c.prefixBandShingles},""" +
       // structural version of the prefix channel (two-level ladder):
       // bumping it invalidates pre-ladder indexes so they rebuild with
       // the new level rows instead of silently missing half the buckets
       s""""prefix_band_levels":2,""" +
-      s""""anchor_modulus":${cfg.anchorModulus},""" +
-      s""""fast_path_bands":${cfg.fastPathBands}}"""
+      s""""anchor_modulus":${c.anchorModulus},""" +
+      s""""fast_path_bands":${c.fastPathBands}}"""
+  }
+
+  /** The settable values that shape near-dup edges, recorded on every line
+    * that publishes clusters: a delta epoch reuses prior clusters only when
+    * they were built under the same values.
+    */
+  private def similarityJson(cfg: DedupConfig): String =
+    s"""{"jaccard_threshold":${cfg.jaccardThreshold},""" +
+      s""""simhash_accept_hamming":${cfg.simhashAcceptHamming},""" +
+      s""""containment_max_bucket":${cfg.containmentMaxBucket},""" +
+      s""""fast_path":${cfg.fastPath}}"""
 
   /** Band index covering every committed epoch, building or repairing as
     * needed under the state lease; returns the index frame (id, band,
@@ -885,9 +899,8 @@ object Checkpoints {
 
   /** The band index of `snap` brought up to signature epoch `through`:
     *
-    *  - none published / knob mismatch → a new generation rebuilt from the
-    *    signatures table (bootstrap, or the documented post-knob-change
-    *    full pass);
+    *  - none published / another format → a new generation rebuilt from
+    *    the signatures table;
     *  - published `through_epoch` behind (an interleaved non-delta epoch, or
     *    a crash between the signature append and the line that publishes
     *    the index) → append just the missing epochs' rows. The repair is
@@ -901,17 +914,15 @@ object Checkpoints {
     */
   private def ensureBandIndex(spark: SparkSession, snap: Snapshot, cfg: DedupConfig,
                               through: Long): (DataFrame, Snapshot) = {
-    val knobs = channelKnobsJson(cfg)
-    def rows(sigs: DataFrame) =
-      DedupPipeline.allChannelBandRows(sigs, cfg, includeFast = true)
+    def rows(sigs: DataFrame) = DedupPipeline.allChannelBandRows(sigs, cfg)
     val out =
-      if (snap.gens.contains("bands") && snap.knobs == knobs) {
+      if (snap.gens.contains("bands") && snap.knobs == BandIndexFormat) {
         if (snap.through < through)
           write(spark, snap, "bands",
             rows(readSignatures(spark, snap).filter(col("epoch") > snap.through)))
         snap.copy(through = math.max(through, snap.through))
       } else {
-        val s = snap.fresh("bands").copy(knobs = knobs, through = through)
+        val s = snap.fresh("bands").copy(knobs = BandIndexFormat, through = through)
         write(spark, s, "bands", rows(readSignatures(spark, snap)))
         s
       }

@@ -171,11 +171,10 @@ class DeltaClusterSpec extends SparkTestBase {
     def indexRows(): Set[(String, Int, Long)] =
       table(dir, "bands")
         .as[(String, Int, Long)].collect().toSet
-    def freshRows(c: DedupConfig): Set[(String, Int, Long)] =
-      DedupPipeline.allChannelBandRows(
-        Checkpoints.readSignatures(spark, dir), c, includeFast = true)
+    def freshRows(): Set[(String, Int, Long)] =
+      DedupPipeline.allChannelBandRows(Checkpoints.readSignatures(spark, dir), cfg)
         .as[(String, Int, Long)].collect().toSet
-    assert(indexRows() == freshRows(cfg),
+    assert(indexRows() == freshRows(),
       "index after bootstrap must equal freshly computed channel rows")
 
     // an interleaved NON-delta epoch leaves the index behind; the next
@@ -184,15 +183,57 @@ class DeltaClusterSpec extends SparkTestBase {
     Checkpoints.clusterEpoch(spark, p3, "url", "text", dir) // full mode
     val p4 = PagesGen.pages(spark, 13L, seed = 47L, tokensPerDoc = 80).toDF()
     Checkpoints.clusterEpoch(spark, p4, "url", "text", dir, cfg)
-    assert(indexRows() == freshRows(cfg),
+    assert(indexRows() == freshRows(),
       "gap repair must cover epochs committed while delta mode was off")
 
-    // changing a channel knob invalidates the marker: full rebuild
-    val recfg = cfg.copy(anchorModulus = cfg.anchorModulus + 2)
-    val idx = Checkpoints.ensureBandIndex(spark, dir, recfg)
-    assert(idx.count() == freshRows(recfg).size)
-    assert(indexRows() == freshRows(recfg),
-      "knob change must rebuild the index under the new channel shapes")
+    // an index published under other channel knobs (written by other
+    // code) invalidates the marker: full rebuild. The planted line also
+    // predates recorded similarity values, which a later line must not
+    // publish as an empty field.
+    val lines = Checkpoints.readManifest(spark, dir)
+    val planted = lines.last.replace(""""knobs":{"bands":21,""", """"knobs":{"bands":20,""")
+      .replaceFirst(""","similarity":\{[^}]*\}""", "")
+    assert(planted != lines.last, s"setup: no knobs to plant in ${lines.last}")
+    assert(!planted.contains("similarity"), s"setup: similarity left in $planted")
+    val fs = org.apache.hadoop.fs.FileSystem.getLocal(spark.sparkContext.hadoopConfiguration)
+    val out = fs.create(new org.apache.hadoop.fs.Path(Checkpoints.manifestPath(dir)), true)
+    try out.write((lines.init :+ planted).mkString("", "\n", "\n").getBytes("UTF-8"))
+    finally out.close()
+    val plantedGen = Checkpoints.generationPath(spark, dir, "bands")
+    val idx = Checkpoints.ensureBandIndex(spark, dir, cfg)
+    assert(Checkpoints.generationPath(spark, dir, "bands") != plantedGen,
+      "knob change must rebuild the index into a new generation")
+    assert(idx.count() == freshRows().size)
+    assert(indexRows() == freshRows(),
+      "knob change must rebuild the index under this code's channel shapes")
+    val last = Checkpoints.readManifest(spark, dir).last
+    assert(last.contains(""""knobs":{"bands":21,""") && !last.contains("similarity"), last)
+  }
+
+  test("delta epoch after a similarity change ≡ full re-cluster under the new values") {
+    val base = tempDir()
+    val all = PagesGen.pages(spark, 8L, seed = 55L, tokensPerDoc = 120).toDF().cache()
+    val half = all.filter(xxhash64($"url") % 2 === 0)
+    Checkpoints.clusterEpoch(spark, half, "url", "text", base, DedupConfig(deltaCluster = true))
+    val fullDir = tempDir() + "/s"
+    val deltaDir = tempDir() + "/s"
+    copyDir(base, fullDir)
+    copyDir(base, deltaDir)
+    // stricter edge-shaping values: the base's merges made under the
+    // defaults must not carry over into the delta epoch's clusters
+    val strict = DedupConfig(jaccardThreshold = 0.99, simhashAcceptHamming = 0)
+    Checkpoints.clusterEpoch(spark, all, "url", "text", fullDir, strict)
+    Checkpoints.clusterEpoch(spark, all, "url", "text", deltaDir,
+      strict.copy(deltaCluster = true))
+    val baseRows = clustersOf(base)
+    val baseIds = baseRows.map(_._1)
+    assert(clustersOf(fullDir).filter(r => baseIds.contains(r._1)) != baseRows,
+      "setup: the stricter values must split some cluster of the base")
+    assert(clustersOf(deltaDir) == clustersOf(fullDir),
+      "a delta epoch under changed similarity values kept the old merges")
+    assert(Checkpoints.readManifest(spark, deltaDir).last
+      .contains(""""similarity":{"jaccard_threshold":0.99,"""))
+    all.unpersist()
   }
 
   test("compaction prunes tombstoned docs from the band index") {

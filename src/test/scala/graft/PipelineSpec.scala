@@ -81,11 +81,6 @@ class PipelineSpec extends SparkTestBase {
     assert(edges2 == edges)
   }
 
-  test("DedupConfig rejects fastPathBands = 0 with a clear message") {
-    val e = intercept[IllegalArgumentException](DedupConfig(fastPathBands = 0))
-    assert(e.getMessage.contains("fastPathBands must be > 0"))
-  }
-
   test("union-find: chain a-b, b-c, c-d collapses to one cluster") {
     // z's only edge is a self-loop: it labels itself
     val edges = Seq(("a", "b"), ("b", "c"), ("c", "d"), ("x", "y"), ("z", "z")).toDF("a", "b")
@@ -275,11 +270,12 @@ class PipelineSpec extends SparkTestBase {
     // exactly one representative per cluster, none lost on the mega group
     assert(got.size == expected.size && got.contains("mega"))
   }
-  private def ladderSigs(texts: Seq[(String, String)], cfg: DedupConfig) =
+  private def ladderSigs(texts: Seq[(String, String)], cfg: DedupConfig,
+                         numPerms: Int = DedupConfig().numPerms) =
     texts.toDF("id", "text")
       .select(col("id"),
         graft.fingerprint.Fingerprints.docSignature(col("text"),
-          cfg.shingleK, cfg.numPerms, cfg.maxShingles).as("ds"))
+          cfg.shingleK, numPerms, cfg.maxShingles).as("ds"))
       .select(col("id"), col("ds.minhash").as("minhash"),
         col("ds.simhash").as("simhash"), col("ds.shingles").as("shingles"))
 
@@ -323,18 +319,18 @@ class PipelineSpec extends SparkTestBase {
   }
 
   test("fullBandRows accepts minhash arrays LONGER than bands*rowsPerBand") {
-    // numPerms > bands*rowsPerBand is the documented forward-compat path
-    // (DedupConfig.numPerms scaladoc: persisted state may carry extra
-    // permutations to support denser re-banding later); slice() past a
-    // longer array is lossless, so banding must NOT raise — and the band
-    // hashes must equal those of an exact-width array, since only the
-    // first bands*rowsPerBand slots are read.
+    // persisted state may carry more permutations than the banding reads
+    // (a store fingerprinted by other code); slice() past a longer array
+    // is lossless, so banding must NOT raise — and the band hashes must
+    // equal those of an exact-width array, since only the first
+    // bands*rowsPerBand slots are read.
     val cfg = DedupConfig()
-    val wide = cfg.copy(numPerms = cfg.bands * cfg.rowsPerBand + 8)
     val texts = Seq(
       ("a", (1 to 60).map(i => s"w$i").mkString(" ")),
       ("b", (1 to 60).map(i => s"x$i").mkString(" ")))
-    val wideRows = DedupPipeline.fullBandRows(ladderSigs(texts, wide), cfg)
+    val wide = ladderSigs(texts, cfg, numPerms = cfg.bands * cfg.rowsPerBand + 8)
+    assert(wide.select(size(col("minhash"))).as[Int].collect().forall(_ > cfg.numPerms))
+    val wideRows = DedupPipeline.fullBandRows(wide, cfg)
       .select("id", "band", "band_hash").collect().toSet
     val exactRows = DedupPipeline.fullBandRows(ladderSigs(texts, cfg), cfg)
       .select("id", "band", "band_hash").collect().toSet

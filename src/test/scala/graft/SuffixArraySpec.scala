@@ -132,12 +132,18 @@ class SuffixArraySpec extends SparkTestBase {
     // cheap tier (Jaccard/SimHash) alone, and every added edge must be a
     // genuine containment pair (a truncate or mid-quote variant on at
     // least one side)
-    val sigs = DedupPipeline.signatures(pages, "url", "text", DedupConfig()).cache()
-    val cheapOnly = DedupPipeline.nearEdges(spark, sigs,
-      DedupConfig(containmentThreshold = 1.01), texts = None).cache()
-    val withSa = DedupPipeline.nearEdges(spark, sigs, DedupConfig(),
-      texts = Some(DedupPipeline.normTexts(pages, "url", "text", DedupConfig()))).cache()
-    val added = withSa.exceptAll(cheapOnly).cache()
+    // (the cheap tier accepts a pair on SimHash Hamming or exact shingle
+    // Jaccard; the SA-added edges are the ones it rejects on both)
+    val cfg = DedupConfig()
+    val sigs = DedupPipeline.signatures(pages, "url", "text", cfg).cache()
+    val withSa = DedupPipeline.nearEdges(spark, sigs, cfg,
+      texts = Some(DedupPipeline.normTexts(pages, "url", "text", cfg))).cache()
+    def side(s: String) = sigs.select($"id".as(s), $"simhash".as(s"sim_$s"),
+      $"shingles".as(s"sh_$s"))
+    val added = withSa.join(side("a"), "a").join(side("b"), "b")
+      .filter(FP.hamming($"sim_a", $"sim_b") > cfg.simhashAcceptHamming &&
+        FP.shingleOverlap($"sh_a", $"sh_b").getField("jaccard") < cfg.jaccardThreshold)
+      .select("a", "b").cache()
     assert(added.count() > 0, "SA pass added no edges — not load-bearing")
     val isContainmentKind = (c: org.apache.spark.sql.Column) =>
       c.contains("/truncate_") || c.contains("/mid_quote")
