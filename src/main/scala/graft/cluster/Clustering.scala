@@ -1,9 +1,10 @@
 package graft.cluster
 
 import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
-import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.{LongType, StructField, StructType}
+import org.apache.spark.sql.graftshim.shim
+import org.apache.spark.sql.types.{ByteType, DecimalType, IntegerType, LongType, ShortType,
+  StructField, StructType}
 
 import scala.collection.mutable.ArrayBuilder
 
@@ -366,35 +367,60 @@ object Clustering {
 
   /** Representative ("original") selection per cluster — the reference's
     * priority rules (`config.rs:111-115`: resolution desc, size desc,
-    * creation asc) re-targeted at text: longest text, then oldest warc_ts,
-    * then url asc. Window top-1 (reference README contract `README.md:75-79`).
+    * creation asc) re-targeted at text: e.g. longest text, then url asc.
+    * The winner is the row first in `orderCols`, then smallest `id`; adds
+    * `is_representative`. Ids must be unique (every cluster table's are),
+    * and every column orderable (no map columns): the election compares
+    * whole rows.
     */
-  def withRepresentatives(clustered: DataFrame, orderCols: Seq[Column],
-                          salts: Int = 64): DataFrame = {
-    // Top-1 election is DECOMPOSABLE, so no window ever sees a whole
-    // cluster: round 1 elects per (cluster_id, salt) — partitions bounded
-    // at ~|cluster|/salts — and round 2 elects per cluster over the
-    // ≤salts finalists. A single Window.partitionBy(cluster_id) would pin
-    // a web-scale mega-cluster (empty-page / parked-domain template:
-    // millions of members behind one cluster_id) to ONE task every epoch —
-    // the exact straggler shape [[exactEdges]]'s design avoids. The salt
-    // is a hash of the id (deterministic: re-runs elect the same winner);
-    // requires an `id` column, which every cluster table carries.
-    val salted = Window.partitionBy(col("cluster_id"), col("__rep_salt"))
-      .orderBy(orderCols: _*)
-    val fin = Window.partitionBy(col("cluster_id")).orderBy(orderCols: _*)
-    val winners = clustered
-      .withColumn("__rep_salt", pmod(xxhash64(col("id")), lit(salts)))
-      .withColumn("__r1", row_number().over(salted))
-      .filter(col("__r1") === 1)
-      .withColumn("__r2", row_number().over(fin))
-      .filter(col("__r2") === 1)
-      .select(col("cluster_id").as("__rep_cid"), col("id").as("__rep_id"))
-    clustered
-      .join(winners,
-        col("cluster_id") === col("__rep_cid") && col("id") === col("__rep_id"),
-        "left")
-      .withColumn("is_representative", col("__rep_id").isNotNull)
-      .drop("__rep_cid", "__rep_id")
+  def withRepresentatives(clustered: DataFrame, orderCols: Seq[Column]): DataFrame =
+    withSizesAndRepresentatives(clustered, orderCols, "__cluster_n").drop("__cluster_n")
+
+  /** [[withRepresentatives]] plus each row's cluster size `sizeCol`, from
+    * ONE partial-aggregating groupBy on `cluster_id` — `count` and the min
+    * of a struct of the order keys (a descending key flipped, so min is
+    * top-1), then `id` and the rest of the row — joined back once; the
+    * representative is the row equal to that min. Top-1 is decomposable, so
+    * the aggregate combines map-side: no task ever sees a whole cluster
+    * (a window partitioned by cluster_id would pin a web-scale
+    * mega-cluster — the empty page, a parked-domain template — to ONE task
+    * every epoch, the straggler shape [[exactEdges]] avoids).
+    */
+  private[graft] def withSizesAndRepresentatives(clustered: DataFrame,
+                                                 orderCols: Seq[Column],
+                                                 sizeCol: String): DataFrame = {
+    // the order keys, then the id and the rest of the row: the min is the
+    // winning ROW, and both join sides read every column, so the
+    // exchanges under them plan alike and run once (reused)
+    val key = struct(orderCols.flatMap(ascendingKeys(clustered, _)).zipWithIndex
+      .map { case (k, i) => k.as(s"__k$i") } ++
+      (col("id") +: clustered.columns.filter(_ != "id").map(col)): _*)
+    val elected = clustered.groupBy("cluster_id")
+      .agg(count(lit(1)).as(sizeCol), min(key).as("__rep"))
+    clustered.join(elected, "cluster_id")
+      .select(clustered.columns.map(col) ++ Seq(col(sizeCol),
+        (key === col("__rep")).as("is_representative")): _*)
   }
+
+  /** One sort order as ascending struct fields, so a struct min elects
+    * its first row: struct comparison orders each field ascending, nulls
+    * first. A descending key is flipped (bitwise NOT for integers, which
+    * cannot overflow; negation for decimals), and a nulls-last key gets an
+    * `isnull` field in front.
+    */
+  private def ascendingKeys(df: DataFrame, order: Column): Seq[Column] =
+    shim.sortOrder(order) match {
+      case Some((key, descending, nullsLast)) =>
+        val flipped =
+          if (!descending) key
+          else {
+            val t = df.select(key).schema.head.dataType
+            val integral = Seq(ByteType, ShortType, IntegerType, LongType).contains(t)
+            require(integral || t.isInstanceOf[DecimalType],
+              s"a descending representative key must be an integer or decimal column; $key is $t")
+            if (integral) bitwise_not(key) else negate(key)
+          }
+        if (nullsLast) Seq(key.isNull, flipped) else Seq(flipped)
+      case None => Seq(order)
+    }
 }

@@ -2,7 +2,8 @@ package graft.fingerprint
 
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, GenericInternalRow, UnaryExpression, XXH64}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
+import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode, FalseLiteral}
+import org.apache.spark.sql.catalyst.expressions.codegen.Block._
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
 import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.types.UTF8String
@@ -376,6 +377,121 @@ case class DocSignature(child: Expression, k: Int, numPerms: Int, seed: Long,
     copy(child = newChild)
 
   override def prettyName: String = "doc_signature"
+}
+
+/** Fused band-key kernel: one row's (minhash, shingles) → every
+  * discovery-channel bucket key as array<struct<band, band_hash>>, in one
+  * eval per row with no intermediate arrays:
+  *
+  *  - band b in [0, bands): XXH64 over (b, minhash[b*r, b*r + r)), the
+  *    minhash bands;
+  *  - band `bands`: XXH64 over the first `prefixShingles` shingles, and
+  *    band `bands` + 2 over the first max(2, prefixShingles / 2), the
+  *    two-level prefix ladder;
+  *  - band `bands` + 1, once per adjacent pair of the shingles ≡ 0 (mod
+  *    `anchorModulus`): XXH64 over the pair, the winnowed anchor bands.
+  *
+  * BIT-IDENTICAL to the combinator path it replaced (`xxhash64` over
+  * `slice`s, `filter` + `zip_with` for the anchors; the property spec in
+  * `BandKeysSpec` keeps that path as its oracle), including its null
+  * semantics: a null array hashes like an empty one in the minhash and
+  * prefix bands and yields no anchor keys, and null elements are skipped.
+  * Reference analog: the fused per-item kernel of
+  * `processing/core.rs:37-154`, as for [[DocSignature]].
+  */
+case class BandKeys(left: Expression, right: Expression, bands: Int, rowsPerBand: Int,
+                    prefixShingles: Int, anchorModulus: Int)
+    extends BinaryExpression {
+
+  private val XxSeed = 42L // Spark xxhash64 default seed
+  private val halfPrefix = math.max(2, prefixShingles / 2)
+
+  override def nullable: Boolean = false
+
+  override def dataType: DataType = ArrayType(StructType(Seq(
+    StructField("band", IntegerType, nullable = false),
+    StructField("band_hash", LongType, nullable = false))), containsNull = false)
+
+  override def checkInputDataTypes(): org.apache.spark.sql.catalyst.analysis.TypeCheckResult =
+    (left.dataType, right.dataType) match {
+      case (ArrayType(LongType, _), ArrayType(LongType, _)) =>
+        org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckSuccess
+      case other =>
+        org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckFailure(
+          s"band_keys expects (array<bigint>, array<bigint>), got $other")
+    }
+
+  override def eval(input: InternalRow): Any =
+    keys(left.eval(input).asInstanceOf[ArrayData], right.eval(input).asInstanceOf[ArrayData])
+
+  /** XXH64 chained over the non-null elements of `a` in [from, until). */
+  private def hashRange(a: ArrayData, from: Int, until: Int, seed: Long): Long = {
+    var h = seed
+    var i = from
+    while (i < until) {
+      if (!a.isNullAt(i)) h = XXH64.hashLong(a.getLong(i), h)
+      i += 1
+    }
+    h
+  }
+
+  def keys(minhash: ArrayData, shingles: ArrayData): ArrayData = {
+    val nm = if (minhash == null) 0 else minhash.numElements()
+    val ns = if (shingles == null) 0 else shingles.numElements()
+    @inline def anchor(i: Int): Boolean =
+      !shingles.isNullAt(i) && shingles.getLong(i) % anchorModulus == 0
+    var nAnchors = 0
+    var i = 0
+    while (i < ns) { if (anchor(i)) nAnchors += 1; i += 1 }
+    val out = new Array[Any](bands + 2 + math.max(nAnchors - 1, 0))
+    var k = 0
+    @inline def key(band: Int, h: Long): Unit = {
+      out(k) = new GenericInternalRow(Array[Any](band, h))
+      k += 1
+    }
+
+    var b = 0
+    while (b < bands) {
+      val from = math.min(b * rowsPerBand, nm)
+      key(b, hashRange(minhash, from, math.min(from + rowsPerBand, nm),
+        XXH64.hashInt(b, XxSeed)))
+      b += 1
+    }
+    key(bands, hashRange(shingles, 0, math.min(prefixShingles, ns), XxSeed))
+    key(bands + 2, hashRange(shingles, 0, math.min(halfPrefix, ns), XxSeed))
+    var prev = 0L
+    var havePrev = false
+    i = 0
+    while (i < ns) {
+      if (anchor(i)) {
+        val s = shingles.getLong(i)
+        if (havePrev) key(bands + 1, XXH64.hashLong(s, XXH64.hashLong(prev, XxSeed)))
+        prev = s
+        havePrev = true
+      }
+      i += 1
+    }
+    new GenericArrayData(out)
+  }
+
+  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
+    val ref = ctx.addReferenceObj("bandKeysExpr", this, classOf[BandKeys].getName)
+    val l = left.genCode(ctx)
+    val r = right.genCode(ctx)
+    val arrayData = classOf[ArrayData].getName
+    ev.copy(code = code"""
+      |${l.code}
+      |${r.code}
+      |$arrayData ${ev.value} = $ref.keys(
+      |  ${l.isNull} ? null : ${l.value}, ${r.isNull} ? null : ${r.value});
+      |""".stripMargin, isNull = FalseLiteral)
+  }
+
+  override protected def withNewChildrenInternal(
+      newLeft: Expression, newRight: Expression): BandKeys =
+    copy(left = newLeft, right = newRight)
+
+  override def prettyName: String = "band_keys"
 }
 
 /** Fused shingle-set overlap: (jaccard, containment) of two array<long>

@@ -2,6 +2,9 @@ package graft.lsh
 
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graftshim.shim
+
+import graft.fingerprint.BandKeys
 
 /** LSH candidate-pair generation — the scalable realization of the
   * reference's all-pairs `is_similar` θ-join
@@ -34,29 +37,6 @@ object LSH {
     expr(s"shiftright($sigCol, $bandCol * $width) & $mask")
   }
 
-  /** Anchor-band bucket hashes (winnowing/MOSS-style document
-    * fingerprints): select the shingles whose hash ≡ 0 (mod `modulus`) —
-    * selection is CONTENT-DEFINED, so two documents sharing any
-    * sufficiently long contiguous region select the same shingles inside
-    * it at the same relative positions, independent of where the region
-    * sits in either document. The bucket key is the hash of each ADJACENT
-    * selected pair (a single shared 3-gram would be far too weak a
-    * bucket), giving collision probability ≈ P(≥2 selections land in the
-    * shared region) — the offset-invariant discovery channel for
-    * middle-of-document quotes that prefix banding cannot see and dense
-    * MinHash banding only reaches at its induced (low) Jaccard.
-    * Output: array<long>, one element per adjacent selected pair; empty
-    * when fewer than 2 shingles are selected. Pure built-ins → codegen.
-    */
-  def anchorBandHashes(shingles: Column, modulus: Int): Column = {
-    val sel = filter(shingles, h => pmod(h, lit(modulus)) === 0)
-    // zip the selection with its own tail; slice off the (last, null) pair
-    slice(
-      zip_with(sel, slice(sel, lit(2), greatest(size(sel) - 1, lit(0))),
-        (a, b) => xxhash64(a, b)),
-      lit(1), greatest(size(sel) - 1, lit(0)))
-  }
-
   /** Prefix-band bucket hash: one 64-bit hash over the document's first
     * `m` shingle hashes (document order — [[graft.fingerprint.DocSignature]]
     * preserves first occurrence). A prefix truncation shares the original's
@@ -75,6 +55,26 @@ object LSH {
     */
   def prefixBandHash(shingles: Column, m: Int): Column =
     xxhash64(slice(shingles, 1, m))
+
+  /** Every discovery-channel bucket key of a row as
+    * array<struct<band, band_hash>>, from one fused kernel
+    * ([[graft.fingerprint.BandKeys]]): the `bands` minhash bands of
+    * [[bandHashes]] (band b), the [[prefixBandHash]] ladder at
+    * `prefixShingles` (band `bands`) and max(2, `prefixShingles` / 2)
+    * (band `bands` + 2), and one key per adjacent pair of winnowed anchors
+    * (band `bands` + 1). Anchors are the shingles ≡ 0 (mod
+    * `anchorModulus`) — selection is CONTENT-DEFINED, so two documents
+    * sharing a long enough region select the same shingles inside it
+    * wherever it sits (winnowing/MOSS-style fingerprints), and the
+    * adjacent-pair key is the offset-invariant channel for
+    * middle-of-document quotes that prefix banding cannot see and dense
+    * minhash banding only reaches at its induced (low) Jaccard. A doc with
+    * fewer than 2 anchors has no anchor keys.
+    */
+  def bandKeys(minhash: Column, shingles: Column, bands: Int, rowsPerBand: Int,
+               prefixShingles: Int, anchorModulus: Int): Column =
+    shim.toColumn(BandKeys(shim.toExpression(minhash), shim.toExpression(shingles),
+      bands, rowsPerBand, prefixShingles, anchorModulus))
 
   /** Explode a signatures frame into (id, [carry...], band, band_hash).
     * Column pruning matters at scale: callers must pass only the columns the

@@ -174,7 +174,7 @@ case class DedupConfig(
   *
   * pages → signatures → LSH bands → salted candidate pairs → simhash
   * prefilter → exact-Jaccard + containment verify → (∪ exact edges) →
-  * union-find → clusters → representative window.
+  * union-find → clusters → representative election.
   */
 object DedupPipeline {
 
@@ -232,21 +232,34 @@ object DedupPipeline {
   }
 
   /** All discovery-channel band rows for SHINGLED signatures — minhash
-    * bands [0, bands), the prefix band (= bands) and anchor bands
-    * (= bands+1): (id, simhash, band, band_hash). One shared definition so
-    * pair generation ([[nearEdges]]) and the persisted band index the
-    * delta-cluster frontier reads ([[allChannelBandRows]]) always agree on
-    * the bucket space — a channel added here is automatically part of both.
+    * bands [0, bands), the two-level prefix ladder (bands and bands+2) and
+    * the winnowed anchor bands (bands+1): (id, simhash, band, band_hash).
+    * One projection: the fused [[LSH.bandKeys]] kernel emits every key of
+    * a row in one pass and one `inline` turns them into rows. One shared
+    * definition so pair generation ([[nearEdges]]) and the persisted band
+    * index the delta-cluster frontier reads ([[allChannelBandRows]])
+    * always agree on the bucket space — a channel added here is
+    * automatically part of both.
+    *
+    * The prefix ladder: P=1 for prefix truncations holds only while the
+    * truncated side still carries >= m shingles (a shorter doc hashes its
+    * full shorter array — never equal to an m-prefix hash); the
+    * half-length level pushes the floor down to m/2 shingles (~m/2+k-1
+    * tokens). Below that a doc is under this channel's floor
+    * (exact/minhash/anchor still see it). Keys are computed per ROW, so the
+    * wide shingle array never enters the banding shuffle; distinct band ids
+    * keep the bucket spaces disjoint, and the downstream pair distinct
+    * absorbs pairs colliding in several bands.
     */
   private[graft] def fullBandRows(banded: DataFrame, cfg: DedupConfig): DataFrame = {
     // resume-path guard: persisted minhash arrays must carry at least
-    // bands*rowsPerBand slots. slice() past a SHORTER stored array
-    // returns [], so every old row would hash IDENTICAL empty-band keys
+    // bands*rowsPerBand slots. A band past a SHORTER stored array reads
+    // no slots, so every old row would hash IDENTICAL empty-band keys
     // for the high bands — one mega-bucket per band, dropped at the cap
     // (silent recall loss mislogged as boilerplate) or a quadratic pair
-    // storm below it. LONGER arrays are fine (slice() reads exactly the
-    // first bands*rowsPerBand slots losslessly), so only a too-short
-    // array fails. Fail loudly; the check rides codegen, zero extra jobs.
+    // storm below it. LONGER arrays are fine (the kernel reads exactly the
+    // first bands*rowsPerBand slots), so only a too-short array fails.
+    // Fail loudly; the check rides codegen, zero extra jobs.
     val expectedSlots = cfg.bands * cfg.rowsPerBand
     val guardedMinhash = when(
       col("minhash").isNull || size(col("minhash")) === 0 ||
@@ -256,35 +269,9 @@ object DedupPipeline {
         lit(s" slots but bands*rowsPerBand = $expectedSlots — the store " +
           "was written under a different banding config; run forceRescan " +
           "to re-fingerprint"))))
-    val slim = banded.select(col("id"), guardedMinhash.as("minhash"), col("simhash"))
-    val minhashBands = LSH.explodeBands(slim, "id", "minhash",
-      cfg.bands, cfg.rowsPerBand, carry = Seq("simhash"))
-    // extra containment channel: prefix-shingle bands at TWO lengths (m
-    // and m/2). P=1 for prefix truncations holds only while the truncated
-    // side still carries >= m shingles (a shorter doc hashes its full
-    // shorter array — never equal to an m-prefix hash); the half-length
-    // level pushes the floor down to m/2 shingles (~m/2+k-1 tokens).
-    // Below that a doc is under this channel's floor (exact/minhash/anchor
-    // still see it). Hashes are computed per ROW before the explode, so
-    // the wide shingle array never enters the banding shuffle; distinct
-    // band ids keep the bucket spaces disjoint, and the downstream pair
-    // distinct absorbs pairs colliding at both levels.
-    val mHalf = math.max(2, cfg.prefixBandShingles / 2)
-    val prefixBand = banded.select(col("id"), col("simhash"),
-      lit(cfg.bands).as("band"),
-      LSH.prefixBandHash(col("shingles"), cfg.prefixBandShingles).as("band_hash"))
-      .unionByName(banded.select(col("id"), col("simhash"),
-        lit(cfg.bands + 2).as("band"),
-        LSH.prefixBandHash(col("shingles"), mHalf).as("band_hash")))
-    // second containment channel: winnowed anchor-pair bands — offset-
-    // invariant, so middle-of-document quotes collide too. Hashes are
-    // computed per ROW pre-explode; the shingle array never enters the
-    // banding shuffle.
-    val anchorBands = banded.select(col("id"), col("simhash"),
-      lit(cfg.bands + 1).as("band"),
-      explode(LSH.anchorBandHashes(col("shingles"), cfg.anchorModulus))
-        .as("band_hash"))
-    minhashBands.unionByName(prefixBand).unionByName(anchorBands)
+    banded.select(col("id"), col("simhash"),
+      inline(LSH.bandKeys(guardedMinhash, col("shingles"), cfg.bands, cfg.rowsPerBand,
+        cfg.prefixBandShingles, cfg.anchorModulus)))
   }
 
   /** The fast tier's band rows: `fastPathBands` equal slices of the 64-bit
@@ -304,7 +291,9 @@ object DedupPipeline {
     * hashes are pure functions of the signature columns, never of the id,
     * so rows computed in string-id space and dictionary-code space agree.
     */
-  private[graft] def allChannelBandRows(df: DataFrame, cfg: DedupConfig): DataFrame = {
+  private[graft] def allChannelBandRows(df: DataFrame): DataFrame = {
+    // the channel shapes are fixed members, equal in every config
+    val cfg = DedupConfig()
     val full = fullBandRows(df.filter(size(col("shingles")) > 0), cfg)
       .select("id", "band", "band_hash")
     val fast = simhashSliceRows(df, cfg)
@@ -589,6 +578,10 @@ object DedupPipeline {
     * the pair/verify/union-find shuffles are the byte-volume hot spots at
     * web scale, and a ~50 B url on every pair row roughly triples them.
     * Original ids are restored on the final (small) clusters table only.
+    *
+    * Input ids (`idCol`) must be unique: the cluster tail elects a
+    * representative by id, so a repeated id yields repeated output rows,
+    * each flagged like the others.
     */
   def run(spark: SparkSession, pages: DataFrame, idCol: String, textCol: String,
           cfg: DedupConfig = DedupConfig(),
@@ -608,8 +601,9 @@ object DedupPipeline {
     // giant plan's codegen + task-binary cost even on a cache hit. The
     // eager checkpoint runs extraction exactly once as one clean job and
     // truncates every consumer's plan to a checkpoint scan (guide §3.3:
-    // materializing an intermediate truncates the plan), with honest row
-    // stats for the join planning downstream.
+    // materializing an intermediate truncates the plan). It does not
+    // improve the optimizer's size estimate: the checkpoint keeps the
+    // estimate of the plan it cut.
     val slim = mat(keyed.select(
       col("id"),
       length(col("__text")).as("order_len"),
@@ -685,8 +679,9 @@ object DedupPipeline {
     // run()'s slim: every consumer (hash groups, kind join, exact edges)
     // previously dragged the state-scan + dictionary-join subtree into its
     // stage plan, and the delta path's many broadcast subqueries raced to
-    // fill the lazy cache. One clean slim pass (3 narrow columns), honest
-    // stats downstream.
+    // fill the lazy cache. One clean slim pass (3 narrow columns),
+    // evaluated once; consumers read a truncated plan (the size estimate
+    // stays that of the plan it cut).
     val fastObs = org.apache.spark.sql.Observation()
     val slim = mat(keyed.select("id", "order_len", "content_hash", "n_shingles")
       .observe(fastObs,
@@ -835,10 +830,11 @@ object DedupPipeline {
       // lazy cache: filled by the subset materialization below
       mates.union(focusReps).distinct().cache()
     }
-    // MATERIALIZE the subset (not just cache): a live semi-join plan
-    // carries a near-zero size estimate into nearEdges' internal joins and
-    // flips them to pathological broadcasts; the checkpointed frame gets
-    // honest stats, same as the full path's materialization points
+    // MATERIALIZE the subset (not just cache): nearEdges consumes it ~10
+    // times, so the state scan, the frontier semi-join and the dictionary
+    // join run once, and every consumer reads a truncated plan. The
+    // checkpoint keeps the size estimate of the plan it cut; it buys one
+    // evaluation, not better stats
     val subsetReps = mat(repSigs.join(frontier, Seq("id"), "left_semi"))
     val codedAssign = assignEdges.toDF("sid_a", "sid_b")
       .join(dict.select(col("sid").as("sid_a"), col("id").as("a")), "sid_a")
@@ -869,7 +865,7 @@ object DedupPipeline {
   }
 
   /** Shared pipeline tail: exact edges from the slim universe, near edges
-    * from rep signatures, union-find, kind labeling, representative window.
+    * from rep signatures, union-find, then [[clusterTail]].
     *
     * @param slim       (id, order_len, content_hash) for EVERY row — the
     *                   cluster universe
@@ -919,26 +915,35 @@ object DedupPipeline {
     }
     val edges = extraEdges.foldLeft(exact.union(near))(_ union _)
 
-    val clustered =
-      Clustering.clusters(spark, slim, "id", edges, cfg.maxUnionFindIters, mat)
+    clusterTail(slim, hashGroups,
+      Clustering.unionFind(spark, edges, cfg.maxUnionFindIters, mat))
+  }
 
-    // kind: exact if the row shares a content_hash with ≥2 rows; near if in a
-    // multi-row cluster otherwise; unique for singletons. hash_n comes from
-    // the shared hashGroups agg — already computed (and cached) for rep
-    // selection, so no second content_hash exchange runs here.
-    val hashCounts = hashGroups.select("content_hash", "hash_n")
-    val clusterSizes = clustered.groupBy("cluster_id").agg(count(lit(1)).as("cluster_n"))
-
-    val out = clustered
-      .join(slim, "id")
-      .join(hashCounts, "content_hash")
-      .join(clusterSizes, "cluster_id")
-      .withColumn("kind",
-        when(col("hash_n") > 1, lit("exact"))
+  /** Cluster table (id, cluster_id, is_representative, kind) of the slim
+    * universe from union-find `labels` (id, cluster_id): a row no edge
+    * touched clusters with itself.
+    *
+    *  - The universe is `slim` itself: its dictionary-coded ids are unique
+    *    by construction, so it needs no distinct.
+    *  - kind: exact if the row shares its content_hash with another row,
+    *    read off `hashGroups` by id — a row that is not its hash group's
+    *    representative has a copy, and a representative has one iff
+    *    hash_n > 1; else near in a multi-row cluster, else unique.
+    *  - Cluster size and representative ([[RepresentativeOrder]]) come from
+    *    ONE aggregate on cluster_id joined back once
+    *    ([[Clustering.withSizesAndRepresentatives]]).
+    */
+  private[graft] def clusterTail(slim: DataFrame, hashGroups: DataFrame,
+                                 labels: DataFrame): DataFrame = {
+    val rows = slim
+      .join(labels, Seq("id"), "left")
+      .join(hashGroups.select("id", "hash_n"), Seq("id"), "left")
+      .select(col("id"), coalesce(col("cluster_id"), col("id")).as("cluster_id"),
+        col("order_len"), (col("hash_n").isNull || col("hash_n") > 1).as("exact"))
+    Clustering.withSizesAndRepresentatives(rows, RepresentativeOrder, "cluster_n")
+      .select(col("id"), col("cluster_id"), col("is_representative"),
+        when(col("exact"), lit("exact"))
           .when(col("cluster_n") > 1, lit("near"))
-          .otherwise(lit("unique")))
-
-    Clustering.withRepresentatives(out, RepresentativeOrder)
-      .select("id", "cluster_id", "is_representative", "kind")
+          .otherwise(lit("unique")).as("kind"))
   }
 }

@@ -615,7 +615,7 @@ object Checkpoints {
     // instead of a corpus-wide bootstrap pass
     val (bandIndex, snap) =
       if (cfg0.deltaCluster) {
-        val (index, s) = ensureBandIndex(spark, in.snap, cfg0, in.epoch)
+        val (index, s) = ensureBandIndex(spark, in.snap, in.epoch)
         (Some(index), s)
       } else (None, in.snap)
     // delta-incremental clustering (cfg.deltaCluster): re-derive near
@@ -888,11 +888,10 @@ object Checkpoints {
     * needed under the state lease; returns the index frame (id, band,
     * band_hash).
     */
-  def ensureBandIndex(spark: SparkSession, stateDir: String,
-                      cfg: DedupConfig): DataFrame =
+  def ensureBandIndex(spark: SparkSession, stateDir: String): DataFrame =
     withStateLock(spark, stateDir) {
       val snap = snapshot(spark, stateDir)
-      val (index, out) = ensureBandIndex(spark, snap, cfg, nextEpoch(spark, stateDir) - 1)
+      val (index, out) = ensureBandIndex(spark, snap, nextEpoch(spark, stateDir) - 1)
       if (out != snap) commit(spark, out, "")
       index
     }
@@ -912,9 +911,9 @@ object Checkpoints {
     * prunes them during maintenance. The returned snapshot carries the
     * index's knobs and `through_epoch` for the caller's line to publish.
     */
-  private def ensureBandIndex(spark: SparkSession, snap: Snapshot, cfg: DedupConfig,
+  private def ensureBandIndex(spark: SparkSession, snap: Snapshot,
                               through: Long): (DataFrame, Snapshot) = {
-    def rows(sigs: DataFrame) = DedupPipeline.allChannelBandRows(sigs, cfg)
+    def rows(sigs: DataFrame) = DedupPipeline.allChannelBandRows(sigs)
     val out =
       if (snap.gens.contains("bands") && snap.knobs == BandIndexFormat) {
         if (snap.through < through)

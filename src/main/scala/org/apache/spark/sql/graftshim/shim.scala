@@ -3,6 +3,7 @@ package org.apache.spark.sql.graftshim
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.expressions.Expression
 import org.apache.spark.sql.classic.ExpressionUtils
+import org.apache.spark.sql.internal
 
 /** Bridge between public `Column` API and Catalyst `Expression`s.
   *
@@ -15,6 +16,16 @@ import org.apache.spark.sql.classic.ExpressionUtils
 object shim {
   def toColumn(e: Expression): Column = ExpressionUtils.column(e)
   def toExpression(c: Column): Expression = ExpressionUtils.expression(c)
+
+  /** A sort-order column (`col.desc`, `col.asc_nulls_last`, …) as (key,
+    * descending, nulls last); None for a plain column.
+    */
+  def sortOrder(c: Column): Option[(Column, Boolean, Boolean)] = c.node match {
+    case internal.SortOrder(child, direction, nulls, _) =>
+      Some((new Column(child), direction == internal.SortOrder.Descending,
+        nulls == internal.SortOrder.NullsLast))
+    case _ => None
+  }
 
   /** Drain the listener bus (private[spark]) — lets metric listeners read
     * their accumulated maxima deterministically after a job completes.

@@ -147,7 +147,7 @@ class DeltaClusterSpec extends SparkTestBase {
       Checkpoints.runEpoch(spark, rest, "url", "text", dir)
       val sigs = Checkpoints.liveSignatures(spark, dir)
       assert(sigs.filter($"n_shingles" === 0).isEmpty != first.fastPath)
-      val index = Checkpoints.ensureBandIndex(spark, dir, DedupConfig())
+      val index = Checkpoints.ensureBandIndex(spark, dir)
       val noAssigns = Seq.empty[(String, String)].toDF("sid_a", "sid_b")
       val (_, log) = withQueryLog {
         DedupPipeline.clusterSignatures(spark, sigs, None).collect()
@@ -172,7 +172,7 @@ class DeltaClusterSpec extends SparkTestBase {
       table(dir, "bands")
         .as[(String, Int, Long)].collect().toSet
     def freshRows(): Set[(String, Int, Long)] =
-      DedupPipeline.allChannelBandRows(Checkpoints.readSignatures(spark, dir), cfg)
+      DedupPipeline.allChannelBandRows(Checkpoints.readSignatures(spark, dir))
         .as[(String, Int, Long)].collect().toSet
     assert(indexRows() == freshRows(),
       "index after bootstrap must equal freshly computed channel rows")
@@ -200,7 +200,7 @@ class DeltaClusterSpec extends SparkTestBase {
     try out.write((lines.init :+ planted).mkString("", "\n", "\n").getBytes("UTF-8"))
     finally out.close()
     val plantedGen = Checkpoints.generationPath(spark, dir, "bands")
-    val idx = Checkpoints.ensureBandIndex(spark, dir, cfg)
+    val idx = Checkpoints.ensureBandIndex(spark, dir)
     assert(Checkpoints.generationPath(spark, dir, "bands") != plantedGen,
       "knob change must rebuild the index into a new generation")
     assert(idx.count() == freshRows().size)

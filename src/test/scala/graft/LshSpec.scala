@@ -55,15 +55,15 @@ class LshSpec extends SparkTestBase {
     val a = Seq(1L, 2L) ++ region ++ Seq(3L, 4L)
     val b = region
     val df = Seq((a, b)).toDF("sa", "sb").select(
-      LSH.anchorBandHashes(col("sa"), 6).as("ha"),
-      LSH.anchorBandHashes(col("sb"), 6).as("hb"))
+      BandOracle.anchorBandHashes(col("sa"), 6).as("ha"),
+      BandOracle.anchorBandHashes(col("sb"), 6).as("hb"))
     val r = df.select(size(array_intersect(col("ha"), col("hb"))).as("shared"),
       size(col("ha")).as("na")).first()
     assert(r.getInt(0) == 3, "all three adjacent selected pairs must be shared")
     assert(r.getInt(1) == 3)
     // a doc with < 2 selected shingles emits no anchor rows
     val empty = Seq(Seq(1L, 7L, 13L)).toDF("s")
-      .select(size(LSH.anchorBandHashes(col("s"), 6))).first().getInt(0)
+      .select(size(BandOracle.anchorBandHashes(col("s"), 6))).first().getInt(0)
     assert(empty == 0)
   }
 

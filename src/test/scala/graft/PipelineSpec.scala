@@ -248,16 +248,16 @@ class PipelineSpec extends SparkTestBase {
     } finally spark.conf.set("spark.sql.adaptive.enabled", prevAqe)
   }
 
-  test("withRepresentatives: the salted two-phase election equals the single-window top-1") {
-    // clusters of very different sizes incl. one far above the salt count,
-    // plus ties on the first order column so the id tiebreak matters
+  test("withRepresentatives: the aggregate election is the window top-1") {
+    // clusters of very different sizes incl. one of 700 members, plus
+    // ties on the first order column so the id tiebreak matters
     val rows = for (i <- 0 until 900) yield {
       val cluster = if (i < 700) "mega" else s"c${i % 13}"
       (f"id-$i%04d", cluster, (i % 7).toLong)
     }
     val df = rows.toDF("id", "cluster_id", "order_len")
     val orderCols = Seq($"order_len".desc, $"id".asc)
-    val got = Clustering.withRepresentatives(df, orderCols, salts = 8)
+    val got = Clustering.withRepresentatives(df, orderCols)
       .filter($"is_representative").select("cluster_id", "id")
       .as[(String, String)].collect().toMap
     val w = org.apache.spark.sql.expressions.Window
@@ -266,7 +266,7 @@ class PipelineSpec extends SparkTestBase {
       .filter($"rn" === 1).select("cluster_id", "id")
       .as[(String, String)].collect().toMap
     assert(got == expected,
-      "salted election must elect exactly the single-window winners")
+      "the aggregate election must elect exactly the single-window winners")
     // exactly one representative per cluster, none lost on the mega group
     assert(got.size == expected.size && got.contains("mega"))
   }
