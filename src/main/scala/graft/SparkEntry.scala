@@ -511,7 +511,7 @@ object SparkEntry {
     }),
 
     // J5/A1: exact-duplicate grouping by content hash (hash-agg count+min,
-    // no collect_list — scale-safe for mega groups; Clustering.exactEdges
+    // no collect_list — scale-safe for mega groups; Clustering.exactEdgesFrom
     // derives its edges from this same aggregate shape)
     "q_exact_dedup" -> ((s, dir) => {
       t(s, dir, "documents")

@@ -2,7 +2,6 @@ package graft.actions
 
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.Column
 
 /** Action planning over a clusters table — the reference's stage 7, which
   * is specified by config/types/CLI but stubbed in code (image-deduper
@@ -103,11 +102,4 @@ object Actions {
   def tombstones(executed: DataFrame): DataFrame =
     executed.filter(col("success") && col("action").isin("delete", "move"))
       .select("id", "original_id", "action")
-
-  /** Apply executed actions to a pages-shaped table: anti-join out the
-    * tombstoned rows. One shuffle (or broadcast) on the id column.
-    */
-  def applyActions(pages: DataFrame, idCol: Column, executed: DataFrame): DataFrame =
-    pages.join(tombstones(executed).select(col("id").as("__rm")),
-      idCol === col("__rm"), "left_anti")
 }

@@ -156,9 +156,9 @@ object Ann {
     val exploded = bandedSignatures(vecs, idCol, vecCol, nPlanes, bands, seed)
     // the DEFENDED pair generator — salted hot buckets, size caps, logged
     // drops — not a raw band self-join: one unsalted join task per bucket
-    // goes quadratic at corpus scale. Same machinery as
-    // [[embeddingNearDupsLsh]] and the shingle path; kNN needs DIRECTED
-    // pairs, so the unordered output is mirrored (slim ids only).
+    // goes quadratic at corpus scale. Same machinery as the shingle path;
+    // kNN needs DIRECTED pairs, so the unordered output is mirrored (slim
+    // ids only).
     val undirected = graft.lsh.LSH.candidatePairs(exploded, "id",
       maxBucketSize = maxBucketSize)
     val pairs = undirected.select(col("id_a").as("id"), col("id_b").as("nbr_id"))
@@ -215,8 +215,8 @@ object Ann {
   final case class IvfIndex(ranked: DataFrame, lists: DataFrame)
 
   /** Build the IVF index once — [[ivfQuery]] can then be evaluated at any
-    * `nProbe` without re-running k-means or the assignment (the recall
-    * curve and nProbe calibration depend on this split).
+    * `nProbe` without re-running k-means or the assignment, and
+    * [[semDeDup]] pairs within the same inverted lists.
     */
   def ivfIndex(vecs: DataFrame, idCol: String, vecCol: String,
                nCells: Int = 0, maxListSize: Int = 100000,
@@ -301,85 +301,10 @@ object Ann {
       .select("id", "nbr_id", "cos", "rank")
   }
 
-  /** Measured recall-vs-nProbe curve against the exact brute-force oracle
-    * (ascending nProbe → non-decreasing recall: probes only grow). The
-    * index is built ONCE; each point reuses it. This is the operator's
-    * probe-cost dial: recall buys linearly more probe work.
-    */
-  def ivfRecallCurve(vecs: DataFrame, idCol: String, vecCol: String, k: Int,
-                     nProbes: Seq[Int], nCells: Int = 0,
-                     maxListSize: Int = 100000, kmeansIters: Int = 2,
-                     mat: graft.state.Materializer = graft.state.Materializer.local)
-      : Seq[(Int, Double)] = {
-    val idx = ivfIndex(vecs, idCol, vecCol, nCells, maxListSize, kmeansIters, mat)
-    // materialize the O(n²) oracle ONCE: it is re-read by the denominator
-    // count plus every curve point's semi-join — a live plan would re-run
-    // the full cross join + window per probe candidate
-    val exact = mat(bruteForceKnn(vecs, vecs, idCol, vecCol, k)
-      .select(col("id"), col("nbr_id")))
-    val exactN = exact.count().toDouble
-    nProbes.sorted.map { p =>
-      val hit = ivfQuery(idx, k, p).select(col("id"), col("nbr_id"))
-        .join(exact, Seq("id", "nbr_id"), "left_semi").count()
-      p -> (if (exactN == 0) 1.0 else hit / exactN)
-    }
-  }
-
-  /** Smallest candidate nProbe whose MEASURED recall meets `target` (falls
-    * back to the largest candidate, logged, when none does) — the
-    * auto-derivation an operator runs once on a corpus sample instead of
-    * hand-picking the probe count. Returns the choice plus the full curve
-    * so the trade is visible.
-    */
-  def nProbeForRecall(vecs: DataFrame, idCol: String, vecCol: String, k: Int,
-                      target: Double, candidates: Seq[Int] = Seq(4, 8, 12, 16),
-                      nCells: Int = 0, maxListSize: Int = 100000,
-                      kmeansIters: Int = 2,
-                      mat: graft.state.Materializer = graft.state.Materializer.local)
-      : (Int, Seq[(Int, Double)]) = {
-    require(candidates.nonEmpty, "need at least one candidate nProbe")
-    // every index knob forwards: calibrating on a default-configured index
-    // and deploying with different centroids/caps is exactly the
-    // hand-tuning error this helper exists to prevent
-    val curve = ivfRecallCurve(vecs, idCol, vecCol, k, candidates, nCells,
-      maxListSize, kmeansIters, mat = mat)
-    curve.find(_._2 >= target) match {
-      case Some((p, _)) => (p, curve)
-      case None =>
-        System.err.println(
-          s"[ivf] no candidate nProbe reaches recall $target " +
-            s"(curve: ${curve.mkString(", ")}); using ${curve.last._1}")
-        (curve.last._1, curve)
-    }
-  }
-
-  /** Embedding-cosine near-duplicate pairs via hyperplane LSH buckets — the
-    * SCALE path for the embedding leg of the dedup suite. Candidate pairs
-    * come from `graft.lsh.LSH.candidatePairs` over banded signatures (ids
-    * only — salting defuses hot buckets, mega-buckets are capped with
-    * logged drops, exactly as for text MinHash); vectors re-join for
-    * scoring the distinct survivors. Recall is the banding collision
-    * probability (1-(1-p^r)^b with p = 1-θ/π), so defaults (32 planes,
-    * 8 bands × 4 bits) target HIGH thresholds (≥0.8 → recall ≥0.98); use
-    * [[embeddingNearDups]] as the exact oracle at test scale.
-    */
-  def embeddingNearDupsLsh(vecs: DataFrame, idCol: String, vecCol: String,
-                           threshold: Double, nPlanes: Int = 32, bands: Int = 8,
-                           seed: Long = 42L): DataFrame = {
-    val exploded = bandedSignatures(vecs, idCol, vecCol, nPlanes, bands, seed)
-    val pairs = graft.lsh.LSH.candidatePairs(exploded, "id")
-    val qa = scoringTable(vecs, idCol, vecCol, "id_a", "qv", "na")
-    val qb = scoringTable(vecs, idCol, vecCol, "id_b", "qw", "nb")
-    pairs.join(qa, "id_a").join(qb, "id_b")
-      .withColumn("cos", pairCos(col("na"), col("nb"), qdot(col("qv"), col("qw"))))
-      .filter(col("cos") >= threshold)
-      .select("id_a", "id_b", "cos")
-  }
-
   /** Embedding-cosine near-duplicate pairs, exact all-pairs: unordered pairs
-    * above a cosine threshold. O(n²) BY DESIGN — this is the correctness
-    * baseline/oracle that [[embeddingNearDupsLsh]] is validated against at
-    * test scale; it must never be the production path at corpus scale.
+    * above a cosine threshold. O(n²) BY DESIGN — the exact baseline for
+    * test-scale inputs; it must never be the production path at corpus
+    * scale.
     */
   def embeddingNearDups(vecs: DataFrame, idCol: String, vecCol: String,
                         threshold: Double): DataFrame = {

@@ -23,26 +23,18 @@ object Clustering {
 
   /** Exact-duplicate edges: rows sharing a content hash are linked to the
     * group's min id (reference `deduplication/mod.rs:12-32`: HashMap by
-    * crypto hash). Min via groupBy + re-join, NOT a window and NOT
-    * collect_list: a mega exact-group (the empty page, parked-domain
-    * template — millions of rows behind one hash at web scale) would pin
-    * ALL its rows to one window task every run (the same straggler shape
-    * largeStar avoids below), while the groupBy combines map-side and AQE
-    * can split the skewed enrichment-join partitions. Singleton groups are
-    * dropped BEFORE the join — at web scale most hashes are unique, so the
-    * build side shrinks to the duplicate classes only.
-    */
-  def exactEdges(sigs: DataFrame, idCol: String, hashCol: String): DataFrame = {
-    val slim = sigs.select(col(idCol), col(hashCol))
-    val roots = slim.groupBy(col(hashCol))
-      .agg(min(col(idCol)).as("root"), count(lit(1)).as("hash_n"))
-    exactEdgesFrom(slim, roots, idCol, hashCol)
-  }
-
-  /** [[exactEdges]] with the per-hash (min id, count) aggregate supplied by
+    * crypto hash). The per-hash (min id, count) aggregate is supplied by
     * the caller — the pipeline already computes exactly this aggregate for
     * representative selection and kind labeling (and caches it), so the
-    * shared form avoids re-running the content-hash exchange.
+    * edges cost no second content-hash exchange. Min via groupBy + re-join,
+    * NOT a window and NOT collect_list: a mega exact-group (the empty page,
+    * parked-domain template — millions of rows behind one hash at web
+    * scale) would pin ALL its rows to one window task every run (the same
+    * straggler shape largeStar avoids below), while the groupBy combines
+    * map-side and AQE can split the skewed enrichment-join partitions.
+    * Singleton groups are dropped BEFORE the join — at web scale most
+    * hashes are unique, so the build side shrinks to the duplicate classes
+    * only.
     *
     * @param roots (hashCol, root = group min id, hash_n = group size);
     *              extra columns are ignored
@@ -384,7 +376,7 @@ object Clustering {
     * the aggregate combines map-side: no task ever sees a whole cluster
     * (a window partitioned by cluster_id would pin a web-scale
     * mega-cluster — the empty page, a parked-domain template — to ONE task
-    * every epoch, the straggler shape [[exactEdges]] avoids).
+    * every epoch, the straggler shape [[exactEdgesFrom]] avoids).
     */
   private[graft] def withSizesAndRepresentatives(clustered: DataFrame,
                                                  orderCols: Seq[Column],

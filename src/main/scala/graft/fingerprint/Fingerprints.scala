@@ -77,12 +77,6 @@ object Fingerprints {
     */
   def contentHash(text: Column): Column = sha2(text, 256)
 
-  /** Fallback fingerprint when content is unusable (reference
-    * `generate_fallback_hash`, `file_processing.rs:182-200`): hash of the
-    * row's metadata columns.
-    */
-  def fallbackHash(cols: Column*): Column = xxhash64(cols: _*)
-
   /** MinHash-128 signature column over distinct k-shingles. */
   def minhash(text: Column, k: Int = 3, numPerms: Int = NumPerms): Column =
     shim.toColumn(MinHashSignature(shim.toExpression(shingleHashes(text, k)), numPerms, HashSeed))
@@ -112,11 +106,7 @@ object Fingerprints {
   /** Pluggable extractor strategies — the seam the reference fills with a
     * platform-specific external-process decoder (S12, macOS
     * `sips`/`qlmanage` shell-outs, `src/platform/macos.rs:53-322`). Here
-    * both strategies are in-JVM Column functions; the actual
-    * external-process path is [[graft.sources.ExternalPipe]] (one filter
-    * process per partition, streamed rows, bounded backpressure) — a
-    * DataFrame transform rather than a Column, since a process is not an
-    * expression.
+    * every strategy is an in-JVM Column function.
     *
     *  - "html":      full boilerplate-dropping extraction ([[ExtractText]])
     *  - "plaintext": UTF-8 decode + whitespace collapse only (for corpora

@@ -28,8 +28,8 @@ object LSH {
 
   /** Bucket value for slice `bandCol` of a 64-bit fingerprint column cut
     * into `width`-bit slices — the ONE implementation shared by the batch
-    * fast path, the streaming fast path and the ANN hyperplane banding, so
-    * the three stay bit-identical by construction.
+    * fast path and the ANN hyperplane banding, so the two stay
+    * bit-identical by construction.
     */
   def slicedBandHash(sigCol: String, bandCol: String, width: Int): Column = {
     require(width >= 1 && width <= 64, s"slice width $width out of range")
@@ -51,7 +51,9 @@ object LSH {
     * never equal an m-prefix hash. The pipeline therefore bands this
     * channel at TWO lengths (m and m/2 — `fullBandRows`), pushing the
     * floor down to m/2 shingles; below that a truncation is only
-    * discoverable by the anchor/minhash channels.
+    * discoverable by the anchor/minhash channels. The pipeline's keys come
+    * from the fused [[bandKeys]] kernel; this combinator form is the
+    * specification BandKeysSpec pins it against.
     */
   def prefixBandHash(shingles: Column, m: Int): Column =
     xxhash64(slice(shingles, 1, m))

@@ -87,31 +87,6 @@ object Multimodal {
       .select(col(idCol), col("frame_idx"))
   }
 
-  /** The PRODUCTION frame-extraction recipe the stand-in has always
-    * promised: the container DECODE step runs in a long-lived external
-    * process per PARTITION ([[graft.sources.ExternalPipe]] — the engine's
-    * documented seam for codec sidecars, ffprobe-style). The sidecar
-    * receives each blob hex-encoded on one line (hex, not base64: Spark's
-    * base64 MIME-wraps past 76 chars, and a wrapped payload cannot honor
-    * the pipe's one-line-per-row contract) and must answer exactly one
-    * line: the decimal frame count ("" for undecodable → row dropped, the
-    * quarantine posture). The Spark-side shape is IDENTICAL to
-    * [[sampleFrames]]: one (id, frame_idx) row per sampled frame — swap
-    * `cmd` for a real codec binary and nothing downstream changes.
-    */
-  def sampleFramesVia(df: DataFrame, idCol: String, blobCol: String,
-                      everyNth: Int, cmd: Seq[String]): DataFrame = {
-    val encoded = df.select(col(idCol), hex(col(blobCol)).as("__hex"))
-    val piped = graft.sources.ExternalPipe.pipePartitions(
-      encoded, "__hex", "__frames", cmd)
-    piped.select(col(idCol),
-        col("__frames").cast("long").as("n_frames"))
-      .filter(col("n_frames").isNotNull && col("n_frames") > 0)
-      .withColumn("frame_idx",
-        explode(sequence(lit(0L), col("n_frames") - 1, lit(everyNth.toLong))))
-      .select(col(idCol), col("frame_idx"))
-  }
-
   /** Full metadata projection for a binary column: real sniffing + byte
     * stats + REAL header dimensions where the format carries them (PNG/
     * GIF/JPEG/BMP), falling back to the stand-in metadata for opaque

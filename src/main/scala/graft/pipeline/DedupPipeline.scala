@@ -571,8 +571,8 @@ object DedupPipeline {
     * out of the exact-stage shuffles, and (b) removes identical-text LSH
     * mega-buckets (the empty page, parked-domain boilerplate — they collide
     * in ALL bands and pair quadratically) by construction; exact-group
-    * members reconnect to their rep (= group min id, matching exactEdges'
-    * root) through union-find.
+    * members reconnect to their rep (= group min id, matching
+    * exactEdgesFrom's root) through union-find.
     *
     * All internal stages run on 8-byte dictionary codes, not url strings:
     * the pair/verify/union-find shuffles are the byte-volume hot spots at
@@ -610,7 +610,7 @@ object DedupPipeline {
       Fingerprints.contentHash(col("__text")).as("content_hash")))
 
     // ONE aggregation serves both downstream needs: the representative
-    // (min id ≡ exactEdges root) per content_hash that enters the near-dup
+    // (min id ≡ exactEdgesFrom root) per content_hash that enters the near-dup
     // stage, and the per-hash multiplicity the kind labeling reads later —
     // computing them separately would run the same exchange twice
     val hashGroups = hashGroupsOf(slim)
@@ -890,8 +890,8 @@ object DedupPipeline {
                                extraEdges: Option[DataFrame] = None): DataFrame = {
 
     // reuse the cached hashGroups aggregate as the per-hash min/count side:
-    // running Clustering.exactEdges here would re-run the same
-    // content-hash exchange it already paid for
+    // aggregating the content hashes again here would re-run the same
+    // exchange it already paid for
     val exact = Clustering.exactEdgesFrom(
       slim.select("id", "content_hash"),
       hashGroups.select(col("content_hash"), col("id").as("root"),

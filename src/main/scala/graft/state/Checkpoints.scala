@@ -280,33 +280,11 @@ object Checkpoints {
       else spark.read.parquet(p)
     }
 
-  /** Layout-aware read of the executed-actions table; None if no action
-    * ever executed. The executed table shares the store's bucket layout:
-    * its hottest consumer is [[liveSignatures]]'s tombstone anti-join on
-    * `id` — with BOTH scans carrying HashPartitioning(id, N), the live
-    * view is computed with zero exchange (pinned by BucketedStateSpec).
-    */
-  def readExecuted(spark: SparkSession, stateDir: String): Option[DataFrame] =
-    readIdKeyed(spark, snapshot(spark, stateDir), "executed")
-
-  /** Point lookup over the signature store — the reference's
-    * `find_new_images` chunked RocksDB point-lookups (db.rs:132-164)
-    * re-expressed for the bucketed layout: an id equality/IN predicate
-    * prunes the scan to the matching buckets (`SelectedBucketsCount:
-    * k out of N` in the plan), reading ~k/N of the store's files — the
-    * closest a distributed columnar store gets to an O(1) keyed get, and
-    * what makes "inspect these 50 urls" interactive on a 10^12-row store.
-    * Plain layout falls back to a full scan with the filter pushed to
-    * parquet. Pruning is pinned by BucketedStateSpec.
-    */
-  def signaturesFor(spark: SparkSession, stateDir: String,
-                    ids: Seq[String]): DataFrame =
-    readSignatures(spark, stateDir).filter(col("id").isin(ids: _*))
-
   /** Layout-aware scan of the persisted signatures. In the bucketed layout
     * the scan carries HashPartitioning(id, N), so the resume/tombstone/
     * as-of anti-joins on `id` need no exchange on the state side — the
-    * side that grows with corpus age (see DedupConfig.stateBuckets).
+    * side that grows with corpus age (see DedupConfig.stateBuckets) — and
+    * an `id` equality/IN filter reads only the matching buckets.
     */
   def readSignatures(spark: SparkSession, stateDir: String): DataFrame =
     readSignatures(spark, snapshot(spark, stateDir))
@@ -791,7 +769,9 @@ object Checkpoints {
     val out =
       if (nExecuted + nFailed == 0) snap
       else {
-        // the executed table follows the store's bucket layout (see [[readExecuted]])
+        // the executed table follows the store's bucket layout: with both
+        // scans carrying HashPartitioning(id, N), liveSignatures' tombstone
+        // anti-join on `id` runs with zero exchange (BucketedStateSpec)
         val s = snap.orFresh("executed")
         write(spark, s, "executed", executed, s.buckets)
         s

@@ -1,43 +1,16 @@
 package graft.streaming
 
-import java.sql.Timestamp
-
-import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
+import org.apache.spark.sql.{DataFrame, Dataset}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
 
-/** Stream-shaped operators over the events table. The reference is pure
-  * batch with persistent state (SURVEY.md §2.9), so the batch-incremental
-  * path in graft.state is the primary incremental surface; these transforms
-  * are written once and applied to BOTH `spark.read` (batch, oracle-checked)
-  * and `spark.readStream` (Structured Streaming, exercised in the test
-  * suite with watermark + windowed aggregation) — same DataFrame code.
+/** Stream-shaped operators. [[sessionize]]/[[sessionStats]] are batch
+  * window transforms over the events table (oracle-checked by
+  * `q_sessionize`); [[streamingIngest]] feeds a Structured Streaming
+  * source into the batch-incremental state layer in graft.state, the
+  * engine's incremental surface (the reference is pure batch with
+  * persistent state, SURVEY.md §2.9).
   */
 object StreamOps {
-
-  /** Tumbling-hour aggregation per event_type. `sum_value_q` is a quantized
-    * integer sum (exact, order-independent) so batch, streaming and the SQL
-    * oracle agree to the bit.
-    */
-  def hourlyTypeAgg(events: DataFrame): DataFrame =
-    events
-      .withColumn("hour", date_trunc("hour", col("ts")))
-      .groupBy("hour", "event_type")
-      .agg(
-        count(lit(1)).as("n_events"),
-        sum((round(col("value") * 1000).cast("long"))).as("sum_value_q"),
-        approx_count_distinct(col("user_id")).as("approx_users"))
-
-  /** Streaming variant: watermarked sliding window (the readStream path).
-    * Kept separate because `date_trunc` groupBy is append-incompatible
-    * without a watermark column.
-    */
-  def hourlyTypeAggStreaming(events: DataFrame): DataFrame =
-    events
-      .withWatermark("ts", "2 hours")
-      .groupBy(window(col("ts"), "1 hour"), col("event_type"))
-      .agg(count(lit(1)).as("n_events"),
-        sum((round(col("value") * 1000).cast("long"))).as("sum_value_q"))
 
   /** Sessionization: a new session starts after a >30 min gap per user.
     * Pure window functions — lag + conditional cumulative sum — the batch
@@ -51,8 +24,7 @@ object StreamOps {
       .withColumn("prev_ts", lag(col("ts"), 1).over(byUser))
       .withColumn("new_session",
         // millisecond precision (unix_timestamp truncates to whole seconds,
-        // so a 1800.9 s gap read as 1800 would NOT split — disagreeing with
-        // the ms-precise streaming session_window surface); the DuckDB
+        // so a 1800.9 s gap read as 1800 would NOT split); the DuckDB
         // oracle compares epoch_ms identically. The cast accommodates
         // TIMESTAMP_NTZ inputs (parquet events table): unix_millis demands
         // TIMESTAMP, and under the engine's pinned UTC session timezone the
@@ -72,22 +44,6 @@ object StreamOps {
     sessionize(events, gapMinutes)
       .groupBy("user_id")
       .agg(max("session_seq").as("n_sessions"), count(lit(1)).as("n_events"))
-
-  /** Streaming sessionization via the built-in gap-based `session_window`
-    * (the idiomatic Structured Streaming form of [[sessionize]]): one
-    * session row per (user, session window), merged incrementally as events
-    * arrive, closed by the watermark.
-    */
-  def sessionWindows(events: DataFrame, gapMinutes: Int = 30,
-                     watermark: String = "2 hours"): DataFrame =
-    events
-      .withWatermark("ts", watermark)
-      .groupBy(col("user_id"), session_window(col("ts"), s"$gapMinutes minutes"))
-      .agg(count(lit(1)).as("n_events"))
-      .select(col("user_id"), col("session_window.start").as("session_start"),
-        col("session_window.end").as("session_end"), col("n_events"))
-
-  // ── streaming dedup (the engine's own domain, stream-shaped) ──────────
 
   /** Streaming INGESTION into the incremental state layer: every
     * micro-batch commits one epoch ([[graft.state.Checkpoints.runEpoch]]:
@@ -136,245 +92,4 @@ object StreamOps {
         }
       }
       .start()
-
-  /** Streaming EXACT dedup: first-seen page per content hash within the
-    * watermark horizon. `dropDuplicatesWithinWatermark` keys state by the
-    * hash alone and expires it with the watermark — bounded state, the
-    * stream analog of the exact-first batch pass. On a BATCH frame (where
-    * Spark rejects the streaming dedup operator, and "first seen" is
-    * meaningless anyway) the same call keeps the deterministic min-id row
-    * per hash instead.
-    */
-  def streamingExactDedup(pages: DataFrame, idCol: String, textCol: String,
-                          tsCol: String, watermark: String = "1 hour"): DataFrame = {
-    val hashed = pages.withColumn("content_hash",
-      graft.fingerprint.Fingerprints.contentHash(col(textCol)))
-    if (hashed.isStreaming)
-      hashed.withWatermark(tsCol, watermark)
-        .dropDuplicatesWithinWatermark("content_hash")
-    else {
-      import org.apache.spark.sql.expressions.Window
-      val w = Window.partitionBy("content_hash").orderBy(col(idCol))
-      hashed.withColumn("__rn", row_number().over(w))
-        .filter(col("__rn") === 1).drop("__rn")
-    }
-  }
-
-  case class BandedSig(band: Int, band_hash: Long, id: String, simhash: Long,
-                       ts: Timestamp)
-  case class StreamPair(id_a: String, id_b: String, hamming: Int)
-
-  /** Band a pages frame into the fast-path SimHash buckets (4 × 16-bit
-    * slices — the same pigeonhole banding as `DedupPipeline.nearEdgesFast`)
-    * as a typed stream, watermarked on the event-time column so downstream
-    * stateful operators can expire bucket state. Pure projection + explode:
-    * stream-safe.
-    */
-  def bandedSimhash(pages: DataFrame, idCol: String, textCol: String,
-                    tsCol: String, bands: Int = 4,
-                    watermark: String = "1 hour"): Dataset[BandedSig] = {
-    import pages.sparkSession.implicits._
-    val wm = if (pages.isStreaming) pages.withWatermark(tsCol, watermark) else pages
-    wm.select(col(idCol).cast("string").as("id"),
-        graft.fingerprint.Fingerprints.simhash(col(textCol)).as("simhash"),
-        col(tsCol).as("ts"))
-      .withColumn("band", explode(sequence(lit(0), lit(bands - 1))))
-      .withColumn("band_hash",
-        graft.lsh.LSH.slicedBandHash("simhash", "band", 64 / bands))
-      .select("band", "band_hash", "id", "simhash", "ts").as[BandedSig]
-  }
-
-  /** Containment-candidate channel for the stream — the batch PREFIX-BAND
-    * discovery channel (`DedupPipeline.nearEdges`' asymmetric channel,
-    * P = 1 for prefix truncations at any Jaccard), stream-shaped: one
-    * band row per doc whose bucket hash covers its first
-    * `cfg.prefixBandShingles` shingle hashes. Pure projection — stream-
-    * safe. Band id 1000 keeps these buckets disjoint from the SimHash
-    * pigeonhole bands even if both streams are unioned into one state
-    * operator.
-    *
-    * Feed the result to [[streamingNearDupPairs]] with `maxHamming = 64`
-    * (containment pairs are EXEMPT from the SimHash gate — a small quote
-    * inside a large doc has low global similarity by construction, exactly
-    * like the batch exemption) and a TIGHT `maxBucket` (the batch
-    * containment cap posture: a prefix shared by b docs pairs b²/2 rows —
-    * past the cap it is boilerplate). The emitted pairs are CANDIDATES:
-    * the cadence batch pass (README "streaming + batch cadence") confirms
-    * or rejects them by exact Jaccard/suffix-array from persisted
-    * signatures, never re-fingerprinting — this channel only moves their
-    * DISCOVERY from batch cadence to stream latency.
-    */
-  def bandedPrefix(pages: DataFrame, idCol: String, textCol: String,
-                   tsCol: String, watermark: String = "1 hour",
-                   cfg: graft.pipeline.DedupConfig = graft.pipeline.DedupConfig())
-      : Dataset[BandedSig] = {
-    import pages.sparkSession.implicits._
-    val wm = if (pages.isStreaming) pages.withWatermark(tsCol, watermark) else pages
-    wm.select(col(idCol).cast("string").as("id"),
-        graft.fingerprint.Fingerprints.docSignature(col(textCol),
-          cfg.shingleK, cfg.numPerms, cfg.maxShingles).as("ds"),
-        col(tsCol).as("ts"))
-      // shingle-less docs (empty/parked pages, text shorter than one
-      // shingle) never band — same filter as the batch channel
-      // (allChannelBandRows): without it every such doc hashes the same
-      // empty prefix into ONE shared bucket and, with the SimHash gate
-      // disabled on this channel, pairs ungated against up to maxBucket
-      // unrelated empty docs while churning the overflow list forever
-      .filter(size(col("ds.shingles")) > 0)
-      .select(lit(1000).as("band"),
-        graft.lsh.LSH.prefixBandHash(col("ds.shingles"), cfg.prefixBandShingles)
-          .as("band_hash"),
-        col("id"), col("ds.simhash").as("simhash"), col("ts"))
-      .as[BandedSig]
-  }
-
-  /** Streaming containment candidates end-to-end: prefix-band bucketing →
-    * the same capped, event-time-TTL'd bucket state as the near-dup path,
-    * with the SimHash gate disabled (see [[bandedPrefix]]).
-    */
-  def streamingContainmentCandidates(pages: DataFrame, idCol: String,
-                                     textCol: String, tsCol: String,
-                                     watermark: String = "1 hour",
-                                     maxBucket: Int = 32,
-                                     stateTtlMs: Long = 60L * 60 * 1000,
-                                     cfg: graft.pipeline.DedupConfig =
-                                       graft.pipeline.DedupConfig()): Dataset[StreamPair] =
-    streamingNearDupPairs(
-      bandedPrefix(pages, idCol, textCol, tsCol, watermark, cfg),
-      maxHamming = 64, maxBucket = maxBucket, stateTtlMs = stateTtlMs)
-
-  /** Streaming NEAR-dup detection: incremental fast-path LSH via
-    * `flatMapGroupsWithState` keyed by (band, band_hash). Per-bucket state
-    * holds the (id, simhash) members seen so far (hard-capped, mirroring
-    * `maxBucketSize` — a boilerplate mega-bucket saturates its cap instead
-    * of growing without bound); each arriving doc is Hamming-verified
-    * against its bucket's state and emits a pair per match. The same pair
-    * can surface from several bands — downstream consumers dedupe, exactly
-    * like the batch pair-distinct.
-    *
-    * State discipline (the batch side's tombstone/cap posture, stream-shaped):
-    *
-    *  - EVENT-TIME TTL: every bucket arms a timeout `stateTtlMs` past its
-    *    own newest member's EVENT time (floored at the watermark, which
-    *    Spark requires) and is dropped when it fires. Anchoring to the
-    *    bucket's max event ts rather than the current watermark matters:
-    *    the watermark lags one batch behind the data, so a watermark-
-    *    anchored timeout can expire a bucket while partners within
-    *    `stateTtlMs` of its newest member are still in flight. With the
-    *    event-time anchor, expiry costs no in-horizon recall, and total
-    *    state is bounded by the docs seen within watermark + TTL instead
-    *    of the stream's lifetime signature space.
-    *  - CAP OVERFLOW ids are remembered id-only: an id that arrives while
-    *    its bucket is full still gets its pairs emitted once and is
-    *    recorded in the overflow list, so an at-least-once redelivery can
-    *    neither re-emit pairs nor consume member capacity. The list is
-    *    HARD-CAPPED at 4x maxBucket (newest kept): a continuously hot
-    *    boilerplate bucket — whose TTL, being re-anchored by its own
-    *    arrivals, never fires while it stays hot — therefore holds bounded
-    *    state forever rather than growing with every distinct id; past the
-    *    cap a redelivery may re-emit pairs, which downstream dedupe
-    *    absorbs exactly like multi-band duplicates.
-    *
-    * Streaming-only by design: batch near-dup is `DedupPipeline.nearEdgesFast`.
-    */
-  def streamingNearDupPairs(sigs: Dataset[BandedSig], maxHamming: Int = 3,
-                            maxBucket: Int = 64,
-                            stateTtlMs: Long = 60L * 60 * 1000): Dataset[StreamPair] = {
-    import sigs.sparkSession.implicits._
-    // captured OUTSIDE the state function: in batch execution the group
-    // state has no watermark, and getCurrentWatermarkMs/setTimeoutTimestamp
-    // would throw — the batch branch the banding projections support
-    val streaming = sigs.isStreaming
-    // overflow ids are a redelivery shield, not membership — cap the list
-    // so a continuously hot boilerplate bucket holds bounded state (past
-    // the cap a redelivered id may re-emit its pairs, which at-least-once
-    // consumers dedupe anyway, exactly like multi-band duplicates)
-    val maxOverflow = 4 * maxBucket
-    sigs
-      .groupByKey(s => (s.band, s.band_hash))
-      .flatMapGroupsWithState(OutputMode.Append, GroupStateTimeout.EventTimeTimeout) {
-        (_: (Int, Long), rows: Iterator[BandedSig],
-         state: GroupState[(List[(String, Long)], List[String], Long)]) =>
-          if (state.hasTimedOut) {
-            // watermark passed the bucket's horizon: no in-order row can
-            // pair with these members any more — drop the whole bucket
-            state.remove()
-            Iterator.empty
-          } else {
-            var (seen, overflow, maxTs) = state.getOption.getOrElse((Nil, Nil, 0L))
-            val out = List.newBuilder[StreamPair]
-            rows.foreach { r =>
-              maxTs = math.max(maxTs, r.ts.getTime)
-              if (!seen.exists(_._1 == r.id) && !overflow.contains(r.id)) {
-                seen.foreach { case (oid, osim) =>
-                  val h = java.lang.Long.bitCount(r.simhash ^ osim)
-                  if (h <= maxHamming) {
-                    val (a, b) = if (r.id < oid) (r.id, oid) else (oid, r.id)
-                    out += StreamPair(a, b, h)
-                  }
-                }
-                if (seen.size < maxBucket) seen = (r.id, r.simhash) :: seen
-                else overflow = (r.id :: overflow).take(maxOverflow)
-              }
-            }
-            state.update((seen, overflow, maxTs))
-            // anchor the TTL to the bucket's newest EVENT time (the
-            // watermark lags one batch; Spark requires timeout > watermark,
-            // hence the floor); batch mode has no watermark and no timeouts
-            if (streaming)
-              state.setTimeoutTimestamp(
-                math.max(state.getCurrentWatermarkMs(), maxTs) + stateTtlMs)
-            out.result().iterator
-          }
-      }
-  }
-
-  case class UserEvent(user_id: Long, ts: Timestamp)
-  case class UserCount(user_id: Long, n_events: Long)
-
-  /** Custom streaming state via typed `mapGroupsWithState`: a running
-    * per-user event counter that survives across micro-batches — the
-    * KeyValueGroupedDataset custom-state surface (update-mode output).
-    * State per key is one long, expired by an EVENT-TIME TTL keyed to the
-    * watermark: a user idle for `stateTtlMs` of event time emits one final
-    * count row and is dropped, so the key space never grows beyond the
-    * in-horizon active-user set (the stream-side version of the batch
-    * tombstone discipline). Event-time, not processing-time, deliberately:
-    * a processing-time timeout forces Spark to construct a micro-batch
-    * every trigger for the stream's whole life (`shouldRunAnotherBatch`
-    * is unconditionally true), burning a core on empty batches and
-    * making `processAllAvailable` undecidable; the event-time timeout
-    * fires only when the watermark actually advances. The TTL anchors to
-    * the user's own newest event time, not the (one-batch-lagging)
-    * watermark — see [[streamingNearDupPairs]].
-    */
-  def runningUserCounts(events: Dataset[UserEvent],
-                        stateTtlMs: Long = 30L * 60 * 1000,
-                        watermark: String = "10 seconds"): Dataset[UserCount] = {
-    import events.sparkSession.implicits._
-    val streaming = events.isStreaming
-    val wm = if (streaming) events.withWatermark("ts", watermark) else events
-    wm.groupByKey(_.user_id)
-      .mapGroupsWithState(GroupStateTimeout.EventTimeTimeout) {
-        (user: Long, batch: Iterator[UserEvent], state: GroupState[(Long, Long)]) =>
-          if (state.hasTimedOut) {
-            val (total, _) = state.getOption.getOrElse((0L, 0L))
-            state.remove() // final flush for the idle key
-            UserCount(user, total)
-          } else {
-            var (total, maxTs) = state.getOption.getOrElse((0L, 0L))
-            batch.foreach { e =>
-              total += 1
-              maxTs = math.max(maxTs, e.ts.getTime)
-            }
-            state.update((total, maxTs))
-            // batch mode (the isStreaming branch above) has no watermark —
-            // getCurrentWatermarkMs would throw on the very first group
-            if (streaming)
-              state.setTimeoutTimestamp(
-                math.max(state.getCurrentWatermarkMs(), maxTs) + stateTtlMs)
-            UserCount(user, total)
-          }
-      }
-  }
 }

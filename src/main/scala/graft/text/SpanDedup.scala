@@ -98,11 +98,10 @@ object SpanDedup {
     val covered = marked.withColumn("_rn", row_number().over(w))
       .filter(col("_prior").isNotNull || col("_rn") > 1)
       .select(col(idCol), explode(sequence(col("pos"), col("pos") + (window - 1)))
-        .as("cpos"))
+        .as("pos"))
       .distinct()
 
-    val kept = sents.join(covered,
-        sents(idCol) === covered(idCol) && col("pos") === col("cpos"), "left_anti")
+    val kept = sents.join(covered, Seq(idCol, "pos"), "left_anti")
       .groupBy(col(idCol))
       .agg(count(lit(1)).as("_n_kept"), rebuild("_kept"))
 

@@ -146,19 +146,6 @@ class AnnSpec extends SparkTestBase {
     assert(capped.count() > 0)
   }
 
-  test("bucketed near-dups recall >= 0.95 vs exact at high threshold, 10x corpus") {
-    val exact = Ann.embeddingNearDups(vecs10x, "vec_id", "embedding", 0.9)
-      .select("id_a", "id_b").as[(Long, Long)].collect().toSet
-    val lsh = Ann.embeddingNearDupsLsh(vecs10x, "vec_id", "embedding", 0.9)
-      .select("id_a", "id_b").as[(Long, Long)].collect().toSet
-    assert(exact.nonEmpty)
-    val recall = (exact intersect lsh).size.toDouble / exact.size
-    val precisionViolations = (lsh diff exact).size
-    info(s"bucketed-neardup recall = $recall over ${exact.size} exact pairs")
-    assert(recall >= 0.95, s"recall $recall")
-    assert(precisionViolations == 0, "bucketed pairs must be exact-cosine verified")
-  }
-
   /** Hard regime for the probe dial: 60 small clusters in 16-d with strong
     * jitter — √600 ≈ 25 cells cannot isolate 60 clusters, so true
     * neighbors regularly live in a NON-nearest cell and recall genuinely
@@ -181,9 +168,24 @@ class AnnSpec extends SparkTestBase {
     rows.toDF("vec_id", "embedding").cache()
   }
 
-  test("ivf recall-vs-nProbe curve is non-decreasing; calibration picks the knee") {
-    val curve = Ann.ivfRecallCurve(vecsHard, "vec_id", "embedding", k = 3,
-      nProbes = Seq(2, 4, 8, 12, 16))
+  /** Recall of [[Ann.ivfQuery]] at each nProbe against the exact
+    * brute-force kNN, every point read from ONE built index.
+    */
+  private def ivfRecallCurve(vecs: org.apache.spark.sql.DataFrame, k: Int,
+                             nProbes: Seq[Int]): Seq[(Int, Double)] = {
+    val idx = Ann.ivfIndex(vecs, "vec_id", "embedding")
+    val exact = Ann.bruteForceKnn(vecs, vecs, "vec_id", "embedding", k)
+      .select("id", "nbr_id").cache()
+    val exactN = exact.count().toDouble
+    nProbes.map { p =>
+      val hit = Ann.ivfQuery(idx, k, p).select("id", "nbr_id")
+        .join(exact, Seq("id", "nbr_id"), "left_semi").count()
+      p -> hit / exactN
+    }
+  }
+
+  test("ivf recall-vs-nProbe curve is non-decreasing and climbs to >= 0.95") {
+    val curve = ivfRecallCurve(vecsHard, k = 3, nProbes = Seq(2, 4, 8, 12, 16))
     info(s"ivf recall curve @10x hard regime: ${curve.mkString(", ")}")
     // probing MORE cells can only add candidates: recall never drops
     curve.sliding(2).foreach { case Seq((pa, ra), (pb, rb)) =>
@@ -193,16 +195,6 @@ class AnnSpec extends SparkTestBase {
     // at ceiling, or the curve teaches nothing
     assert(curve.head._2 < 0.97, s"regime too easy: ${curve.head}")
     assert(curve.last._2 >= 0.95, s"even nProbe=16 below 0.95: ${curve.last}")
-
-    // auto-derivation reproduces a by-hand read of the same curve
-    val (chosen, curve2) = Ann.nProbeForRecall(vecsHard, "vec_id", "embedding",
-      k = 3, target = 0.95, candidates = Seq(2, 4, 8, 12, 16))
-    val byHand = curve2.find(_._2 >= 0.95).get._1
-    assert(chosen == byHand, s"calibration chose $chosen, curve says $byHand")
-    // and an unreachable target falls back to the largest candidate, logged
-    val (fallback, _) = Ann.nProbeForRecall(vecsHard, "vec_id", "embedding",
-      k = 3, target = 1.01, candidates = Seq(2, 4))
-    assert(fallback == 4)
   }
 
   test("embedding near-dups: identical vectors score 1.0") {

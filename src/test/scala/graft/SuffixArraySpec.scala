@@ -176,17 +176,13 @@ class SuffixArraySpec extends SparkTestBase {
     intercept[IllegalArgumentException](Actions.plan(clusters, "shred"))
   }
 
-  test("applyActions removes only successfully delete/move-tombstoned rows") {
-    val pages = Seq("u1", "u2", "u3", "u4", "u5").toDF("url")
+  test("tombstones keep only successfully executed delete/move rows") {
     val executed = Seq(
       ("u2", "u1", "delete", false, true, null.asInstanceOf[String]),   // removed
       ("u3", "u1", "symlink", false, true, null.asInstanceOf[String]),  // kept (link)
       ("u4", "u1", "move", false, true, null.asInstanceOf[String]),     // removed
       ("u5", "u1", "delete", false, false, "missing_id")                // failed -> kept
     ).toDF("id", "original_id", "action", "dry_run", "success", "error")
-    val surviving = Actions.applyActions(pages, $"url", executed)
-      .as[String].collect().toSet
-    assert(surviving == Set("u1", "u3", "u5"))
     assert(Actions.tombstones(executed).select("id").as[String].collect().toSet
       == Set("u2", "u4"))
   }

@@ -382,23 +382,6 @@ class TextAndMultimodalSpec extends SparkTestBase {
     assert(frames == Seq(0L, 2L))
   }
 
-  test("sampleFramesVia: a real external decode process drives the frame plan e2e") {
-    // the production recipe behind the video stand-in: the container decode
-    // runs in a per-partition sidecar (ExternalPipe), here a deterministic
-    // awk filter that recomputes the stand-in's frame count from the
-    // hex-encoded payload it receives — proving the seam carries a real
-    // process end-to-end with the exact plan shape of the in-JVM stand-in
-    val df = (1 to 300).map(i => (i.toLong, ("frame-bytes " * i).getBytes))
-      .toDF("id", "blob").repartition(3)
-    val awk = Seq("awk", "{ print int((length($0)/2)/250)+1 }")
-    val viaSidecar = Multimodal.sampleFramesVia(df, "id", "blob", everyNth = 2, awk)
-    val standIn = Multimodal.sampleFrames(df, "id", "blob", everyNth = 2)
-    assert(viaSidecar.schema.fieldNames.toSeq == standIn.schema.fieldNames.toSeq)
-    assert(viaSidecar.count() == standIn.count())
-    assert(viaSidecar.except(standIn).count() == 0 &&
-      standIn.except(viaSidecar).count() == 0)
-  }
-
   test("quality score: empty and blank docs score exactly 0") {
     // pre-fix, a contentless doc inherited the 0.1 no-punctuation bonus
     // and outscored all-punctuation text
