@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{DataFrame, SparkSession}
 
 import graft.pages.PagesIO
 import graft.pipeline.DedupConfig
@@ -465,14 +465,16 @@ object Main {
     // S12 seam: derive the text column from a binary payload column with
     // the selected extractor strategy before the pipeline sees it.
     // `stateful` marks the EPOCH BATCH (the --pages load): its sub-document
-    // passes elect against + append to the cross-epoch hash state. The
+    // passes elect against the cross-epoch hash state, and their winners
+    // come back with the frame for the epoch's line to publish. The
     // --texts-from corpus view replays the per-row cleaning batch-pure —
     // it is a read-only id→text lookup, never a state writer, so the
     // corpus-wide passes are excluded from it: the site quota is skipped
     // (extra ids are inert in a lookup; evicted ones are not) and the
     // sub-document flags are rejected at parse time (their elections are
     // not replayable without the per-epoch state).
-    def load(src: String, stateful: Boolean = false) = {
+    def load(src: String, stateful: Boolean = false)
+        : (DataFrame, Seq[graft.state.SubDocState.Elected]) = {
       val raw = PagesIO.read(spark, src, a.pagesFormat)
       // WARC containers carry no text column — extraction from the HTTP
       // payload is implied unless the caller picked a binary column
@@ -513,11 +515,11 @@ object Main {
       // re-running them (docs the filters dropped vanish via the inner
       // join). The sub-document passes consume their input from several
       // branches (totals + election + rebuild, plus the stateful winners
-      // append) — a Materializer lineage cut before each keeps every
+      // write) — a Materializer lineage cut before each keeps every
       // upstream stage single-evaluation instead of K× per branch.
       val anyBattery = a.scrubPii || a.decontaminate.isDefined || a.c4Clean ||
         a.gopherFilter || a.spanDedup || a.paraDedup
-      if (!anyBattery) capped
+      if (!anyBattery) (capped, Nil)
       else {
         import org.apache.spark.sql.functions.col
         val mat = cfg.materializer(spark)
@@ -550,29 +552,30 @@ object Main {
         // sub-paragraph runs (the para rebuild preserves its "\n\n"s)
         val preSub =
           if (a.spanDedup || a.paraDedup) mat(deconned) else deconned
-        val paraed =
-          if (a.paraDedup)
-            (if (stateful)
-               graft.state.SubDocState.dedupParagraphsIncremental(
-                 spark, a.state, preSub, a.idCol, a.textCol, cfg)
-             else graft.text.ParagraphDedup.dedupParagraphs(preSub, a.idCol, a.textCol))
-              .select(col(a.idCol), col(a.textCol))
-          else preSub
+        val (paraed, paraElected) =
+          if (!a.paraDedup) (preSub, None)
+          else if (stateful) {
+            val (df, e) = graft.state.SubDocState.dedupParagraphsIncremental(
+              spark, a.state, preSub, a.idCol, a.textCol, cfg)
+            (df, Some(e))
+          } else (graft.text.ParagraphDedup.dedupParagraphs(preSub, a.idCol, a.textCol), None)
         val preSpan =
-          if (a.paraDedup && a.spanDedup) mat(paraed) else paraed
-        val spanned =
-          if (a.spanDedup)
-            (if (stateful)
-               graft.state.SubDocState.dedupSpansIncremental(
-                 spark, a.state, preSpan, a.idCol, a.textCol, cfg)
-             else graft.text.SpanDedup.dedupSpans(preSpan, a.idCol, a.textCol))
-              .select(col(a.idCol), col(a.textCol))
-          else preSpan
+          if (a.paraDedup && a.spanDedup) mat(paraed.select(col(a.idCol), col(a.textCol)))
+          else paraed.select(col(a.idCol), col(a.textCol))
+        val (spanned, spanElected) =
+          if (!a.spanDedup) (preSpan, None)
+          else if (stateful) {
+            val (df, e) = graft.state.SubDocState.dedupSpansIncremental(
+              spark, a.state, preSpan, a.idCol, a.textCol, cfg)
+            (df, Some(e))
+          } else (graft.text.SpanDedup.dedupSpans(preSpan, a.idCol, a.textCol), None)
         // join back from the PRE-quota frame: the battery side started from
         // `capped`, so the inner join re-applies the quota by id — the
         // full-width left branch (html payloads and all) must not pay the
         // per-site window shuffle a second time
-        unblocked.drop(a.textCol).join(spanned, Seq(a.idCol), "inner")
+        (unblocked.drop(a.textCol)
+          .join(spanned.select(col(a.idCol), col(a.textCol)), Seq(a.idCol), "inner"),
+          paraElected.toSeq ++ spanElected)
       }
     }
     // training-export mode: apply the state's dedup verdict to the corpus,
@@ -590,8 +593,8 @@ object Main {
           val sources = readSourcesFile(f)
             .fold(e => throw new IllegalArgumentException(e), identity)
           graft.mix.CorpusMix.unionCorpora(
-            sources.map { case (name, path) => name -> load(path) })
-        case None => load(a.pages)
+            sources.map { case (name, path) => name -> load(path)._1 })
+        case None => load(a.pages)._1
       }
       val lexKept = Checkpoints.keepIds(spark, a.state) match {
         case Some(ids) => corpus0.join(
@@ -688,10 +691,10 @@ object Main {
     }
     if (a.exportShards.isDefined) return exportRun(a.exportShards.get)
 
-    val pages = load(a.pages, stateful = true)
+    val (pages, elections) = load(a.pages, stateful = true)
     val (nNew, nClusters) =
       Checkpoints.clusterEpoch(spark, pages, a.idCol, a.textCol, a.state, cfg, a.action,
-        textsOf = a.textsFrom.map(p => load(p)))
+        textsOf = a.textsFrom.map(p => load(p)._1), elections = elections)
     val (nExec, nFail) =
       if (a.execute) Checkpoints.executeEpoch(spark, a.state, a.backupDir, cfg)
       else (0L, 0L)

@@ -681,8 +681,8 @@ object SparkEntry {
 
     // Cross-epoch sub-document state (round 5): the corpus splits into two
     // epochs (even doc_ids first, then odd); epoch 1's elected paragraph
-    // hashes persist through SubDocState parquet and epoch 2 elects against
-    // them. The oracle states the EPOCH-ORDERED batch semantics in closed
+    // hashes are published by its ingest's manifest line and epoch 2 elects
+    // against them. The oracle states the EPOCH-ORDERED batch semantics in closed
     // form — a paragraph seen in epoch 1 loses in EVERY epoch-2 doc, an
     // epoch-2-only paragraph elects fresh — so incremental ≡ batch is
     // checked through the real state round-trip, not in-memory frames.
@@ -694,12 +694,12 @@ object SparkEntry {
       val e1 = all.filter(col("doc_id") % 2 === 0)
       val e2 = all.filter(col("doc_id") % 2 === 1)
       val state = scratchDir("graft-subdoc-q")
-      graft.state.SubDocState.append(s, state,
-        graft.state.SubDocState.parasPath(state), "para_hash",
-        graft.text.ParagraphDedup.winners(e1, "doc_id", "text"), epoch = 0L)
-      val seen = graft.state.SubDocState.seen(s, state,
-        graft.state.SubDocState.parasPath(state), "para_hash", below = 1L)
-      graft.text.ParagraphDedup.dedupParagraphs(e1, "doc_id", "text")
+      val (clean1, elected) =
+        graft.state.SubDocState.dedupParagraphsIncremental(s, state, e1, "doc_id", "text")
+      graft.state.Checkpoints.runEpoch(s, clean1, "doc_id", "text", state,
+        elections = Seq(elected))
+      val seen = graft.state.Checkpoints.readTable(s, state, "paras")
+      clean1
         .unionByName(
           graft.text.ParagraphDedup.dedupParagraphs(e2, "doc_id", "text", seen = seen))
         .select(col("doc_id"), col("n_paras"), col("n_dropped"),
@@ -723,12 +723,12 @@ object SparkEntry {
       val e1 = all.filter(col("doc_id") % 2 === 0)
       val e2 = all.filter(col("doc_id") % 2 === 1)
       val state = scratchDir("graft-subdoc-q")
-      graft.state.SubDocState.append(s, state,
-        graft.state.SubDocState.spansPath(state), "h",
-        graft.text.SpanDedup.winners(e1, "doc_id", "text"), epoch = 0L)
-      val seen = graft.state.SubDocState.seen(s, state,
-        graft.state.SubDocState.spansPath(state), "h", below = 1L)
-      graft.text.SpanDedup.dedupSpans(e1, "doc_id", "text")
+      val (clean1, elected) =
+        graft.state.SubDocState.dedupSpansIncremental(s, state, e1, "doc_id", "text")
+      graft.state.Checkpoints.runEpoch(s, clean1, "doc_id", "text", state,
+        elections = Seq(elected))
+      val seen = graft.state.Checkpoints.readTable(s, state, "spans")
+      clean1
         .unionByName(
           graft.text.SpanDedup.dedupSpans(e2, "doc_id", "text", seen = seen))
         .select(col("doc_id"), col("n_sents"), col("n_dropped"),

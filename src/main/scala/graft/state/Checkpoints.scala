@@ -22,26 +22,28 @@ import graft.pipeline.{DedupConfig, DedupPipeline}
   *    persistent `quarantine` table, anti-joined before processing;
   *  - the one write batch per item (`db.rs:64-92`) becomes ONE commit rule
   *    for the whole state dir, the Iceberg snapshot model: every table write
-  *    lands in `<state>/<table>/gen=<n>/`, and a generation is visible only
-  *    once the `_manifest.jsonl` line naming it is published by
-  *    [[appendManifest]]'s double rename. Each line names the current
-  *    generation of every table plus the layout facts readers need
-  *    (`signature_buckets`, the band index's `knobs` and `through_epoch`,
-  *    the clusters' `similarity`, the sub-document tables' `subdoc_from`);
-  *    [[snapshot]] resolves them and every reader goes through it.
+  *    lands in a part, `<state>/<table>/gen=<g>/part=<k>/`, where k is the
+  *    index of the `_manifest.jsonl` line that publishes it, and a part is
+  *    visible only once that line is published by [[appendManifest]]'s
+  *    double rename. Each line names the current generation of every table
+  *    plus the layout facts readers need (`signature_buckets`, the band
+  *    index's `knobs` and `through_epoch`, the clusters' `similarity`);
+  *    [[snapshot]] resolves them and every reader goes through [[read]],
+  *    which keeps only the parts with k below the published line count.
   *
   * A call that replaces a table (clusterEpoch's clusters, actions and
-  * previews, compaction, a rescan) writes generation n — n is the index of
-  * the line that will publish it — and publishes all of them in that one
-  * line. Appends (epoch signature rows, quarantine, executed, band-index
-  * deltas) go into the published generation and stay idempotent through
-  * the anti-joins they already have. Lineage is the `epoch` and `part_id`
-  * columns of every signature row; an epoch's counts and throughput are
-  * fields of its manifest line. A writer deletes superseded generations
-  * only after its line is durable, and every lease holder first deletes
-  * every generation the manifest does not name, so a call killed at any
-  * write leaves state the next run completes or rolls back, and a
-  * committed call leaves one `gen=` dir per table.
+  * previews, compaction, a rescan) starts generation n — n is the index of
+  * the line that will publish it — with its part n; a call that appends
+  * (epoch signature rows, quarantine, executed, band-index deltas, the
+  * sub-document winners of [[SubDocState]]) adds part n to the published
+  * generation. One line publishes all of a call's parts. Lineage is the
+  * `epoch` and `part_id` columns of every signature row; an epoch's counts
+  * and throughput are fields of its manifest line. A writer deletes
+  * superseded generations only after its line is durable, and every lease
+  * holder first deletes every generation the manifest does not name and
+  * every part no line published, so a call killed at any write leaves state
+  * the next run rolls back and writes again, and a committed call leaves
+  * one `gen=` dir per table.
   */
 object Checkpoints {
 
@@ -56,8 +58,14 @@ object Checkpoints {
   def lockPath(stateDir: String) = s"$stateDir/_lock"
 
   /** Every table a manifest line can name, by directory name. */
-  private val tables =
-    Seq("signatures", "quarantine", "clusters", "previews", "actions", "executed", "bands")
+  private val tables = Seq("signatures", "quarantine", "clusters", "previews", "actions",
+    "executed", "bands", "paras", "spans")
+
+  /** The column each keyed table is bucketed on in a bucketed layout: the
+    * id-keyed tables and the sub-document hash tables.
+    */
+  private val bucketKey =
+    Map("signatures" -> "id", "executed" -> "id", "paras" -> "para_hash", "spans" -> "h")
 
   /** All state IO goes through the Hadoop FileSystem API so `stateDir` may
     * be any supported URI (file://, hdfs://, s3a://, …) — java.nio would
@@ -69,11 +77,6 @@ object Checkpoints {
     (p.getFileSystem(spark.sparkContext.hadoopConfiguration), p)
   }
 
-  private def exists(spark: SparkSession, path: String): Boolean = {
-    val (fs, p) = fsFor(spark, path)
-    fs.exists(p)
-  }
-
   // ------------------------------------------------------------------
   // Generations: what one manifest line publishes.
   // ------------------------------------------------------------------
@@ -83,8 +86,10 @@ object Checkpoints {
     * snapshot with the generations it writes and publishes the result with
     * [[commit]]; readers resolve the published one with [[snapshot]].
     *
-    * @param next    generation number of a write made now: the index of the
-    *                manifest line that will publish it
+    * @param next    generation and part number of a write made now: the
+    *                index of the manifest line that will publish it
+    * @param visible parts below this number are read: the published line
+    *                count, or `next + 1` in a writer's view of its own parts
     * @param buckets bucket count of the id-keyed tables (signatures and
     *                executed); 0 = plain parquet. A property of the STATE
     *                DIR, not of the caller's config: every later reader and
@@ -93,21 +98,25 @@ object Checkpoints {
     * @param knobs   channel knobs the band index was built with
     * @param through last signature epoch the band index covers
     * @param similarity edge-shaping values the clusters were built with
-    * @param subdocFrom first epoch whose sub-document hashes are visible:
-    *                the epoch of the last rescan ([[SubDocState]])
     */
   private[state] final case class Snapshot(stateDir: String, gens: Map[String, Long],
-                                           next: Long, buckets: Int = 0,
+                                           next: Long, visible: Long, buckets: Int = 0,
                                            knobs: String = "", through: Long = -1L,
-                                           similarity: String = "",
-                                           subdocFrom: Long = 0L) {
+                                           similarity: String = "") {
     def path(table: String): Option[String] =
       gens.get(table).map(g => s"$stateDir/$table/gen=$g")
 
-    /** A new generation of each table, unpublished until this snapshot is. */
-    def fresh(ts: String*): Snapshot = copy(gens = gens ++ ts.map(_ -> next))
+    /** The part a write made now lands in. */
+    def part(table: String): String = s"${path(table).get}/part=$next"
 
-    def orFresh(table: String): Snapshot = if (gens.contains(table)) this else fresh(table)
+    /** The writer's view: the parts it writes now are read too. */
+    def writing: Snapshot = copy(visible = next + 1)
+
+    /** A new generation of each table, unpublished until this snapshot is. */
+    def fresh(ts: String*): Snapshot = copy(gens = gens ++ ts.map(_ -> next)).writing
+
+    /** A part appended to `table`'s generation, or a new one if none. */
+    def orFresh(table: String): Snapshot = if (gens.contains(table)) writing else fresh(table)
 
     /** Whether a write (a rescan or not) starts a new signature store. */
     def restarts(rescan: Boolean): Boolean = rescan || !gens.contains("signatures")
@@ -124,8 +133,7 @@ object Checkpoints {
         (if (gens.contains("bands")) s""","knobs":$knobs,"through_epoch":$through""" else "") +
         // a line written before the values were recorded has none to carry
         (if (gens.contains("clusters") && similarity.nonEmpty) s""","similarity":$similarity"""
-         else "") +
-        (if (subdocFrom > 0) s""","subdoc_from":$subdocFrom""" else "")
+         else "")
   }
 
   /** The published snapshot: the last manifest line's generations. A state
@@ -134,7 +142,7 @@ object Checkpoints {
     */
   private[state] def snapshot(spark: SparkSession, stateDir: String): Snapshot = {
     val lines = readManifest(spark, stateDir)
-    val empty = Snapshot(stateDir, Map.empty, lines.length)
+    val empty = Snapshot(stateDir, Map.empty, lines.length, lines.length)
     lines.reverseIterator.find(_.contains("\"gens\":")) match {
       case None =>
         require(lines.isEmpty,
@@ -151,36 +159,59 @@ object Checkpoints {
           buckets = field("signature_buckets", """\d+""").fold(0)(_.toInt),
           knobs = field("knobs", """\{[^}]*\}""").getOrElse(""),
           through = field("through_epoch", """-?\d+""").fold(-1L)(_.toLong),
-          similarity = field("similarity", """\{[^}]*\}""").getOrElse(""),
-          subdocFrom = field("subdoc_from", """\d+""").fold(0L)(_.toLong))
+          similarity = field("similarity", """\{[^}]*\}""").getOrElse(""))
     }
   }
 
-  /** Path of `table`'s published generation; None if the manifest names
-    * none. Each table dir holds only this generation after a committed call,
-    * so `spark.read.parquet(<table dir>)` reads the same rows plus an int
-    * `gen` partition column.
+  /** Dir of `table`'s published generation; None if the manifest names
+    * none. Its `part=` dirs include those of a crashed call until the next
+    * lease holder deletes them: read a table through [[readTable]].
     */
   def generationPath(spark: SparkSession, stateDir: String, table: String): Option[String] =
     snapshot(spark, stateDir).path(table)
 
-  /** Generation dirs on disk that `snap` does not name: a crashed writer's
-    * unpublished ones, or ones a durable line superseded before its writer
-    * could delete them.
+  /** `table`'s published rows; None if the manifest names no generation of
+    * it. After a committed call each table dir holds only these rows, so
+    * `spark.read.parquet(<table dir>)` reads the same rows plus int `gen`
+    * and `part` partition columns.
+    */
+  def readTable(spark: SparkSession, stateDir: String, table: String): Option[DataFrame] =
+    read(spark, snapshot(spark, stateDir), table)
+
+  /** `table`'s rows in `snap`: the parts of its generation below
+    * `snap.visible` (a partition filter on the inferred `part` column, so
+    * no other part is listed for reading), bucketed on the table's key in a
+    * bucketed layout.
+    */
+  private[state] def read(spark: SparkSession, snap: Snapshot,
+                          table: String): Option[DataFrame] =
+    snap.path(table).map { p =>
+      val df =
+        if (snap.buckets > 0 && bucketKey.contains(table))
+          spark.table(ensureBucketedTable(spark, table, p, snap.buckets))
+        else spark.read.parquet(p)
+      df.filter(col("part") < snap.visible).drop("part")
+    }
+
+  /** Dirs on disk that `snap` does not publish: generations it does not
+    * name (a crashed writer's, or ones a durable line superseded before its
+    * writer could delete them) and parts of named ones at or past
+    * `snap.visible` (a crashed writer's appends).
     */
   private def unnamed(spark: SparkSession, snap: Snapshot): Seq[(FileSystem, Path)] =
     tables.flatMap { t =>
       val (fs, dir) = fsFor(spark, s"${snap.stateDir}/$t")
       val keep = snap.gens.get(t).map(g => s"gen=$g")
       if (!fs.exists(dir)) Nil
-      else fs.listStatus(dir).toSeq.map(_.getPath)
-        .filter(p => p.getName.startsWith("gen=") && !keep.contains(p.getName))
-        .map(fs -> _)
+      else fs.listStatus(dir).toSeq.map(_.getPath).filter(_.getName.startsWith("gen=")).flatMap { g =>
+        if (!keep.contains(g.getName)) Seq(g)
+        else fs.listStatus(g).toSeq.map(_.getPath).filter(p =>
+          p.getName.startsWith("part=") && p.getName.stripPrefix("part=").toLong >= snap.visible)
+      }.map(fs -> _)
     }
 
-  /** Delete what `snap` does not name: unnamed generations, the dirs of
-    * tables it does not name at all, and the sub-document partitions below
-    * its `subdoc_from`.
+  /** Delete what `snap` does not publish: unnamed generations and parts,
+    * and the dirs of tables it does not name at all.
     */
   private def sweep(spark: SparkSession, snap: Snapshot): Unit = {
     unnamed(spark, snap).foreach { case (fs, p) => fs.delete(p, true) }
@@ -188,7 +219,6 @@ object Checkpoints {
       val (fs, dir) = fsFor(spark, s"${snap.stateDir}/$t")
       if (fs.exists(dir)) fs.delete(dir, true)
     }
-    SubDocState.sweep(spark, snap.stateDir, snap.subdocFrom)
   }
 
   /** Publish `snap` with one manifest line carrying `fields`; once the line
@@ -208,22 +238,23 @@ object Checkpoints {
     */
   private[graft] var commitTestHook: String => Unit = _ => ()
 
-  /** Append `df` to `table`'s generation in `snap`: bucketed on id when
-    * `buckets` > 0, else plain parquet.
+  /** Write `df` as `table`'s part in `snap`: bucketed on the table's key
+    * when `buckets` > 0, else plain parquet.
     */
   private def write(spark: SparkSession, snap: Snapshot, table: String, df: DataFrame,
                     buckets: Int = 0): Unit = {
-    val p = snap.path(table).get
+    val p = snap.part(table)
     if (buckets > 0) {
-      val tbl = catalogName(table, p)
-      // a fresh generation's path may carry a catalog entry from a crashed
-      // attempt whose files the sweep removed, possibly with another layout
-      if (!exists(spark, p)) spark.sql(s"DROP TABLE IF EXISTS $tbl")
+      val key = bucketKey(table)
+      val tbl = catalogName(table, p, buckets)
+      // the part's path may carry a catalog entry from a crashed attempt
+      // whose files the sweep removed
+      spark.sql(s"DROP TABLE IF EXISTS $tbl")
       // one writer task per bucket: without the repartition every task
       // writes up to `buckets` files (tasks × buckets small files)
-      df.repartition(buckets, col("id"))
+      df.repartition(buckets, col(key))
         .write.mode("append").format("parquet")
-        .bucketBy(buckets, "id").sortBy("id")
+        .bucketBy(buckets, key).sortBy(key)
         .option("path", p)
         .saveAsTable(tbl)
     } else df.write.mode("append").parquet(p)
@@ -231,54 +262,58 @@ object Checkpoints {
   }
 
   // ------------------------------------------------------------------
-  // Bucketed id-keyed tables. Spark's bucket metadata lives in the session
+  // Bucketed keyed tables. Spark's bucket metadata lives in the session
   // catalog (in-memory, per-session), so each session registers a
   // deterministic table name over each generation's files on first touch;
   // the files themselves carry the bucket ids in their names.
   // ------------------------------------------------------------------
 
-  /** Deterministic per-generation catalog name (every session derives the
-    * same name for the same files).
+  /** Deterministic catalog name per path and bucket count (every session
+    * derives the same name for the same files, and an entry declaring
+    * another layout is never reused).
     */
-  private def catalogName(table: String, path: String): String =
-    SubDocState.tableName(s"graft_${table}_", new Path(path))
+  private def catalogName(table: String, path: String, buckets: Int): String = {
+    val digest = java.security.MessageDigest.getInstance("SHA-1")
+      .digest(s"$path#$buckets".getBytes(UTF_8))
+    s"graft_${table}_" + digest.take(6).map(b => f"$b%02x").mkString
+  }
 
   /** Buckets the persisted signatures were written with; 0 = plain parquet. */
   private[graft] def signatureBuckets(spark: SparkSession, stateDir: String): Int =
     snapshot(spark, stateDir).buckets
 
+  private def tableName(spark: SparkSession, stateDir: String, table: String): String = {
+    val snap = snapshot(spark, stateDir)
+    catalogName(table, snap.path(table).get, snap.buckets)
+  }
+
   private[graft] def sigTableName(spark: SparkSession, stateDir: String): String =
-    catalogName("signatures", generationPath(spark, stateDir, "signatures").get)
+    tableName(spark, stateDir, "signatures")
 
   private[graft] def execTableName(spark: SparkSession, stateDir: String): String =
-    catalogName("executed", generationPath(spark, stateDir, "executed").get)
+    tableName(spark, stateDir, "executed")
 
-  /** Register (if absent) a bucketed table over existing state files and
-    * return its name. Schema comes from the parquet footers so
-    * registration works in a session that has never written this state.
+  /** Register (if absent) a bucketed table over a generation's files and
+    * return its name. Schema comes from the parquet footers (the `part`
+    * dirs add an int column the file index infers as a partition column),
+    * so registration works in a session that has never written this state.
     */
-  private def ensureBucketedTable(spark: SparkSession, tbl: String, path: String,
+  private def ensureBucketedTable(spark: SparkSession, table: String, path: String,
                                   buckets: Int): String = {
+    val tbl = catalogName(table, path, buckets)
     if (!spark.catalog.tableExists(tbl)) {
       val schema = spark.read.parquet(path).schema
+      val key = bucketKey(table)
       spark.sql(
         s"""CREATE TABLE $tbl (${schema.toDDL}) USING PARQUET
-           |CLUSTERED BY (id) SORTED BY (id) INTO $buckets BUCKETS
+           |CLUSTERED BY ($key) SORTED BY ($key) INTO $buckets BUCKETS
            |LOCATION '${new Path(path)}'""".stripMargin)
     }
-    // another driver may have appended an epoch since this session cached
+    // another driver may have published a part since this session cached
     // the file listing; the lease serializes writers, not readers
     spark.catalog.refreshTable(tbl)
     tbl
   }
-
-  /** Layout-aware read of an id-keyed table's generation in `snap`. */
-  private def readIdKeyed(spark: SparkSession, snap: Snapshot, table: String): Option[DataFrame] =
-    snap.path(table).map { p =>
-      if (snap.buckets > 0)
-        spark.table(ensureBucketedTable(spark, catalogName(table, p), p, snap.buckets))
-      else spark.read.parquet(p)
-    }
 
   /** Layout-aware scan of the persisted signatures. In the bucketed layout
     * the scan carries HashPartitioning(id, N), so the resume/tombstone/
@@ -290,7 +325,7 @@ object Checkpoints {
     readSignatures(spark, snapshot(spark, stateDir))
 
   private def readSignatures(spark: SparkSession, snap: Snapshot): DataFrame =
-    readIdKeyed(spark, snap, "signatures").getOrElse(
+    read(spark, snap, "signatures").getOrElse(
       throw new IllegalStateException(s"no committed signatures in ${snap.stateDir}"))
 
   /** Thrown when the state lease is held by another writer. Subclasses
@@ -312,7 +347,8 @@ object Checkpoints {
     * store exclusively); on a cluster two drivers pointed at one stateDir
     * would interleave the manifest's double-rename and parquet appends, so
     * every mutating epoch runs inside this lease. The holder first deletes
-    * every generation the manifest does not name (see [[sweep]]).
+    * every generation and part the manifest does not publish (see
+    * [[sweep]]).
     *
     * `FileSystem.create(path, overwrite = false)` is atomic on HDFS-like
     * stores (and good enough on local FS for tests); the loser gets a clean
@@ -409,13 +445,16 @@ object Checkpoints {
   }
 
   /** One incremental epoch: fingerprint only never-seen urls and append.
+    * `elections` are the winners of the sub-document passes that cleaned
+    * `pages` ([[SubDocState]]); the epoch's line publishes them.
     *
     * @return (numNewSignatures, numQuarantined)
     */
   def runEpoch(spark: SparkSession, pages: DataFrame, idCol: String, textCol: String,
-               stateDir: String, cfg: DedupConfig = DedupConfig()): (Long, Long) =
+               stateDir: String, cfg: DedupConfig = DedupConfig(),
+               elections: Seq[SubDocState.Elected] = Nil): (Long, Long) =
     withStateLock(spark, stateDir) {
-      val in = ingest(spark, pages, idCol, textCol, snapshot(spark, stateDir), cfg)
+      val in = ingest(spark, pages, idCol, textCol, snapshot(spark, stateDir), cfg, elections)
       commit(spark, in.snap, in.line)
       (in.nNew, in.nQuarantined)
     }
@@ -427,16 +466,23 @@ object Checkpoints {
                                   nQuarantined: Long, line: String)
 
   private def ingest(spark: SparkSession, pages: DataFrame, idCol: String,
-                     textCol: String, published: Snapshot, cfg: DedupConfig): Ingest = {
+                     textCol: String, published: Snapshot, cfg: DedupConfig,
+                     elections: Seq[SubDocState.Elected]): Ingest = {
     val epochT0 = System.nanoTime()
+    // an election made against an older snapshot missed the winners a line
+    // published since: writing it would elect those hashes twice
+    elections.filter(_.against != published.next).foreach { e =>
+      throw new IllegalStateException(
+        s"${e.table} elections were made against ${e.against} manifest lines, but " +
+          s"${published.stateDir} has published ${published.next}: re-run the sub-document pass")
+    }
 
     // resume primitive (J1): anti-join against persisted state + skip list.
     // force_rescan (reference config.rs:81 / reinitialise semantics) bypasses
     // both filters and starts a new store instead of appending duplicates.
     val fresh = published.restarts(cfg.forceRescan)
     val seen = if (fresh) None else Some(readSignatures(spark, published))
-    val quarantined =
-      if (cfg.forceRescan) None else published.path("quarantine").map(spark.read.parquet(_))
+    val quarantined = if (cfg.forceRescan) None else read(spark, published, "quarantine")
     // slice-keyed prune (cfg.stateBloomFpp): the state side of the
     // resume anti-join is the corpus-aged one; a Bloom sketch of the
     // incoming slice's ids (one slim aggregation over the pruned id
@@ -479,11 +525,14 @@ object Checkpoints {
     val good = unseen.filter(col(textCol).isNotNull && length(col(textCol)) > 0)
 
     // order_len is persisted with the signature so representative selection
-    // on resume never needs the text again
+    // on resume never needs the text again. The new-row count rides the
+    // write: a crashed attempt's part is deleted before the retry writes
+    // the same rows again, so the count is the same for a resumed epoch
+    val sigObs = org.apache.spark.sql.Observation("sig_metrics")
     val sigs = DedupPipeline.signatures(
       good.withColumn("order_len", length(col(textCol))),
       idCol, textCol, cfg, carry = Seq("order_len"))
-      .observe("sig_metrics", count(lit(1)).as("n_rows"))
+      .observe(sigObs, count(lit(1)).as("n_rows"))
 
     // per-partition lineage (north_rule): which partition produced how many
     // signature rows in which epoch — epoch is stamped on every row, so the
@@ -505,17 +554,16 @@ object Checkpoints {
     // would keep their rows forever; the executed table is keyed by — and
     // bucketed like — the old store, so its tombstones would suppress ids
     // the rescan re-mints; a restarted store re-evaluates every
-    // quarantined doc; and its sub-document elections start from its own
-    // epoch (`subdoc_from`), hiding every earlier winner hash.
-    val (kept, subdocFrom) =
+    // quarantined doc; and its sub-document elections start over, so no
+    // earlier winner hash defeats a paragraph or span.
+    val kept =
       if (cfg.forceRescan)
-        (published.gens -- Seq("clusters", "actions", "previews", "bands", "executed", "quarantine"),
-          epoch)
-      else (published.gens, published.subdocFrom)
-    val snap =
-      (if (fresh) published.copy(gens = kept, buckets = buckets, subdocFrom = subdocFrom)
-         .fresh("signatures")
-       else published).orFresh("quarantine")
+        published.gens -- Seq("clusters", "actions", "previews", "bands", "executed",
+          "quarantine", "paras", "spans")
+      else published.gens
+    val snap = elections.map(_.table).foldLeft(
+      (if (fresh) published.copy(gens = kept, buckets = buckets).fresh("signatures")
+       else published).orFresh("quarantine"))(_.orFresh(_))
     write(spark, snap, "signatures", withPart, buckets)
 
     // quarantine count rides the write as an observe metric — one action,
@@ -523,17 +571,15 @@ object Checkpoints {
     val qObs = org.apache.spark.sql.Observation()
     write(spark, snap, "quarantine", bad.observe(qObs, count(lit(1)).as("n")))
     val nQuarantined = Observed.long(qObs)
+    // the sub-document winners follow the signature store's layout
+    elections.foreach(e => write(spark, snap, e.table, e.winners, snap.buckets))
 
     // both consumers of the pruned anti-join (signature + quarantine
     // writes) have run; release the sketch's executor blocks now.
     // unpersist (not destroy) keeps the driver copy, so a recompute after
     // executor loss just re-fetches — correctness is unaffected.
     sliceSketch.foreach(_.unpersist())
-
-    // the epoch's rows as written, not the write's own row count: a crashed
-    // attempt's appends are already visible, and the retry's anti-join
-    // skips them, so only this count is the same for a resumed epoch
-    val nNew = readSignatures(spark, snap).filter(col("epoch") === epoch).count()
+    val nNew = Observed.long(sigObs)
 
     // X13 rate metrics (reference progress.rs ETA math): each commit line
     // records its own throughput, so an operator can project the remaining
@@ -570,17 +616,18 @@ object Checkpoints {
     * back to the shingle-containment decision (documented in
     * [[DedupPipeline.nearEdges]]) — convergent, but not bit-identical to
     * the full-fed epoch; DeltaClusterSpec pins that the textsOf route IS
-    * bit-identical.
+    * bit-identical. `elections` are published as in [[runEpoch]].
     *
     * @return (numNewSignatures, numClusters)
     */
   def clusterEpoch(spark: SparkSession, pages: DataFrame, idCol: String, textCol: String,
                    stateDir: String, cfg: DedupConfig = DedupConfig(),
                    action: String = "symlink",
-                   textsOf: Option[DataFrame] = None): (Long, Long) =
+                   textsOf: Option[DataFrame] = None,
+                   elections: Seq[SubDocState.Elected] = Nil): (Long, Long) =
       withStateLock(spark, stateDir) {
     val cfg0 = cfg.checkpointsIn(stateDir)
-    val in = ingest(spark, pages, idCol, textCol, snapshot(spark, stateDir), cfg0)
+    val in = ingest(spark, pages, idCol, textCol, snapshot(spark, stateDir), cfg0, elections)
 
     // cluster the LIVE state: rows vacated by executed delete/move actions
     // must not re-enter clusters (or worse, win representative selection
@@ -607,9 +654,9 @@ object Checkpoints {
     // under other edge-shaping values: their merges would otherwise carry
     // over unverified.
     val similarity = similarityJson(cfg0)
-    val clusters = (bandIndex, in.snap.path("clusters")) match {
-      case (Some(index), Some(priorPath)) if in.snap.similarity == similarity =>
-        val prior = spark.read.parquet(priorPath)
+    val clusters = bandIndex match {
+      case Some(index) if in.snap.gens.contains("clusters") && in.snap.similarity == similarity =>
+        val prior = read(spark, in.snap, "clusters").get
         // "new" = every live doc the prior clusters table has never seen —
         // NOT just the epoch ingested above: signature epochs accrue
         // WITHOUT clustering under the streaming-ingest cadence and
@@ -718,9 +765,9 @@ object Checkpoints {
       withStateLock(spark, stateDir) {
     val cfg0 = cfg.checkpointsIn(stateDir)
     val snap = snapshot(spark, stateDir)
-    val plan = spark.read.parquet(snap.path("actions").getOrElse(throw new IllegalStateException(
-      s"no committed actions plan in $stateDir: run clusterEpoch first")))
-    val pending = readIdKeyed(spark, snap, "executed") match {
+    val plan = read(spark, snap, "actions").getOrElse(throw new IllegalStateException(
+      s"no committed actions plan in $stateDir: run clusterEpoch first"))
+    val pending = read(spark, snap, "executed") match {
       case Some(prior) =>
         val settled = prior.filter(col("success") ||
           col("error").isin("missing_id", "missing_original"))
@@ -789,7 +836,7 @@ object Checkpoints {
 
   private def tombstones(spark: SparkSession, snap: Snapshot): DataFrame = {
     import spark.implicits._
-    readIdKeyed(spark, snap, "executed")
+    read(spark, snap, "executed")
       .map(graft.actions.Actions.tombstones)
       .getOrElse(Seq.empty[(String, String, String)].toDF("id", "original_id", "action"))
   }
@@ -804,7 +851,7 @@ object Checkpoints {
   /** `df` minus the ids tombstoned by the executed rows `scope` keeps. */
   private def withoutTombstones(spark: SparkSession, snap: Snapshot, df: DataFrame,
                                 scope: DataFrame => DataFrame): DataFrame =
-    readIdKeyed(spark, snap, "executed") match {
+    read(spark, snap, "executed") match {
       case Some(ex) =>
         df.join(graft.actions.Actions.tombstones(scope(ex)).select("id"), Seq("id"), "left_anti")
       case None => df
@@ -819,9 +866,8 @@ object Checkpoints {
     */
   def keepIds(spark: SparkSession, stateDir: String): Option[DataFrame] = {
     val snap = snapshot(spark, stateDir)
-    snap.path("clusters").map { c =>
-      withoutTombstones(spark, snap,
-        spark.read.parquet(c).filter(col("is_representative")).select("id"), identity)
+    read(spark, snap, "clusters").map { c =>
+      withoutTombstones(spark, snap, c.filter(col("is_representative")).select("id"), identity)
     }
   }
 
@@ -880,11 +926,11 @@ object Checkpoints {
     *
     *  - none published / another format → a new generation rebuilt from
     *    the signatures table;
-    *  - published `through_epoch` behind (an interleaved non-delta epoch, or
-    *    a crash between the signature append and the line that publishes
-    *    the index) → append just the missing epochs' rows. The repair is
-    *    idempotent: a replayed append only duplicates rows, and every
-    *    consumer is a semi-join.
+    *  - published `through_epoch` behind (epochs ingested without it: a
+    *    runEpoch, or a clusterEpoch without `deltaCluster`) → a part with
+    *    just the missing epochs' rows. Like every append it is published by
+    *    the caller's line or deleted with the crashed call, so a replay
+    *    writes each row once.
     *
     * Tombstoned docs keep their index rows (they only widen the frontier;
     * live-state semi-joins drop them downstream) — [[compactSignatures]]
@@ -896,16 +942,18 @@ object Checkpoints {
     def rows(sigs: DataFrame) = DedupPipeline.allChannelBandRows(sigs)
     val out =
       if (snap.gens.contains("bands") && snap.knobs == BandIndexFormat) {
-        if (snap.through < through)
-          write(spark, snap, "bands",
+        if (snap.through < through) {
+          val s = snap.writing.copy(through = through)
+          write(spark, s, "bands",
             rows(readSignatures(spark, snap).filter(col("epoch") > snap.through)))
-        snap.copy(through = math.max(through, snap.through))
+          s
+        } else snap
       } else {
         val s = snap.fresh("bands").copy(knobs = BandIndexFormat, through = through)
         write(spark, s, "bands", rows(readSignatures(spark, snap)))
         s
       }
-    (spark.read.parquet(out.path("bands").get), out)
+    (read(spark, out, "bands").get, out)
   }
 
   /** SNAPSHOT read — the signature state exactly as of `epoch`, inclusive
@@ -936,8 +984,9 @@ object Checkpoints {
     * (category, n) — both drift categories are zero on a healthy store at
     * any point in the runEpoch/clusterEpoch/executeEpoch cycle.
     * `uncommitted_generations` counts the `gen=` dirs the manifest does not
-    * name: zero on a healthy store, more after a crash until the next
-    * writer sweeps them — a torn epoch is visible from the state dir alone.
+    * name and the `part=` dirs no published line wrote: zero on a healthy
+    * store, more after a crash until the next writer sweeps them — a torn
+    * epoch, appends included, is visible from the state dir alone.
     */
   def diagnose(spark: SparkSession, stateDir: String): DataFrame = {
     import spark.implicits._
@@ -946,8 +995,7 @@ object Checkpoints {
     val hasSigs = snap.gens.contains("signatures")
     val sigs = if (hasSigs) readSignatures(spark, snap).select("id") else empty
     val live = if (hasSigs) liveSignatures(spark, snap).select("id") else empty
-    def ids(table: String) =
-      snap.path(table).map(spark.read.parquet(_).select("id")).getOrElse(empty)
+    def ids(table: String) = read(spark, snap, table).map(_.select("id")).getOrElse(empty)
     val clusters = ids("clusters")
     // ONE pass: union every per-table id stream (including the two
     // anti-join drift streams) under a category label and aggregate — the
@@ -974,18 +1022,20 @@ object Checkpoints {
         .toDF("category", "n"))
   }
 
-  /** Compact the id-keyed state tables (signatures + executed, when
-    * present) and the band index back to their minimal file count — the
+  /** Compact the appended state tables (signatures, and executed, the band
+    * index and the sub-document hashes when present), folding each
+    * generation's parts into one part with the minimal file count — the
     * maintenance half of an append-only store's lifecycle (≙ Iceberg
     * rewrite_data_files; reference flush/compact cadence, lib.rs:178-223).
-    * A nightly-epoch store accrues one file per bucket (bucketed layout) or
-    * per task (plain) PER EPOCH AND TABLE; after a year the per-bucket file
-    * count — open() round-trips and footer reads, not data volume —
-    * dominates scan planning on an object store. The rewrite preserves
-    * every row including the `epoch` column, so [[signaturesAsOf]] time
-    * travel is unaffected, and keeps the recorded layout (bucketed stays
-    * bucketed on the same N). Each table is rewritten into a new
-    * generation and one manifest line publishes them all.
+    * A nightly-epoch store accrues one part, of one file per bucket
+    * (bucketed layout) or per task (plain), PER EPOCH AND TABLE; after a
+    * year the per-bucket file count — open() round-trips and footer reads,
+    * not data volume — dominates scan planning on an object store. The
+    * rewrite preserves every row including the `epoch` column, so
+    * [[signaturesAsOf]] time travel is unaffected, and keeps the recorded
+    * layout (bucketed stays bucketed on the same N). Each table is
+    * rewritten into a new generation and one manifest line publishes them
+    * all.
     *
     * @return (tables rewritten, filesBefore, filesAfter)
     */
@@ -994,10 +1044,11 @@ object Checkpoints {
       val snap = snapshot(spark, stateDir)
       require(snap.gens.contains("signatures"),
         s"no signatures table at ${signaturesPath(stateDir)}")
-      val compacted = Seq("signatures", "executed", "bands").filter(snap.gens.contains)
+      val compacted =
+        Seq("signatures", "executed", "bands", "paras", "spans").filter(snap.gens.contains)
       val out = snap.fresh(compacted: _*)
 
-      def rewrite(table: String, read: DataFrame, buckets: Int): Unit =
+      def rewrite(table: String, rows: DataFrame, buckets: Int): Unit =
         if (buckets > 0) {
           // SHUFFLE-FREE rewrite: force the bucketed scan on (the
           // DisableUnnecessaryBucketedScan planner rule only credits joins/
@@ -1013,26 +1064,24 @@ object Checkpoints {
           val prevAuto = spark.conf.get(autoBucketedKey)
           try {
             spark.conf.set(autoBucketedKey, "false")
-            write(spark, out, table, read, buckets)
+            write(spark, out, table, rows, buckets)
           } finally spark.conf.set(autoBucketedKey, prevAuto)
         } else {
           // plain layout: pack to ~128 MB files (object-store-friendly)
           val (fs, live) = fsFor(spark, snap.path(table).get)
           val parts = math.max(1L, fs.getContentSummary(live).getLength / (128L << 20)).toInt
-          write(spark, out, table, read.repartition(parts))
+          write(spark, out, table, rows.repartition(parts))
         }
 
-      rewrite("signatures", readSignatures(spark, snap), snap.buckets)
-      // the executed table accrues files the same way (one per bucket per
-      // executed epoch) and is read by every liveSignatures call
-      readIdKeyed(spark, snap, "executed").foreach(rewrite("executed", _, snap.buckets))
-      // the band index accrues files per epoch too, and keeps rows for
-      // tombstoned docs (they only widen the delta frontier): maintenance
-      // prunes both. Plain-parquet rewrite — the index is a semi-join-only
-      // surface, so no layout to preserve.
-      snap.path("bands").foreach { p =>
-        rewrite("bands", spark.read.parquet(p).join(
-          tombstones(spark, snap).select("id"), Seq("id"), "left_anti"), 0)
+      compacted.foreach { t =>
+        val rows = read(spark, snap, t).get
+        // the band index keeps rows for tombstoned docs (they only widen
+        // the delta frontier): maintenance prunes them. Plain-parquet
+        // rewrite — the index is a semi-join-only surface, so no layout to
+        // preserve.
+        if (t == "bands")
+          rewrite(t, rows.join(tombstones(spark, snap).select("id"), Seq("id"), "left_anti"), 0)
+        else rewrite(t, rows, snap.buckets)
       }
 
       def files(s: Snapshot): Long = compacted.map { t =>

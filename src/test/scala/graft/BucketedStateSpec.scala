@@ -29,10 +29,10 @@ class BucketedStateSpec extends SparkTestBase {
 
   private val bucketed = DedupConfig(stateBuckets = 8)
 
-  /** Files of a table's published generation. */
+  /** Files of a table's published generation, in all its parts. */
   private def genFiles(dir: String, table: String): Array[String] =
     new java.io.File(Checkpoints.generationPath(spark, dir, table).get)
-      .listFiles().map(_.getName)
+      .listFiles().flatMap(p => Option(p.listFiles()).getOrElse(Array(p))).map(_.getName)
 
   test("bucketed epochs behave exactly like plain ones (resume + content)") {
     val plainDir = tempDir()

@@ -8,19 +8,19 @@ import graft.pages.PagesGen
 import graft.pipeline.DedupConfig
 import graft.state.{Checkpoints, SubDocState}
 
-/** The state dir's one commit rule: every table write lands in a `gen=`
+/** The state dir's one commit rule: every table write lands in a `part=`
   * directory that only a published manifest line makes visible. These
   * specs kill each state-layer call at every write and publish point and
-  * pin that readers keep seeing the previous complete generation, that the
-  * next run completes or rolls the call back to exactly what an
-  * uninterrupted run leaves, and that a committed call leaves one `gen=`
-  * dir per table.
+  * pin that readers keep seeing the previous complete state, that the next
+  * run rolls the call back and writes exactly what an uninterrupted run
+  * leaves, row for row, and that a committed call leaves one `gen=` dir per
+  * table.
   */
 class CommitSpec extends SparkTestBase {
   import spark.implicits._
 
-  private val tables =
-    Seq("signatures", "quarantine", "clusters", "previews", "actions", "executed", "bands")
+  private val tables = Seq("signatures", "quarantine", "clusters", "previews", "actions",
+    "executed", "bands", "paras", "spans")
 
   private val cfg = DedupConfig(deltaCluster = true, previewChars = 40)
 
@@ -53,18 +53,18 @@ class CommitSpec extends SparkTestBase {
     tables.flatMap(t => Checkpoints.generationPath(spark, dir, t)
       .map(p => t -> p.substring(p.lastIndexOf('/') + 1))).toMap
 
-  /** Each published table's distinct rows (`quarantined_at` excluded) and
-    * the manifest's epoch counter.
+  /** Each published table's rows as a multiset, duplicates counted
+    * (`quarantined_at` excluded), and the manifest's epoch counter.
     */
-  private def contents(dir: String): (Map[String, Set[String]], Long) =
-    (tables.flatMap(t => Checkpoints.generationPath(spark, dir, t).map(p =>
-      t -> spark.read.parquet(p).drop("quarantined_at").toJSON.collect().toSet)).toMap,
-      SubDocState.nextEpoch(spark, dir))
+  private def contents(dir: String): (Map[String, Seq[String]], Long) =
+    (tables.flatMap(t => Checkpoints.readTable(spark, dir, t).map(df =>
+      t -> df.drop("quarantined_at").toJSON.collect().toSeq.sorted)).toMap,
+      Checkpoints.readManifest(spark, dir).count(_.contains("\"new_signatures\"")).toLong)
 
-  /** The `new_signatures` and `clusters` counts on the last manifest line. */
+  /** The counts on the last manifest line. */
   private def lineCounts(dir: String): Map[String, String] = {
     val line = Checkpoints.readManifest(spark, dir).last.replaceAll(""""gens":\{[^}]*\}""", "")
-    Seq("new_signatures", "clusters").flatMap(k =>
+    Seq("new_signatures", "clusters", "quarantined", "executed", "failed").flatMap(k =>
       s""""$k":(\\d+)""".r.findFirstMatchIn(line).map(k -> _.group(1))).toMap
   }
 
@@ -86,8 +86,8 @@ class CommitSpec extends SparkTestBase {
     if (Checkpoints.generationPath(spark, dir, "clusters").isDefined) {
       val g = gens(dir)
       assert(g.get("actions") == g.get("clusters"), s"$what: $g")
-      val c = spark.read.parquet(Checkpoints.generationPath(spark, dir, "clusters").get)
-      val bad = spark.read.parquet(Checkpoints.generationPath(spark, dir, "actions").get)
+      val c = Checkpoints.readTable(spark, dir, "clusters").get
+      val bad = Checkpoints.readTable(spark, dir, "actions").get
         .join(c.select($"id", $"cluster_id".as("c_dup")), Seq("id"), "left")
         .join(c.select($"id".as("original_id"), $"cluster_id".as("c_orig")),
           Seq("original_id"), "left")
@@ -112,8 +112,7 @@ class CommitSpec extends SparkTestBase {
     val before = gens(base)
     val after = gens(ref)
     val baseContents = contents(base)._1
-    // tables the call writes a new generation of, and published ones it supersedes
-    val freshTables = after.collect { case (t, g) if !before.get(t).contains(g) => t }.toSet
+    // published generations the call supersedes
     val superseded = before.exists { case (t, g) => !after.get(t).contains(g) }
     assert(trace == writes ++ Seq("manifest", "published"), s"$name: $trace")
 
@@ -129,12 +128,13 @@ class CommitSpec extends SparkTestBase {
       val durable = trace(k) == "published"
       val seen = contents(dir)._1
       assert(gens(dir) == (if (durable) after else before), s"$point: published generations")
-      Seq("clusters", "actions", "previews").foreach { t =>
+      tables.foreach { t =>
         assert(seen.get(t) == (if (durable) expected._1 else baseContents).get(t),
           s"$point: readers see a torn $t")
       }
       assertPlanMatchesClusters(dir, point)
-      val torn = if (durable) superseded else trace.take(k + 1).exists(freshTables)
+      // every write, append or new generation, is unpublished until the line
+      val torn = if (durable) superseded else trace.take(k + 1).exists(writes.contains)
       assert((uncommitted(dir) > 0) == torn, s"$point: uncommitted_generations")
 
       // the resume: the next lease holder sweeps; an uncommitted call re-runs
@@ -151,10 +151,15 @@ class CommitSpec extends SparkTestBase {
     ref
   }
 
+  /** The `--para-dedup` pass over `pages` against `dir`'s published hashes. */
+  private def paraPass(dir: String, pages: org.apache.spark.sql.DataFrame) =
+    SubDocState.dedupParagraphsIncremental(spark, dir, pages, "url", "text", cfg)
+
   test("a call killed at any write or publish point resumes to the uninterrupted state") {
     val base = tempDir() + "/s"
-    Checkpoints.clusterEpoch(spark, pagesWithBad(3L), "url", "text", base, cfg,
-      action = "delete")
+    val (first, elected) = paraPass(base, pagesWithBad(3L))
+    Checkpoints.clusterEpoch(spark, first, "url", "text", base, cfg,
+      action = "delete", elections = Seq(elected))
     Checkpoints.executeEpoch(spark, base)
     assertOneGeneration(base, "base")
     val more = pagesWithBad(4L)
@@ -162,6 +167,10 @@ class CommitSpec extends SparkTestBase {
     val ingest = Seq("signatures", "quarantine")
     crashEveryPoint("runEpoch", base, ingest: _*) { d =>
       Checkpoints.runEpoch(spark, more, "url", "text", d, cfg)
+    }
+    crashEveryPoint("runEpoch with elections", base, ingest :+ "paras": _*) { d =>
+      val (cleaned, elected) = paraPass(d, more)
+      Checkpoints.runEpoch(spark, cleaned, "url", "text", d, cfg, Seq(elected))
     }
     crashEveryPoint("forceRescan", base, ingest: _*) { d =>
       Checkpoints.runEpoch(spark, more, "url", "text", d, cfg.copy(forceRescan = true))
@@ -173,7 +182,8 @@ class CommitSpec extends SparkTestBase {
     crashEveryPoint("executeEpoch", clustered, "executed") { d =>
       Checkpoints.executeEpoch(spark, d)
     }
-    crashEveryPoint("compactSignatures", clustered, "signatures", "executed", "bands") { d =>
+    crashEveryPoint("compactSignatures", clustered,
+        "signatures", "executed", "bands", "paras") { d =>
       Checkpoints.compactSignatures(spark, d)
     }
   }
@@ -181,17 +191,17 @@ class CommitSpec extends SparkTestBase {
   test("executeEpoch ignores an unpublished newer actions generation") {
     val dir = tempDir()
     Checkpoints.clusterEpoch(spark, pagesWithBad(3L), "url", "text", dir, action = "delete")
-    val committed = spark.read.parquet(Checkpoints.generationPath(spark, dir, "actions").get)
+    val committed = Checkpoints.readTable(spark, dir, "actions").get
     val plan = committed.select("id", "original_id", "action").as[(String, String, String)]
       .collect().toSet
     // what a clusterEpoch killed before its manifest line leaves: a newer
     // plan generation, here one that would delete a representative
-    val rep = spark.read.parquet(Checkpoints.generationPath(spark, dir, "clusters").get)
+    val rep = Checkpoints.readTable(spark, dir, "clusters").get
       .filter($"is_representative").select("id").as[String].collect().min
     val planted = new java.io.File(s"${Checkpoints.actionsPath(dir)}/gen=1")
     committed.limit(1).withColumn("id", lit(rep)).write.parquet(planted.toString)
     Checkpoints.executeEpoch(spark, dir)
-    val executed = spark.read.parquet(Checkpoints.generationPath(spark, dir, "executed").get)
+    val executed = Checkpoints.readTable(spark, dir, "executed").get
       .select("id", "original_id", "action").as[(String, String, String)].collect().toSet
     assert(executed == plan, "executed rows must be exactly the committed plan")
     assert(!planted.exists(), "the unpublished generation must be swept")
@@ -221,18 +231,17 @@ class CommitSpec extends SparkTestBase {
     val dir = tempDir()
     val para = "Shared paragraph that the first epoch elected."
     val first = Seq(("http://a.test/1", s"$para\n\nAlpha tail.")).toDF("url", "text")
-    Checkpoints.runEpoch(spark,
-      SubDocState.dedupParagraphsIncremental(spark, dir, first, "url", "text"),
-      "url", "text", dir)
-    assert(new java.io.File(s"${SubDocState.parasPath(dir)}/epoch=0").exists())
+    val (cleaned1, elected) = SubDocState.dedupParagraphsIncremental(spark, dir, first, "url", "text")
+    Checkpoints.runEpoch(spark, cleaned1, "url", "text", dir, elections = Seq(elected))
+    assert(new java.io.File(s"${SubDocState.parasPath(dir)}/gen=0").exists())
     Checkpoints.runEpoch(spark, first, "url", "text", dir, DedupConfig(forceRescan = true))
     val later = Seq(("http://b.test/2", s"$para\n\nBeta tail.")).toDF("url", "text")
-    val cleaned = SubDocState.dedupParagraphsIncremental(spark, dir, later, "url", "text")
+    val cleaned = SubDocState.dedupParagraphsIncremental(spark, dir, later, "url", "text")._1
       .select("text").as[String].collect().toSeq
     assert(cleaned == Seq(s"$para\n\nBeta tail."),
       "a pre-rescan winner must not defeat the paragraph after the rescan")
-    // the rescan's line hid the epoch-0 winners; its sweep deleted them
-    assert(!new java.io.File(s"${SubDocState.parasPath(dir)}/epoch=0").exists())
+    // the rescan's line dropped the epoch-0 winners; its sweep deleted them
+    assert(!new java.io.File(s"${SubDocState.parasPath(dir)}/gen=0").exists())
   }
 
   test("a --force-rescan --para-dedup run killed at either publish point resumes cleanly") {
@@ -242,8 +251,7 @@ class CommitSpec extends SparkTestBase {
       Main.run(spark, Main.parse(Seq("--pages", p, "--state", dir) ++ flags).toOption.get)
     }
     def seenHashes(dir: String): Set[String] =
-      SubDocState.seen(spark, dir, SubDocState.parasPath(dir), "para_hash",
-        SubDocState.nextEpoch(spark, dir)).fold(Set.empty[String])(_.as[String].collect().toSet)
+      Checkpoints.readTable(spark, dir, "paras").fold(Set.empty[String])(_.as[String].collect().toSet)
     def cleanedText(dir: String): Set[(String, String)] =
       Checkpoints.readSignatures(spark, dir).select("id", "content_hash")
         .as[(String, String)].collect().toSet
@@ -260,7 +268,7 @@ class CommitSpec extends SparkTestBase {
     run(ref, rescan, flags: _*)
     val (expected, expectedSeen) = (cleanedText(ref), seenHashes(ref))
     assert(expectedSeen.nonEmpty && expectedSeen != preRescan)
-    val epoch0 = (dir: String) => new java.io.File(s"${SubDocState.parasPath(dir)}/epoch=0")
+    val epoch0 = (dir: String) => new java.io.File(s"${SubDocState.parasPath(dir)}/gen=0")
 
     Seq("manifest", "published").foreach { point =>
       val dir = tempDir() + "/s"
@@ -283,5 +291,18 @@ class CommitSpec extends SparkTestBase {
       assert(cleanedText(dir) == expected, s"$point: cleaned text differs from an uninterrupted run")
       assert(seenHashes(dir) == expectedSeen, point)
     }
+  }
+
+  test("an ingest refuses elections made against an older snapshot") {
+    val dir = tempDir()
+    val pages = Seq(("http://a.test/1", "Shared paragraph here.\n\nAlpha tail.")).toDF("url", "text")
+    val (cleaned, stale) = SubDocState.dedupParagraphsIncremental(spark, dir, pages, "url", "text")
+    // a line published between the pass and its ingest
+    Checkpoints.runEpoch(spark, pages, "url", "text", dir)
+    val e = intercept[IllegalStateException](
+      Checkpoints.runEpoch(spark, cleaned, "url", "text", dir, elections = Seq(stale)))
+    assert(e.getMessage.contains("re-run the sub-document pass"), e.getMessage)
+    assert(Checkpoints.readManifest(spark, dir).length == 1, "the refused ingest published a line")
+    assert(Checkpoints.readTable(spark, dir, "paras").isEmpty)
   }
 }

@@ -31,9 +31,9 @@ class DeltaClusterSpec extends SparkTestBase {
     }
   }
 
-  /** A table's published generation. */
+  /** A table's published rows. */
   private def table(dir: String, name: String) =
-    spark.read.parquet(Checkpoints.generationPath(spark, dir, name).get)
+    Checkpoints.readTable(spark, dir, name).get
 
   private def clustersOf(dir: String): Set[(String, String, Boolean, String)] =
     table(dir, "clusters")

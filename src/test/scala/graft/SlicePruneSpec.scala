@@ -122,11 +122,11 @@ class SlicePruneSpec extends SparkTestBase {
     def run(d: String, fpp: Double) = {
       // saturated tiny sketch again: exactness must be structural
       val cfg = DedupConfig(stateBloomFpp = fpp, stateBloomExpected = 2L)
-      val r1 = SubDocState.dedupParagraphsIncremental(spark, d, e1, "id", "text", cfg)
+      val r1 = SubDocState.dedupParagraphsIncremental(spark, d, e1, "id", "text", cfg)._1
         .select("id", "text").as[(String, String)].collect().toSet
-      val r2 = SubDocState.dedupParagraphsIncremental(spark, d, e2, "id", "text", cfg)
+      val r2 = SubDocState.dedupParagraphsIncremental(spark, d, e2, "id", "text", cfg)._1
         .select("id", "text").as[(String, String)].collect().toSet
-      val s1 = SubDocState.dedupSpansIncremental(spark, d, e1, "id", "text", cfg)
+      val s1 = SubDocState.dedupSpansIncremental(spark, d, e1, "id", "text", cfg)._1
         .select("id", "text").as[(String, String)].collect().toSet
       (r1, r2, s1)
     }

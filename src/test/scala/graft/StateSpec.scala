@@ -172,7 +172,7 @@ class StateSpec extends SparkTestBase {
     val pruned = spark.read.parquet(Checkpoints.signaturesPath(dir))
       .filter($"id" =!= victim).cache()
     pruned.count()
-    pruned.write.mode("overwrite")
+    pruned.withColumn("part", lit(0)).write.mode("overwrite").partitionBy("part")
       .parquet(Checkpoints.generationPath(spark, dir, "signatures").get)
     val (nExec, nFail) = Checkpoints.executeEpoch(spark, dir, None)
     assert(nFail == 1 && nExec > 0)
@@ -297,7 +297,8 @@ class StateSpec extends SparkTestBase {
       (two(1).getString(0), two(1).getString(1), two(1).getString(2),
         false, false, "missing_id", 0L))
       .toDF("id", "original_id", "action", "dry_run", "success", "error", "epoch")
-      .write.mode("overwrite").parquet(Checkpoints.generationPath(spark, dir, "executed").get)
+      .withColumn("part", lit(0)).write.mode("overwrite").partitionBy("part")
+      .parquet(Checkpoints.generationPath(spark, dir, "executed").get)
     Checkpoints.executeEpoch(spark, dir, None)
     val ex = spark.read.parquet(Checkpoints.executedPath(dir))
     // the transient row was re-attempted (ids are live, so it now succeeds)…
@@ -320,7 +321,8 @@ class StateSpec extends SparkTestBase {
     Seq((someId, "orig-x", "delete", false, true, null.asInstanceOf[String], 0L),
         ("no-such-id", "orig-y", "delete", false, false, "missing_id", 0L))
       .toDF("id", "original_id", "action", "dry_run", "success", "error", "epoch")
-      .write.mode("overwrite").parquet(Checkpoints.generationPath(spark, dir, "executed").get)
+      .withColumn("part", lit(0)).write.mode("overwrite").partitionBy("part")
+      .parquet(Checkpoints.generationPath(spark, dir, "executed").get)
     // deleted rows must not resurrect in any snapshot at or after the epoch
     val asOf0 = Checkpoints.signaturesAsOf(spark, dir, 0L)
     assert(asOf0.filter(col("id") === someId).count() == 0,
@@ -501,7 +503,8 @@ class StateSpec extends SparkTestBase {
     Seq((someId, Option.empty[String], "delete", false, false,
         Option.empty[String]))
       .toDF("id", "original_id", "action", "dry_run", "success", "error")
-      .write.mode("overwrite").parquet(Checkpoints.generationPath(spark, dir, "actions").get)
+      .withColumn("part", lit(0)).write.mode("overwrite").partitionBy("part")
+      .parquet(Checkpoints.generationPath(spark, dir, "actions").get)
     val (ok1, fail1) = Checkpoints.executeEpoch(spark, dir)
     assert(ok1 == 0L && fail1 == 1L, s"first run must fail it once: $ok1/$fail1")
     val (ok2, fail2) = Checkpoints.executeEpoch(spark, dir)

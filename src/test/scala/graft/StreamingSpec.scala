@@ -62,14 +62,14 @@ class StreamingSpec extends SparkTestBase {
     assert(clusters.count() == 3)
   }
 
-  test("cadence recipe: streamed state batch-clusters the containment kinds " +
-      "the streaming fast path can't see") {
+  test("cadence recipe: a batch clusterEpoch over streamed signature epochs " +
+      "clusters the containment kinds without re-fingerprinting") {
     // the operator contract from streamingIngest's docstring, END-TO-END:
-    // a continuously-arriving crawl commits signature epochs per micro-batch
-    // (fast-path near-dup only sees SimHash-pigeonhole pairs), then a batch
-    // clusterEpoch on a cadence over the SAME stateDir resolves the
-    // containment / sub-Jaccard kinds (mid_quote, truncate_60/30) from the
-    // persisted signatures WITHOUT re-fingerprinting anything
+    // a continuously-arriving crawl commits one signature epoch per
+    // micro-batch (no clustering), then a batch clusterEpoch on a cadence
+    // over the SAME stateDir ingests nothing new and puts the containment /
+    // sub-Jaccard kinds (mid_quote, truncate_60/30) in one cluster from the
+    // persisted signatures alone
     implicit val sqlCtx = spark.sqlContext
     import graft.pages.PagesGen
     import graft.state.Checkpoints

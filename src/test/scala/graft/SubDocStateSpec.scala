@@ -79,10 +79,10 @@ class SubDocStateSpec extends SparkTestBase {
       ("http://e1.test/a", "Shared paragraph stays once.\n\nAlpha body.")),
       state, Seq("--para-dedup"))
     // simulate epoch 2 crashing AFTER its hash append but BEFORE its
-    // signature commit: append orphan winners at the next epoch id
-    val e = SubDocState.nextEpoch(spark, state)
-    SubDocState.append(spark, state, SubDocState.parasPath(state), "para_hash",
-      Seq("deadbeef-orphan-hash").toDF("para_hash"), e)
+    // manifest line: plant orphan winners as the next line's part
+    val e = Checkpoints.readManifest(spark, state).length
+    Seq("deadbeef-orphan-hash").toDF("para_hash").write
+      .parquet(s"${Checkpoints.generationPath(spark, state, "paras").get}/part=$e")
     // the real epoch 2 must neither see the orphan nor double-drop: its
     // batch re-presents BOTH the epoch-1 paragraph (drops) and a fresh one
     run(Seq(
@@ -92,8 +92,7 @@ class SubDocStateSpec extends SparkTestBase {
     assert(stored("http://e2.test/b") == hashOf("Beta body."))
     // the orphan partition was overwritten by the real epoch's winners:
     // reading everything below epoch e+1 must not contain the orphan
-    val all = SubDocState.seen(spark, state, SubDocState.parasPath(state),
-      "para_hash", e + 1).get.as[String].collect()
+    val all = Checkpoints.readTable(spark, state, "paras").get.as[String].collect()
     assert(!all.contains("deadbeef-orphan-hash"),
       "re-run must overwrite the crashed epoch's partition")
     assert(all.contains(hashOf("Beta body.")))
@@ -107,8 +106,7 @@ class SubDocStateSpec extends SparkTestBase {
     java.nio.file.Files.createDirectories(root.resolve("_temporary").resolve("0"))
     java.nio.file.Files.write(root.resolve("_temporary").resolve("0")
       .resolve("part-stub"), Array[Byte](1, 2, 3))
-    assert(SubDocState.seen(spark, state, SubDocState.parasPath(state),
-      "para_hash", below = 5L).isEmpty)
+    assert(Checkpoints.readTable(spark, state, "paras").isEmpty)
     // and the idempotent re-run proceeds normally from there
     val out1 = run(Seq(("http://r.test/a",
       "Alpha beta gamma delta. Epsilon zeta eta theta.")), state,
@@ -195,9 +193,7 @@ class SubDocStateSpec extends SparkTestBase {
       ("http://e1.test/a", "Shared header paragraph here.\n\nAlpha body."),
       ("http://e1.test/b", "Beta body paragraph."))
     run(pages, state, Seq("--para-dedup", "--state-buckets", "8"))
-    val e = SubDocState.nextEpoch(spark, state)
-    val seen = SubDocState.seen(spark, state,
-      SubDocState.parasPath(state), "para_hash", e).get
+    val seen = Checkpoints.readTable(spark, state, "paras").get
     val prevAqe = spark.conf.get("spark.sql.adaptive.enabled")
     val prevBc = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
     try {
