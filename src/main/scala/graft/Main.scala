@@ -559,9 +559,8 @@ object Main {
               spark, a.state, preSub, a.idCol, a.textCol, cfg)
             (df, Some(e))
           } else (graft.text.ParagraphDedup.dedupParagraphs(preSub, a.idCol, a.textCol), None)
-        val preSpan =
-          if (a.paraDedup && a.spanDedup) mat(paraed.select(col(a.idCol), col(a.textCol)))
-          else paraed.select(col(a.idCol), col(a.textCol))
+        val paraText = paraed.select(col(a.idCol), col(a.textCol))
+        val preSpan = if (a.paraDedup && a.spanDedup) mat(paraText) else paraText
         val (spanned, spanElected) =
           if (!a.spanDedup) (preSpan, None)
           else if (stateful) {

@@ -682,8 +682,8 @@ object SparkEntry {
     // Cross-epoch sub-document state (round 5): the corpus splits into two
     // epochs (even doc_ids first, then odd); epoch 1's elected paragraph
     // hashes are published by its ingest's manifest line and epoch 2 elects
-    // against them. The oracle states the EPOCH-ORDERED batch semantics in closed
-    // form — a paragraph seen in epoch 1 loses in EVERY epoch-2 doc, an
+    // against them. The oracle states the EPOCH-ORDERED batch semantics in
+    // closed form — a paragraph seen in epoch 1 loses in EVERY epoch-2 doc, an
     // epoch-2-only paragraph elects fresh — so incremental ≡ batch is
     // checked through the real state round-trip, not in-memory frames.
     "q_subdoc_para" -> ((s, dir) => {

@@ -90,8 +90,8 @@ object Checkpoints {
     *                index of the manifest line that will publish it
     * @param visible parts below this number are read: the published line
     *                count, or `next + 1` in a writer's view of its own parts
-    * @param buckets bucket count of the id-keyed tables (signatures and
-    *                executed); 0 = plain parquet. A property of the STATE
+    * @param buckets bucket count of the keyed tables (signatures, executed
+    *                and the sub-document hashes); 0 = plain parquet. A property of the STATE
     *                DIR, not of the caller's config: every later reader and
     *                writer — fresh sessions and other drivers included —
     *                follows it
@@ -180,7 +180,7 @@ object Checkpoints {
 
   /** `table`'s rows in `snap`: the parts of its generation below
     * `snap.visible` (a partition filter on the inferred `part` column, so
-    * no other part is listed for reading), bucketed on the table's key in a
+    * no other part's files are opened), bucketed on the table's key in a
     * bucketed layout.
     */
   private[state] def read(spark: SparkSession, snap: Snapshot,
@@ -202,11 +202,12 @@ object Checkpoints {
     tables.flatMap { t =>
       val (fs, dir) = fsFor(spark, s"${snap.stateDir}/$t")
       val keep = snap.gens.get(t).map(g => s"gen=$g")
+      def dirs(p: Path, prefix: String) =
+        fs.listStatus(p).toSeq.map(_.getPath).filter(_.getName.startsWith(prefix))
       if (!fs.exists(dir)) Nil
-      else fs.listStatus(dir).toSeq.map(_.getPath).filter(_.getName.startsWith("gen=")).flatMap { g =>
+      else dirs(dir, "gen=").flatMap { g =>
         if (!keep.contains(g.getName)) Seq(g)
-        else fs.listStatus(g).toSeq.map(_.getPath).filter(p =>
-          p.getName.startsWith("part=") && p.getName.stripPrefix("part=").toLong >= snap.visible)
+        else dirs(g, "part=").filter(_.getName.stripPrefix("part=").toLong >= snap.visible)
       }.map(fs -> _)
     }
 
@@ -282,16 +283,15 @@ object Checkpoints {
   private[graft] def signatureBuckets(spark: SparkSession, stateDir: String): Int =
     snapshot(spark, stateDir).buckets
 
-  private def tableName(spark: SparkSession, stateDir: String, table: String): String = {
+  private[graft] def sigTableName(spark: SparkSession, stateDir: String): String = {
     val snap = snapshot(spark, stateDir)
-    catalogName(table, snap.path(table).get, snap.buckets)
+    catalogName("signatures", snap.path("signatures").get, snap.buckets)
   }
 
-  private[graft] def sigTableName(spark: SparkSession, stateDir: String): String =
-    tableName(spark, stateDir, "signatures")
-
-  private[graft] def execTableName(spark: SparkSession, stateDir: String): String =
-    tableName(spark, stateDir, "executed")
+  private[graft] def execTableName(spark: SparkSession, stateDir: String): String = {
+    val snap = snapshot(spark, stateDir)
+    catalogName("executed", snap.path("executed").get, snap.buckets)
+  }
 
   /** Register (if absent) a bucketed table over a generation's files and
     * return its name. Schema comes from the parquet footers (the `part`
@@ -471,7 +471,7 @@ object Checkpoints {
     val epochT0 = System.nanoTime()
     // an election made against an older snapshot missed the winners a line
     // published since: writing it would elect those hashes twice
-    elections.filter(_.against != published.next).foreach { e =>
+    elections.find(_.against != published.next).foreach { e =>
       throw new IllegalStateException(
         s"${e.table} elections were made against ${e.against} manifest lines, but " +
           s"${published.stateDir} has published ${published.next}: re-run the sub-document pass")

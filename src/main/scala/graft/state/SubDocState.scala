@@ -39,9 +39,6 @@ import graft.pipeline.DedupConfig
   */
 object SubDocState {
 
-  def parasPath(stateDir: String) = s"$stateDir/paras"
-  def spansPath(stateDir: String) = s"$stateDir/spans"
-
   /** The hashes one pass newly elected (one column, the table's key), for
     * the ingest that publishes its cleaned text. `against` is the line
     * count of the snapshot the election read: an ingest over a newer one

@@ -231,9 +231,10 @@ class CommitSpec extends SparkTestBase {
     val dir = tempDir()
     val para = "Shared paragraph that the first epoch elected."
     val first = Seq(("http://a.test/1", s"$para\n\nAlpha tail.")).toDF("url", "text")
-    val (cleaned1, elected) = SubDocState.dedupParagraphsIncremental(spark, dir, first, "url", "text")
+    val (cleaned1, elected) =
+      SubDocState.dedupParagraphsIncremental(spark, dir, first, "url", "text")
     Checkpoints.runEpoch(spark, cleaned1, "url", "text", dir, elections = Seq(elected))
-    assert(new java.io.File(s"${SubDocState.parasPath(dir)}/gen=0").exists())
+    assert(new java.io.File(s"$dir/paras/gen=0").exists())
     Checkpoints.runEpoch(spark, first, "url", "text", dir, DedupConfig(forceRescan = true))
     val later = Seq(("http://b.test/2", s"$para\n\nBeta tail.")).toDF("url", "text")
     val cleaned = SubDocState.dedupParagraphsIncremental(spark, dir, later, "url", "text")._1
@@ -241,7 +242,7 @@ class CommitSpec extends SparkTestBase {
     assert(cleaned == Seq(s"$para\n\nBeta tail."),
       "a pre-rescan winner must not defeat the paragraph after the rescan")
     // the rescan's line dropped the epoch-0 winners; its sweep deleted them
-    assert(!new java.io.File(s"${SubDocState.parasPath(dir)}/gen=0").exists())
+    assert(!new java.io.File(s"$dir/paras/gen=0").exists())
   }
 
   test("a --force-rescan --para-dedup run killed at either publish point resumes cleanly") {
@@ -251,7 +252,8 @@ class CommitSpec extends SparkTestBase {
       Main.run(spark, Main.parse(Seq("--pages", p, "--state", dir) ++ flags).toOption.get)
     }
     def seenHashes(dir: String): Set[String] =
-      Checkpoints.readTable(spark, dir, "paras").fold(Set.empty[String])(_.as[String].collect().toSet)
+      Checkpoints.readTable(spark, dir, "paras")
+        .fold(Set.empty[String])(_.as[String].collect().toSet)
     def cleanedText(dir: String): Set[(String, String)] =
       Checkpoints.readSignatures(spark, dir).select("id", "content_hash")
         .as[(String, String)].collect().toSet
@@ -268,7 +270,7 @@ class CommitSpec extends SparkTestBase {
     run(ref, rescan, flags: _*)
     val (expected, expectedSeen) = (cleanedText(ref), seenHashes(ref))
     assert(expectedSeen.nonEmpty && expectedSeen != preRescan)
-    val epoch0 = (dir: String) => new java.io.File(s"${SubDocState.parasPath(dir)}/gen=0")
+    val epoch0 = (dir: String) => new java.io.File(s"$dir/paras/gen=0")
 
     Seq("manifest", "published").foreach { point =>
       val dir = tempDir() + "/s"
@@ -295,7 +297,8 @@ class CommitSpec extends SparkTestBase {
 
   test("an ingest refuses elections made against an older snapshot") {
     val dir = tempDir()
-    val pages = Seq(("http://a.test/1", "Shared paragraph here.\n\nAlpha tail.")).toDF("url", "text")
+    val pages =
+      Seq(("http://a.test/1", "Shared paragraph here.\n\nAlpha tail.")).toDF("url", "text")
     val (cleaned, stale) = SubDocState.dedupParagraphsIncremental(spark, dir, pages, "url", "text")
     // a line published between the pass and its ingest
     Checkpoints.runEpoch(spark, pages, "url", "text", dir)

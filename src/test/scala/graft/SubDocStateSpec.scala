@@ -5,7 +5,7 @@ import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
 import org.apache.spark.sql.catalyst.plans.physical.HashPartitioning
 import org.apache.spark.sql.functions._
 
-import graft.state.{Checkpoints, SubDocState}
+import graft.state.Checkpoints
 import graft.text.{ParagraphDedup, SpanDedup}
 
 /** Cross-epoch sub-document dedup state: the `--para-dedup` /
@@ -102,7 +102,7 @@ class SubDocStateSpec extends SparkTestBase {
     val state = tempDir()
     // simulate the torn first write: the root exists but holds only the
     // writer's _temporary staging — no committed epoch= partition
-    val root = java.nio.file.Paths.get(SubDocState.parasPath(state))
+    val root = java.nio.file.Paths.get(state, "paras")
     java.nio.file.Files.createDirectories(root.resolve("_temporary").resolve("0"))
     java.nio.file.Files.write(root.resolve("_temporary").resolve("0")
       .resolve("part-stub"), Array[Byte](1, 2, 3))
@@ -132,7 +132,7 @@ class SubDocStateSpec extends SparkTestBase {
     run(Seq(("http://e1.test/a", "Sticky paragraph body.\n\nAlpha tail.")),
       state, Seq("--para-dedup"))
     assert(java.nio.file.Files.exists(
-      java.nio.file.Paths.get(SubDocState.parasPath(state))))
+      java.nio.file.Paths.get(state, "paras")))
     // a rescan WITHOUT --para-dedup rebuilds the corpus state from scratch;
     // leaving the old winner hashes behind would poison a later incremental
     // epoch (its paragraphs anti-join hashes whose winning text the rescan
@@ -140,7 +140,7 @@ class SubDocStateSpec extends SparkTestBase {
     run(Seq(("http://e1.test/a", "Sticky paragraph body.\n\nAlpha tail.")),
       state, Seq("--force-rescan"))
     assert(!java.nio.file.Files.exists(
-      java.nio.file.Paths.get(SubDocState.parasPath(state))))
+      java.nio.file.Paths.get(state, "paras")))
     // and a later incremental epoch re-elects cleanly
     run(Seq(("http://e2.test/b", "Sticky paragraph body.\n\nBeta tail.")),
       state, Seq("--para-dedup"))
